@@ -382,14 +382,10 @@ def _prefetch(it, depth: int = 4):
     producer, FIFO queue) so sketch states are bit-identical.  A
     consumer-side failure sets a stop flag the producer polls, so it
     can never block forever on a full queue (no leaked thread in a
-    reused worker).  ``SKETCHLIB_DECODE_THREAD=0`` disables."""
-    import os
+    reused worker)."""
     import queue as _queue
     import threading
 
-    if os.environ.get("SKETCHLIB_DECODE_THREAD", "1") == "0":
-        yield from it
-        return
     q: _queue.Queue = _queue.Queue(maxsize=depth)
     stop = threading.Event()
     DONE = object()

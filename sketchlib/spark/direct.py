@@ -49,8 +49,8 @@ bincounts in the column's native dtype (no int64 widening copy when
 ids are non-negative); (c) decode and feed OVERLAP — pyarrow's C++
 decode releases the GIL, so a producer thread decodes the next batch
 while the task thread feeds the previous one (+~45% single-task,
-uniform gains across 2/8/32-core legs; ``SKETCHLIB_DECODE_THREAD=0``
-disables).
+uniform gains across 2/8/32-core legs; ``overlap=False`` decodes
+inline, for A/B checks).
 """
 
 from __future__ import annotations
@@ -198,7 +198,7 @@ def build_partials_direct(
     tasks: int | None = None,
     files: list[str] | None = None,
     prune: tuple | None = None,
-    overlap: bool | None = None,
+    overlap: bool = True,
     hash_compat: str = "splitmix64",
 ):
     """Stage 1 over raw parquet files: returns the usual partials
@@ -226,13 +226,6 @@ def build_partials_direct(
     rdd = spark.sparkContext.parallelize([(f,) for f in files], tasks)
     fdf = spark.createDataFrame(rdd, "path string")
     dkind = _direct_kind(kind)
-    # decode/feed overlap toggle, resolved DRIVER-side and captured in
-    # the task closure (worker processes inherit their env at worker
-    # start, so a runtime env check would be unreliable under reuse)
-    import os as _os
-
-    if overlap is None:
-        overlap = _os.environ.get("SKETCHLIB_DECODE_THREAD", "1") != "0"
     if hash_compat not in ("splitmix64", "xxhash64"):
         raise ValueError(f"unknown hash_compat {hash_compat!r}")
 
@@ -464,7 +457,7 @@ def sketch_parquet(
     fanout: int = 64,
     files: list[str] | None = None,
     prune: tuple | None = None,
-    overlap: bool | None = None,
+    overlap: bool = True,
     hash_compat: str = "splitmix64",
 ):
     """End-to-end direct build: partials over raw files -> tree merge."""
@@ -535,7 +528,7 @@ def build_lineage_partials_direct(
     n_lineage: int = 64,
     tasks: int | None = None,
     files: list[str] | None = None,
-    overlap: bool | None = None,
+    overlap: bool = True,
     skip_lineages=None,
 ):
     """Per-LINEAGE stage 1 over raw parquet files: DataFrame[lineage_id
@@ -583,10 +576,6 @@ def build_lineage_partials_direct(
     rdd = spark.sparkContext.parallelize([(f,) for f in files], tasks)
     fdf = spark.createDataFrame(rdd, "path string")
     dkind = _direct_kind(kind)
-    import os as _os
-
-    if overlap is None:
-        overlap = _os.environ.get("SKETCHLIB_DECODE_THREAD", "1") != "0"
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import queue as _queue
