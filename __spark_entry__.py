@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib.spark.api import (
+    _spread,
     approx_distinct,
     approx_quantiles,
     bloom_contains,
@@ -48,44 +49,6 @@ RANK_TOL = 0.005  # reference rank-error bar (t_digest.rs:800-835)
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
-
-
-#: per-task (file) bytes used to size a spread: the target partition
-#: count for a narrow plan is size_estimate // this, capped at
-#: 2 x cores.  64 KB of compressed text per task reproduces the two
-#: measured optima — ~8-9 tasks for the sf0.1 documents gates (the
-#: round-7 hand-tuned ``repartition(8)``; an unconditional 64 there
-#: regressed those gates 0.4-1.7s in scheduling + an extra stage)
-#: and the full 64-way spread at sf1's >= 5 MB inputs where the wins
-#: came from.  Parameterised, with the cap derived from
-#: defaultParallelism — nothing here is local[32]-specific.
-SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SKETCH_SPREAD_BYTES_PER_TASK", 64 * 1024)
-)
-
-
-def _spread(df: DataFrame, key: str, mult: int = 2) -> DataFrame:
-    """Spread a single-file scan across the session's cores before a
-    heavy downstream kernel: the local test parquet files hold 1-6 row
-    groups, so the scan plans that few partitions no matter the split
-    size and a CPU-bound stage runs on a fraction of the box.  Hash
-    repartition on a high-cardinality key (row-level work — any even
-    spread is result-identical; round-robin would local-sort the wide
-    rows).  No-op on a real multi-file table, which already plans
-    wide; a small input spreads only as far as its Catalyst size
-    estimate warrants (SPREAD_BYTES_PER_TASK), so the repartition
-    never costs more scheduling than the kernel it feeds saves."""
-    from sketchlib.spark.api import _plan_partitions, _plan_size_bytes
-
-    sc = df.sparkSession.sparkContext
-    cap = max(sc.defaultParallelism * mult, 8)
-    cur = _plan_partitions(df, assume=cap)
-    if cur < cap:
-        size = _plan_size_bytes(df, assume=SPREAD_BYTES_PER_TASK * cap)
-        want = min(cap, int(size // SPREAD_BYTES_PER_TASK))
-        if want > cur:
-            df = df.repartition(want, F.col(key))
-    return df
 
 
 def _sf_rows(sf_dir: str) -> int:
@@ -793,7 +756,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the 2-partition union before the CPU-bound signature
     # kernel (r6 measured this neutral at sf0.1's 5k docs; at sf1's
     # 52k docs the kernel serialized on 2 tasks — scale-adaptive now)
-    data = _spread(data, "doc_id")
+    data, _ = _spread(data, "doc_id")
     pairs = minhash_near_duplicates(data, threshold=0.4).collect()
     n_injected = int(obs.get["n_injected"])
     found = {(r["id_a"], r["id_b"]) for r in pairs}
@@ -1480,7 +1443,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join plan must equal the plain inequality join."""
     from sketchlib.spark.sessions import interval_join
 
-    li = _spread(
+    li, _ = _spread(
         _read(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_shipdate"
         ),
@@ -1662,7 +1625,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst shingle construction would run in a single task;
     # spreading the scan is a gate-input choice, not an operator one
     # (scale-adaptive — a fixed 8 under-fills a 32-core box at sf1)
-    docs = _spread(_read(spark, sf_dir, "documents"), "doc_id")
+    docs, _ = _spread(_read(spark, sf_dir, "documents"), "doc_id")
     eval_df = docs.filter(F.col("doc_id") % 17 == 0)
     kept = decontaminate(docs, eval_df, shingle_w=5, threshold=1)
     return kept.select(F.col("doc_id").cast("bigint"))
@@ -1748,7 +1711,7 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # spread the one-file scan: the explode + counts are CPU-bound
     # (scale-adaptive — a fixed 8 under-fills a 32-core box at sf1)
-    docs = _spread(_read(spark, sf_dir, "documents"), "doc_id")
+    docs, _ = _spread(_read(spark, sf_dir, "documents"), "doc_id")
     out = tfidf_keywords(docs, "text", k=3, idf="ratio")
     return out.select(
         F.col("id").cast("bigint"), "rank", "term",
@@ -2305,7 +2268,7 @@ def q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # spread the one-file scan: train's word count and the encode
     # kernel are CPU-bound (single row group -> one task otherwise)
-    docs = _spread(_read(spark, sf_dir, "documents"), "doc_id")
+    docs, _ = _spread(_read(spark, sf_dir, "documents"), "doc_id")
     merges = train_bpe(docs, num_merges=256)
     enc = bpe_encode(docs, merges)
     # reference normalization/word count use the SAME Java-\s word
@@ -2380,7 +2343,7 @@ def q_pipeline_spec(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file source: spread the scan so the CPU-bound shingle
     # build isn't single-task (gate-input choice, not an operator one;
     # scale-adaptive — a fixed 8 left 3/4 of a 32-core box idle at sf1)
-    docs = _spread(_read(spark, sf_dir, "documents"), "doc_id")
+    docs, _ = _spread(_read(spark, sf_dir, "documents"), "doc_id")
     weyl = "pmod(CAST(doc_id AS BIGINT) * 2654435761, 1048576)"
     spec = {
         "steps": [
@@ -2695,7 +2658,7 @@ def q_tokens_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # single-file source: spread before the CPU-bound encode kernel
     # (scale-adaptive — a fixed 8 left 3/4 of a 32-core box idle at sf1)
-    docs = _spread(
+    docs, _ = _spread(
         _read(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     spec = {

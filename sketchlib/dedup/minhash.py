@@ -460,7 +460,7 @@ def minhash_near_duplicates(
     pair-level recall may be reduced."""
     # NOTE on under-planned sources: unlike ngram/spans (whose
     # Catalyst shingle build measurably serializes on a 1-2 partition
-    # single-file scan), a _spread_and_gate repartition here was
+    # single-file scan), an api._spread repartition here was
     # measured NEUTRAL-to-NEGATIVE at gate scale (r6 sweep 0/4/8/16/32
     # partitions: 2.7-5.9s, all inside the VM noise band — the Arrow
     # UDF's per-task overhead cancels the parallelism win), so the

@@ -7,8 +7,9 @@ Finds every unordered document pair whose DISTINCT word ``w``-gram
 operator is pure Catalyst — no Python rows ever cross the boundary —
 and no step materializes the corpus on the driver.
 
-Two exact plans, selected driver-side from the planned partition
-count (the same ~0.2ms JVM-accessor gate as ann.py / api.py):
+Two exact plans, selected driver-side from the input's planned
+partition count (``api._spread``'s probe, which also spreads a narrow
+input across the cores):
 
 * ``method="index"`` (small inputs): classic inverted index.  Grams
   whose document frequency is 1 are pruned first (they can never
@@ -52,11 +53,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sketchlib.dedup.decontaminate import word_shingles
+from sketchlib.spark.api import SPREAD_CACHE_MIN_PARTITIONS, _spread
 
 #: planned-partition threshold between the two exact plans: below or
 #: equal, the inverted-index join (fewer shuffles) wins; above, hot
 #: grams make the prefix-filtered plan the safe one.
-PREFIX_MIN_PARTITIONS = 64
+PREFIX_MIN_PARTITIONS = SPREAD_CACHE_MIN_PARTITIONS
 
 
 def _gram_sets(
@@ -103,12 +105,10 @@ def ngram_jaccard_pairs(
     if method not in ("auto", "index", "prefix"):
         raise ValueError(f"unknown method {method!r}")
 
-    from sketchlib.spark.api import _spread_and_gate
-
-    # spread the raw docs before the shingle build (shared helper:
-    # hash-by-id repartition when under-parallel, plus the driver-side
-    # small-input verdict), then decide the plan
-    spread, _, small = _spread_and_gate(docs, id_col, prefix_min_partitions)
+    # spread the raw docs before the shingle build, then decide the
+    # plan on the input's own planned partition count
+    spread, planned = _spread(docs, id_col)
+    small = planned <= prefix_min_partitions
     if method == "auto":
         method = "index" if small else "prefix"
     base = _gram_sets(spread, col, id_col, w, hash_grams)

@@ -83,12 +83,13 @@ def remove_duplicate_spans(
                 f"tokens=True requires an ARRAY column; {col!r} is "
                 f"{dt.simpleString()}"
             )
-    from sketchlib.spark.api import _spread_and_gate
+    from sketchlib.spark.api import SPREAD_CACHE_MIN_PARTITIONS, _spread
 
-    # shared helper: spread the raw docs before the split/gram build
-    # when the source plans 1-2 partitions, and take the driver-side
-    # small-input verdict for the cache gate below
-    docs, _, small = _spread_and_gate(docs, id_col)
+    # spread the raw docs before the split/gram build when the source
+    # plans narrow, and take the driver-side small-input verdict for
+    # the cache gate below
+    docs, planned = _spread(docs, id_col)
+    small = planned <= SPREAD_CACHE_MIN_PARTITIONS
     if tokens:
         # NULL array behaves as [] — same explicit default as text ''
         elem = docs.schema[col].dataType.simpleString()

@@ -48,51 +48,20 @@ def _normalize(m: np.ndarray) -> np.ndarray:
     return m / norms
 
 
-def _global_topk(
-    partial: DataFrame,
-    k: int,
-    pre_salt: int = 64,
-    two_level_min_partitions: int = 512,
-) -> DataFrame:
-    """Exact global top-k per query over per-task candidate rows.
+def _topk_per_query(partial: DataFrame, k: int) -> DataFrame:
+    """Exact top-k per query over per-task candidate rows:
+    DataFrame[query_id, rank int, vec_id, cos rounded to 4 places].
+    The ranking, including its salted two-level plan at high task
+    counts, is :func:`sketchlib.spark.api.top_k_per_group`'s."""
+    from sketchlib.spark.api import top_k_per_group
 
-    Above ``two_level_min_partitions`` input partitions, two window
-    levels: level 1 partitions by (query_id, task-salt) — partitions
-    bounded at ~tasks/pre_salt * k rows — and keeps its local top-k;
-    the final window then ranks at most pre_salt * k rows per query.
-    Top-k of per-group top-k is exact, and duplicate candidate rows
-    (IVF multi-assign) survive both plans identically, so the output
-    matches the single per-query window — which would otherwise hold
-    tasks * k rows in ONE task at 10^5-task scale.  At small partition
-    counts the per-query window is already tiny, so the extra shuffle
-    level would be pure constant overhead — skipped (adaptive, decided
-    driver-side from the plan's partition count, no extra job)."""
-    from pyspark.sql.window import Window
-
-    pre = partial
-    # shared AQE-off probe (api._plan_partitions): plans without
-    # executing upstream stages and without posting the listener event
-    # that zeroes un-fired Observations; assume big on drift (safe plan)
-    from sketchlib.spark.api import _plan_partitions
-
-    nparts = _plan_partitions(partial, assume=two_level_min_partitions + 1)
-    if nparts > two_level_min_partitions:
-        salted = partial.withColumn(
-            "__s", F.spark_partition_id() % F.lit(pre_salt)
-        )
-        w1 = Window.partitionBy("query_id", "__s").orderBy(
-            F.desc("cos"), F.asc("vec_id")
-        )
-        pre = (
-            salted.withColumn("__r", F.row_number().over(w1))
-            .filter(F.col("__r") <= k)
-            .drop("__r", "__s")
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cos", 4).alias("cos"))
+    top = top_k_per_group(
+        partial, ["query_id"], k, order_col="cos", descending=True,
+        tie_cols=["vec_id"],
+    )
+    return top.select(
+        "query_id", F.col("rank").cast("int").alias("rank"), "vec_id",
+        F.round("cos", 4).alias("cos"),
     )
 
 
@@ -153,7 +122,7 @@ def brute_topk(
     partial = df.select(id_col, vec_col).mapInArrow(
         fn, "query_id long, vec_id long, cos double"
     )
-    return _global_topk(partial, k)
+    return _topk_per_query(partial, k)
 
 
 def train_centroids(
@@ -378,7 +347,7 @@ def ivf_topk(
         )
 
     partial = bucketed.mapInArrow(fn, "query_id long, vec_id long, cos double")
-    return _global_topk(partial, k)
+    return _topk_per_query(partial, k)
 
 
 def ivf_near_duplicates(
@@ -564,24 +533,8 @@ def embedding_near_duplicates(
 
     # spread the probe side: the broadcast-GEMM kernel is CPU-bound and
     # a single-file scan plans 1-2 partitions — the whole N x N GEMM
-    # would run in ONE python worker (hash repartition by id: row-level
-    # work, any even spread is correct; round-robin would local-sort
-    # the wide embedding rows).  No-op cost at scale: n <= max_side.
-    # Size-proportional like __spark_entry__._spread: the spread goes
-    # only as wide as the Catalyst size estimate warrants (64 KB of
-    # file bytes per task), so a trivial probe side is not repartitioned
-    # to 2 x cores for nothing (measured +0.3s at sf0.1's 2k vectors)
-    # while a >= 4 MB probe still fans out to the full cap.
-    from sketchlib.spark.api import _plan_partitions, _plan_size_bytes
+    # would run in ONE python worker.  No-op cost at scale: n <= max_side.
+    from sketchlib.spark.api import _spread
 
-    _per_task = 64 * 1024
-    probe = df.select(id_col, vec_col)
-    para = df.sparkSession.sparkContext.defaultParallelism
-    cap = max(para * 2, 8)
-    cur = _plan_partitions(probe, assume=cap)
-    if cur < cap:
-        size = _plan_size_bytes(probe, assume=_per_task * cap)
-        want = min(cap, int(size // _per_task))
-        if want > cur:
-            probe = probe.repartition(want, F.col(id_col))
+    probe, _ = _spread(df.select(id_col, vec_col), id_col)
     return probe.mapInArrow(fn, "id_a long, id_b long, cos double")

@@ -5,6 +5,7 @@ build+query in one call, with the partial/merge staging hidden."""
 from __future__ import annotations
 
 import math
+import sys
 from typing import Sequence
 
 import numpy as np
@@ -882,39 +883,40 @@ def _string_order_bounds(
 
 
 def _plan_partitions(df: DataFrame, assume: int) -> int:
-    """Planned partition count via the JVM-side accessor (~0.2ms on a
-    scan; the queryExecution is reused at execution — df.rdd would
-    build the Python RDD wrapper for ~160ms).  Falls back to
-    ``assume`` on internal API drift.
+    """Planned partition count of ``df``'s output, read from the
+    driver's physical plan of a fresh Dataset under the session's own
+    conf, which this never writes.  Falls back to ``assume`` on
+    internal API drift.
 
-    Goes through ``queryExecution().toRdd()`` and NOT ``Dataset.rdd``:
-    the latter wraps the conversion in a listener-visible execution
-    event whose observed metrics are EMPTY, and any un-fired
-    Observation upstream latches that first event — silently zeroing
-    the caller's metrics (found via the pipeline spec runner, where
-    every step count after a shuffle_rows read 0).
+    Under AQE the count is the root partitioning of AQE's initial
+    plan (exchanges inserted, nothing run): ``toRdd()`` there would
+    materialize every upstream query stage, i.e. execute the input
+    pipeline once before the caller's action runs it again.  When
+    that root partitioning is unknown (a scan streamed through a
+    broadcast join), the count comes from the RDD of the static,
+    non-adaptive plan ``QueryExecution.prepareExecutedPlan`` builds;
+    building it runs only the broadcast side's job.  A plan AQE does
+    not wrap (no exchange) gives its RDD's count directly, running
+    nothing.
 
-    The probe plans with AQE DISABLED (a fresh Dataset is created so
-    its lazy QueryExecution picks the toggled conf up; restored in
-    ``finally``): under AQE, ``toRdd()`` on a post-shuffle frame
-    materializes every upstream query stage — i.e. the probe SILENTLY
-    EXECUTES the whole input pipeline once before the caller's real
-    action runs it again (measured: +4s per tokens_pipeline invocation
-    from pack_sequences' probe alone).  With AQE off the partition
-    count comes from the static plan (shuffle.partitions), executing
-    nothing; scans are unaffected either way.  The toggle only spans
-    driver-side planning of the probe Dataset and never affects result
-    correctness of concurrently planned queries (AQE is a physical
-    optimization)."""
+    Goes through the QueryExecution and NOT ``Dataset.rdd``: the
+    latter wraps the conversion in a listener-visible execution event
+    whose observed metrics are EMPTY, and any un-fired Observation
+    upstream latches that first event — silently zeroing the caller's
+    metrics (found via the pipeline spec runner, where every step
+    count after a shuffle_rows read 0)."""
     try:
-        sess = df.sparkSession
-        old = sess.conf.get("spark.sql.adaptive.enabled", "true")
-        try:
-            sess.conf.set("spark.sql.adaptive.enabled", "false")
-            probe = df.where(F.lit(True))  # fresh lazy QueryExecution
-            return probe._jdf.queryExecution().toRdd().getNumPartitions()
-        finally:
-            sess.conf.set("spark.sql.adaptive.enabled", old)
+        qe = df.where(F.lit(True))._jdf.queryExecution()
+        plan = qe.executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            n = plan.executedPlan().outputPartitioning().numPartitions()
+            if n > 0:
+                return n
+            execution = df.sparkSession._jvm.org.apache.spark.sql.execution
+            plan = execution.QueryExecution.prepareExecutedPlan(
+                qe.sparkSession(), qe.optimizedPlan()
+            )
+        return plan.execute().getNumPartitions()
     except Exception:  # pragma: no cover - internal API drift
         return assume
 
@@ -922,11 +924,7 @@ def _plan_partitions(df: DataFrame, assume: int) -> int:
 def _plan_size_bytes(df: DataFrame, assume: int) -> int:
     """Catalyst's optimized-plan size estimate in bytes (driver-side,
     no job; for a parquet scan this is essentially the file bytes).
-    Falls back to ``assume`` on internal API drift.  Used by the
-    spread gates to decide whether a narrow plan is narrow because the
-    input is SMALL (leave it alone — repartitioning a few thousand
-    rows to 2x cores costs more scheduling than it buys) or because a
-    sizeable file planned few row groups (spread it)."""
+    Falls back to ``assume`` on internal API drift."""
     try:
         return int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -935,27 +933,43 @@ def _plan_size_bytes(df: DataFrame, assume: int) -> int:
         return assume
 
 
-#: partition gate shared by the corpus operators that spread + cache
-#: (dedup/ngram.py, dedup/spans.py): at or below this planned
-#: partition count an input is "small" — worth persisting its derived
-#: frame, and cheap enough for the single-stage plans
+#: file bytes per task when :func:`_spread` widens a narrow plan.
+#: 64 KB of compressed text per task reproduces the two measured
+#: optima: ~8-9 tasks for the sf0.1 documents gates (an unconditional
+#: 64-way spread there cost 0.4-1.7s of scheduling and an extra
+#: stage) and the full spread at sf1's >= 5 MB inputs.
+SPREAD_BYTES_PER_TASK = 64 << 10
+
+#: planned-partition verdict of the corpus operators that spread and
+#: cache (dedup/ngram.py, dedup/spans.py): at or below this count an
+#: input is "small" — worth persisting its derived frame, and cheap
+#: enough for the single-stage plans
 SPREAD_CACHE_MIN_PARTITIONS = 64
 
 
-def _spread_and_gate(
-    df: DataFrame, id_col: str, threshold: int = SPREAD_CACHE_MIN_PARTITIONS
-):
-    """(spread_df, nparts, small): hash-by-``id_col`` repartition to
-    the session's shuffle parallelism when the source plans fewer
-    partitions (a single-file scan plans 1-2 and would run every
-    downstream build there; hash, never round-robin — round-robin
-    local-sorts every wide row for retry determinism), plus the
-    driver-side small-input verdict both callers gate caching (and
-    ngram its plan choice) on.  No-op at scale."""
-    nparts = _plan_partitions(df, threshold + 1)
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = df.repartition(target, F.col(id_col)) if nparts < target else df
-    return out, nparts, nparts <= threshold
+def _spread(df: DataFrame, key: str) -> tuple[DataFrame, int]:
+    """(spread_df, planned): spread a narrow plan across the session's
+    cores before a CPU-heavy downstream kernel, plus ``df``'s own
+    planned partition count for the caller's small/big verdict.
+
+    A single-file scan plans one partition per few row groups, so a
+    CPU-bound stage would run on a fraction of the box.  Below
+    ``cap = max(2 x defaultParallelism, 8)`` planned partitions the
+    input is hash-repartitioned on ``key`` to as many partitions as its
+    Catalyst size estimate fills at :data:`SPREAD_BYTES_PER_TASK` each
+    (at most ``cap``), only when that is more than planned: a small
+    input is left alone, since its repartition costs more scheduling
+    than the kernel saves.  Hash, never round-robin: round-robin
+    local-sorts every wide row for retry determinism.  A probe lost to
+    API drift counts as wide (no spread, the callers' big plans)."""
+    planned = _plan_partitions(df, assume=sys.maxsize)
+    cap = max(2 * df.sparkSession.sparkContext.defaultParallelism, 8)
+    if planned < cap:
+        size = _plan_size_bytes(df, assume=SPREAD_BYTES_PER_TASK * cap)
+        want = min(cap, size // SPREAD_BYTES_PER_TASK)
+        if want > planned:
+            df = df.repartition(want, F.col(key))
+    return df, planned
 
 
 def _hash_bucket_expr(order, order_buckets: int, normalized: bool = False):
@@ -1147,8 +1161,8 @@ def sample_by_token_budget(
     partitions the single-window plan is already tiny, and the bucketed
     plan's two extra shuffles + bounds scan are pure constant overhead
     — so it is taken verbatim, decided driver-side from the planned
-    partition count (~0.2ms, no extra job), mirroring the ann.py
-    two-level top-k gate.  Set ``bucketed_min_partitions=0`` to force
+    partition count, like the two-level gate of
+    :func:`top_k_per_group`.  Set ``bucketed_min_partitions=0`` to force
     the bucketed plan.  Returns the selected rows of ``df`` unchanged."""
     if not budgets:
         return df.limit(0)
@@ -1430,7 +1444,7 @@ def with_global_rank(
     ``row_number`` within each ~n/order_buckets-row bucket partition
     plus the bucket's offset.  Below ``bucketed_min_partitions``
     planned input partitions the single-window plan is taken verbatim
-    (driver-side gate, ~0.2ms, no counts job).
+    (driver-side gate, no counts job).
 
     Ranks are deterministic only under a TOTAL order: include a unique
     key (e.g. the doc id) in ``tie_cols``, otherwise tied rows receive
@@ -1656,10 +1670,10 @@ def top_k_per_group(
     single-window plan moves at most tasks*k rows per group — but at
     10^5 tasks that is still 10^5*k rows sorted in ONE task for a hot
     group.  Above ``two_level_min_partitions`` planned input
-    partitions (driver-side check, ~0.2ms, mirroring the ann.py
-    two-level top-k) a first window over (group, task-salt) keeps each
-    salt's local top-k, so the final per-group window ranks at most
-    ``pre_salt * k`` rows regardless of task count.
+    partitions (a driver-side check) a first window over (group,
+    task-salt) keeps each salt's local top-k, so the final per-group
+    window ranks at most ``pre_salt * k`` rows regardless of task
+    count.
     Top-k of per-salt top-ks is exactly the global top-k under a total
     order, so both plans return identical rows; include a unique key
     in ``tie_cols`` for deterministic ranks — in hash mode too, where

@@ -83,12 +83,41 @@ def test_with_quantile_rank_nulls_empty_validation(spark):
         with_quantile_rank(df, "v", buckets=0)
 
 
-def test_plan_partitions_does_not_zero_observations(spark):
+def _probe_frames(spark, root):
+    """(name, frame, planned partitions at local[4] with 8 shuffle
+    partitions): the counts the static plan gives, pinned so that the
+    plans chosen from them cannot move silently."""
+    from pyspark.sql.window import Window
+
+    spark.range(0, 3600).select(
+        "id", (F.col("id") % 7).alias("g")
+    ).repartition(6).write.parquet(f"{root}/six")
+    spark.range(0, 100).select(
+        "id", (F.col("id") % 7).alias("g")
+    ).coalesce(1).write.parquet(f"{root}/one")
+    scan = spark.read.parquet(f"{root}/six")
+    one = spark.read.parquet(f"{root}/one")
+    win = Window.partitionBy("g").orderBy("id")
+    return [
+        # Spark packs the six small files into three splits
+        ("scan_6_files", scan, 3),
+        ("coalesce_4", spark.range(0, 1200, numPartitions=12).coalesce(4), 4),
+        ("group_by", scan.groupBy("g").count(), 8),
+        ("repartition_23", scan.repartition(23), 23),
+        ("filter_after_window",
+         scan.withColumn("r", F.row_number().over(win)).filter("r <= 2"), 8),
+        # AQE's initial plan leaves this partitioning unknown
+        ("broadcast_join", scan.join(F.broadcast(one), "id"), 3),
+    ]
+
+
+def test_plan_partitions_does_not_zero_observations(spark, tmp_path):
     """Regression: Dataset.rdd posts a listener event with EMPTY
     observed metrics; an un-fired upstream Observation latched it and
     silently read 0.  _plan_partitions must use the event-free
     accessor, so adaptive-gate operators (rank/topk/sampler/ann) keep
-    caller observations intact."""
+    caller observations intact.  Also pins the planned count of each
+    frame shape the gates see."""
     from pyspark.sql import Observation
 
     from sketchlib.spark.api import _plan_partitions, shuffle_rows
@@ -101,3 +130,129 @@ def test_plan_partitions_does_not_zero_observations(spark):
     out = shuffle_rows(o, seed=1, key_cols=["doc_id"])
     assert out.count() == 100
     assert int(obs.get["rows"]) == 100
+
+    for name, frame, want in _probe_frames(spark, tmp_path):
+        obs = Observation()
+        o = frame.observe(obs, F.count(F.lit(1)).alias("rows"))
+        assert _plan_partitions(o, assume=-1) == want, name
+        assert o.count() == int(obs.get["rows"]) > 0, name
+
+
+def test_spread_is_size_proportional(spark, tmp_path):
+    """api._spread widens a narrow plan only as far as its size
+    estimate fills SPREAD_BYTES_PER_TASK per task, up to 2 x cores."""
+    import os
+
+    from sketchlib.spark.api import SPREAD_BYTES_PER_TASK, _spread
+
+    cap = max(2 * spark.sparkContext.defaultParallelism, 8)
+    # one ~120 KB file: 1 task's worth of bytes, left as planned
+    path = str(tmp_path / "one")
+    spark.range(0, 15_000, numPartitions=1).select(
+        F.xxhash64("id").alias("h")
+    ).write.parquet(path)
+    size = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path) if f.endswith(".parquet")
+    )
+    assert SPREAD_BYTES_PER_TASK <= size < 2 * SPREAD_BYTES_PER_TASK
+    scan = spark.read.parquet(path)
+    out, planned = _spread(scan, "h")
+    assert out is scan and planned == 1
+    # >= cap tasks' worth of bytes in one partition: spread to cap
+    big = spark.range(0, cap * SPREAD_BYTES_PER_TASK // 8, numPartitions=1)
+    out, planned = _spread(big, "id")
+    assert planned == 1 and out.rdd.getNumPartitions() == cap
+    # already planned at cap partitions: untouched
+    wide = spark.range(0, cap * SPREAD_BYTES_PER_TASK, numPartitions=cap)
+    out, planned = _spread(wide, "id")
+    assert out is wide and planned == cap
+
+
+def test_planner_probes_never_write_session_conf(spark, monkeypatch):
+    """The gates run operators from driver thread pools: no planner
+    probe may write session conf, and AQE must stay on throughout."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
+    from pyspark.sql.conf import RuntimeConfig
+
+    from sketchlib.dedup.ngram import ngram_jaccard_pairs
+    from sketchlib.similarity.ann import brute_topk
+    from sketchlib.spark.api import (
+        pack_sequences,
+        sample_by_token_budget,
+        top_k_per_group,
+        with_global_rank,
+    )
+
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+
+    docs = spark.createDataFrame(
+        [(i, f"s{i % 3}", 5 + i % 40, " ".join(f"w{(i * 7 + j) % 50}"
+          for j in range(12))) for i in range(400)],
+        "doc_id long, source string, n_tok long, text string",
+    )
+    rng = np.random.default_rng(3)
+    m = rng.normal(size=(200, 8))
+    vecs = spark.createDataFrame(
+        [(i, m[i].tolist()) for i in range(200)],
+        "vec_id long, embedding array<float>",
+    )
+
+    def layout():
+        sampled = sample_by_token_budget(docs, {"s0": 800, "s1": 500})
+        ranked = with_global_rank(sampled, "n_tok", tie_cols=["doc_id"])
+        return pack_sequences(ranked, 64, order_col="rank").count()
+
+    jobs = [
+        layout,
+        lambda: top_k_per_group(docs, ["source"], 3, order_col="n_tok",
+                                tie_cols=["doc_id"]).count(),
+        lambda: ngram_jaccard_pairs(docs, threshold=0.5).count(),
+        lambda: brute_topk(vecs, m[:4], [0, 1, 2, 3], k=5).count(),
+    ]
+    seen = set()
+    done = threading.Event()
+
+    def watch():
+        while not done.is_set():
+            seen.add(spark.conf.get("spark.sql.adaptive.enabled"))
+            done.wait(0.005)
+
+    watcher = threading.Thread(target=watch)
+    watcher.start()
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            counts = list(pool.map(lambda f: f(), jobs * 2))
+    finally:
+        done.set()
+        watcher.join(timeout=10)
+    assert not watcher.is_alive()
+    assert all(c > 0 for c in counts)
+    assert "spark.sql.adaptive.enabled" not in writes
+    assert seen == {"true"}
+
+
+def test_no_module_writes_session_conf():
+    """Session conf is set only where session.get_spark creates the
+    session: no module under sketchlib/ calls conf.set(."""
+    import pathlib
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    offenders = [
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "conf.set(" in p.read_text()
+    ]
+    assert offenders == []

@@ -259,8 +259,9 @@ def test_global_topk_adaptive_two_level(spark):
     """Round 4: the final per-query rank is two-level ONLY above the
     partition threshold (at small scale the extra shuffle is pure
     overhead; at 10^5-task scale a single per-query window is a
-    straggler).  Results must be identical either way."""
-    from sketchlib.similarity.ann import _global_topk
+    straggler).  Results must be identical either way, in the schema
+    brute_topk / ivf_topk have always returned."""
+    from sketchlib.similarity.ann import _topk_per_query
 
     partial = spark.range(0, 2000).select(
         (F.col("id") % 4).alias("query_id"),
@@ -273,10 +274,13 @@ def test_global_topk_adaptive_two_level(spark):
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    assert plan(_global_topk(small, 3)).count("Window [") == 1
-    assert plan(_global_topk(big, 3)).count("Window [") == 2
-    rs = sorted(map(tuple, _global_topk(small, 3).collect()))
-    rb = sorted(map(tuple, _global_topk(big, 3).collect()))
+    assert plan(_topk_per_query(small, 3)).count("Window [") == 1
+    assert plan(_topk_per_query(big, 3)).count("Window [") == 2
+    assert _topk_per_query(small, 3).schema.simpleString() == (
+        "struct<query_id:bigint,rank:int,vec_id:bigint,cos:double>"
+    )
+    rs = sorted(map(tuple, _topk_per_query(small, 3).collect()))
+    rb = sorted(map(tuple, _topk_per_query(big, 3).collect()))
     assert rs == rb and len(rs) == 4 * 3
 
 
