@@ -33,7 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib.spark.api import (
+    BUCKETED_MIN_PARTITIONS,
+    ORDER_BUCKETS,
+    _exact_running_prior,
+    _order_and_bucket,
+    _split_points,
     _spread,
+    _use_bucketed,
     approx_distinct,
     approx_quantiles,
     bloom_contains,
@@ -60,32 +66,54 @@ def _sf_rows(sf_dir: str) -> int:
     return max(int(1_000_000 * sf), 1_000)
 
 
-def _rank_aggs(col: str, ests: list[float]) -> list:
+def _concurrently(*jobs: Callable[[], object]) -> list:
+    """Run independent driver-side jobs from one thread each, so their
+    Spark jobs overlap and the next job's tasks back-fill the current
+    one's tail (every job's result is unchanged).  Results come back
+    in argument order; the first failure re-raises."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futures = [pool.submit(job) for job in jobs]
+        return [f.result() for f in futures]
+
+
+def _rank_aggs(col: str, ests: list[float], where=None, tag: str = "") -> list:
     """Conditional-aggregate columns for the rank-space error check:
     per estimate, the CDF interval [P(<e), P(<=e)] (and its
     nearest-integer snap — interpolated estimates on discrete columns
-    land in probability-mass gaps)."""
+    land in probability-mass gaps).  ``where`` restricts every
+    aggregate to the rows it holds (one group); ``tag`` prefixes the
+    column names so several groups share one aggregation."""
     c = F.col(col).cast("double")
-    aggs = [F.count(c).alias("n")]
+    if where is not None:
+        c = F.when(where, c)
+    aggs = [F.count(c).alias(f"{tag}n")]
     for i, e in enumerate(ests):
         r = float(np.rint(e))
         aggs += [
-            F.avg((c < F.lit(float(e))).cast("double")).alias(f"lt{i}"),
-            F.avg((c <= F.lit(float(e))).cast("double")).alias(f"le{i}"),
-            F.avg((c < F.lit(r)).cast("double")).alias(f"rlt{i}"),
-            F.avg((c <= F.lit(r)).cast("double")).alias(f"rle{i}"),
+            F.avg((c < F.lit(float(e))).cast("double")).alias(f"{tag}lt{i}"),
+            F.avg((c <= F.lit(float(e))).cast("double")).alias(f"{tag}le{i}"),
+            F.avg((c < F.lit(r)).cast("double")).alias(f"{tag}rlt{i}"),
+            F.avg((c <= F.lit(r)).cast("double")).alias(f"{tag}rle{i}"),
         ]
     return aggs
 
 
-def _rank_oks(row, qs: list[float]) -> list[bool]:
-    # count-aware tolerance: a single rank step is 1/n, so tiny inputs
-    # (small sf / small groups) get proportional slack
-    tol = max(RANK_TOL, 1.5 / max(row["n"], 1))
+def _rank_interval_ok(q: float, n: int, lt, le, rlt, rle) -> bool:
+    """The rank-interval rule: ``q`` lies in the estimate's CDF
+    interval [lt, le] or in its integer snap's [rlt, rle], widened by
+    a count-aware tolerance — a single rank step is 1/n, so tiny
+    inputs (small sf / small groups) get proportional slack."""
+    tol = max(RANK_TOL, 1.5 / max(n, 1))
+    return bool(lt - tol <= q <= le + tol or rlt - tol <= q <= rle + tol)
+
+
+def _rank_oks(row, qs: list[float], tag: str = "") -> list[bool]:
     return [
-        bool(
-            row[f"lt{i}"] - tol <= q <= row[f"le{i}"] + tol
-            or row[f"rlt{i}"] - tol <= q <= row[f"rle{i}"] + tol
+        _rank_interval_ok(
+            q, row[f"{tag}n"],
+            *(row[f"{tag}{t}{i}"] for t in ("lt", "le", "rlt", "rle")),
         )
         for i, q in enumerate(qs)
     ]
@@ -101,34 +129,35 @@ def _grouped_rank_ok(
     df: DataFrame, key_col: str, col: str, est_map: dict
 ) -> dict:
     """Per-group rank-space check: ``est_map`` is {(key, q): estimate};
-    returns {(key, q): ok}.  ONE aggregation job with per-group
-    conditional aggregates — never a full-table collect (a driver OOM
-    at real scale)."""
-    items = sorted(est_map.items())
-    keys = sorted({k for (k, _q) in est_map})
-    kidx = {k: i for i, k in enumerate(keys)}
-    c = F.col(col).cast("double")
+    returns {(key, q): ok}.  ONE aggregation job with
+    :func:`_rank_aggs` per group under a ``key_col == key`` mask —
+    never a full-table collect (a driver OOM at real scale)."""
+    groups: dict = {}
+    for (k, q), e in sorted(est_map.items()):
+        groups.setdefault(k, []).append((q, e))
     aggs = []
-    for k in keys:
-        aggs.append(F.count(F.when(F.col(key_col) == k, 1)).alias(f"n{kidx[k]}"))
-    for j, ((k, _q), e) in enumerate(items):
-        m = F.col(key_col) == k
-        r = float(np.rint(e))
-        aggs += [
-            F.avg(F.when(m, (c < F.lit(float(e))).cast("double"))).alias(f"lt{j}"),
-            F.avg(F.when(m, (c <= F.lit(float(e))).cast("double"))).alias(f"le{j}"),
-            F.avg(F.when(m, (c < F.lit(r)).cast("double"))).alias(f"rlt{j}"),
-            F.avg(F.when(m, (c <= F.lit(r)).cast("double"))).alias(f"rle{j}"),
-        ]
+    for g, (k, items) in enumerate(groups.items()):
+        aggs += _rank_aggs(
+            col, [e for _q, e in items], F.col(key_col) == k, f"g{g}_"
+        )
     row = df.agg(*aggs).first()
     out = {}
-    for j, ((k, q), _e) in enumerate(items):
-        tol = max(RANK_TOL, 1.5 / max(row[f"n{kidx[k]}"], 1))
-        out[(k, q)] = bool(
-            row[f"lt{j}"] - tol <= q <= row[f"le{j}"] + tol
-            or row[f"rlt{j}"] - tol <= q <= row[f"rle{j}"] + tol
-        )
+    for g, (k, items) in enumerate(groups.items()):
+        qs = [q for q, _e in items]
+        out.update(zip([(k, q) for q in qs], _rank_oks(row, qs, f"g{g}_")))
     return out
+
+
+def _running_counts(vc: DataFrame) -> DataFrame:
+    """``vc`` (distinct values ``__v`` with row counts ``__c``) plus
+    ``__prior___c``, the exact number of rows below ``__v``: value
+    ``__v`` holds ranks ``[__prior___c, __prior___c + __c)``.  The
+    library's exact prefix sum under its own small/big verdict —
+    bucketed by sketch split points of ``__v`` when ``vc`` plans wide,
+    never a single-task global window over a big frame."""
+    bucketed = _use_bucketed(vc, ORDER_BUCKETS, BUCKETED_MIN_PARTITIONS)
+    order, bucket = _order_and_bucket(vc, "__v", 0, ORDER_BUCKETS, bucketed)
+    return _exact_running_prior(vc, ["__c"], order, bucket)
 
 
 def _exact_quantile_check(
@@ -147,9 +176,11 @@ def _exact_quantile_check(
     bit-identical, asserted by tests/test_entry_exact_percentile.py.
     The rank-CDF fractions are conditional SUMS of the same counts
     (sum/n == the former avg-of-indicators: both are exact small-int
-    doubles).  The running count runs on the distinct-value frame
-    (bounded: price-grid / measurement columns have ~fixed granularity);
-    2 light jobs on a persisted ~MB frame replace the map-merge."""
+    doubles).  The running count is :func:`_running_counts` over the
+    distinct-value frame (bounded: price-grid / measurement columns
+    have ~fixed granularity), so it takes the library's bucketed
+    prefix sum when that frame plans wide; a few light jobs on a
+    persisted ~MB frame replace the map-merge."""
     import math as _math
 
     c = F.col(col).cast("double")
@@ -186,17 +217,16 @@ def _exact_quantile_check(
             {int(_math.floor(p)) for p in positions}
             | {int(_math.ceil(p)) for p in positions}
         )
-        from pyspark.sql.window import Window
-
-        w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, 0)
-        cum = vc.withColumn("__cum", F.sum("__c").over(w))
+        cum = _running_counts(vc)
+        lo_col = F.col("__prior___c")
         cond = None
         for rk in ranks:
-            t = ((F.col("__cum") - F.col("__c")) <= rk) & (rk < F.col("__cum"))
+            t = (lo_col <= rk) & (rk < lo_col + F.col("__c"))
             cond = t if cond is None else (cond | t)
         val_at: dict[int, float] = {}
         for h in cum.filter(cond).collect():
-            lo_c, hi_c = h["__cum"] - h["__c"], h["__cum"]
+            lo_c = h["__prior___c"]
+            hi_c = lo_c + h["__c"]
             for rk in ranks:
                 if lo_c <= rk < hi_c:
                     val_at[rk] = float(h["__v"])
@@ -223,10 +253,8 @@ def _quantile_query(
 ) -> DataFrame:
     df = _read(spark, sf_dir, table).filter(F.col(col).isNotNull())
     # the sketch build and the distinct-value-count materialization are
-    # independent jobs: overlap them from two driver threads (guide
-    # §2.6) — the rank/percentile aggs then run on the warm vc cache
-    from concurrent.futures import ThreadPoolExecutor
-
+    # independent jobs: overlap them from two driver threads — the
+    # rank/percentile aggs then run on the warm vc cache
     c = F.col(col).cast("double")
     vc = (
         df.filter(c.isNotNull())
@@ -234,13 +262,10 @@ def _quantile_query(
         .agg(F.count(F.lit(1)).alias("__c"))
         .persist()
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_est = pool.submit(
-            approx_quantiles, df, col, qs, sketch=sketch, **params
-        )
-        f_mat = pool.submit(vc.count)
-        ests, _sk = f_est.result()
-        f_mat.result()
+    (ests, _sk), _ = _concurrently(
+        lambda: approx_quantiles(df, col, qs, sketch=sketch, **params),
+        vc.count,
+    )
     exact, oks, _n = _exact_quantile_check(df, col, qs, ests, vc=vc)
     rows = [
         (float(q), float(round(x, 4)), bool(ok))
@@ -357,21 +382,15 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("part.p_partkey", "part", "p_partkey"),
     ]
     # six independent small jobs (3 tables x sketch+exact): overlap
-    # them from a driver thread pool so the next job's tasks back-fill
-    # the current one's tail (guide-standard; results are per-job
-    # deterministic and unchanged)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def one(spec):
-        metric, table, col = spec
+    # them from driver threads (results are per-job deterministic)
+    def one(metric, table, col):
         df = _read(spark, sf_dir, table)
         est, sk = approx_distinct(df, col, p=14)
         exact = df.select(F.countDistinct(col).alias("d")).first()["d"]
         ok = abs(est - exact) / max(exact, 1) <= 4 * sk.relative_std_error()
         return (metric, int(exact), bool(ok))
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        rows = list(pool.map(one, specs))
+    rows = _concurrently(*[lambda s=s: one(*s) for s in specs])
     return spark.createDataFrame(rows, "metric string, exact_count bigint, ok boolean")
 
 
@@ -383,22 +402,15 @@ def q_grouped_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = _read(spark, sf_dir, "events")
     # the grouped-sketch job and the exact countDistinct are
-    # independent — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_est = pool.submit(
-            lambda: grouped_distinct(
-                events, ["event_type"], "user_id", p=14, salt_buckets=4
-            ).collect()
-        )
-        f_exact = pool.submit(
-            events.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("d"))
-            .collect
-        )
-        est_rows = f_est.result()
-        exact_rows = f_exact.result()
+    # independent — overlap them
+    est_rows, exact_rows = _concurrently(
+        lambda: grouped_distinct(
+            events, ["event_type"], "user_id", p=14, salt_buckets=4
+        ).collect(),
+        events.groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("d"))
+        .collect,
+    )
     est = {r["event_type"]: (r["estimate"], r["rse"]) for r in est_rows}
     rows = sorted(
         (
@@ -421,15 +433,11 @@ def q_cms_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= exact and within the eps*N bound."""
     events = _read(spark, sf_dir, "events")
     # the CMS build and the exact counts are independent — overlap them
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cms = pool.submit(build_cms, events, "event_type", 5, 16384)
-        f_exact = pool.submit(
-            events.groupBy("event_type").agg(F.count("*").alias("cnt")).collect
-        )
-        cms = f_cms.result()
-        exact = {r["event_type"]: r["cnt"] for r in f_exact.result()}
+    cms, exact_rows = _concurrently(
+        lambda: build_cms(events, "event_type", 5, 16384),
+        events.groupBy("event_type").agg(F.count("*").alias("cnt")).collect,
+    )
+    exact = {r["event_type"]: r["cnt"] for r in exact_rows}
     est_pdf = cms_frequencies(cms, events, "event_type").toPandas()
     bound = cms.error_bound()
     rows = []
@@ -449,51 +457,34 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5 (Spark-exact) must appear in both backends' found top-10 and
     no estimate may undercount (verified Spark-side; constant-shape
     oracle)."""
-    from sketchlib.spark.api import heavy_hitters
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    from sketchlib.spark.api import heavy_hitters_spacesaving
+    from sketchlib.spark.api import heavy_hitters, heavy_hitters_spacesaving
 
     # six actions touch only user_id: persist the narrow projection for
     # the query's lifetime (unpersisted before returning), and overlap
-    # the independent jobs in two waves (guide §2.6)
+    # the independent jobs in two waves
     events = _read(spark, sf_dir, "events").select("user_id").persist()
     exact = events.groupBy("user_id").count()
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_got = pool.submit(
-            lambda: heavy_hitters(events, "user_id", k=10).collect()
-        )
-        f_cms = pool.submit(
-            lambda: heavy_hitters(
-                events, "user_id", k=10, backend="cms"
-            ).collect()
-        )
-        f_top5 = pool.submit(
-            exact.orderBy(F.desc("count"), F.asc("user_id")).limit(5).collect
-        )
-        got, got_cms = f_got.result(), f_cms.result()
-        top5 = [r["user_id"] for r in f_top5.result()]
+    got, got_cms, top5_rows = _concurrently(
+        lambda: heavy_hitters(events, "user_id", k=10).collect(),
+        lambda: heavy_hitters(events, "user_id", k=10, backend="cms").collect(),
+        exact.orderBy(F.desc("count"), F.asc("user_id")).limit(5).collect,
+    )
+    top5 = [r["user_id"] for r in top5_rows]
     got_keys = [r["user_id"] for r in got]
     cms_keys = [r["user_id"] for r in got_cms]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_counts = pool.submit(
-            exact.filter(F.col("user_id").isin(got_keys + cms_keys)).collect
-        )
-        f_ss = pool.submit(
-            lambda: heavy_hitters_spacesaving(
-                events, "user_id", k=10, capacity=4096
-            ).collect()
-        )
-        f_h5 = pool.submit(
-            events.filter(F.col("user_id").isin(top5))
-            .select(F.xxhash64("user_id").alias("h"))
-            .distinct()
-            .collect
-        )
-        true_counts = {r["user_id"]: r["count"] for r in f_counts.result()}
-        ss_keys = {r["key_hash"] for r in f_ss.result()}
-        top5_hashed = {r["h"] for r in f_h5.result()}
+    counts_rows, ss_rows, h5_rows = _concurrently(
+        exact.filter(F.col("user_id").isin(got_keys + cms_keys)).collect,
+        lambda: heavy_hitters_spacesaving(
+            events, "user_id", k=10, capacity=4096
+        ).collect(),
+        events.filter(F.col("user_id").isin(top5))
+        .select(F.xxhash64("user_id").alias("h"))
+        .distinct()
+        .collect,
+    )
+    true_counts = {r["user_id"]: r["count"] for r in counts_rows}
+    ss_keys = {r["key_hash"] for r in ss_rows}
+    top5_hashed = {r["h"] for r in h5_rows}
     containment_ok = all(k in got_keys for k in top5) and all(
         k in cms_keys for k in top5
     )
@@ -537,16 +528,13 @@ def q_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = docs.count()
     off = n // 2
     b_df = docs.select((F.col("doc_id") + off).alias("doc_id"))
-    # four independent jobs — overlap them (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_a = pool.submit(build_theta, docs, "doc_id", 4096)
-        f_b = pool.submit(build_theta, b_df, "doc_id", 4096)
-        f_i = pool.submit(docs.join(b_df, "doc_id", "semi").count)
-        f_u = pool.submit(docs.union(b_df).distinct().count)
-        a, b = f_a.result(), f_b.result()
-        exact_inter, exact_union = f_i.result(), f_u.result()
+    # four independent jobs — overlap them
+    a, b, exact_inter, exact_union = _concurrently(
+        lambda: build_theta(docs, "doc_id", 4096),
+        lambda: build_theta(b_df, "doc_id", 4096),
+        docs.join(b_df, "doc_id", "semi").count,
+        docs.union(b_df).distinct().count,
+    )
     tol = 4 * a.relative_std_error() + 0.01
     ests = {
         "distinct_a": (a.estimate(), n),
@@ -588,10 +576,8 @@ def q_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = [0.1, 0.5, 0.9, 0.99]
 
     # the row-level and token-level chains are independent — overlap
-    # them (guide §2.6); cache block computation is per-partition
-    # locked, so the first jobs co-materialize the persisted table
-    from concurrent.futures import ThreadPoolExecutor
-
+    # them; cache block computation is per-partition locked, so the
+    # first jobs co-materialize the persisted table
     def row_chain():
         ests, _ = approx_quantiles(df, "n_tok", qs, sketch="tdigest", delta=2000)
         return _rank_ok(df, "n_tok", qs, ests)
@@ -603,10 +589,7 @@ def q_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         flat = df.select(F.explode("tokens").alias("t"))
         return _rank_ok(flat, "t", qs, ests)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_row = pool.submit(row_chain)
-        f_tok = pool.submit(tok_chain)
-        oks_row, oks_tok = f_row.result(), f_tok.result()
+    oks_row, oks_tok = _concurrently(row_chain, tok_chain)
     df.unpersist()
 
     rows = [
@@ -831,28 +814,22 @@ def q_quantile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast t-digest CDF, verified Spark-side against the exact
     percent_rank (abs err <= 0.01, the rank-error bar) plus decile
     balance; constant-shape oracle."""
-    from pyspark.sql.window import Window
-
     from sketchlib.spark.api import with_quantile_rank
 
     ev = _read(spark, sf_dir, "events").select("event_id", "value")
     out = with_quantile_rank(ev, "value", buckets=10)
-    # exact percent_rank WITHOUT the global single-partition window
-    # over every row (WindowExec funnels the whole table into one
-    # task): percent_rank(v) == (#rows < v) / (n-1), so a running
-    # count over the ~30k DISTINCT values (broadcast back by value)
-    # gives the identical double — long/long division on the same
-    # operands Spark's PercentRank divides.  The former event_id join
-    # and the second groupBy action fuse into ONE conditional agg.
+    # exact percent_rank WITHOUT a global window over every row:
+    # percent_rank(v) == (#rows < v) / (n-1), so the running count
+    # over the ~30k DISTINCT values (_running_counts, broadcast back by
+    # value) gives the identical double — long/long division on the
+    # same operands Spark's PercentRank divides.  The former event_id
+    # join and the second groupBy action fuse into ONE conditional agg.
     n = ev.count()
     c = F.col("value").cast("double")
     vc = ev.groupBy(c.alias("__v")).agg(F.count(F.lit(1)).alias("__c"))
-    w = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
-    ranks = vc.withColumn(
-        "__lt", F.coalesce(F.sum("__c").over(w), F.lit(0))
-    ).select("__v", "__lt")
+    ranks = _running_counts(vc).select("__v", "__prior___c")
     exact_col = (
-        (F.col("__lt") / F.lit(n - 1)) if n > 1 else F.lit(0.0)
+        (F.col("__prior___c") / F.lit(n - 1)) if n > 1 else F.lit(0.0)
     ).alias("exact")
     j = out.join(F.broadcast(ranks), c == F.col("__v")).select(
         "q_rank", "q_bucket", exact_col
@@ -2069,11 +2046,10 @@ def q_streaming_windowed_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
             if est is None:
                 ok = False
             else:
-                tol = max(RANK_TOL, 1.5 / n)
                 r = float(np.rint(est))
-                ok = (
-                    (v < est).mean() - tol <= 0.5 <= (v <= est).mean() + tol
-                    or (v < r).mean() - tol <= 0.5 <= (v <= r).mean() + tol
+                ok = _rank_interval_ok(
+                    0.5, n, (v < est).mean(), (v <= est).mean(),
+                    (v < r).mean(), (v <= r).mean(),
                 )
             rows.append(
                 (
@@ -2146,15 +2122,9 @@ def q_sampling_and_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = float(np.median(s))
 
     n_buckets = 8
-    # same bounds the dedicated range_partition_bounds pass produced:
-    # (i/n)-quantiles of the t-digest, non-decreasing-enforced
-    qs_b = [i / n_buckets for i in range(1, n_buckets)]
-    vals = np.atleast_1d(td.value_at_quantile(np.asarray(qs_b, dtype=np.float64)))
-    bounds = []
-    prev = -np.inf
-    for v in vals:
-        prev = max(float(v), prev)
-        bounds.append(float(prev))
+    # range_partition_bounds' own bound code over the fused scan's
+    # t-digest: its (i/n)-quantiles, non-decreasing-enforced
+    bounds = _split_points(td, n_buckets)
     bucket = F.lit(0)
     for b in bounds:
         bucket = bucket + (F.col("l_extendedprice") > F.lit(b)).cast("int")

@@ -314,19 +314,22 @@ def range_partition_bounds(
     rows-per-partition where equal-width ranges would hotspot."""
     if n_partitions < 2:
         return []
-    qs = [i / n_partitions for i in range(1, n_partitions)]
-    vals, _sk = approx_quantiles(
-        df, col, qs, sketch=sketch, is_array=is_array, **params
+    sk = sketch_column(
+        df, col, _quantile_factory(sketch, **params),
+        KIND_ARRAY if is_array else KIND_DOUBLE,
     )
-    if _sk is None:  # empty input: no meaningful split points
+    if sk is None:  # empty input: no meaningful split points
         return []
-    # enforce strictly non-decreasing bounds (interp jitter on ties)
-    out = []
-    prev = -np.inf
-    for v in vals:
-        prev = max(v, prev)
-        out.append(float(prev))
-    return out
+    return _split_points(sk, n_partitions)
+
+
+def _split_points(sk, n_partitions: int) -> list[float]:
+    """The (i/n)-quantiles of quantile sketch ``sk`` for i in 1..n-1,
+    forced non-decreasing (interpolation jitter on ties): the bounds
+    of :func:`range_partition_bounds`."""
+    qs = [i / n_partitions for i in range(1, n_partitions)]
+    vals = np.atleast_1d(sk.value_at_quantile(np.asarray(qs, dtype=np.float64)))
+    return [float(v) for v in np.maximum.accumulate(vals)]
 
 
 def sample_column(
@@ -972,6 +975,27 @@ def _spread(df: DataFrame, key: str) -> tuple[DataFrame, int]:
     return df, planned
 
 
+#: default order-domain bucket count of the exact distributed prefix
+#: sum and ranking plans
+ORDER_BUCKETS = 1024
+
+#: default planned-partition verdict of those plans: at or above this
+#: count an input takes the bucketed plan (see :func:`_use_bucketed`)
+BUCKETED_MIN_PARTITIONS = 256
+
+
+def _use_bucketed(
+    df: DataFrame, order_buckets: int, min_partitions: int
+) -> bool:
+    """The one small/big verdict of the exact prefix sum and ranking
+    plans: bucketed when ``order_buckets > 1`` and ``df`` plans at
+    least ``min_partitions`` partitions (a driver-side probe; API drift
+    counts as big).  ``min_partitions=0`` forces the bucketed plan."""
+    return order_buckets > 1 and (
+        _plan_partitions(df, assume=min_partitions + 1) >= min_partitions
+    )
+
+
 def _hash_bucket_expr(order, order_buckets: int, normalized: bool = False):
     """Monotonic ~uniform bucket id from a 64-bit hash order key's
     HIGH BITS (signed arithmetic shiftright keeps ordering).  With
@@ -1052,22 +1076,27 @@ def _order_and_bucket(
 
 def _exact_running_prior(
     df: DataFrame,
-    size_col: str,
+    sum_cols: Sequence[str],
     order,
     bucket,
-    part_cols: list[str],
+    part_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Append ``__prior`` = exact running sum of ``size_col`` over
-    ``order`` within each ``part_cols`` group (globally when empty),
-    EXCLUDING the current row.  ``bucket`` None = one window per group
-    (fine when the input is small — the adaptive gates decide); else
-    the two-phase distributed prefix sum: per-(group, bucket) sums via
-    map-side partial agg, per-bucket starting offsets via a window over
-    at most order_buckets rows per group, within-bucket running sums
-    over ~rows/order_buckets-row partitions.  Bucketing is monotonic
-    and equal order keys share a bucket, so the result is EXACTLY the
-    single-window answer."""
+    """Append ``__prior_<c>`` = exact running sum of each ``sum_cols``
+    column ``c`` over ``order`` within each ``part_cols`` group
+    (globally when empty), EXCLUDING the current row.  ``bucket`` None
+    = one window per group (fine when the input is small — see
+    :func:`_use_bucketed`); else the two-phase distributed prefix sum:
+    per-(group, bucket) sums via map-side partial agg, per-bucket
+    starting offsets via a window over at most order_buckets rows per
+    group, within-bucket running sums over ~rows/order_buckets-row
+    partitions.  Bucketing is monotonic and equal order keys share a
+    bucket, so the result is EXACTLY the single-window answer.  The
+    repo's only exact prefix sum: the mixing and packing operators,
+    ``drift.ks_2sample`` and the gates' exact-rank checks call it."""
     from pyspark.sql.window import Window
+
+    def prior(c, w):
+        return F.coalesce(F.sum(F.col(c)).over(w), F.lit(0))
 
     if bucket is None:
         w = (
@@ -1075,36 +1104,32 @@ def _exact_running_prior(
             .orderBy(order)
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        return df.withColumn(
-            "__prior", F.coalesce(F.sum(F.col(size_col)).over(w), F.lit(0))
-        )
+        for c in sum_cols:
+            df = df.withColumn(f"__prior_{c}", prior(c, w))
+        return df
     bucketed = df.withColumn("__ob", bucket)
     woff = (
         Window.partitionBy(*part_cols)
         .orderBy("__ob")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = (
-        bucketed.groupBy(*part_cols, "__ob")
-        .agg(F.sum(size_col).alias("__bsum"))
-        .withColumn(
-            "__off", F.coalesce(F.sum("__bsum").over(woff), F.lit(0))
-        )
-        .drop("__bsum")
+    offsets = bucketed.groupBy(*part_cols, "__ob").agg(
+        *[F.sum(c).alias(f"__bsum_{c}") for c in sum_cols]
     )
+    for c in sum_cols:
+        offsets = offsets.withColumn(f"__off_{c}", prior(f"__bsum_{c}", woff))
+    offsets = offsets.drop(*[f"__bsum_{c}" for c in sum_cols])
     win = (
         Window.partitionBy(*part_cols, "__ob")
         .orderBy(order)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    prior = F.col("__off") + F.coalesce(
-        F.sum(F.col(size_col)).over(win), F.lit(0)
-    )
-    return (
-        bucketed.join(F.broadcast(offsets), list(part_cols) + ["__ob"])
-        .withColumn("__prior", prior)
-        .drop("__ob", "__off")
-    )
+    out = bucketed.join(F.broadcast(offsets), list(part_cols) + ["__ob"])
+    for c in sum_cols:
+        out = out.withColumn(
+            f"__prior_{c}", F.col(f"__off_{c}") + prior(c, win)
+        )
+    return out.drop("__ob", *[f"__off_{c}" for c in sum_cols])
 
 
 def sample_by_token_budget(
@@ -1114,8 +1139,8 @@ def sample_by_token_budget(
     size_col: str = "n_tok",
     order_col: str | None = None,
     seed: int = 42,
-    order_buckets: int = 1024,
-    bucketed_min_partitions: int = 256,
+    order_buckets: int = ORDER_BUCKETS,
+    bucketed_min_partitions: int = BUCKETED_MIN_PARTITIONS,
 ) -> DataFrame:
     """Deterministic per-source token-budget mixing — the standard
     training-data recipe "take B_s tokens from each source": within
@@ -1170,19 +1195,17 @@ def sample_by_token_budget(
         *[F.lit(x) for kv in budgets.items() for x in kv]
     )
     filtered = df.filter(F.col(source_col).isin(list(budgets)))
-    use_bucketed = order_buckets > 1 and (
-        _plan_partitions(filtered, assume=bucketed_min_partitions + 1)
-        >= bucketed_min_partitions
-    )
     order, bucket = _order_and_bucket(
-        filtered, order_col, seed, order_buckets, use_bucketed
+        filtered, order_col, seed, order_buckets,
+        _use_bucketed(filtered, order_buckets, bucketed_min_partitions),
     )
     withp = _exact_running_prior(
-        filtered, size_col, order, bucket, [source_col]
+        filtered, [size_col], order, bucket, [source_col]
     )
+    prior = f"__prior_{size_col}"
     return withp.filter(
-        F.col("__prior") < budget_map[F.col(source_col)]
-    ).drop("__prior")
+        F.col(prior) < budget_map[F.col(source_col)]
+    ).drop(prior)
 
 
 def temperature_budgets(
@@ -1264,8 +1287,8 @@ def pack_sequences(
     order_col: str | None = None,
     group_col: str | None = None,
     seed: int = 42,
-    order_buckets: int = 1024,
-    bucketed_min_partitions: int = 256,
+    order_buckets: int = ORDER_BUCKETS,
+    bucketed_min_partitions: int = BUCKETED_MIN_PARTITIONS,
 ) -> DataFrame:
     """Causal-LM sequence packing: documents are concatenated in a
     deterministic order and chunked into fixed ``seq_len`` training
@@ -1297,14 +1320,13 @@ def pack_sequences(
         raise ValueError(f"seq_len must be positive, got {seq_len}")
     filtered = df.filter(F.col(size_col) > 0)
     part_cols = [group_col] if group_col else []
-    use_bucketed = order_buckets > 1 and (
-        _plan_partitions(filtered, assume=bucketed_min_partitions + 1)
-        >= bucketed_min_partitions
-    )
     order, bucket = _order_and_bucket(
-        filtered, order_col, seed, order_buckets, use_bucketed
+        filtered, order_col, seed, order_buckets,
+        _use_bucketed(filtered, order_buckets, bucketed_min_partitions),
     )
-    withp = _exact_running_prior(filtered, size_col, order, bucket, part_cols)
+    withp = _exact_running_prior(
+        filtered, [size_col], order, bucket, part_cols
+    ).withColumnRenamed(f"__prior_{size_col}", "__prior")
     # integer `div`, NOT float division: the running token sum of a
     # 100-TB corpus exceeds 2^53, where a double quotient can round
     # across an integer and misplace a document
@@ -1331,8 +1353,8 @@ def materialize_packed(
     order_col: str | None = None,
     group_col: str | None = None,
     seed: int = 42,
-    order_buckets: int = 1024,
-    bucketed_min_partitions: int = 256,
+    order_buckets: int = ORDER_BUCKETS,
+    bucketed_min_partitions: int = BUCKETED_MIN_PARTITIONS,
 ) -> DataFrame:
     """Materialize the packed training windows themselves:
     DataFrame[seq_id, n_tokens, tokens] where ``tokens`` is the
@@ -1411,8 +1433,8 @@ def with_global_rank(
     shard_col: str = "shard",
     shard_mode: str = "striped",
     seed: int = 42,
-    order_buckets: int = 1024,
-    bucketed_min_partitions: int = 256,
+    order_buckets: int = ORDER_BUCKETS,
+    bucketed_min_partitions: int = BUCKETED_MIN_PARTITIONS,
     bucket_expr=None,
 ) -> DataFrame:
     """Exact 1-based global rank of every row under ``ORDER BY
@@ -1480,10 +1502,7 @@ def with_global_rank(
             raise ValueError(f"output column {c!r} already exists")
     from pyspark.sql.window import Window
 
-    use_bucketed = order_buckets > 1 and (
-        _plan_partitions(df, assume=bucketed_min_partitions + 1)
-        >= bucketed_min_partitions
-    )
+    use_bucketed = _use_bucketed(df, order_buckets, bucketed_min_partitions)
     if bucket_expr is not None:
         # caller-supplied bucket: must be MONOTONIC in the order key
         # and land in a small non-negative integer range (the offsets
@@ -1603,8 +1622,8 @@ def shuffle_rows(
     rank_col: str = "shuffle_rank",
     n_shards: int | None = None,
     shard_col: str = "shard",
-    order_buckets: int = 1024,
-    bucketed_min_partitions: int = 256,
+    order_buckets: int = ORDER_BUCKETS,
+    bucketed_min_partitions: int = BUCKETED_MIN_PARTITIONS,
 ) -> DataFrame:
     """Deterministic global shuffle — the "randomize the corpus before
     training" step: every row gets a reproducible pseudo-random

@@ -24,9 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from sketchlib.spark.api import _plan_partitions, range_partition_bounds
+from sketchlib.spark.api import (
+    BUCKETED_MIN_PARTITIONS,
+    _exact_running_prior,
+    _order_and_bucket,
+    _use_bucketed,
+)
 
 
 def _tokenize(df: DataFrame, col: str, tokens: bool) -> DataFrame:
@@ -125,56 +128,13 @@ def token_freq_drift(
     )
 
 
-def _inclusive_running(
-    freq: DataFrame, order_col: str, sum_cols: list[str], bucket
-) -> DataFrame:
-    """Inclusive running sums of ``sum_cols`` over ``order_col``
-    (global order).  ``bucket`` None = one window (small inputs — the
-    caller's adaptive gate decides); else the exact two-phase
-    distributed prefix sum: per-bucket subtotals (map-side combinable)
-    -> starting offsets via a window over <= order_buckets rows ->
-    bounded within-bucket windows.  Bucketing is monotonic in
-    ``order_col`` so the result equals the single-window answer."""
-    if bucket is None:
-        w = (
-            Window.orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        for c in sum_cols:
-            freq = freq.withColumn(f"cum_{c}", F.sum(c).over(w))
-        return freq
-    b = freq.withColumn("__kb", bucket)
-    woff = Window.orderBy("__kb").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = b.groupBy("__kb").agg(
-        *[F.sum(c).alias(f"__s_{c}") for c in sum_cols]
-    )
-    for c in sum_cols:
-        offsets = offsets.withColumn(
-            f"__off_{c}", F.coalesce(F.sum(f"__s_{c}").over(woff), F.lit(0))
-        )
-    offsets = offsets.select(
-        "__kb", *[f"__off_{c}" for c in sum_cols]
-    )
-    win = (
-        Window.partitionBy("__kb")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = b.join(F.broadcast(offsets), "__kb")
-    for c in sum_cols:
-        out = out.withColumn(
-            f"cum_{c}", F.col(f"__off_{c}") + F.sum(c).over(win)
-        )
-    return out.drop("__kb", *[f"__off_{c}" for c in sum_cols])
-
-
 def ks_2sample(
     df_a: DataFrame,
     df_b: DataFrame,
     col: str,
     col_b: str | None = None,
     order_buckets: int = 64,
-    bucketed_min_partitions: int = 256,
+    bucketed_min_partitions: int = BUCKETED_MIN_PARTITIONS,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic between numeric
     column ``col`` of A and ``col_b`` (default ``col``) of B.
@@ -189,11 +149,12 @@ def ks_2sample(
 
     Plan: tag-and-union -> per-distinct-value counts (ONE shuffle,
     map-side combinable; the frame is distinct-value-sized) -> exact
-    running counts via the two-phase distributed prefix sum when the
-    plan is wide (same adaptive gate as sample_by_token_budget:
-    partition count >= ``bucketed_min_partitions``), a single window
-    otherwise -> one max-reduction.  NULL/NaN rows are dropped (they
-    have no place on the real line)."""
+    counts below each value from ``api._exact_running_prior`` (its
+    two-phase distributed prefix sum over sketch-bounded value buckets
+    when ``api._use_bucketed`` finds at least
+    ``bucketed_min_partitions`` planned partitions, a single window
+    otherwise), plus the value's own count -> one max-reduction.
+    NULL/NaN rows are dropped (they have no place on the real line)."""
     cb = col_b or col
     a = df_a.select(F.col(col).cast("double").alias("v")).filter(
         F.col("v").isNotNull() & ~F.isnan("v")
@@ -207,24 +168,13 @@ def ks_2sample(
     freq = u.groupBy("v").agg(
         F.sum("ia").alias("ca"), F.sum("ib").alias("cb")
     )
-    use_bucketed = (
-        order_buckets > 1
-        and _plan_partitions(freq, assume=bucketed_min_partitions)
-        >= bucketed_min_partitions
-    )
-    bucket = None
+    use_bucketed = _use_bucketed(freq, order_buckets, bucketed_min_partitions)
     if use_bucketed:
         # the same persisted-once discipline as the other multi-consumer
         # lineages: bounds scan + offsets agg + main join all read freq
         freq = freq.persist()
-        bounds = range_partition_bounds(freq, "v", order_buckets)
-        if bounds:
-            bucket = F.aggregate(
-                F.array(*[F.lit(float(x)) for x in bounds]),
-                F.lit(0),
-                lambda acc, t: acc + F.when(F.col("v") >= t, 1).otherwise(0),
-            )
-    cum = _inclusive_running(freq, "v", ["ca", "cb"], bucket)
+    order, bucket = _order_and_bucket(freq, "v", 0, order_buckets, use_bucketed)
+    cum = _exact_running_prior(freq, ["ca", "cb"], order, bucket)
     totals = freq.agg(
         F.sum("ca").cast("bigint").alias("n_a"),
         F.sum("cb").cast("bigint").alias("n_b"),
@@ -236,8 +186,8 @@ def ks_2sample(
             F.first("n_b").alias("n_b"),
             F.max(
                 F.abs(
-                    F.col("n_b") * F.col("cum_ca")
-                    - F.col("n_a") * F.col("cum_cb")
+                    F.col("n_b") * (F.col("__prior_ca") + F.col("ca"))
+                    - F.col("n_a") * (F.col("__prior_cb") + F.col("cb"))
                 )
             ).cast("bigint").alias("d_num"),
         )
