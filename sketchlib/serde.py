@@ -67,10 +67,24 @@ def from_bytes(data: bytes):
     return cls.from_bytes(bytes(data))
 
 
+def merge_sketches(blobs):
+    """Merge an iterable of serialized sketches into one sketch (None
+    when empty).  Blobs are folded in (length, bytes) order: shuffle
+    and ledger delivery order is nondeterministic, and a fixed order
+    keeps merged states reproducible run-to-run (checkpoint resume
+    bit-equality)."""
+    ordered = sorted((bytes(b) for b in blobs), key=lambda b: (len(b), b))
+    if not ordered:
+        return None
+    acc = from_bytes(ordered[0])
+    for b in ordered[1:]:
+        acc.merge(from_bytes(b))
+    return acc
+
+
 def merge_blobs(blobs) -> bytes:
     """Merge an iterable of serialized sketches into one blob."""
-    it = iter(blobs)
-    acc = from_bytes(next(it))
-    for b in it:
-        acc.merge(from_bytes(b))
+    acc = merge_sketches(blobs)
+    if acc is None:
+        raise ValueError("merge_blobs needs at least one blob")
     return acc.to_bytes()

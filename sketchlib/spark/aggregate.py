@@ -371,24 +371,36 @@ def _feed(sk, vals: np.ndarray, domain: int = 0) -> int:
     return int(vals.size)
 
 
+class _Raised:
+    """A source exception in transit from the read-ahead thread."""
+
+    __slots__ = ("exc",)
+
+    def __init__(self, exc: BaseException):
+        self.exc = exc
+
+
 def _prefetch(it, depth: int = 4):
     """Yield ``it``'s items in order, reading ahead on a producer
-    thread.
+    thread -- the one read-ahead thread of every stage-1 build.
 
-    The mapInArrow input iterator blocks on worker-socket reads +
-    Arrow IPC deserialization (both release the GIL); reading ahead
-    overlaps that with the numpy feed work — the DataFrame-path twin
-    of the direct path's decode thread.  Order is preserved (single
-    producer, FIFO queue) so sketch states are bit-identical.  A
-    consumer-side failure sets a stop flag the producer polls, so it
-    can never block forever on a full queue (no leaked thread in a
-    reused worker)."""
+    The source blocks in code that releases the GIL (worker-socket reads
+    and Arrow IPC decode for a mapInArrow input; pyarrow's C++ parquet
+    decode for a direct scan), so reading ahead overlaps it with the
+    numpy feed work.  Order is preserved (single producer, FIFO queue)
+    so sketch states are bit-identical to an inline loop; ``depth``
+    bounds the buffered items.  A source exception is re-raised in the
+    consumer.  When the consumer stops early (a feed error, or its own
+    generator closed) the producer sees a stop flag instead of blocking
+    on a full queue (no leaked thread in a reused worker), is joined,
+    and then a generator source is ``close()``d so its ``with`` blocks
+    (an open parquet file) exit."""
     import queue as _queue
     import threading
 
     q: _queue.Queue = _queue.Queue(maxsize=depth)
     stop = threading.Event()
-    DONE = object()
+    done = object()
 
     def _put(item) -> bool:
         while True:
@@ -404,27 +416,26 @@ def _prefetch(it, depth: int = 4):
             for item in it:
                 if not _put(item):
                     return
-            _put(DONE)
+            _put(done)
         except BaseException as exc:
-            _put(("__prefetch_exc__", exc))
+            _put(_Raised(exc))
 
     th = threading.Thread(target=run, daemon=True)
     th.start()
     try:
         while True:
             item = q.get()
-            if item is DONE:
-                break
-            if (
-                isinstance(item, tuple)
-                and len(item) == 2
-                and item[0] == "__prefetch_exc__"
-            ):
-                raise item[1]
+            if item is done:
+                return
+            if isinstance(item, _Raised):
+                raise item.exc
             yield item
     finally:
         stop.set()
         th.join()
+        close = getattr(it, "close", None)
+        if close is not None:
+            close()
 
 
 def _batch_values(batch: pa.RecordBatch, col_idx: int, kind: str) -> np.ndarray:
@@ -456,15 +467,92 @@ def _batch_values(batch: pa.RecordBatch, col_idx: int, kind: str) -> np.ndarray:
     raise ValueError(f"unknown input kind {kind!r}")
 
 
-def _prepare_value_df(df: DataFrame, col: str, kind: str) -> DataFrame:
-    """Project to the minimal column set; hash JVM-side when needed.
+def _route(codes: np.ndarray, varr: pa.Array, kind: str):
+    """Split one Arrow value column by per-row integer ``codes``: yields
+    ``(code, vals)`` for each distinct code >= 0, ascending, with that
+    code's values in row order -- the one key router of the grouped and
+    lineage builds.
 
-    Column pruning here reaches the parquet scan (ReadSchema shows only
-    the sketched column) and the xxhash64 stays in whole-stage codegen.
-    """
-    if kind == KIND_HASH64:
-        return df.select(F.xxhash64(F.col(col)).alias("__v"))
-    return df.select(F.col(col).alias("__v"))
+    One stable argsort of the codes slices every group, so per-batch
+    cost is independent of the group count, and the stable order feeds
+    each sketch exactly the stream a per-group scan would.  Values keep
+    the column's dtype (KIND_HASH64 viewed as uint64; array kinds
+    flattened and unhashed).  Rows with a negative code (a null key, a
+    skipped lineage), null rows, null list elements and a KIND_DOUBLE
+    column's NaNs are dropped -- ``_batch_values``' rule."""
+    keep = codes >= 0
+    if varr.null_count:
+        keep &= ~np.asarray(varr.is_null())
+    listy = kind in (KIND_ARRAY, KIND_ARRAY_HASH)
+    if listy:
+        offsets = varr.offsets.to_numpy()
+        elems = varr.values
+        if elems.null_count:
+            # drop null elements; offsets re-point into the compacted run
+            kept = np.concatenate(([0], np.cumsum(~np.asarray(elems.is_null()))))
+            offsets, elems = kept[offsets], elems.drop_null()
+        flat = elems.to_numpy(zero_copy_only=False)
+    elif kind == KIND_DOUBLE and pa.types.is_floating(varr.type):
+        keep &= ~np.isnan(varr.to_numpy(zero_copy_only=False))
+    rows = np.flatnonzero(keep)
+    order = np.argsort(codes[rows], kind="stable")
+    svc = codes[rows][order]
+    if svc.size == 0:
+        return
+    if listy:
+        order = rows[order]
+    else:
+        # take the kept rows first: to_numpy would widen an integer
+        # column with nulls to float64
+        kept_arr = varr if rows.size == len(varr) else varr.take(rows)
+        flat = kept_arr.to_numpy(zero_copy_only=False)
+        if kind == KIND_HASH64:
+            flat = flat.astype(np.int64).view(np.uint64)
+    edges = np.concatenate(
+        ([0], np.flatnonzero(svc[1:] != svc[:-1]) + 1, [svc.size])
+    ).tolist()
+    for s, e in zip(edges[:-1], edges[1:]):
+        sel = order[s:e]
+        vals = _gather_list_slices(flat, offsets, sel) if listy else flat[sel]
+        yield int(svc[s]), vals
+
+
+def _gather_list_slices(
+    flat: np.ndarray, offsets: np.ndarray, rows: np.ndarray
+) -> np.ndarray:
+    """Concatenate flat[offsets[r]:offsets[r+1]] for r in rows, vectorized."""
+    starts = offsets[rows]
+    lens = offsets[rows + 1] - starts
+    total = int(lens.sum())
+    if total == 0:
+        return flat[:0]
+    reps = np.repeat(starts, lens)
+    base = np.repeat(np.cumsum(lens) - lens, lens)
+    idx = reps + (np.arange(total) - base)
+    return flat[idx]
+
+
+def _value_col(col: str, kind: str):
+    """The sketched column.  KIND_HASH64 hashes JVM-side, so the
+    xxhash64 stays in whole-stage codegen; the projection prunes the
+    parquet scan to the columns sketched."""
+    return F.xxhash64(F.col(col)) if kind == KIND_HASH64 else F.col(col)
+
+
+def _partials_batch(states, items, secs: float, /, **keys) -> pa.RecordBatch:
+    """One stage-1 output batch: the ``keys`` columns (in argument
+    order), then ``state``/``items``/``build_secs``.  ``secs`` is the
+    task time behind these rows, split evenly across them."""
+    n = len(states)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(v) for v in keys.values()]
+        + [
+            pa.array(states, type=pa.binary()),
+            pa.array(items, type=pa.int64()),
+            pa.array([secs / n] * n, type=pa.float64()),
+        ],
+        names=[*keys, "state", "items", "build_secs"],
+    )
 
 
 # --------------------------------------------------------------------- stage 1
@@ -477,7 +565,7 @@ def build_partials(
     kind: str = KIND_DOUBLE,
 ) -> DataFrame:
     """Stage 1: one serialized partial sketch per input partition."""
-    vdf = _prepare_value_df(df, col, kind)
+    vdf = df.select(_value_col(col, kind).alias("__v"))
 
     dom = _kind_domain(kind)
     # per-task bincount pre-reduction: weighted feed for quantile
@@ -495,14 +583,7 @@ def build_partials(
         items = feeder.finish()
         if items == 0:
             return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([sk.to_bytes()], type=pa.binary()),
-                pa.array([items], type=pa.int64()),
-                pa.array([time.monotonic() - t0], type=pa.float64()),
-            ],
-            names=["state", "items", "build_secs"],
-        )
+        yield _partials_batch([sk.to_bytes()], [items], time.monotonic() - t0)
 
     return vdf.mapInArrow(fn, _PARTIAL_SCHEMA)
 
@@ -510,23 +591,17 @@ def build_partials(
 # --------------------------------------------------------------------- stage 2
 
 
-def _sorted_blobs(series):
-    """Shuffle delivery order is nondeterministic; sort blobs so merge
-    results are reproducible run-to-run (checkpoint resume bit-equality)."""
-    return sorted((bytes(b) for b in series), key=lambda b: (len(b), b))
-
-
-def _merge_pdf(pdf):
+def _merge_states(pdf, keys=()):
+    """The stage-2 reducer: one applyInPandas group of partial rows ->
+    one row carrying the group's ``keys``, the merged state and the
+    summed items and build seconds."""
     import pandas as pd
 
-    blob = serde.merge_blobs(_sorted_blobs(pdf["state"]))
-    return pd.DataFrame(
-        {
-            "state": [blob],
-            "items": [int(pdf["items"].sum())],
-            "build_secs": [float(pdf["build_secs"].sum())],
-        }
-    )
+    out = {k: [pdf[k].iloc[0]] for k in keys}
+    out["state"] = [serde.merge_blobs(pdf["state"])]
+    out["items"] = [int(pdf["items"].sum())]
+    out["build_secs"] = [float(pdf["build_secs"].sum())]
+    return pd.DataFrame(out)
 
 
 def tree_merge(
@@ -535,24 +610,17 @@ def tree_merge(
     collect_threshold: int = 256,
     size_hint: int | None = None,
 ):
-    """collect_threshold trades a whole extra shuffle stage against
+    """Stages 2+3: a salted fanout-ary tree reduce of the partial
+    states while more than ``collect_threshold`` rows may remain, then
+    one driver-side merge.  Returns the merged sketch object, or None
+    if the input was empty.
+
+    ``collect_threshold`` trades a whole extra shuffle stage against
     driver collect volume: KB-scale states (t-digest/KLL/HLL) can skip
     the tree stage up to a few hundred partials; pass a small threshold
     for fat states (CMS/Bloom).  ``size_hint`` is the known task count
     of the partials stage — passing it avoids a DataFrame->RDD plan
     conversion done only to read the partition count."""
-    return _tree_merge_impl(partials, fanout, collect_threshold, size_hint)
-
-
-def _tree_merge_impl(
-    partials: DataFrame,
-    fanout: int,
-    collect_threshold: int,
-    size_hint: int | None = None,
-):
-    """Stages 2+3: fanout-ary tree reduce of partial states, final
-    merge on the driver.  Returns the merged sketch object (or None if
-    the input was empty)."""
     df = partials
     # upper bound on state rows (partials emit <=1 row per task)
     size = size_hint if size_hint is not None else df.rdd.getNumPartitions()
@@ -560,19 +628,9 @@ def _tree_merge_impl(
         buckets = max((size + fanout - 1) // fanout, 1)
         df = df.groupBy(
             (F.spark_partition_id() % F.lit(buckets)).alias("__g")
-        ).applyInPandas(
-            lambda pdf: _merge_pdf(pdf),
-            _PARTIAL_SCHEMA,
-        )
+        ).applyInPandas(lambda pdf: _merge_states(pdf), _PARTIAL_SCHEMA)
         size = buckets
-    rows = df.collect()
-    if not rows:
-        return None
-    blobs = _sorted_blobs(r["state"] for r in rows)
-    acc = serde.from_bytes(blobs[0])
-    for b in blobs[1:]:
-        acc.merge(serde.from_bytes(b))
-    return acc
+    return serde.merge_sketches(r["state"] for r in df.collect())
 
 
 def sketch_column(
@@ -611,14 +669,7 @@ def sketch_columns(
     one sketch per (column, partition) and emits one tagged state row
     each; the tree merge groups by tag.  Returns {column: sketch}."""
     cols = list(specs)
-    proj = []
-    for c in cols:
-        _, kind = specs[c]
-        if kind == KIND_HASH64:
-            proj.append(F.xxhash64(F.col(c)).alias(c))
-        else:
-            proj.append(F.col(c).alias(c))
-    vdf = df.select(*proj)
+    vdf = df.select(*(_value_col(c, specs[c][1]).alias(c) for c in cols))
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.monotonic()
@@ -649,55 +700,19 @@ def sketch_columns(
         got = [c for c in cols if items[c] > 0]
         if not got:
             return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(got, type=pa.string()),
-                pa.array([sks[c].to_bytes() for c in got], type=pa.binary()),
-                pa.array([items[c] for c in got], type=pa.int64()),
-                pa.array([time.monotonic() - t0] * len(got), type=pa.float64()),
-            ],
-            names=["tag", "state", "items", "build_secs"],
+        yield _partials_batch(
+            [sks[c].to_bytes() for c in got], [items[c] for c in got],
+            time.monotonic() - t0, tag=got,
         )
 
-    partials = vdf.mapInArrow(fn, f"tag string, {_PARTIAL_SCHEMA}")
-
-    def merge_tag(pdf):
-        import pandas as pd
-
-        return pd.DataFrame(
-            {
-                "tag": [pdf["tag"].iloc[0]],
-                "state": [serde.merge_blobs(_sorted_blobs(pdf["state"]))],
-                "items": [int(pdf["items"].sum())],
-                "build_secs": [float(pdf["build_secs"].sum())],
-            }
-        )
-
-    merged = partials.groupBy("tag").applyInPandas(
-        merge_tag, f"tag string, {_PARTIAL_SCHEMA}"
+    schema = f"tag string, {_PARTIAL_SCHEMA}"
+    merged = vdf.mapInArrow(fn, schema).groupBy("tag").applyInPandas(
+        lambda pdf: _merge_states(pdf, ("tag",)), schema
     )
-    out: dict[str, object] = {}
-    for row in merged.collect():
-        out[row["tag"]] = serde.from_bytes(row["state"])
-    return out
+    return {row["tag"]: serde.from_bytes(row["state"]) for row in merged.collect()}
 
 
 # --------------------------------------------------------------- grouped build
-
-
-def _gather_list_slices(
-    flat: np.ndarray, offsets: np.ndarray, rows: np.ndarray
-) -> np.ndarray:
-    """Concatenate flat[offsets[r]:offsets[r+1]] for r in rows, vectorized."""
-    starts = offsets[rows]
-    lens = offsets[rows + 1] - starts
-    total = int(lens.sum())
-    if total == 0:
-        return flat[:0]
-    reps = np.repeat(starts, lens)
-    base = np.repeat(np.cumsum(lens) - lens, lens)
-    idx = reps + (np.arange(total) - base)
-    return flat[idx]
 
 
 def grouped_sketch(
@@ -723,12 +738,8 @@ def grouped_sketch(
     rows) — high-cardinality key columns at 100x scale must not grow
     an unbounded map in the worker.
     """
-    if kind == KIND_HASH64:
-        vdf = df.select(*keys, F.xxhash64(F.col(col)).alias("__v"))
-    else:
-        vdf = df.select(*keys, F.col(col).alias("__v"))
+    vdf = df.select(*keys, _value_col(col, kind).alias("__v"))
     nk = len(keys)
-    key_fields = [vdf.schema[k] for k in keys]
 
     # per-key bincount pre-reduction via AccFeeder, with a SHARED
     # per-task byte budget: many keys' accumulators together may hold
@@ -739,79 +750,28 @@ def grouped_sketch(
     hash_mode = kind == KIND_ARRAY_HASH
 
     def _emit(sketches: dict, elapsed: float) -> pa.RecordBatch:
-        names = keys + ["state", "items", "build_secs"]
-        key_arrays = [pa.array([kt[i] for kt in sketches]) for i in range(nk)]
         items = [f.finish() for f in sketches.values()]
-        return pa.RecordBatch.from_arrays(
-            key_arrays
-            + [
-                pa.array(
-                    [f.sk.to_bytes() for f in sketches.values()],
-                    type=pa.binary(),
-                ),
-                pa.array(items, type=pa.int64()),
-                pa.array(
-                    [elapsed / len(sketches)] * len(sketches), type=pa.float64()
-                ),
-            ],
-            names=names,
+        return _partials_batch(
+            [f.sk.to_bytes() for f in sketches.values()], items, elapsed,
+            **{k: [kt[i] for kt in sketches] for i, k in enumerate(keys)},
         )
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pandas as pd
+
         t0 = time.monotonic()
         budget = [_ACC_BUDGET_BYTES]
         sketches: dict[tuple, AccFeeder] = {}
         for b in _prefetch(batches):
-            import pandas as pd
-
             kcols = [b.column(i) for i in range(nk)]
             kpdf = pa.Table.from_arrays(kcols, names=keys).to_pandas()
+            # null key rows get code -1 (pd.factorize) and are dropped
             codes, uniques = pd.factorize(
                 pd.MultiIndex.from_frame(kpdf) if nk > 1 else kpdf[keys[0]],
                 sort=False,
             )
-            varr = b.column(nk)
-            if kind in (KIND_ARRAY, KIND_ARRAY_HASH):
-                offsets = varr.offsets.to_numpy()
-                flat = varr.values.to_numpy(zero_copy_only=False)
-                valid = (
-                    ~np.asarray(varr.is_null())
-                    if varr.null_count
-                    else np.ones(len(varr), dtype=bool)
-                )
-            else:
-                vals_all = varr.to_numpy(zero_copy_only=False)
-                valid = (
-                    ~np.asarray(varr.is_null())
-                    if varr.null_count
-                    else np.ones(len(varr), dtype=bool)
-                )
-            # argsort group-slicing (judge r3 #7): one stable O(r log r)
-            # sort of the key codes replaces a full O(r) mask scan PER
-            # KEY — per-batch cost is now independent of key count.
-            # Stable sort preserves row order within each group, so
-            # every sketch is fed the exact same value stream as the
-            # per-key-scan version (bit-identical states).  codes == -1
-            # (null key rows, pd.factorize convention) are dropped, as
-            # the enumerate(uniques) loop implicitly did.
-            vrows = np.flatnonzero(valid & (codes >= 0))
-            order = vrows[np.argsort(codes[vrows], kind="stable")]
-            svc = codes[order]
-            if svc.size == 0:
-                continue
-            edges = np.concatenate(
-                ([0], np.flatnonzero(svc[1:] != svc[:-1]) + 1, [svc.size])
-            )
-            for bi in range(edges.size - 1):
-                s, e = int(edges[bi]), int(edges[bi + 1])
-                key = uniques[int(svc[s])]
-                rows = order[s:e]
-                if kind in (KIND_ARRAY, KIND_ARRAY_HASH):
-                    vals = _gather_list_slices(flat, offsets, rows)
-                else:
-                    vals = vals_all[rows]
-                    if kind == KIND_HASH64:
-                        vals = vals.astype(np.int64).view(np.uint64)
+            for code, vals in _route(codes, b.column(nk), kind):
+                key = uniques[code]
                 kt = key if nk > 1 else (key,)
                 feeder = sketches.get(kt)
                 if feeder is None:
@@ -833,30 +793,13 @@ def grouped_sketch(
             return
         yield _emit(sketches, time.monotonic() - t0)
 
-    key_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in key_fields)
-    partials = vdf.mapInArrow(fn, f"{key_schema}, {_PARTIAL_SCHEMA}")
-
-    out_schema = f"{key_schema}, {_PARTIAL_SCHEMA}"
-
-    def merge_group(pdf):
-        import pandas as pd
-
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["state"] = [serde.merge_blobs(_sorted_blobs(pdf["state"]))]
-        out["items"] = [int(pdf["items"].sum())]
-        out["build_secs"] = [float(pdf["build_secs"].sum())]
-        return pd.DataFrame(out)
-
+    key_schema = ", ".join(f"{k} {vdf.schema[k].dataType.simpleString()}" for k in keys)
+    schema = f"{key_schema}, {_PARTIAL_SCHEMA}"
+    partials = vdf.mapInArrow(fn, schema)
     if salt_buckets > 0:
-        salted = partials.withColumn(
-            "__salt", F.spark_partition_id() % F.lit(salt_buckets)
-        )
-        level1 = salted.groupBy(*keys, "__salt").applyInPandas(
-            lambda pdf: merge_group(pdf), out_schema
-        )
-        return level1.groupBy(*keys).applyInPandas(
-            lambda pdf: merge_group(pdf), out_schema
-        )
+        partials = partials.groupBy(
+            *keys, (F.spark_partition_id() % F.lit(salt_buckets)).alias("__salt")
+        ).applyInPandas(lambda pdf: _merge_states(pdf, keys), schema)
     return partials.groupBy(*keys).applyInPandas(
-        lambda pdf: merge_group(pdf), out_schema
+        lambda pdf: _merge_states(pdf, keys), schema
     )

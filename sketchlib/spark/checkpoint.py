@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib import serde
-from sketchlib.spark.aggregate import KIND_DOUBLE, grouped_sketch
+from sketchlib.spark.aggregate import (
+    _PARTIAL_SCHEMA,
+    KIND_DOUBLE,
+    _merge_states,
+    grouped_sketch,
+)
 
 LEDGER_SCHEMA = (
     "lineage_id bigint, sketch_kind string, state binary, n_updates bigint, "
@@ -73,22 +78,30 @@ def run_checkpointed(
         if done:
             work = work.filter(~F.col("lineage_id").isin(*done))
         states = grouped_sketch(work, ["lineage_id"], col, factory, kind)
-        ledger_rows = states.select(
-            F.col("lineage_id").cast("bigint"),
-            F.lit(sketch_kind).alias("sketch_kind"),
-            F.col("state"),
-            F.col("items").alias("n_updates"),
-            F.col("build_secs"),
-            F.lit(1).cast("bigint").alias("n_merges"),
-            F.lit(time.time()).alias("wall_ts"),
-        )
-        # resume=False must not stack a second copy of every lineage on
-        # top of an existing ledger (the final merge would double-count)
-        mode = "append" if resume else "overwrite"
-        ledger_rows.write.mode(mode).parquet(checkpoint_dir)
+        _write_ledger(states, checkpoint_dir, sketch_kind, resume)
         recomputed = len(remaining)
     build_wall = time.monotonic() - t0
     return _finalize_ledger(spark, checkpoint_dir, recomputed, build_wall)
+
+
+def _write_ledger(
+    states: DataFrame, checkpoint_dir: str, sketch_kind: str, resume: bool
+) -> None:
+    """Write one ledger row per lineage of ``states`` (a merged
+    DataFrame[lineage_id, state, items, build_secs])."""
+    ledger_rows = states.select(
+        F.col("lineage_id").cast("bigint"),
+        F.lit(sketch_kind).alias("sketch_kind"),
+        F.col("state"),
+        F.col("items").alias("n_updates"),
+        F.col("build_secs"),
+        F.lit(1).cast("bigint").alias("n_merges"),
+        F.lit(time.time()).alias("wall_ts"),
+    )
+    # resume=False must not stack a second copy of every lineage on
+    # top of an existing ledger (the final merge would double-count)
+    mode = "append" if resume else "overwrite"
+    ledger_rows.write.mode(mode).parquet(checkpoint_dir)
 
 
 def _finalize_ledger(
@@ -112,12 +125,7 @@ def _finalize_ledger(
     rows = ledger.select("state", "n_updates", "build_secs").collect()
     if not rows:
         return None, {"lineages": 0, "n_updates": 0}
-    from sketchlib.spark.aggregate import _sorted_blobs
-
-    blobs = _sorted_blobs(r["state"] for r in rows)
-    acc = serde.from_bytes(blobs[0])
-    for b in blobs[1:]:
-        acc.merge(serde.from_bytes(b))
+    acc = serde.merge_sketches(r["state"] for r in rows)
     metrics = {
         "lineages_total": len(rows),
         "lineages_recomputed": recomputed,
@@ -171,35 +179,11 @@ def run_checkpointed_direct(
         # lineage, so unmerged partials would silently drop every
         # other task's contribution.  Fan-in per lineage = task count
         # (bounded KB-sized states).
-        from sketchlib.spark.aggregate import _sorted_blobs
-
-        def merge_lineage(pdf):
-            import pandas as pd
-
-            return pd.DataFrame(
-                {
-                    "lineage_id": [pdf["lineage_id"].iloc[0]],
-                    "state": [serde.merge_blobs(_sorted_blobs(pdf["state"]))],
-                    "items": [int(pdf["items"].sum())],
-                    "build_secs": [float(pdf["build_secs"].sum())],
-                }
-            )
-
         states = partials.groupBy("lineage_id").applyInPandas(
-            merge_lineage,
-            "lineage_id bigint, state binary, items long, build_secs double",
+            lambda pdf: _merge_states(pdf, ("lineage_id",)),
+            f"lineage_id bigint, {_PARTIAL_SCHEMA}",
         )
-        ledger_rows = states.select(
-            F.col("lineage_id").cast("bigint"),
-            F.lit(sketch_kind).alias("sketch_kind"),
-            F.col("state"),
-            F.col("items").alias("n_updates"),
-            F.col("build_secs"),
-            F.lit(1).cast("bigint").alias("n_merges"),
-            F.lit(time.time()).alias("wall_ts"),
-        )
-        mode = "append" if resume else "overwrite"
-        ledger_rows.write.mode(mode).parquet(checkpoint_dir)
+        _write_ledger(states, checkpoint_dir, sketch_kind, resume)
         recomputed = len(remaining)
     build_wall = time.monotonic() - t0
     return _finalize_ledger(spark, checkpoint_dir, recomputed, build_wall)

@@ -47,10 +47,13 @@ footer min/max statistics feed the bincount accumulator's bounds, so
 the two per-batch min/max passes are skipped; (b) the accumulator
 bincounts in the column's native dtype (no int64 widening copy when
 ids are non-negative); (c) decode and feed OVERLAP — pyarrow's C++
-decode releases the GIL, so a producer thread decodes the next batch
-while the task thread feeds the previous one (+~45% single-task,
-uniform gains across 2/8/32-core legs; ``overlap=False`` decodes
-inline, for A/B checks).
+decode releases the GIL, so decode runs on ``aggregate._prefetch``'s
+read-ahead thread while the task thread feeds the previous batch
+(+~45% single-task, uniform gains across 2/8/32-core legs).
+
+Both builders here run the DataFrame path's stage-1 skeleton: the
+same read-ahead thread, key router (``_route``), partial-row encoder
+(``_partials_batch``), state merge and driver fold.
 """
 
 from __future__ import annotations
@@ -63,13 +66,18 @@ from pyspark.sql import SparkSession
 
 from sketchlib.core import hashing
 from sketchlib.spark.aggregate import (
+    _ACC_BUDGET_BYTES,
     _PARTIAL_SCHEMA,
     KIND_ARRAY,
     KIND_ARRAY_HASH,
     KIND_DOUBLE,
     KIND_HASH64,
+    AccFeeder,
+    _BincountAcc,
     _batch_values,
-    _feed,
+    _partials_batch,
+    _prefetch,
+    _route,
     tree_merge,
 )
 
@@ -93,6 +101,38 @@ def list_parquet_files(path: str) -> list[str]:
         f.path
         for f in filesystem.get_file_info(sel)
         if f.type == pafs.FileType.File and f.path.endswith(".parquet")
+    )
+
+
+def _batch_rows(arrow_type) -> int:
+    """Rows per decoded batch for a column of ``arrow_type``."""
+    if pa.types.is_list(arrow_type) or pa.types.is_large_list(arrow_type):
+        return _READ_BATCH_ROWS_LIST
+    return _READ_BATCH_ROWS
+
+
+def _file_tasks(spark: SparkSession, path: str, files, tasks):
+    """The scan's file list (listed under ``path`` unless given; an
+    empty list raises) and its task count (by default one per file, at
+    most two per core)."""
+    if files is None:
+        files = list_parquet_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    if tasks is None:
+        tasks = max(min(len(files), 2 * spark.sparkContext.defaultParallelism), 1)
+    return files, tasks
+
+
+def _map_files(spark: SparkSession, files, tasks: int, fn, schema: str):
+    """Stage 1 over a file list: each of ``tasks`` tasks runs
+    ``fn(paths)`` over its round-robin slice of ``files``."""
+    # round-robin paths into exactly `tasks` slices at parallelize time
+    # — no repartition shuffle just to distribute a file list
+    rdd = spark.sparkContext.parallelize([(f,) for f in files], tasks)
+    return spark.createDataFrame(rdd, "path string").mapInArrow(
+        lambda batches: fn([p for b in batches for p in b.column(0).to_pylist()]),
+        schema,
     )
 
 
@@ -198,7 +238,6 @@ def build_partials_direct(
     tasks: int | None = None,
     files: list[str] | None = None,
     prune: tuple | None = None,
-    overlap: bool = True,
     hash_compat: str = "splitmix64",
 ):
     """Stage 1 over raw parquet files: returns the usual partials
@@ -214,25 +253,13 @@ def build_partials_direct(
     as file pruning — it is a scan-planning operation (kept groups may
     contain rows outside the range); exact row filtering stays with the
     caller's semantics."""
-    if files is None:
-        files = list_parquet_files(path)
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    cores = spark.sparkContext.defaultParallelism
-    if tasks is None:
-        tasks = max(min(len(files), 2 * cores), 1)
-    # round-robin paths into exactly `tasks` slices at parallelize time
-    # — no repartition shuffle just to distribute a file list
-    rdd = spark.sparkContext.parallelize([(f,) for f in files], tasks)
-    fdf = spark.createDataFrame(rdd, "path string")
-    dkind = _direct_kind(kind)
     if hash_compat not in ("splitmix64", "xxhash64"):
         raise ValueError(f"unknown hash_compat {hash_compat!r}")
+    files, tasks = _file_tasks(spark, path, files, tasks)
+    dkind = _direct_kind(kind)
+    raw_kind = KIND_ARRAY if dkind == KIND_ARRAY_HASH else dkind
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import queue as _queue
-        import threading
-
+    def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         from pyarrow import fs as pafs
@@ -241,8 +268,6 @@ def build_partials_direct(
         # per-task bincount pre-reduction (see aggregate.AccFeeder):
         # weighted feed for quantile sketches over integer values;
         # distinct-hash feed for hash sketches over raw integers
-        from sketchlib.spark.aggregate import AccFeeder
-
         hash_kind = dkind in ("hash64_numpy", KIND_ARRAY_HASH)
         # hash_compat="splitmix64" (default): numpy splitmix64, stamped
         # with its own domain so a merge with a JVM xxhash64-fed state
@@ -261,18 +286,14 @@ def build_partials_direct(
             factory(), hash_mode=hash_kind, domain=dom, hash_fn=hash_fn,
         )
 
-        def produce(paths, emit):
-            """Decode side: parquet -> numpy batches + footer bounds."""
+        def decode():
+            """Decode side: (values, lo, hi) per batch — a numpy batch
+            with its file's footer bounds, or a non-integer Arrow array
+            still to be hashed."""
             for fpath in paths:
                 filesystem, fp = pafs.FileSystem.from_uri(fpath)
                 with filesystem.open_input_file(fp) as fh:
                     pf = pq.ParquetFile(fh)
-                    col_type = pf.schema_arrow.field(col).type
-                    bs = (
-                        _READ_BATCH_ROWS_LIST
-                        if pa.types.is_list(col_type) or pa.types.is_large_list(col_type)
-                        else _READ_BATCH_ROWS
-                    )
                     row_groups = None
                     if prune is not None:
                         row_groups, _skipped = _prune_row_groups(
@@ -288,45 +309,30 @@ def build_partials_direct(
                     # per-batch min/max instead of rejecting every
                     # batch outright.
                     bounds = _file_column_bounds(pf.metadata, col)
-                    if bounds is not None:
-                        from sketchlib.spark.aggregate import _BincountAcc
-
-                        if bounds[1] - bounds[0] >= _BincountAcc.MAX_RANGE:
-                            bounds = None
+                    if bounds is not None and bounds[1] - bounds[0] >= _BincountAcc.MAX_RANGE:
+                        bounds = None
                     blo, bhi = bounds if bounds else (None, None)
                     for rb in pf.iter_batches(
-                        batch_size=bs, columns=[col], use_threads=False,
+                        batch_size=_batch_rows(pf.schema_arrow.field(col).type),
+                        columns=[col], use_threads=False,
                         row_groups=row_groups,
                     ):
-                        if dkind == "hash64_numpy":
-                            arr = rb.column(0)
-                            if arr.null_count:
-                                arr = arr.drop_null()
-                            if pa.types.is_integer(arr.type):
-                                emit((
-                                    "raw",
-                                    arr.to_numpy(zero_copy_only=False),
-                                    blo, bhi,
-                                ))
-                            else:  # floats/strings: hash in consumer
-                                # (nulls already dropped above —
-                                # xxhash64_str rejects them)
-                                emit(("typed", arr, None, None))
-                        elif dkind == KIND_ARRAY_HASH:
-                            emit((
-                                "raw", _batch_values(rb, 0, KIND_ARRAY),
-                                blo, bhi,
-                            ))
-                        else:
-                            emit((
-                                "raw", _batch_values(rb, 0, dkind),
-                                blo, bhi,
-                            ))
+                        if dkind != "hash64_numpy":
+                            yield _batch_values(rb, 0, raw_kind), blo, bhi
+                            continue
+                        arr = rb.column(0)
+                        if arr.null_count:
+                            arr = arr.drop_null()
+                        if pa.types.is_integer(arr.type):
+                            yield arr.to_numpy(zero_copy_only=False), blo, bhi
+                        else:  # floats/strings: hash in the feed loop
+                            # (nulls already dropped above —
+                            # xxhash64_str rejects them)
+                            yield arr, None, None
 
-        def consume(item):
-            """Feed side: numpy batch -> sketch/accumulator."""
-            if item[0] == "raw":
-                feeder.feed_raw(item[1], item[2], item[3])
+        for vals, lo, hi in _prefetch(decode(), depth=8):
+            if not isinstance(vals, pa.Array):
+                feeder.feed_raw(vals, lo, hi)
             elif hash_compat == "xxhash64":
                 # JVM-parity hashing is restricted to the types whose
                 # numpy hash is VERIFIED bit-equal to F.xxhash64 on the
@@ -334,100 +340,33 @@ def build_partials_direct(
                 # r4: float32 must go through hashInt(floatToIntBits),
                 # not the widened f64 path; anything else fails loud
                 # rather than silently corrupting a cross-engine merge)
-                arr = item[1]
-                if pa.types.is_string(arr.type) or pa.types.is_large_string(
-                    arr.type
+                if pa.types.is_string(vals.type) or pa.types.is_large_string(
+                    vals.type
                 ):
-                    feeder.feed_hashed(hashing.xxhash64_str(arr))
-                elif pa.types.is_float64(arr.type):
+                    feeder.feed_hashed(hashing.xxhash64_str(vals))
+                elif pa.types.is_float64(vals.type):
                     feeder.feed_hashed(
-                        hashing.xxhash64_f64(
-                            arr.to_numpy(zero_copy_only=False)
-                        )
+                        hashing.xxhash64_f64(vals.to_numpy(zero_copy_only=False))
                     )
-                elif pa.types.is_float32(arr.type):
+                elif pa.types.is_float32(vals.type):
                     feeder.feed_hashed(
-                        hashing.xxhash64_f32(
-                            arr.to_numpy(zero_copy_only=False)
-                        )
+                        hashing.xxhash64_f32(vals.to_numpy(zero_copy_only=False))
                     )
                 else:
                     raise TypeError(
                         f"hash_compat='xxhash64' has no JVM-compatible "
-                        f"hash for arrow type {arr.type}"
+                        f"hash for arrow type {vals.type}"
                     )
             else:
-                feeder.feed_hashed(_hash_any(item[1]))
-
-        paths = [p for b in batches for p in b.column(0).to_pylist()]
-        if overlap:
-            # Overlap parquet decode with sketch feeding: pyarrow's
-            # C++ decode releases the GIL, so one producer thread
-            # (decode) + the task thread (numpy feed) pipeline the two
-            # stages — measured +~45% single-task throughput; at full
-            # core-count the threads simply interleave (no loss).  One
-            # producer and a FIFO queue keep feed order identical to
-            # the inline loop, so sketch states stay bit-identical;
-            # maxsize bounds buffered batches (~MBs) per task.
-            q: _queue.Queue = _queue.Queue(maxsize=8)
-            # if the CONSUMER dies (feed error), the producer must not
-            # block forever on a full queue — a leaked thread in a
-            # reused python worker; emit checks the stop flag while
-            # waiting for space
-            stop = threading.Event()
-
-            class _Abort(BaseException):
-                pass
-
-            def _emit(item):
-                while True:
-                    try:
-                        q.put(item, timeout=0.1)
-                        return
-                    except _queue.Full:
-                        if stop.is_set():
-                            raise _Abort()
-
-            def _producer():
-                try:
-                    try:
-                        produce(paths, _emit)
-                    except BaseException as exc:  # propagate to task
-                        _emit(("exc", exc, None, None))
-                        return
-                    _emit(("done", None, None, None))
-                except _Abort:
-                    return  # consumer gone: exit quietly
-
-            th = threading.Thread(target=_producer, daemon=True)
-            th.start()
-            try:
-                while True:
-                    item = q.get()
-                    if item[0] == "done":
-                        break
-                    if item[0] == "exc":
-                        raise item[1]
-                    consume(item)
-            finally:
-                stop.set()
-                th.join()
-        else:
-            produce(paths, consume)
+                feeder.feed_hashed(_hash_any(vals))
         items = feeder.finish()
-        sk = feeder.sk
         if items == 0:
             return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([sk.to_bytes()], type=pa.binary()),
-                pa.array([items], type=pa.int64()),
-                pa.array([time.monotonic() - t0], type=pa.float64()),
-            ],
-            names=["state", "items", "build_secs"],
+        yield _partials_batch(
+            [feeder.sk.to_bytes()], [items], time.monotonic() - t0
         )
 
-    return fdf.mapInArrow(fn, _PARTIAL_SCHEMA)
+    return _map_files(spark, files, tasks, fn, _PARTIAL_SCHEMA)
 
 
 def _hash_any(arr: pa.Array):
@@ -457,13 +396,13 @@ def sketch_parquet(
     fanout: int = 64,
     files: list[str] | None = None,
     prune: tuple | None = None,
-    overlap: bool = True,
     hash_compat: str = "splitmix64",
 ):
     """End-to-end direct build: partials over raw files -> tree merge."""
+    files, tasks = _file_tasks(spark, path, files, tasks)
     partials = build_partials_direct(
         spark, path, col, factory, kind, tasks, files, prune=prune,
-        overlap=overlap, hash_compat=hash_compat,
+        hash_compat=hash_compat,
     )
     return tree_merge(partials, fanout=fanout, size_hint=tasks)
 
@@ -512,8 +451,9 @@ def sketch_iceberg(
     paths = [f.path for f in dfiles]
     if not paths:
         return None
+    files, tasks = _file_tasks(spark, table_dir, paths, tasks)
     partials = build_partials_direct(
-        spark, table_dir, col, factory, kind, tasks, files=paths,
+        spark, table_dir, col, factory, kind, tasks, files=files,
         prune=rg_prune,
     )
     return tree_merge(partials, fanout=fanout, size_hint=tasks)
@@ -528,7 +468,6 @@ def build_lineage_partials_direct(
     n_lineage: int = 64,
     tasks: int | None = None,
     files: list[str] | None = None,
-    overlap: bool = True,
     skip_lineages=None,
 ):
     """Per-LINEAGE stage 1 over raw parquet files: DataFrame[lineage_id
@@ -540,19 +479,19 @@ def build_lineage_partials_direct(
     JVM path's (checkpoint.run_checkpointed): a job started on one
     engine can be resumed by the other, and both recompute exactly the
     same missing lineage ids.  Within a task, rows are routed to
-    per-lineage accumulators with the same argsort group-slicing as
-    the grouped DataFrame stage (one sort per batch, cost independent
-    of lineage count).  ``skip_lineages`` (a set of already-completed
+    per-lineage accumulators by the grouped DataFrame stage's router
+    (``aggregate._route``: one sort per batch, cost independent of
+    lineage count).  ``skip_lineages`` (a set of already-completed
     ids, e.g. from a checkpoint ledger) drops those rows right after
     the lineage computation — resumed runs never feed them."""
     import numpy as np
 
-    skip = frozenset(int(x) for x in skip_lineages) if skip_lineages else None
-
-    if files is None:
-        files = list_parquet_files(path)
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
+    skip = (
+        np.array(sorted(int(x) for x in skip_lineages), dtype=np.int64)
+        if skip_lineages
+        else None
+    )
+    files, tasks = _file_tasks(spark, path, files, tasks)
     # validate the key type DRIVER-side: a clear error beats a per-task
     # TypeError storm (notably --direct --checkpoint defaulting
     # lineage_col to an array value column)
@@ -570,26 +509,12 @@ def build_lineage_partials_direct(
             "an explicit scalar key (e.g. --lineage-col doc_id) or use "
             "the non-direct checkpoint path"
         )
-    cores = spark.sparkContext.defaultParallelism
-    if tasks is None:
-        tasks = max(min(len(files), 2 * cores), 1)
-    rdd = spark.sparkContext.parallelize([(f,) for f in files], tasks)
-    fdf = spark.createDataFrame(rdd, "path string")
     dkind = _direct_kind(kind)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import queue as _queue
-        import threading
-
+    def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         from pyarrow import fs as pafs
-
-        from sketchlib.spark.aggregate import (
-            _ACC_BUDGET_BYTES,
-            AccFeeder,
-            _gather_list_slices,
-        )
 
         t0 = time.monotonic()
         budget = [_ACC_BUDGET_BYTES]
@@ -624,47 +549,23 @@ def build_lineage_partials_direct(
                 )
             # numpy % with positive divisor is non-negative for
             # negative int64 inputs — exactly Spark's pmod
-            return h.view(np.int64) % np.int64(n_lineage)
+            lin = h.view(np.int64) % np.int64(n_lineage)
+            if skip is not None:
+                lin[np.isin(lin, skip)] = -1  # _route drops code -1
+            return lin
 
-        def consume(item):
-            if item[0] != "rb":
-                raise AssertionError(item[0])
-            rb = item[1]
-            lin = lineage_of(rb.column(0))
-            varr = rb.column(1)
-            if dkind in (KIND_ARRAY, KIND_ARRAY_HASH):
-                offsets = varr.offsets.to_numpy()
-                flat = varr.values.to_numpy(zero_copy_only=False)
-                valid = (
-                    ~np.asarray(varr.is_null())
-                    if varr.null_count
-                    else np.ones(len(varr), dtype=bool)
-                )
-            else:
-                vals_all = varr.to_numpy(zero_copy_only=False)
-                valid = (
-                    ~np.asarray(varr.is_null())
-                    if varr.null_count
-                    else np.ones(len(varr), dtype=bool)
-                )
-            if skip:
-                valid = valid & ~np.isin(lin, list(skip))
-            vrows = np.flatnonzero(valid)
-            order = vrows[np.argsort(lin[vrows], kind="stable")]
-            svc = lin[order]
-            if svc.size == 0:
-                return
-            edges = np.concatenate(
-                ([0], np.flatnonzero(svc[1:] != svc[:-1]) + 1, [svc.size])
-            )
-            for bi in range(edges.size - 1):
-                s0, e0 = int(edges[bi]), int(edges[bi + 1])
-                lid = int(svc[s0])
-                rows = order[s0:e0]
-                if dkind in (KIND_ARRAY, KIND_ARRAY_HASH):
-                    vals = _gather_list_slices(flat, offsets, rows)
-                else:
-                    vals = vals_all[rows]
+        def decode():
+            for fpath in paths:
+                filesystem, fp = pafs.FileSystem.from_uri(fpath)
+                with filesystem.open_input_file(fp) as fh:
+                    pf = pq.ParquetFile(fh)
+                    yield from pf.iter_batches(
+                        batch_size=_batch_rows(pf.schema_arrow.field(col).type),
+                        columns=[key_col, col], use_threads=False,
+                    )
+
+        for rb in _prefetch(decode(), depth=8):
+            for lid, vals in _route(lineage_of(rb.column(0)), rb.column(1), dkind):
                 feeder = feeders.get(lid)
                 if feeder is None:
                     feeder = feeders[lid] = AccFeeder(
@@ -696,89 +597,16 @@ def build_lineage_partials_direct(
                         )
                 else:
                     feeder.feed_raw(vals)
-
-        def produce(paths, emit):
-            for fpath in paths:
-                filesystem, fp = pafs.FileSystem.from_uri(fpath)
-                with filesystem.open_input_file(fp) as fh:
-                    pf = pq.ParquetFile(fh)
-                    col_type = pf.schema_arrow.field(col).type
-                    bs = (
-                        _READ_BATCH_ROWS_LIST
-                        if pa.types.is_list(col_type)
-                        or pa.types.is_large_list(col_type)
-                        else _READ_BATCH_ROWS
-                    )
-                    for rb in pf.iter_batches(
-                        batch_size=bs, columns=[key_col, col],
-                        use_threads=False,
-                    ):
-                        emit(("rb", rb))
-
-        paths = [p for b in batches for p in b.column(0).to_pylist()]
-        if overlap:
-            q: _queue.Queue = _queue.Queue(maxsize=8)
-            stop = threading.Event()
-
-            class _Abort(BaseException):
-                pass
-
-            def _emit(item):
-                while True:
-                    try:
-                        q.put(item, timeout=0.1)
-                        return
-                    except _queue.Full:
-                        if stop.is_set():
-                            raise _Abort()
-
-            def _producer():
-                try:
-                    try:
-                        produce(paths, _emit)
-                    except BaseException as exc:
-                        _emit(("exc", exc))
-                        return
-                    _emit(("done", None))
-                except _Abort:
-                    return
-
-            th = threading.Thread(target=_producer, daemon=True)
-            th.start()
-            try:
-                while True:
-                    item = q.get()
-                    if item[0] == "done":
-                        break
-                    if item[0] == "exc":
-                        raise item[1]
-                    consume(item)
-            finally:
-                stop.set()
-                th.join()
-        else:
-            produce(paths, consume)
         if not feeders:
             return
         elapsed = time.monotonic() - t0
         lids = sorted(feeders)
         items = [feeders[k].finish() for k in lids]
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(lids, type=pa.int64()),
-                pa.array(
-                    [feeders[k].sk.to_bytes() for k in lids],
-                    type=pa.binary(),
-                ),
-                pa.array(items, type=pa.int64()),
-                pa.array(
-                    [elapsed / len(lids)] * len(lids), type=pa.float64()
-                ),
-            ],
-            names=["lineage_id", "state", "items", "build_secs"],
+        yield _partials_batch(
+            [feeders[k].sk.to_bytes() for k in lids], items, elapsed,
+            lineage_id=lids,
         )
 
-    return fdf.mapInArrow(
-        fn, f"lineage_id bigint, {_PARTIAL_SCHEMA}"
+    return _map_files(
+        spark, files, tasks, fn, f"lineage_id bigint, {_PARTIAL_SCHEMA}"
     )
-

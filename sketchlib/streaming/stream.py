@@ -36,20 +36,14 @@ from sketchlib.spark.aggregate import KIND_DOUBLE, build_partials, tree_merge
 
 
 def _ledger_merge(spark, ledger_dir: str):
-    """Merge every per-batch state in the ledger into one sketch."""
+    """Fold every per-batch state under ``ledger_dir`` into one sketch
+    with ``serde.merge_sketches``, the batch path's driver fold and
+    order; None when the ledger is absent or empty."""
     try:
         rows = spark.read.parquet(ledger_dir).collect()
     except Exception:
         return None
-    if not rows:
-        return None
-    blobs = sorted(
-        (bytes(r["state"]) for r in rows), key=lambda b: (len(b), b)
-    )
-    acc = serde.from_bytes(blobs[0])
-    for b in blobs[1:]:
-        acc.merge(serde.from_bytes(b))
-    return acc
+    return serde.merge_sketches(r["state"] for r in rows)
 
 
 def run_streaming_sketch(

@@ -256,3 +256,32 @@ def test_no_module_writes_session_conf():
         if "conf.set(" in p.read_text()
     ]
     assert offenders == []
+
+
+def test_one_stage1_skeleton():
+    """Source guard: every stage-1 build reads ahead on the one
+    ``aggregate._prefetch`` thread, every driver fold is
+    ``serde.merge_sketches``, and the direct builders have no
+    ``overlap`` knob."""
+    import inspect
+    import pathlib
+
+    import sketchlib
+    from sketchlib.spark import aggregate, direct
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    texts = {
+        p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")
+    }
+    assert sum(t.count("threading.Thread(") for t in texts.values()) == 1
+    assert "threading.Thread(" in inspect.getsource(aggregate._prefetch)
+    folds = [
+        name
+        for name, t in texts.items()
+        if name not in ("spark/aggregate.py", "serde.py")
+        and ("merge_blobs(_sorted_blobs(" in t or "from_bytes(blobs[0])" in t)
+    ]
+    assert folds == []
+    for name, fn in inspect.getmembers(direct, inspect.isfunction):
+        if fn.__module__ == direct.__name__:
+            assert "overlap" not in inspect.signature(fn).parameters, name

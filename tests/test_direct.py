@@ -60,6 +60,34 @@ def test_direct_hash_kind_int(spark, token_path):
     assert abs(sk.estimate() - true) / true <= 4 * sk.relative_std_error()
 
 
+def test_direct_size_hint_and_hash_compat_check(spark, token_path, monkeypatch):
+    """sketch_parquet hands its real task count to tree_merge (no plan
+    conversion just to count partitions), and an unknown hash_compat
+    fails before any DataFrame is built."""
+    from sketchlib.spark import direct
+
+    hints = []
+    real = direct.tree_merge
+
+    def spy(partials, **kw):
+        hints.append(kw["size_hint"])
+        return real(partials, **kw)
+
+    monkeypatch.setattr(direct, "tree_merge", spy)
+    sketch_parquet(spark, token_path, "n_tok", lambda: TDigest(delta=100))
+    files = list_parquet_files(token_path)
+    assert hints == [min(len(files), 2 * spark.sparkContext.defaultParallelism)]
+
+    monkeypatch.setattr(
+        direct, "_map_files", lambda *a: pytest.fail("DataFrame built")
+    )
+    with pytest.raises(ValueError, match="hash_compat"):
+        sketch_parquet(
+            spark, token_path, "n_tok", lambda: HyperLogLog(p=12),
+            KIND_HASH64, hash_compat="bogus",
+        )
+
+
 def test_cross_hash_domain_merge_refused(spark, token_path):
     """A direct-path HLL (numpy splitmix64) must REFUSE to merge with a
     DataFrame-path HLL (JVM xxhash64) — their register states live in
@@ -251,13 +279,68 @@ def test_bincount_acc_uint64_band_and_budget():
     assert c.try_add(np.arange(60, dtype=np.int64))
 
 
+def test_prefetch_order_errors_and_early_stop():
+    """The one read-ahead thread: order kept past ``depth``, a source
+    error re-raised in the consumer, and an early stop joins the
+    producer and closes a generator source in the consumer's thread."""
+    import threading
+
+    from sketchlib.spark.aggregate import _prefetch
+
+    items = list(range(50))
+    assert list(_prefetch(iter(items), depth=3)) == items
+
+    def failing():
+        yield 1
+        raise KeyError("boom")
+
+    got = []
+    with pytest.raises(KeyError, match="boom"):
+        for x in _prefetch(failing(), depth=2):
+            got.append(x)
+    assert got == [1]
+
+    closed_in = []
+
+    def source():
+        try:
+            yield from range(1000)
+        finally:
+            closed_in.append(threading.current_thread())
+
+    # hold the sources: the close must come from _prefetch, not from
+    # garbage collection
+    src = source()
+    pf = _prefetch(src, depth=2)
+    assert [next(pf), next(pf)] == [0, 1]
+    pf.close()
+    assert closed_in == [threading.current_thread()]
+
+    closed_in.clear()
+    src = source()
+    with pytest.raises(ValueError):
+        for x in _prefetch(src, depth=2):
+            raise ValueError(x)
+    assert closed_in == [threading.current_thread()]
+
+
 def test_direct_overlap_and_bounds_bit_identical(spark, tmp_path):
-    """Round-4 decode-path work must not change results: the threaded
-    decode/feed overlap and the footer-stat bounds hints both produce
-    BIT-IDENTICAL serialized sketch states vs the inline loop, for the
-    quantile path (t-digest over list<int32>) and the hash path (HLL)."""
+    """Decode-path work must not change results: the read-ahead decode
+    thread and the footer-stat bounds hints give BIT-IDENTICAL sketch
+    states vs an inline driver-side feed of the same files, for the
+    quantile path (t-digest over list<int32>) and the hash path
+    (HLL)."""
+    import pyarrow.parquet as pq
+
+    from sketchlib import serde
+    from sketchlib.core import hashing
     from sketchlib.core.hll import HyperLogLog
-    from sketchlib.spark.aggregate import KIND_ARRAY, KIND_ARRAY_HASH
+    from sketchlib.spark.aggregate import (
+        KIND_ARRAY,
+        KIND_ARRAY_HASH,
+        AccFeeder,
+        _batch_values,
+    )
     from sketchlib.spark.direct import sketch_parquet
 
     path = str(tmp_path / "tok")
@@ -269,22 +352,22 @@ def test_direct_overlap_and_bounds_bit_identical(spark, tmp_path):
         4
     ).write.parquet(path)
 
-    td = [
-        sketch_parquet(
-            spark, path, "tokens", lambda: TDigest(delta=500), KIND_ARRAY,
-            overlap=ov,
-        ).to_bytes()
-        for ov in (True, False)
-    ]
-    assert td[0] == td[1]
-    hll = [
-        sketch_parquet(
-            spark, path, "tokens", lambda: HyperLogLog(p=12),
-            KIND_ARRAY_HASH, overlap=ov,
-        ).to_bytes()
-        for ov in (True, False)
-    ]
-    assert hll[0] == hll[1]
+    def inline(factory, hash_mode):
+        feeder = AccFeeder(
+            factory(), hash_mode=hash_mode, domain=hashing.DOMAIN_SPLITMIX64
+        )
+        for f in list_parquet_files(path):
+            for rb in pq.ParquetFile(f).iter_batches(columns=["tokens"]):
+                feeder.feed_raw(_batch_values(rb, 0, KIND_ARRAY))
+        feeder.finish()
+        return serde.from_bytes(feeder.sk.to_bytes()).to_bytes()
+
+    for factory, kind in (
+        (lambda: TDigest(delta=500), KIND_ARRAY),
+        (lambda: HyperLogLog(p=12), KIND_ARRAY_HASH),
+    ):
+        direct = sketch_parquet(spark, path, "tokens", factory, kind, tasks=1)
+        assert direct.to_bytes() == inline(factory, kind == KIND_ARRAY_HASH)
 
     # bounds hints vs per-batch min/max: same accumulated counts
     from sketchlib.spark.aggregate import _BincountAcc

@@ -205,6 +205,27 @@ def test_null_handling(spark):
     assert sk.count == 3
     assert sk.min == 1.0 and sk.max == 5.0
 
+    # null array elements: the grouped build drops them like the
+    # ungrouped one, for a value sketch and a hash sketch
+    from sketchlib import serde
+
+    adf = spark.createDataFrame(
+        [(1, [1, 2, None]), (1, [3, 4])], "k int, v array<int>"
+    )
+    (row,) = grouped_sketch(
+        adf, ["k"], "v", lambda: TDigest(delta=100), KIND_ARRAY
+    ).collect()
+    td = serde.from_bytes(row["state"])
+    assert row["items"] == 4 and td.count == 4
+    assert list(td.value_at_quantile([0.0, 1.0])) == [1.0, 4.0]
+    (row,) = grouped_sketch(
+        adf, ["k"], "v", lambda: HyperLogLog(p=12), KIND_ARRAY_HASH
+    ).collect()
+    flat = sketch_column(adf, "v", lambda: HyperLogLog(p=12), KIND_ARRAY_HASH)
+    assert row["items"] == 4
+    est = serde.from_bytes(row["state"]).estimate()
+    assert est == flat.estimate() and round(est) == 4
+
 
 def test_empty_input(spark):
     df = spark.createDataFrame([], "v double")
@@ -328,6 +349,19 @@ def test_nan_values_dropped(spark):
     sk = sketch_column(df, "v", lambda: TDigest(delta=100), KIND_DOUBLE)
     assert sk.count == 2
     assert sk.min == 1.0 and sk.max == 3.0
+
+    # the grouped build drops NaNs by the same rule
+    from sketchlib import serde
+
+    gdf = spark.createDataFrame(
+        [(1, 1.0), (1, 2.0), (1, float("nan")), (1, 4.0)], "k int, v double"
+    )
+    (row,) = grouped_sketch(
+        gdf, ["k"], "v", lambda: TDigest(delta=100), KIND_DOUBLE
+    ).collect()
+    g = serde.from_bytes(row["state"])
+    assert row["items"] == 3 and g.count == 3
+    assert list(g.value_at_quantile([0.0, 0.5, 1.0])) == [1.0, 2.0, 4.0]
 
 
 def test_grouped_sketch_flush_bounded_memory(spark):
