@@ -2,7 +2,7 @@
 MinHash+LSH and SimHash near-dup, n-gram Jaccard verification, and
 embedding-cosine near-dup (sketchlib.similarity)."""
 
-from sketchlib.dedup.decontaminate import decontaminate, word_shingles
+from sketchlib.dedup.decontaminate import decontaminate
 from sketchlib.dedup.exact import exact_duplicate_groups
 from sketchlib.dedup.incremental import (
     build_seen_state,
@@ -18,6 +18,7 @@ from sketchlib.dedup.minhash import (
 from sketchlib.dedup.ngram import ngram_jaccard_pairs
 from sketchlib.dedup.spans import remove_duplicate_spans
 from sketchlib.dedup.simhash import simhash_near_duplicates, simhash_signatures
+from sketchlib.text.grams import word_shingles
 
 __all__ = [
     "exact_duplicate_groups",

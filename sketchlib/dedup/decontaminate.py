@@ -1,6 +1,7 @@
 """Benchmark decontamination: drop training documents that share
 word n-gram shingles with an evaluation corpus (the standard guard
-against test-set leakage in pretraining data).
+against test-set leakage in pretraining data).  Shingles are the
+grams of ``sketchlib/text/grams.py``, the one gram convention.
 
 Two methods, one semantics knob (``threshold`` = how many shared
 shingles convict a document):
@@ -33,41 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sketchlib.core.bloom import BloomFilter
-
-
-def word_shingles(col: str, w: int):
-    """Array of the ``w``-word shingle STRINGS of a whitespace-split
-    text column (empty array below ``w`` words) — pure Catalyst."""
-    if w < 1:
-        # w=0 would make EVERY doc share the empty shingle (silently
-        # removing the whole corpus); negative w fails deep in slice
-        raise ValueError(f"shingle width must be >= 1, got {w}")
-    words = F.split(F.col(col), " ")
-    return F.when(
-        F.size(words) >= w,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - w),
-            lambda i: F.array_join(F.slice(words, i + 1, w), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def array_shingles(arr, w: int, elem_type: str):
-    """Array of the ``w``-element windows of an ARRAY column (empty
-    below ``w`` elements) — the token-array analogue of
-    ``word_shingles``, sharing its short-input guard (``sequence``
-    with a negative stop would generate a DESCENDING range, not an
-    empty one).  ``elem_type`` is the array column's simpleString
-    (e.g. ``"array<int>"``), used to type the empty branch."""
-    if w < 1:
-        raise ValueError(f"shingle width must be >= 1, got {w}")
-    return F.when(
-        F.size(arr) >= w,
-        F.transform(
-            F.sequence(F.lit(0), F.size(arr) - w),
-            lambda i: F.slice(arr, i + 1, w),
-        ),
-    ).otherwise(F.expr("array()").cast(f"array<{elem_type}>"))
+from sketchlib.text.grams import grams
 
 
 def decontaminate(
@@ -98,26 +65,13 @@ def decontaminate(
         raise ValueError(f"threshold must be >= 1, got {threshold}")
     if method not in ("exact", "bloom"):
         raise ValueError(f"unknown method {method!r}")
-    if tokens:
-        from pyspark.sql.types import ArrayType
-
-        dt_t = train.schema[col].dataType
-        dt_e = eval_df.schema[col].dataType
-        for side, dt in (("train", dt_t), ("eval_df", dt_e)):
-            if not isinstance(dt, ArrayType):
-                raise ValueError(
-                    f"tokens=True requires ARRAY columns; {side}.{col!r} "
-                    f"is {dt.simpleString()}"
-                )
-        if dt_t.simpleString() != dt_e.simpleString():
-            raise ValueError(
-                f"token element types differ: train {dt_t.simpleString()} "
-                f"vs eval {dt_e.simpleString()} — shingle equality would "
-                "silently never match"
-            )
-        sh = array_shingles(F.col(col), shingle_w, dt_t.simpleString())
-    else:
-        sh = word_shingles(col, shingle_w)
+    sh = grams(train, col, shingle_w, tokens=tokens)
+    dt_t, dt_e = (d.schema[col].dataType.simpleString() for d in (train, eval_df))
+    if tokens and dt_t != dt_e:
+        raise ValueError(
+            f"token element types differ: train {dt_t} vs eval {dt_e} — "
+            "shingle equality would silently never match"
+        )
     ev = eval_df.select(F.explode(sh).alias("__sh")).distinct()
     if method == "exact":
         tr = train.select(
@@ -157,9 +111,8 @@ def decontaminate(
         ev.unpersist()
     blob = bloom.to_bytes()
     cols = train.columns
-    hashed = train.select(
-        *cols, F.transform(sh, lambda s: F.xxhash64(s)).alias("__hs")
-    )
+    hs = grams(train, col, shingle_w, tokens=tokens, hashed=True)
+    hashed = train.select(*cols, hs.alias("__hs"))
 
     def fn(batches):
         bf = BloomFilter.from_bytes(blob)

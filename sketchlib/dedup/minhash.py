@@ -2,8 +2,8 @@
 
 Pipeline (the standard large-scale shape):
   1. signatures: per document, word shingles -> 64-bit shingle hashes
-     -> ``num_perm`` MinHash values (pandas UDF; per-batch numpy, the
-     per-permutation min is one vectorized reduction).
+     -> ``num_perm`` MinHash values (Arrow UDF over the ``text/grams.py``
+     kernel; the per-permutation min is one vectorized reduction).
   2. banding: split each signature into ``bands`` of ``rows_per_band``
      values; hash each band JVM-side (``xxhash64`` on the array slice)
      and explode -> (band_idx, band_hash, id).
@@ -18,10 +18,10 @@ Probability a pair with Jaccard s collides in >= 1 band:
 1 - (1 - s^r)^b — with b=16, r=4 the S-curve crosses ~0.5 near
 s ~= 0.5, which is the classic near-dup operating point.
 
-Two input modes: ``text`` (whitespace words; ALL words of an Arrow
-batch hashed in one vectorized C-level call) and pre-tokenized
-``array<int>`` columns (fully vectorized splitmix64 — the
-10^12-token-scale path; tokenize once, dedup many times).
+Two input modes (``grams.shingle_hashes`` front ends): ``text``
+(whitespace words, one vectorized hash call per Arrow batch) and
+pre-tokenized integer-array columns (fully vectorized splitmix64 over
+the Arrow list's flat values — the 10^12-token-scale path).
 """
 
 from __future__ import annotations
@@ -29,160 +29,43 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from sketchlib.core.hashing import hash_str, splitmix64
+from sketchlib.core.hashing import splitmix64
+from sketchlib.text.grams import shingle_hashes
 
-_U64 = np.uint64
-
-
-def _roll_shingles(wh: np.ndarray, w: int) -> np.ndarray:
-    """Unique rolling w-gram hashes from per-word hashes (vectorized)."""
-    n = wh.size - w + 1
-    acc = wh[:n].copy()
-    for i in range(1, w):
-        with np.errstate(over="ignore"):
-            acc = splitmix64(acc ^ (wh[i : i + n] * _U64(0x9E3779B97F4A7C15)))
-    return np.unique(acc)
+#: grams per block of ``_signatures``' permutation loop (cache-resident)
+_BLOCK = 1 << 15
 
 
-def _flat_shingle_segments(texts, w: int, seed: int):
-    """Unique shingle hashes for a whole Arrow batch in FLAT form:
-    returns (values uint64, offsets int64) where doc i's sorted unique
-    shingles are ``values[offsets[i]:offsets[i+1]]``.
-
-    Everything batch-level is one vectorized pass: a single
-    ``hash_str`` call over all words, a GLOBAL rolling w-gram combine
-    over the flat hash array (windows crossing document boundaries
-    masked out), and a lexsort-based per-doc dedupe — no per-document
-    numpy calls (the former per-doc loop dominated dedup_minhash)."""
-    docs = [(t or "").split() for t in texts]
-    nd = len(docs)
-    lens = np.array([len(d) for d in docs], dtype=np.int64)
-    offsets = np.zeros(nd + 1, dtype=np.int64)
-    # short docs (< w words, incl. empty) hash as a single unit
-    flat_words: list[str] = []
-    short_pos: list[int] = []  # index into flat_words for short docs, -1 empty
-    for d in docs:
-        if not d:
-            short_pos.append(-1)
-        elif len(d) < w:
-            short_pos.append(len(flat_words))
-            flat_words.append(" ".join(d))
-        else:
-            short_pos.append(-2)  # full doc marker
-            flat_words.extend(d)
-    wh = hash_str(flat_words, seed=seed)
-
-    # per-word doc index over the flat array (short docs occupy 1 slot)
-    slot_lens = np.where(lens == 0, 0, np.where(lens < w, 1, lens))
-    doc_of = np.repeat(np.arange(nd, dtype=np.int64), slot_lens)
-    W = wh.size
-    n_acc = max(W - w + 1, 0)
-    if n_acc:
-        acc = wh[:n_acc].copy()
-        for i in range(1, w):
-            with np.errstate(over="ignore"):
-                acc = splitmix64(acc ^ (wh[i : i + n_acc] * _U64(0x9E3779B97F4A7C15)))
-        # a window is a real shingle iff it stays inside one FULL doc
-        valid = (doc_of[:n_acc] == doc_of[w - 1 : w - 1 + n_acc]) & (
-            lens[doc_of[:n_acc]] >= w
-        )
-        gram_doc = doc_of[:n_acc][valid]
-        gram_val = acc[valid]
-    else:
-        gram_doc = np.empty(0, dtype=np.int64)
-        gram_val = np.empty(0, dtype=np.uint64)
-    # short/empty docs contribute exactly one value each
-    sp = np.asarray(short_pos, dtype=np.int64)
-    sd = np.flatnonzero(sp != -2)
-    if wh.size:
-        sv = np.where(sp[sd] >= 0, wh[np.maximum(sp[sd], 0)], np.uint64(0))
-    else:
-        # a batch of ONLY empty docs: no words were hashed at all
-        sv = np.zeros(sd.size, dtype=np.uint64)
-    gram_doc = np.concatenate([gram_doc, sd])
-    gram_val = np.concatenate([gram_val, sv.astype(np.uint64)])
-
-    # global per-doc sorted dedupe: lexsort by (doc, value), then drop
-    # positions equal to their predecessor within the same doc
-    order = np.lexsort((gram_val, gram_doc))
-    gd, gv = gram_doc[order], gram_val[order]
-    if gd.size:
-        keep = np.empty(gd.size, dtype=bool)
-        keep[0] = True
-        keep[1:] = (gd[1:] != gd[:-1]) | (gv[1:] != gv[:-1])
-        gd, gv = gd[keep], gv[keep]
-    counts = np.bincount(gd, minlength=nd)
-    offsets[1:] = np.cumsum(counts)
-    return gv, offsets
+def _lists(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
+    """``array<long>`` column of ``values`` (flattened) split at ``offsets``."""
+    flat = values.view(np.int64).ravel()
+    return pa.ListArray.from_arrays(offsets.astype(np.int32), flat)
 
 
-def _word_shingle_hashes_batch(texts, w: int, seed: int) -> list[np.ndarray]:
-    """Per-doc unique shingle hashes (list form over the flat kernel)."""
-    vals, offs = _flat_shingle_segments(texts, w, seed)
-    return [vals[offs[i] : offs[i + 1]] for i in range(len(texts))]
-
-
-def _signatures_from_segments(
-    vals: np.ndarray, offs: np.ndarray, num_perm: int, seed: int
-) -> np.ndarray:
-    """(n_docs, num_perm) int64 signatures from flat shingle segments:
-    one permuted-hash pass + one ``np.minimum.reduceat`` per
-    permutation — no per-doc work.  Bit-identical to
-    ``_minhash_from_shingles`` per doc."""
+def _signatures(vals, offs, num_perm: int, seed: int) -> np.ndarray:
+    """(n_docs, num_perm) int64 MinHash signatures of flat gram segments
+    (each non-empty): per seeded splitmix64 permutation, one
+    ``minimum.reduceat``, run over blocks of about ``_BLOCK`` grams.  The
+    minimum over a multiset equals the minimum over its set, so repeats
+    are fine."""
     nd = offs.size - 1
     out = np.empty((nd, num_perm), dtype=np.uint64)
-    if vals.size == 0 or nd == 0:
-        out[:] = 0
-        return out.view(np.int64)
-    seeds = splitmix64(np.arange(num_perm, dtype=np.uint64) + _U64(seed * 7919 + 13))
-    starts = offs[:-1].copy()
-    empty_seg = offs[1:] == offs[:-1]
-    starts[empty_seg] = 0  # reduceat needs in-range indices; fixed below
-    with np.errstate(over="ignore"):
+    base = np.uint64(seed * 7919 + 13)
+    seeds = splitmix64(np.arange(num_perm, dtype=np.uint64) + base)
+    cuts = np.unique(np.concatenate(
+        [[0], np.searchsorted(offs, np.arange(_BLOCK, offs[-1], _BLOCK)), [nd]]
+    ))
+    for d0, d1 in zip(cuts[:-1], cuts[1:]):
+        v = vals[offs[d0] : offs[d1]]
+        starts = offs[d0:d1] - offs[d0]
         for p in range(num_perm):
-            hp = splitmix64(vals ^ seeds[p])
-            out[:, p] = np.minimum.reduceat(hp, starts)
-    if empty_seg.any():  # zero-shingle docs (cannot happen via
-        out[empty_seg] = 0  # _flat_shingle_segments, but stay safe)
+            out[d0:d1, p] = np.minimum.reduceat(splitmix64(v ^ seeds[p]), starts)
     return out.view(np.int64)
-
-
-def _batch_signatures(texts, w: int, num_perm: int, seed: int) -> np.ndarray:
-    vals, offs = _flat_shingle_segments(texts, w, seed)
-    return _signatures_from_segments(vals, offs, num_perm, seed)
-
-
-def _word_shingle_hashes(text: str, w: int, seed: int) -> np.ndarray:
-    return _word_shingle_hashes_batch([text], w, seed)[0]
-
-
-def _token_shingle_hashes(tokens: np.ndarray, w: int, seed: int) -> np.ndarray:
-    t = np.asarray(tokens, dtype=np.int64).view(np.uint64)
-    if t.size == 0:
-        return np.zeros(1, dtype=np.uint64)
-    if t.size < w:
-        pad = np.zeros(w, dtype=np.uint64)
-        pad[: t.size] = t
-        t = pad
-    th = splitmix64(t ^ _U64(seed & 0xFFFFFFFFFFFFFFFF))
-    n = t.size - w + 1
-    acc = th[:n].copy()
-    for i in range(1, w):
-        with np.errstate(over="ignore"):
-            acc = splitmix64(acc ^ (th[i : i + n] * _U64(0x9E3779B97F4A7C15)))
-    return np.unique(acc)
-
-
-def _minhash_from_shingles(sh: np.ndarray, num_perm: int, seed: int) -> np.ndarray:
-    """num_perm MinHash values via seeded splitmix permutations."""
-    seeds = splitmix64(np.arange(num_perm, dtype=np.uint64) + _U64(seed * 7919 + 13))
-    with np.errstate(over="ignore"):
-        m = splitmix64(sh[None, :] ^ seeds[:, None])  # (num_perm, S)
-    return m.min(axis=1).view(np.int64)
 
 
 def minhash_signatures(
@@ -196,27 +79,11 @@ def minhash_signatures(
 ) -> DataFrame:
     """DataFrame[id, sig array<long>] — MinHash signatures."""
 
-    if tokens:
-
-        @pandas_udf("array<long>")
-        def sig_udf(vals: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    _minhash_from_shingles(
-                        _token_shingle_hashes(np.asarray(v if v is not None else [], dtype=np.int64), shingle_w, seed),
-                        num_perm,
-                        seed,
-                    ).tolist()
-                    for v in vals
-                ]
-            )
-
-    else:
-
-        @pandas_udf("array<long>")
-        def sig_udf(vals: pd.Series) -> pd.Series:
-            sigs = _batch_signatures(vals, shingle_w, num_perm, seed)
-            return pd.Series(list(sigs.tolist()))
+    @arrow_udf("array<long>")
+    def sig_udf(vals: pa.Array) -> pa.Array:
+        segs = shingle_hashes(vals, shingle_w, seed, tokens=tokens, unique=False)
+        sigs = _signatures(*segs, num_perm, seed)
+        return _lists(sigs, np.arange(0, sigs.size + 1, num_perm))
 
     return df.select(F.col(id_col).alias("id"), sig_udf(F.col(col)).alias("sig"))
 
@@ -319,25 +186,9 @@ def _shingle_sets_df(
     hashes, computed once (the verifier joins these instead of
     re-hashing text per candidate pair)."""
 
-    if tokens:
-
-        @pandas_udf("array<long>")
-        def sh_udf(vals: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    _token_shingle_hashes(
-                        np.asarray(v if v is not None else [], dtype=np.int64), shingle_w, seed
-                    ).view(np.int64).tolist()
-                    for v in vals
-                ]
-            )
-
-    else:
-
-        @pandas_udf("array<long>")
-        def sh_udf(vals: pd.Series) -> pd.Series:
-            shingles = _word_shingle_hashes_batch(vals, shingle_w, seed)
-            return pd.Series([sh.view(np.int64).tolist() for sh in shingles])
+    @arrow_udf("array<long>")
+    def sh_udf(vals: pa.Array) -> pa.Array:
+        return _lists(*shingle_hashes(vals, shingle_w, seed, tokens=tokens))
 
     return df.select(F.col(id_col).alias("id"), sh_udf(F.col(col)).alias("sh"))
 
@@ -399,30 +250,14 @@ def _signatures_and_shingles(
     signature and verifier stages each need them; computing them in
     separate UDFs would split/hash every document twice)."""
 
-    if tokens:
-
-        @pandas_udf("struct<sig: array<long>, sh: array<long>>")
-        def both_udf(vals: pd.Series) -> pd.DataFrame:
-            sigs, shs = [], []
-            for v in vals:
-                sh = _token_shingle_hashes(
-                    np.asarray(v if v is not None else [], dtype=np.int64), shingle_w, seed
-                )
-                sigs.append(_minhash_from_shingles(sh, num_perm, seed).tolist())
-                shs.append(sh.view(np.int64).tolist())
-            return pd.DataFrame({"sig": sigs, "sh": shs})
-
-    else:
-
-        @pandas_udf("struct<sig: array<long>, sh: array<long>>")
-        def both_udf(vals: pd.Series) -> pd.DataFrame:
-            flat, offs = _flat_shingle_segments(vals, shingle_w, seed)
-            sigs = _signatures_from_segments(flat, offs, num_perm, seed)
-            sh = [
-                flat[offs[i] : offs[i + 1]].view(np.int64).tolist()
-                for i in range(len(vals))
-            ]
-            return pd.DataFrame({"sig": list(sigs.tolist()), "sh": sh})
+    @arrow_udf("struct<sig: array<long>, sh: array<long>>")
+    def both_udf(vals: pa.Array) -> pa.Array:
+        sh, offs = shingle_hashes(vals, shingle_w, seed, tokens=tokens)
+        sigs = _signatures(sh, offs, num_perm, seed)
+        return pa.StructArray.from_arrays(
+            [_lists(sigs, np.arange(0, sigs.size + 1, num_perm)), _lists(sh, offs)],
+            names=["sig", "sh"],
+        )
 
     return df.select(
         F.col(id_col).alias("id"), both_udf(F.col(col)).alias("b")

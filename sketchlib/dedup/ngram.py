@@ -37,13 +37,15 @@ ordered pairs and are excluded (documented, not silent: see the
 ``dropna`` below); docs shorter than ``w`` words have an empty gram
 set and never pair.
 
+Grams come from ``sketchlib/text/grams.py``, the one gram convention.
 ``hash_grams=True`` replaces gram strings with ``xxhash64(gram)``
 throughout (ordering, joins, intersections) — narrows every shuffle
-row to 8 bytes for wide corpora at a ~n_grams^2 / 2^64 collision
-risk; results are otherwise identical (tested).  Measured ~3x on the
-prefix plan at a 50k-doc stress (BASELINE.md round-5 stress section,
-which also pins the index/prefix crossover: uniform low df favors
-the index join, a df=20k boilerplate gram already flips it — the
+row to 8 bytes for wide corpora at about G(G-1)/2^65 expected
+colliding pairs for G distinct grams (the bound stated in
+``grams.py``); results are otherwise identical (tested).  Measured
+~3x on the prefix plan at a 50k-doc stress (BASELINE.md round-5
+stress section, which also pins the index/prefix crossover: uniform
+low df favors the index join, a df=20k boilerplate gram already flips it — the
 index's hot-gram join rows grow as df^2, prefix stays linear).
 """
 
@@ -52,8 +54,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sketchlib.dedup.decontaminate import word_shingles
 from sketchlib.spark.api import SPREAD_CACHE_MIN_PARTITIONS, _spread
+from sketchlib.text.grams import grams
 
 #: planned-partition threshold between the two exact plans: below or
 #: equal, the inverted-index join (fewer shuffles) wins; above, hot
@@ -66,9 +68,7 @@ def _gram_sets(
 ) -> DataFrame:
     """(__id, __g sorted-distinct gram array, __n its size); NULL-id
     rows dropped (cannot form ordered pairs)."""
-    g = F.array_distinct(word_shingles(col, w))
-    if hash_grams:
-        g = F.transform(g, lambda s: F.xxhash64(s))
+    g = F.array_distinct(grams(docs, col, w, hashed=hash_grams))
     return (
         docs.na.drop(subset=[id_col])
         .select(F.col(id_col).alias("__id"), g.alias("__g"))

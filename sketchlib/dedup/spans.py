@@ -20,15 +20,16 @@ rebuilt TEXT byte-for-byte against a pure-SQL DuckDB oracle):
    (possibly empty — e.g. an exact full-document copy is scrubbed to
    ''), plus ``n_removed``.
 
-Plan (pure Catalyst, no Python rows): grams via the shared
-``word_shingles`` transform + posexplode; ONE groupBy(gram) for the
-global counts (map-side partial agg; ``hash_grams`` narrows the
-shuffle rows to 8-byte hashes at a ~occurrences^2/2^64 collision
-risk); duplicated occurrences explode to at most ``w`` covered
-positions each; a left_anti join on (doc, position) keeps the
-survivors; per-doc reassembly is the materialize_packed
-collect/sort/transform pattern — every per-key group is bounded by
-that document's word count, so no stage concentrates unbounded rows.
+Plan (pure Catalyst, no Python rows): grams via
+``sketchlib/text/grams.py`` (the one gram convention) + posexplode;
+ONE groupBy(gram) for the global counts (map-side partial agg;
+``hash_grams`` narrows the shuffle rows to 8-byte hashes at the
+G(G-1)/2^65 expected collisions stated in ``grams.py``); duplicated
+occurrences explode to at most ``w`` covered positions each; a
+left_anti join on (doc, position) keeps the survivors; per-doc
+reassembly is the materialize_packed collect/sort/transform pattern —
+every per-key group is bounded by that document's word count, so no
+stage concentrates unbounded rows.
 
 Contracts: ``id_col`` must be unique and non-NULL per document —
 it keys the position join and the rebuild (NULL-id rows are dropped,
@@ -41,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sketchlib.dedup.decontaminate import word_shingles
+from sketchlib.text.grams import grams, token_type
 
 
 def remove_duplicate_spans(
@@ -70,19 +71,8 @@ def remove_duplicate_spans(
     space-bearing array<string> column renders to different word
     boundaries and voids that equivalence, not the op's own
     semantics)."""
-    if w < 1:
-        raise ValueError(f"span width must be >= 1, got {w}")
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
-    if tokens:
-        from pyspark.sql.types import ArrayType
-
-        dt = docs.schema[col].dataType
-        if not isinstance(dt, ArrayType):
-            raise ValueError(
-                f"tokens=True requires an ARRAY column; {col!r} is "
-                f"{dt.simpleString()}"
-            )
     from sketchlib.spark.api import SPREAD_CACHE_MIN_PARTITIONS, _spread
 
     # spread the raw docs before the split/gram build when the source
@@ -92,7 +82,7 @@ def remove_duplicate_spans(
     small = planned <= SPREAD_CACHE_MIN_PARTITIONS
     if tokens:
         # NULL array behaves as [] — same explicit default as text ''
-        elem = docs.schema[col].dataType.simpleString()
+        elem = token_type(docs, col).simpleString()
         empty_arr = F.expr("array()").cast(elem)
         d = docs.na.drop(subset=[id_col]).select(
             F.col(id_col).alias("__id"),
@@ -106,6 +96,9 @@ def remove_duplicate_spans(
             # n_removed)
             F.coalesce(F.col(col), F.lit("")).alias("__text"),
         )
+    sh = grams(
+        d, "__toks" if tokens else "__text", w, tokens=tokens, hashed=hash_grams
+    )
     # four consumers read this lineage (gram counts, dup probe, word
     # positions, the final rejoin): persist the ONE raw-text frame so
     # the source scans collapse to one (the gram build itself runs
@@ -118,14 +111,6 @@ def remove_duplicate_spans(
     if cache:
         d = d.persist()
 
-    if tokens:
-        from sketchlib.dedup.decontaminate import array_shingles
-
-        sh = array_shingles(F.col("__toks"), w, elem)
-    else:
-        sh = word_shingles("__text", w)
-    if hash_grams:
-        sh = F.transform(sh, lambda s: F.xxhash64(s))
     # (doc, 0-based start position, gram) for every full window
     occ = d.select(
         "__id", F.posexplode(sh).alias("__p", "__g")

@@ -785,7 +785,9 @@ def main(argv=None) -> None:
     sc.add_argument("--tokens", action="store_true",
                     help="score a token-array column instead of text")
     sc.add_argument("--hash-grams", action="store_true",
-                    help="novelty: shuffle 8-byte gram hashes")
+                    help="novelty: shuffle 8-byte xxhash64 gram keys "
+                    "(~G(G-1)/2^65 expected collisions for G distinct "
+                    "grams; see sketchlib/text/grams.py)")
     sc.add_argument("--master", default=None)
     sc.set_defaults(fn=job_score)
 
@@ -870,7 +872,10 @@ def main(argv=None) -> None:
     sd.add_argument("--id-col", default="doc_id")
     sd.add_argument("--span-w", type=int, default=5)
     sd.add_argument("--min-count", type=int, default=2)
-    sd.add_argument("--hash-grams", action="store_true")
+    sd.add_argument("--hash-grams", action="store_true",
+                    help="shuffle 8-byte xxhash64 gram keys (~G(G-1)/2^65 "
+                    "expected collisions for G distinct grams; see "
+                    "sketchlib/text/grams.py)")
     sd.add_argument("--master", default=None)
     sd.set_defaults(fn=job_spandedup)
 
@@ -883,7 +888,10 @@ def main(argv=None) -> None:
     ng.add_argument("--gram-w", type=int, default=3)
     ng.add_argument("--threshold", type=float, default=0.5)
     ng.add_argument("--method", default="auto", choices=["auto", "index", "prefix"])
-    ng.add_argument("--hash-grams", action="store_true")
+    ng.add_argument("--hash-grams", action="store_true",
+                    help="compare 8-byte xxhash64 gram keys (~G(G-1)/2^65 "
+                    "expected collisions for G distinct grams; see "
+                    "sketchlib/text/grams.py)")
     ng.add_argument("--master", default=None)
     ng.set_defaults(fn=job_ngram_dedup)
 

@@ -1,8 +1,9 @@
 """Document fingerprinting via rolling-hash shingles (winnowing-lite).
 
 Per document: whitespace words -> w-word shingles -> 64-bit rolling
-hash per shingle (splitmix64 combine) -> fingerprint = a splitmix64
-mix over the ``k_min`` SMALLEST shingle hashes in sorted order.
+hash per shingle (``grams.roll``, the one splitmix64 combine) ->
+fingerprint = a splitmix64 mix over the ``k_min`` SMALLEST shingle
+hashes in sorted order.
 Identical documents always share the fingerprint; two distinct
 documents collide only when they share ALL k smallest shingles.  A
 single-min fingerprint (1-permutation MinHash) collides far too often
@@ -20,21 +21,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from sketchlib.core.hashing import hash_str, splitmix64
+from sketchlib.text.grams import roll
 
 _U64 = np.uint64
-
-
-def shingle_hashes(words: list[str], w: int, seed: int = 1) -> np.ndarray:
-    """Rolling combine of word hashes over a window of w words."""
-    if len(words) < w:
-        words = words + [""] * (w - len(words))
-    wh = hash_str(words, seed=seed)
-    n = len(words) - w + 1
-    acc = wh[:n].copy()
-    for i in range(1, w):
-        with np.errstate(over="ignore"):
-            acc = splitmix64(acc ^ (wh[i : i + n] * _U64(0x9E3779B97F4A7C15)))
-    return acc
 
 
 def fingerprint_series(
@@ -46,7 +35,8 @@ def fingerprint_series(
         if not words:
             out[i] = 0
             continue
-        sh = shingle_hashes(words, w, seed)
+        # short docs pad with empty words to one full shingle
+        sh = roll(hash_str(words + [""] * (w - len(words)), seed=seed), w)
         kk = min(k_min, sh.size)
         smallest = np.sort(np.partition(sh, kk - 1)[:kk])
         acc = _U64(0x243F6A8885A308D3)

@@ -13,9 +13,9 @@ destructive.
 Semantics (exact, engine-reproducible — the gate verifies against a
 pure-SQL DuckDB oracle):
 
-1. every position ``p`` starts a ``w``-gram (text: single-space split
-   words, the `word_shingles` convention shared with spans dedup;
-   tokens: array windows via `array_shingles`);
+1. every position ``p`` starts a ``w``-gram — the one gram convention
+   of ``sketchlib/text/grams.py`` (text: single-space split words,
+   shared with spans dedup; tokens: array windows);
 2. a gram occurrence is NOVEL iff its corpus-wide occurrence count
    (every (doc, position) instance, within-doc repeats included) is
    exactly 1;
@@ -26,8 +26,9 @@ Plan (pure Catalyst): shingle transform + explode -> ONE
 groupBy(gram) for global counts (map-side partial agg) -> re-join the
 occurrences -> per-doc agg -> left join back onto the input (rows
 below ``w`` words survive with 0 grams).  ``hash_grams=True`` narrows
-both shuffles to 8-byte xxhash64 keys (collision risk ~occurrences^2
-/ 2^64 — the spans-dedup trade) for corpus-scale runs.
+both shuffles to 8-byte xxhash64 keys for corpus-scale runs (about
+G(G-1)/2^65 expected colliding pairs for G distinct grams — the bound
+stated in ``grams.py``).
 
 Contract: ``id_col`` unique and non-NULL per document (it keys the
 re-attach join); NULL text scores like the empty string.
@@ -38,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sketchlib.dedup.decontaminate import array_shingles, word_shingles
+from sketchlib.text.grams import grams
 
 
 def ngram_novelty(
@@ -61,21 +62,11 @@ def ngram_novelty(
     frame lazily; drop it with ``spark.catalog.clearCache()`` (or keep
     the default for one-shot scoring, where Spark's shuffle reuse
     already avoids most of the duplication)."""
-    if tokens:
-        elem = dict(docs.dtypes)[col]
-        if not elem.startswith("array<"):
-            raise ValueError(f"tokens=True needs an array column, got {elem}")
-        grams = array_shingles(F.col(col), w, elem)
-    else:
-        grams = word_shingles(col, w)
-
+    g = grams(docs, col, w, tokens=tokens, hashed=hash_grams)
     src = docs.select(id_col, col)
     if cache:
         src = src.persist()
-    occ = src.select(id_col, F.explode(grams).alias("__gram"))
-    if hash_grams:
-        # xxhash64 accepts arrays too, so one expression covers both modes
-        occ = occ.select(id_col, F.xxhash64("__gram").alias("__gram"))
+    occ = src.select(id_col, F.explode(g).alias("__gram"))
     counts = occ.groupBy("__gram").agg(F.count(F.lit(1)).alias("__c"))
     per_doc = (
         occ.join(counts, "__gram")

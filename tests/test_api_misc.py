@@ -285,3 +285,23 @@ def test_one_stage1_skeleton():
     for name, fn in inspect.getmembers(direct, inspect.isfunction):
         if fn.__module__ == direct.__name__:
             assert "overlap" not in inspect.signature(fn).parameters, name
+
+
+def test_one_gram_module():
+    """Source guard: ``text/grams.py`` alone defines a gram — the
+    Catalyst shingle builders and the rolling combine — and no MinHash
+    UDF branches on the input mode."""
+    import pathlib
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    texts = {
+        p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")
+    }
+    for marker in ("def word_shingles(", "def array_shingles(",
+                   "* _U64(0x9E3779B97F4A7C15)"):
+        assert [n for n, t in texts.items() if marker in t] == ["text/grams.py"]
+    for gone in ("_token_shingle_hashes", "_roll_shingles", "_word_shingle_hashes"):
+        assert [n for n, t in texts.items() if gone in t] == [], gone
+    assert "if tokens:" not in texts["dedup/minhash.py"]

@@ -435,6 +435,85 @@ def test_minhash_token_mode_degenerate_docs(spark):
     assert (4, 5) in pairs and (1, 2) in pairs
 
 
+def test_token_minhash_null_element_keeps_ids(spark):
+    # a null element must not push the row through float64: 2**60 + 1
+    # and 2**60 differ, so the rows share one of their three 3-grams
+    import warnings
+
+    import pyarrow as pa
+
+    from sketchlib.text.grams import shingle_hashes
+
+    rows = [(1, [2**60 + 1, None, 3, 4]), (2, [2**60, None, 3, 4])]
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<bigint>")
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    (r,) = exact_jaccard_pairs(
+        pairs, df, col="tokens", shingle_w=3, tokens=True
+    ).collect()
+    assert r["jaccard"] == pytest.approx(1 / 3)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        vals, offs = shingle_hashes(
+            pa.array([t for _, t in rows], pa.list_(pa.int64())), 3, 1, tokens=True
+        )
+    assert offs.tolist() == [0, 2, 4]
+    assert np.intersect1d(vals[:2], vals[2:]).size == 1
+
+
+@pytest.mark.parametrize("w", [1, 3, 5])
+def test_flat_shingle_kernel_matches_per_doc(w, monkeypatch):
+    """Spark-free: the flat kernel against a per-document reference
+    (``roll`` + ``np.unique``) on ragged batches."""
+    import pyarrow as pa
+
+    from sketchlib.core.hashing import hash_str, splitmix64
+    from sketchlib.dedup import minhash
+    from sketchlib.text.grams import roll, shingle_hashes
+
+    monkeypatch.setattr(minhash, "_BLOCK", 8)  # many permutation blocks
+    seed = 7
+    texts = [None, "", "   ", "a", "a b", "a b c", "a b c d e",
+             "x  y\t\tz \n w", "a b c d e f g h a b c"] + [
+        " ".join(f"w{(i * j) % 9}" for j in range(i % 13)) for i in range(60)
+    ]
+    toks = [None, [], [4], [4, 5], [1, 2, 3], [1, 2, 3, 4, 5],
+            [-1, 2**62, -(2**63), 7, 7, 7, 7]] + [
+        [(i * j) % 11 for j in range(i % 13)] for i in range(60)
+    ]
+
+    def text_ref(t):
+        words = (t or "").split()
+        if not words:
+            return np.zeros(1, dtype=np.uint64)
+        if len(words) < w:
+            return hash_str([" ".join(words)], seed=seed)
+        return np.unique(roll(hash_str(words, seed=seed), w))
+
+    def token_ref(t):
+        if not t:
+            return np.zeros(1, dtype=np.uint64)
+        u = np.zeros(max(len(t), w), dtype=np.int64)
+        u[: len(t)] = t
+        return np.unique(roll(splitmix64(u.view(np.uint64) ^ np.uint64(seed)), w))
+
+    perm = splitmix64(np.arange(16, dtype=np.uint64) + np.uint64(seed * 7919 + 13))
+    for arr, ref, tokens in (
+        (pa.array(texts, pa.string()), [text_ref(t) for t in texts], False),
+        (pa.array(toks, pa.list_(pa.int64())), [token_ref(t) for t in toks], True),
+    ):
+        vals, offs = shingle_hashes(arr, w, seed, tokens=tokens)
+        got = [vals[offs[i] : offs[i + 1]] for i in range(len(arr))]
+        assert all(np.array_equal(a, b) for a, b in zip(got, ref))
+        multi, moffs = shingle_hashes(arr, w, seed, tokens=tokens, unique=False)
+        for i, r in enumerate(ref):
+            assert np.array_equal(np.unique(multi[moffs[i] : moffs[i + 1]]), r)
+        sig = minhash._signatures(multi, moffs, 16, seed).view(np.uint64)
+        want = np.array(
+            [splitmix64(r[None, :] ^ perm[:, None]).min(axis=1) for r in ref]
+        )
+        assert np.array_equal(sig, want)
+
+
 def test_decontaminate_exact_and_bloom(spark):
     """Round 5: eval-set decontamination.  Docs sharing a 5-word
     shingle with the eval corpus are removed; short docs and clean

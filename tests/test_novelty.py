@@ -59,6 +59,15 @@ def test_hash_grams_equivalent(spark):
     plain = _rows(ngram_novelty(df, w=4))
     hashed = _rows(ngram_novelty(df, w=4, hash_grams=True))
     assert plain == hashed
+    tok = spark.createDataFrame(
+        [(d, [int(t[1:]) for t in text.split()]) for d, text in rows],
+        "doc_id string, tokens array<int>",
+    )
+    tok_plain = _rows(ngram_novelty(tok, col="tokens", w=4, tokens=True))
+    tok_hashed = _rows(
+        ngram_novelty(tok, col="tokens", w=4, tokens=True, hash_grams=True)
+    )
+    assert tok_plain == tok_hashed == plain
 
 
 def test_tokens_mode_matches_text_mode(spark):
