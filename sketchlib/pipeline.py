@@ -36,11 +36,13 @@ def curate(
 ) -> tuple[DataFrame, dict]:
     """Run the curation flow; returns (curated_df, report).
 
-    All four stage row-counts ride ``observe()`` metric nodes on the
-    lineage of the ONE materializing action (the final sketch scan) —
-    the former four separate ``count()`` actions re-scanned
-    progressively filtered data four times, which at 100 TB is four
-    redundant passes."""
+    Three actions run: the LSH skew guard's ``first()`` and the capped
+    pair collect of ``keep_representatives`` (both only with
+    ``run_near_dedup``), and the final sketch scan.  All four stage
+    row-counts ride ``observe()`` metric nodes on the sketch scan's
+    lineage — separate ``count()`` actions would re-scan progressively
+    filtered data four times, which at 100 TB is four redundant
+    passes."""
     annotated = with_quality(with_token_stats(docs, text_col), text_col)
     if annotate_language:
         annotated = language_id(annotated, text_col)

@@ -29,6 +29,7 @@ from sketchlib.spark.aggregate import (
     sketch_column,
     sketch_columns,
 )
+from sketchlib.spark.session import local_frame
 
 
 def _quantile_factory(kind: str, **params):
@@ -170,8 +171,8 @@ def heavy_hitters_spacesaving(
     N/capacity.  Returns DataFrame[key_hash, est_count, max_err] —
     identities are xxhash64 keys (``heavy_hitters`` recovers values)."""
     rows = _spacesaving_topk(df, col, k, capacity)
-    return df.sparkSession.createDataFrame(
-        rows, "key_hash bigint, est_count bigint, max_err bigint"
+    return local_frame(
+        df.sparkSession, rows, "key_hash bigint, est_count bigint, max_err bigint"
     )
 
 
@@ -213,11 +214,11 @@ def heavy_hitters(
         spark = df.sparkSession
         f = df.schema[col]
         if not top:
-            return spark.createDataFrame(
-                [], f"{f.name} {f.dataType.simpleString()}, est_count long"
+            return local_frame(
+                spark, [], f"{f.name} {f.dataType.simpleString()}, est_count long"
             )
-        counts = spark.createDataFrame(
-            top, "__h bigint, est_count bigint, max_err bigint"
+        counts = local_frame(
+            spark, top, "__h bigint, est_count bigint, max_err bigint"
         )
         values = (
             df.select(col, F.xxhash64(F.col(col)).alias("__h"))
@@ -539,7 +540,7 @@ def overlap_matrix(
             for i, ga in enumerate(groups)
             for gb in groups[i + 1 :]
         ]
-        return spark.createDataFrame(out, out_schema)
+        return local_frame(spark, out, out_schema)
 
     # blocked all-pairs stage
     _get_overlap_cache().hold(states)
@@ -832,7 +833,8 @@ def grouped_heavy_hitters(
     top_rows = tops.collect()  # <= groups*k rows — KBs
     if not top_rows:
         f = df.schema[col]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"{key_schema}, {f.name} {f.dataType.simpleString()}, "
             "est_count long, max_err long",
@@ -843,8 +845,8 @@ def grouped_heavy_hitters(
         .filter(F.col("__h").isin(hashes))
         .distinct()
     )
-    tops_df = spark.createDataFrame(
-        top_rows, f"{key_schema}, __h long, est_count long, max_err long"
+    tops_df = local_frame(
+        spark, top_rows, f"{key_schema}, __h long, est_count long, max_err long"
     )
     return (
         values.join(F.broadcast(tops_df), "__h")
@@ -2038,7 +2040,8 @@ def profile_table(
         if n_nulls > 0:
             est = max(est - 1.0, 0.0)
         rows.append((c, dtypes.get(c, ""), n_rows, n_nulls, int(round(est))))
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "column string, dtype string, n_rows long, n_nulls long, "
         "approx_distinct long",

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import datetime
 import os
 import site
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 #: directory that holds the ``sketchlib`` package
 _PKG_ROOT = os.path.dirname(
@@ -39,6 +41,39 @@ def get_spark(
     for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s
+    field order; ``schema`` is a StructType or a DDL string).
+
+    The rows travel as one Arrow table, which plans a
+    ``LocalTableScan``: ``createDataFrame(<list>)`` plans
+    ``Scan ExistingRDD`` instead, a Python RDD whose every action runs
+    Python tasks.  Nulls and binary values round-trip unchanged."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    # a naive datetime is local time (as collect() returns it and
+    # createDataFrame(<list>) reads it); pyarrow would store its wall
+    # time as UTC
+    cols = [
+        [v if v is None else v.astimezone(datetime.timezone.utc) for v in c]
+        if pa.types.is_timestamp(f.type) and f.type.tz
+        else c
+        for c, f in zip(cols, arrow_schema)
+    ]
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _session_conf(

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType, TimestampType
 from pyspark.sql.window import Window
 
+from sketchlib.spark.session import local_frame
+
 #: both timestamp flavors (parquet without timezone reads as NTZ)
 _TS_TYPES = (TimestampType, TimestampNTZType)
 
@@ -361,7 +363,8 @@ def interval_join(
         )
         w2 = max(width_us // k, 1)
         hot_keys = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [tuple(r[c] for c in key) for r in hot_rows],
                 pts.select(*key).schema,
             )

@@ -33,6 +33,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sketchlib import serde
 from sketchlib.spark.aggregate import KIND_DOUBLE, build_partials, tree_merge
+from sketchlib.spark.session import local_frame
 
 
 def _ledger_merge(spark, ledger_dir: str):
@@ -67,8 +68,8 @@ def run_streaming_sketch(
         if sk is None:
             return
         row = [(int(batch_id), sk.to_bytes(), int(sk.count if hasattr(sk, "count") else 0))]
-        bdf = batch_df.sparkSession.createDataFrame(
-            row, "batch_id bigint, state binary, items bigint"
+        bdf = local_frame(
+            batch_df.sparkSession, row, "batch_id bigint, state binary, items bigint"
         )
         # idempotent per-batch overwrite -> exactly-once state
         bdf.write.mode("overwrite").parquet(

@@ -305,3 +305,46 @@ def test_one_gram_module():
     for gone in ("_token_shingle_hashes", "_roll_shingles", "_word_shingle_hashes"):
         assert [n for n, t in texts.items() if gone in t] == [], gone
     assert "if tokens:" not in texts["dedup/minhash.py"]
+
+
+def test_local_frame_is_a_local_scan(spark):
+    """``local_frame`` ships driver rows as one Arrow table: the plan is
+    a ``LocalTableScan`` (no Python RDD), and long, int, string, binary
+    and null values round-trip."""
+    from sketchlib.spark.session import local_frame
+
+    schema = "l long, i int, s string, b binary"
+    rows = [
+        (2**62 + 1, -7, "é", b"\x00\xff"),
+        (None, None, None, None),
+        (-1, 2**31 - 1, "", b""),
+    ]
+    df = local_frame(spark, rows, schema)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert df.schema == spark.createDataFrame([], schema).schema
+    assert [tuple(r) for r in df.collect()] == [
+        (2**62 + 1, -7, "é", bytearray(b"\x00\xff")),
+        (None, None, None, None),
+        (-1, 2**31 - 1, "", bytearray(b"")),
+    ]
+    empty = local_frame(spark, [], df.schema)
+    assert empty.schema == df.schema and empty.collect() == []
+
+
+def test_no_create_dataframe_on_a_list():
+    """Source guard: driver rows become a frame through
+    ``session.local_frame`` only; the one other ``createDataFrame`` is
+    ``direct``'s deliberately partitioned path RDD."""
+    import pathlib
+    import re
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    calls = {
+        (p.relative_to(root).as_posix(), m.group(1))
+        for p in root.rglob("*.py")
+        for m in re.finditer(r"createDataFrame\(\s*([\w\[]+)", p.read_text())
+    }
+    assert calls == {("spark/session.py", "table"), ("spark/direct.py", "rdd")}

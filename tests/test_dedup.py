@@ -724,3 +724,141 @@ def test_decontaminate_token_mode_matches_text_mode(spark):
         decontaminate(
             train_tok, eval_big, col="tokens", tokens=True
         )
+
+
+# ------------------------------------------- connected components: paths
+
+
+def _counted_chain(spark, n=50):
+    """Pairs (i, i+1) for i < n whose ``id_a`` passes a Python UDF that
+    counts its evaluations; returns (pairs, accumulator)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        acc.add(1)
+        return x
+
+    pairs = spark.range(n).select(
+        bump("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    return pairs, acc
+
+
+@pytest.mark.parametrize("method", ["jump", "star"])
+def test_duplicate_clusters_reads_pairs_once(spark, method):
+    """The pair lineage (for LSH pairs: the self-join and verification)
+    runs once, not once per union branch or again for the node list."""
+    from sketchlib.dedup.cluster import duplicate_clusters
+
+    pairs, acc = _counted_chain(spark)
+    labels = duplicate_clusters(pairs, method=method).collect()
+    assert {r["cluster_id"] for r in labels} == {0} and len(labels) == 51
+    assert acc.value == 50
+
+
+def _cluster_case(name):
+    """(doc rows, doc schema, pair rows, pair schema, kept ids)."""
+    if name == "transitive":
+        return (
+            [(i, f"t{i}") for i in [1, 2, 3, 4, 10, 11, 20, 21, 22, 99]],
+            "doc_id long, text string",
+            [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
+            "id_a long, id_b long",
+            [1, 10, 20, 99],
+        )
+    if name == "chain200":
+        return (
+            [(i, "t") for i in range(205)],
+            "doc_id long, text string",
+            [(i, i + 1) for i in range(200)],
+            "id_a long, id_b long",
+            [0, 201, 202, 203, 204],
+        )
+    if name == "forest_self_pair":
+        return (
+            [(i, "t") for i in [1, 2, 3, 10, 11, 20, 30]],
+            "doc_id long, text string",
+            [(1, 2), (2, 3), (10, 11), (20, 20)],
+            "id_a long, id_b long",
+            [1, 10, 20, 30],
+        )
+    if name == "nulls":
+        return (
+            [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (None, "n")],
+            "doc_id long, text string",
+            [(1, None), (None, 2), (3, 4), (None, None)],
+            "id_a long, id_b long",
+            [None, 1, 2, 3],
+        )
+    if name == "int_ids":
+        return (
+            [(i, "t") for i in [5, 6, 7, 8]],
+            "doc_id int, text string",
+            [(7, 6), (6, 5)],
+            "id_a int, id_b int",
+            [5, 8],
+        )
+    if name == "string_ids":
+        # Spark orders strings by UTF-8 bytes: "z" (0x7A) < "é" (0xC3 0xA9)
+        return (
+            [(s, "t") for s in ["z", "é", "b", "a", "B"]],
+            "doc_id string, text string",
+            [("é", "z"), ("b", "a"), ("B", "b")],
+            "id_a string, id_b string",
+            ["B", "z"],
+        )
+    assert name == "empty"
+    return (
+        [(1, "a"), (2, "b")],
+        "doc_id long, text string",
+        [],
+        "id_a long, id_b long",
+        [1, 2],
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["transitive", "chain200", "forest_self_pair", "nulls", "int_ids",
+     "string_ids", "empty"],
+)
+def test_keep_representatives_paths_agree(spark, monkeypatch, case):
+    """The driver union-find (below ``SMALL_GRAPH_EDGES``) and the
+    distributed propagation (forced by a cap below every pair count)
+    keep the same rows with the same schema."""
+    from sketchlib.dedup import cluster
+
+    doc_rows, doc_schema, pair_rows, pair_schema, want = _cluster_case(case)
+    docs = spark.createDataFrame(doc_rows, doc_schema)
+    pairs = spark.createDataFrame(pair_rows, pair_schema)
+
+    def kept():
+        out = cluster.keep_representatives(docs, pairs)
+        return out.schema, sorted(out.collect(), key=lambda r: str(r["doc_id"]))
+
+    small = kept()
+    # a cap of 0 still admits the empty graph; -1 admits none
+    monkeypatch.setattr(cluster, "SMALL_GRAPH_EDGES", -1)
+    big = kept()
+    assert small == big
+    assert small[0] == docs.schema
+    assert sorted(r["doc_id"] for r in small[1] if r["doc_id"] is not None) == sorted(
+        w for w in want if w is not None
+    )
+    assert sum(r["doc_id"] is None for r in small[1]) == want.count(None)
+
+
+@pytest.mark.parametrize("cap", [None, -1])
+def test_keep_representatives_reads_pairs_once(spark, monkeypatch, cap):
+    """Both paths evaluate the pair lineage once: the size probe and the
+    clustering share one persisted copy."""
+    from sketchlib.dedup import cluster
+
+    if cap is not None:
+        monkeypatch.setattr(cluster, "SMALL_GRAPH_EDGES", cap)
+    pairs, acc = _counted_chain(spark)
+    docs = spark.range(60).withColumnRenamed("id", "doc_id")
+    kept = [r["doc_id"] for r in cluster.keep_representatives(docs, pairs).collect()]
+    assert sorted(kept) == [0] + list(range(51, 60))
+    assert acc.value == 50

@@ -186,3 +186,32 @@ def test_spec_dedup_minhash_cluster_consistent(spark):
     # the unique doc always survives; dup cluster keeps its minimum
     kept = {r["doc_id"] for r in got.collect()}
     assert 7 in kept and 0 in kept and len(kept) < 4
+
+
+def test_curate_job_budget(spark, corpus):
+    """``curate`` runs three actions: the skew guard's ``first()``, the
+    capped pair collect and the sketch scan.  On this corpus they took
+    30-32 Spark jobs in 20 runs (AQE submits query stages in a varying
+    order); clustering by distributed label propagation took 60-61,
+    four of them label-round ``localCheckpoint``s.  Below
+    ``SMALL_GRAPH_EDGES`` no ``localCheckpoint`` job runs."""
+    from sketchlib.pipeline import curate
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(corpus, "doc_id long, text string")
+    sc.setJobGroup("curate-job-budget", "curate", False)
+    try:
+        curate(docs, quality_min=0.2, near_dup_threshold=0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup("curate-job-budget")
+    stages = [
+        st.getStageInfo(s).name
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    ]
+    assert 0 < len(jobs) <= 34
+    assert not [n for n in stages if n.startswith("localCheckpoint")]
