@@ -334,8 +334,7 @@ def test_local_frame_is_a_local_scan(spark):
 
 def test_no_create_dataframe_on_a_list():
     """Source guard: driver rows become a frame through
-    ``session.local_frame`` only; the one other ``createDataFrame`` is
-    ``direct``'s deliberately partitioned path RDD."""
+    ``session.local_frame`` only."""
     import pathlib
     import re
 
@@ -347,4 +346,21 @@ def test_no_create_dataframe_on_a_list():
         for p in root.rglob("*.py")
         for m in re.finditer(r"createDataFrame\(\s*([\w\[]+)", p.read_text())
     }
-    assert calls == {("spark/session.py", "table"), ("spark/direct.py", "rdd")}
+    assert calls == {("spark/session.py", "table")}
+
+
+def test_no_python_rdd_parallelize():
+    """Source guard: the library starts no Python RDD from driver data
+    (a session's first one costs about 1.5 s of start-up); direct scans
+    seed their tasks from a JVM ``spark.range``."""
+    import pathlib
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    hits = [
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if "parallelize(" in p.read_text()
+    ]
+    assert hits == []

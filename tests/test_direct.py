@@ -8,7 +8,13 @@ from pyspark.sql import functions as F
 from sketchlib.core.hll import HyperLogLog
 from sketchlib.core.kll import KLL
 from sketchlib.core.tdigest import TDigest
-from sketchlib.spark.aggregate import KIND_ARRAY, KIND_DOUBLE, KIND_HASH64, sketch_column
+from sketchlib.spark.aggregate import (
+    KIND_ARRAY,
+    KIND_ARRAY_HASH,
+    KIND_DOUBLE,
+    KIND_HASH64,
+    sketch_column,
+)
 from sketchlib.spark.direct import list_parquet_files, sketch_parquet
 from sketchlib.spark.datagen import token_sequences
 
@@ -738,3 +744,123 @@ def test_direct_xxhash64_float32_column_merges(spark, tmp_path):
         hash_compat="xxhash64",
     )
     assert jvm_hll.to_bytes() == xx_hll.to_bytes()
+
+
+@pytest.mark.parametrize("n_files,tasks", [(36, 8), (5, 8)])
+def test_map_files_round_robin_slices(spark, n_files, tasks):
+    """Every file reaches exactly one task, and per-task slice sizes
+    differ by at most one (36 over 8 is 4 or 5 each, not seven 4s and
+    an 8; 5 over 8 leaves three tasks with an empty slice)."""
+    import pyarrow as pa
+
+    from sketchlib.spark.direct import _map_files
+
+    files = [f"f{i:03d}.parquet" for i in range(n_files)]
+
+    def fn(paths):
+        yield pa.RecordBatch.from_pydict(
+            {"paths": pa.array([paths], pa.list_(pa.string()))}
+        )
+
+    rows = _map_files(spark, files, tasks, fn, "paths array<string>").collect()
+    slices = [r["paths"] for r in rows]
+    assert len(slices) == tasks
+    assert sorted(p for s in slices for p in s) == files
+    sizes = [len(s) for s in slices]
+    assert max(sizes) - min(sizes) <= 1
+
+
+@pytest.mark.parametrize("tasks", [0, -1])
+def test_tasks_below_one_rejected(spark, token_path, tmp_path, tasks):
+    """``tasks < 1`` raises a ValueError before any job runs, on the
+    parquet and the Iceberg entry points alike."""
+    import pyarrow as pa
+
+    from sketchlib.iceberg.fixture import write_iceberg_table
+    from sketchlib.spark.direct import sketch_iceberg
+
+    with pytest.raises(ValueError, match="tasks"):
+        sketch_parquet(
+            spark, token_path, "n_tok", lambda: TDigest(), KIND_DOUBLE,
+            tasks=tasks,
+        )
+    loc = str(tmp_path / "tbl")
+    write_iceberg_table(
+        loc, [pa.table({"v": pa.array(np.arange(10.0))})], rows_per_file=4
+    )
+    with pytest.raises(ValueError, match="tasks"):
+        sketch_iceberg(spark, loc, "v", lambda: TDigest(), tasks=tasks)
+
+
+def test_direct_partials_plan_seeds_from_range(spark, token_path):
+    """The partial stage reads a JVM ``Range``, not a Python RDD."""
+    from sketchlib.spark.direct import build_partials_direct
+
+    partials = build_partials_direct(
+        spark, token_path, "tokens", lambda: TDigest(), KIND_ARRAY
+    )
+    plan = partials._jdf.queryExecution().executedPlan().toString()
+    assert "Range" in plan and "MapInArrow" in plan
+    assert "ExistingRDD" not in plan
+
+
+def _run_in_job_group(spark, name, fn):
+    """``fn()``'s result and, per Spark job it ran, its stages' task
+    counts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = [
+        [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+        for j in sorted(st.getJobIdsForGroup(name))
+    ]
+    return out, jobs
+
+
+def test_direct_build_job_budget_and_task_coverage(spark, token_path):
+    """A direct build whose partial count is at or below
+    ``collect_threshold`` is one job of one stage with ``tasks`` tasks.
+    HLL states are byte-equal whatever the task count, and the
+    t-digest counts every token, also when some tasks have an empty
+    file slice."""
+    files = list_parquet_files(token_path)
+    total = (
+        spark.read.parquet(token_path)
+        .agg(F.sum(F.size("tokens")))
+        .first()[0]
+    )
+    states = set()
+    for tasks in (1, 3, 8):
+        sk, jobs = _run_in_job_group(
+            spark, f"direct-hll-{tasks}",
+            lambda: sketch_parquet(
+                spark, token_path, "tokens", lambda: HyperLogLog(p=12),
+                KIND_ARRAY_HASH, tasks=tasks,
+            ),
+        )
+        assert jobs == [[tasks]]
+        states.add(sk.to_bytes())
+    assert len(states) == 1
+    for tasks in (1, 3, len(files) + 2):
+        sk, jobs = _run_in_job_group(
+            spark, f"direct-tdigest-{tasks}",
+            lambda: sketch_parquet(
+                spark, token_path, "tokens", lambda: TDigest(delta=200),
+                KIND_ARRAY, tasks=tasks,
+            ),
+        )
+        assert jobs == [[tasks]]
+        assert sk.count == total
+    # the two tasks with an empty slice yield no partial row
+    from sketchlib.spark.direct import build_partials_direct
+
+    partials = build_partials_direct(
+        spark, token_path, "tokens", lambda: TDigest(delta=200), KIND_ARRAY,
+        tasks=len(files) + 2,
+    )
+    assert partials.count() == len(files)
