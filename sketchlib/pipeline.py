@@ -39,10 +39,22 @@ def curate(
     Three actions run: the LSH skew guard's ``first()`` and the capped
     pair collect of ``keep_representatives`` (both only with
     ``run_near_dedup``), and the final sketch scan.  All four stage
-    row-counts ride ``observe()`` metric nodes on the sketch scan's
-    lineage — separate ``count()`` actions would re-scan progressively
-    filtered data four times, which at 100 TB is four redundant
-    passes."""
+    row-counts ride ``observe()`` metric nodes on the one lineage —
+    separate ``count()`` actions would re-scan progressively filtered
+    data four times, which at 100 TB is four redundant passes.
+
+    ``deduped`` (the rows after the quality filter and the exact-dedup
+    anti-join, with the ``obs_in`` / ``obs_exact`` nodes) is persisted:
+    MinHash, the final anti-join against the near-dup losers, the
+    sketch scan and the caller's own actions all read it, and each
+    would otherwise re-run the scan, the quality regexes and the
+    exact-dedup shuffles.  The first action (the skew guard's
+    ``first()``, or the sketch scan without ``run_near_dedup``) fills
+    the cache and with it ``obs_in`` / ``obs_exact``; the sketch scan
+    fills ``obs_near``.  The pinned frame stays cached until
+    ``spark.catalog.clearCache()`` — callers that loop many corpora
+    through one session should clear it between runs, as for
+    ``sub_split_buckets``."""
     annotated = with_quality(with_token_stats(docs, text_col), text_col)
     if annotate_language:
         annotated = language_id(annotated, text_col)
@@ -71,9 +83,11 @@ def curate(
         ).alias(id_col)
     )
     obs_exact = Observation()
+    # pinned (MULTI_REF_STEPS rule): read by MinHash, by the anti-join
+    # against the losers and by every later action on the output
     deduped = filtered.join(drop_exact, id_col, "anti").observe(
         obs_exact, F.count(F.lit(1)).alias("after_exact_dedup")
-    )
+    ).persist()
 
     if run_near_dedup:
         # cluster-consistent: keep one doc per connected component —
@@ -99,7 +113,7 @@ def curate(
             id_col: (lambda: HyperLogLog(p=13), KIND_HASH64),
         },
     )
-    # the sketch scan above is the action that filled every metric
+    # the sketch scan above is the last action: every metric is filled
     report: dict = {**obs_in.get, **obs_exact.get, **obs_near.get}
     report["after_quality_filter"] = int(report["after_quality_filter"] or 0)
     report["quality_p50"] = float(sketches["quality_score"].value_at_quantile(0.5))

@@ -2,7 +2,8 @@
 
 Token counting and quality ratios are pure Catalyst expressions
 (JVM-side, codegen) — the formulas are simple enough that an ANSI-SQL
-oracle can reproduce them bit-for-bit.
+oracle can reproduce them (``with_quality`` documents where its
+stopword count and the oracle's ``lower()`` agree).
 
 Language ID is an n-gram/marker-count heuristic: count occurrences of
 a small set of high-frequency function words per language (plus a CJK
@@ -59,7 +60,17 @@ def with_token_stats(df: DataFrame, col: str = "text") -> DataFrame:
 def with_quality(df: DataFrame, col: str = "text") -> DataFrame:
     """Append quality ratios: alpha/space/punct character ratios,
     stopword ratio over whitespace tokens, mean token length, and a
-    composite quality score in [0, 1].  Pure Catalyst expressions."""
+    composite quality score in [0, 1].  Pure Catalyst expressions.
+
+    The stopword count matches case-insensitively with ``(?i)`` rather
+    than over ``lower(text)``.  Spark's ``lower`` is ICU case mapping,
+    and its first use in a JVM builds ICU tables (about 2 s).  ``(?i)``
+    folds ASCII only and every stopword is ASCII, so a stopword matches
+    the same runs of the raw text as of its lowered form; lowering maps
+    letters to letters, so ``\\b`` falls in the same places.  The count
+    equals the ``lower()`` form's that the DuckDB oracle keeps
+    (``tests/test_text.py`` checks dotted/dotless i, Kelvin sign,
+    sigma, combining marks and digits next to stopwords)."""
     c = F.col(col)
     n = F.greatest(F.length(c), F.lit(1)).cast("double")
     alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", "")).cast("double")
@@ -67,7 +78,7 @@ def with_quality(df: DataFrame, col: str = "text") -> DataFrame:
     punct = F.length(F.regexp_replace(c, r"[^.,;:!?]", "")).cast("double")
     toks = F.size(F.split(F.trim(c), r"\s+")).cast("double")
     stop_pattern = _sql_rx(r"\b(" + "|".join(STOPWORDS) + r")\b")
-    stops = F.size(F.expr(f"regexp_extract_all(lower({col}), '{stop_pattern}', 0)")).cast(
+    stops = F.size(F.expr(f"regexp_extract_all({col}, '(?i){stop_pattern}', 0)")).cast(
         "double"
     )
     out = (

@@ -8,7 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from sketchlib.text.analysis import (
+    STOPWORDS,
     _score_langs_py,
+    _sql_rx,
     language_id,
     with_quality,
     with_token_stats,
@@ -100,6 +102,73 @@ def test_quality_score_ranges(spark):
     assert 0.0 <= bad["quality_score"] < good["quality_score"] <= 1.0
     assert good["alpha_ratio"] > bad["alpha_ratio"]
     assert good["stopword_ratio"] > 0
+
+
+STOPWORD_CASES = [
+    # mixed-case ASCII
+    "The THE tHe A a Of OF And AND To TO In IN Is IS It IT",
+    "ThE cat SAT oN tHe mat AnD iT wAs",
+    # dotted capital I / dotless i (lower("\u0130") is "i" + U+0307)
+    "\u0130t is \u0130s \u0131t in \u0130n a \u0130a a\u0130 \u0131a a\u0131 \u0130T",
+    # Kelvin sign (lowers to ASCII "k")
+    "\u212athe \u212a a \u212a\u212aa the\u212a \u212aa",
+    # sharp s, capital and final sigma
+    "\u00df the \u00dfa a\u00df STRASSE \u1e9e a",
+    "\u03a3 a \u03a3a \u039f\u0394\u039f\u03a3 a \u03a3\u0391\u03a3 the \u03c2a a\u03c2",
+    # roman numeral one, circled A
+    "\u2160a a\u2160 \u2160 a \u24b6 the \u24b6the the\u24b6 \u2160the",
+    # combining marks next to a stopword
+    "the\u0301 a\u0308 \u0301a \u0301the The\u0300 end i\u0307t \u0130\u0307s",
+    # digits and underscore touching a stopword
+    "the1 1the 2a a_ _the the_ 9 a 9 is9 _it it IS_ 0In",
+    "",
+    None,
+]
+
+
+def test_stopword_count_equals_lower_form(spark):
+    """``with_quality`` counts stopwords with ``(?i)`` on the raw text;
+    the count must equal the ``lower()`` form's (the DuckDB oracle's
+    formula) on every row, non-ASCII case pairs included."""
+    pat = _sql_rx(r"\b(" + "|".join(STOPWORDS) + r")\b")
+    df = spark.createDataFrame(
+        list(enumerate(STOPWORD_CASES)), "i int, text string"
+    )
+    lowered = F.size(F.expr(f"regexp_extract_all(lower(text), '{pat}', 0)"))
+    folded = F.size(F.expr(f"regexp_extract_all(text, '(?i){pat}', 0)"))
+    toks = F.greatest(F.size(F.split(F.trim("text"), r"\s+")), F.lit(1))
+    rows = (
+        with_quality(df)
+        .select(
+            "i", lowered.alias("lowered"), folded.alias("folded"),
+            "stopword_ratio",
+            F.round(lowered / toks, 4).alias("lowered_ratio"),
+        )
+        .orderBy("i")
+        .collect()
+    )
+    assert len(rows) == len(STOPWORD_CASES)
+    for r in rows:
+        assert r["folded"] == r["lowered"], (STOPWORD_CASES[r["i"]], r)
+        assert r["stopword_ratio"] == r["lowered_ratio"], (
+            STOPWORD_CASES[r["i"]], r)
+    assert rows[0]["folded"] == 17  # every mixed-case stopword counted
+
+
+def test_with_quality_plan_has_no_lower(spark):
+    """Spark's ``lower`` is ICU case mapping; its first use in a JVM
+    builds ICU tables.  ``with_quality`` must not plan it."""
+    # a text column the optimizer cannot fold into a local relation
+    df = spark.range(2).select(
+        F.concat(F.lit("The "), F.col("id").cast("string")).alias("text")
+    )
+
+    def plan(frame):
+        return frame._jdf.queryExecution().optimizedPlan().toString()
+
+    # the probe sees a lower() where there is one
+    assert "lower(" in plan(df.select(F.lower("text")))
+    assert "lower(" not in plan(with_quality(df))
 
 
 def test_fingerprint_identity_and_sensitivity():
