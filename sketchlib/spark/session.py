@@ -93,6 +93,11 @@ def _session_conf(
         "spark.driver.memory": os.environ.get("SKETCHLIB_DRIVER_MEM", "8g"),
         "spark.sql.parquet.filterPushdown": "true",
         "spark.python.worker.reuse": "true",
+        # a fixed young generation of a quarter of the heap: G1 otherwise
+        # grows eden adaptively (up to 60% of the heap) at a pace set by
+        # pause timings, so how much of the heap is resident varies
+        # from run to run of the same job
+        "spark.driver.defaultJavaOptions": "-XX:NewRatio=3",
     }
     daemon = _daemon_module(master)
     if daemon is not None:

@@ -258,6 +258,20 @@ def test_no_module_writes_session_conf():
     assert offenders == []
 
 
+def test_session_fixes_the_driver_young_generation(spark):
+    """get_spark launches the driver JVM with a fixed young generation
+    (``-XX:NewRatio=3``) ahead of the caller's extraJavaOptions, and
+    ``extra_conf`` can replace it."""
+    from sketchlib.spark import session
+
+    key = "spark.driver.defaultJavaOptions"
+    assert session._session_conf("local[4]", None, 1024, None)[key] == "-XX:NewRatio=3"
+    assert session._session_conf("local[4]", None, 1024, {key: "-Dx=1"})[key] == "-Dx=1"
+    args = spark.sparkContext._jvm.java.lang.management.ManagementFactory \
+        .getRuntimeMXBean().getInputArguments()
+    assert "-XX:NewRatio=3" in list(args)
+
+
 def test_one_stage1_skeleton():
     """Source guard: every stage-1 build reads ahead on the one
     ``aggregate._prefetch`` thread, every driver fold is
