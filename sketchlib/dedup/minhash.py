@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
 from sketchlib.core.hashing import splitmix64
+from sketchlib.spark.cache import SingleSlotCache
 from sketchlib.text.grams import shingle_hashes
 
 #: grams per block of ``_signatures``' permutation loop (cache-resident)
@@ -264,6 +265,10 @@ def _signatures_and_shingles(
     ).select("id", F.col("b.sig").alias("sig"), F.col("b.sh").alias("sh"))
 
 
+#: the latest call's signature/shingle frame (one-slot contract, cache.py)
+_signature_cache = SingleSlotCache()
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     col: str = "text",
@@ -304,6 +309,7 @@ def minhash_near_duplicates(
     both = _signatures_and_shingles(
         df, col, id_col, num_perm, shingle_w, seed, tokens=tokens
     ).persist()
+    _signature_cache.hold(both)
     sigs = both.select("id", "sig")
     cands = lsh_candidate_pairs(
         sigs, bands=bands, rows_per_band=rows_per_band, num_perm=num_perm,

@@ -22,7 +22,12 @@ from sketchlib.core.tdigest import TDigest
 from sketchlib.dedup.exact import exact_duplicate_groups
 from sketchlib.dedup.minhash import minhash_near_duplicates
 from sketchlib.spark.aggregate import KIND_DOUBLE, KIND_HASH64, sketch_columns
+from sketchlib.spark.cache import SingleSlotCache
 from sketchlib.text.analysis import language_id, with_quality, with_token_stats
+
+
+#: the latest call's pinned ``deduped`` frame (one-slot contract, cache.py)
+_deduped_cache = SingleSlotCache()
 
 
 def curate(
@@ -51,10 +56,9 @@ def curate(
     exact-dedup shuffles.  The first action (the skew guard's
     ``first()``, or the sketch scan without ``run_near_dedup``) fills
     the cache and with it ``obs_in`` / ``obs_exact``; the sketch scan
-    fills ``obs_near``.  The pinned frame stays cached until
-    ``spark.catalog.clearCache()`` — callers that loop many corpora
-    through one session should clear it between runs, as for
-    ``sub_split_buckets``."""
+    fills ``obs_near``.  The pinned frame, like MinHash's and the skew
+    guard's, stays cached until the next call (``spark/cache.py``), so
+    loops over many corpora in one session do not pile up caches."""
     annotated = with_quality(with_token_stats(docs, text_col), text_col)
     if annotate_language:
         annotated = language_id(annotated, text_col)
@@ -88,6 +92,7 @@ def curate(
     deduped = filtered.join(drop_exact, id_col, "anti").observe(
         obs_exact, F.count(F.lit(1)).alias("after_exact_dedup")
     ).persist()
+    _deduped_cache.hold(deduped)
 
     if run_near_dedup:
         # cluster-consistent: keep one doc per connected component —

@@ -4,19 +4,20 @@ Three-stage plan, the distributed generalization of the reference's
 ``ParTDigest::flush`` (par_t_digest.rs:59-89) and ``ParallelDigest``
 rank-combine (parallel_digest.rs:25-51):
 
-  stage 1  mapInArrow over the value column: one sketch per input
-           partition, updated per Arrow batch with numpy kernels
-           (zero per-row Python).  Emits ``state: binary`` rows of
-           bounded size (KBs), so stage-2 shuffle volume is
-           ~num_partitions * sketch_size regardless of input size.
-  stage 2  salted tree-reduce: group the partial states into
-           ceil(P/fanout) buckets keyed by spark_partition_id() %
+  stage 1  mapInArrow over the value columns: one sketch per (input
+           partition, column), updated per Arrow batch with numpy
+           kernels (zero per-row Python).  Emits column-tagged ``state:
+           binary`` rows of bounded size (KBs), so stage-2 shuffle
+           volume is ~P * sketch_size per column regardless of input.
+  stage 2  salted tree-reduce per tag: group the P partial states
+           (P from ``_plan_partitions``, which never runs the input)
+           into ceil(P/fanout) buckets keyed by spark_partition_id() %
            buckets, merge each bucket with applyInPandas; repeat until
            few enough rows remain.  No reducer ever sees more than
-           ``fanout`` states — this is the explicit skew defence the
-           north rule mandates (a single global groupBy would funnel
-           every state into one task at 1000-executor scale).
-  stage 3  driver-side final merge of the surviving handful of states.
+           ``fanout`` states — the explicit skew defence the north rule
+           mandates (a single global groupBy would funnel every state
+           into one task at 1000-executor scale).
+  stage 3  driver-side final merge per tag of the surviving states.
 
 Hash-based sketches (HLL/CMS/Bloom) consume a ``F.xxhash64`` column
 computed JVM-side inside whole-stage codegen, so Python only ever sees
@@ -47,6 +48,7 @@ KIND_HASH64 = "hash64"  # any column -> xxhash64 JVM-side -> uint64 stream
 KIND_ARRAY_HASH = "array_hash"  # array<int> column -> flattened, hashed in numpy
 
 _PARTIAL_SCHEMA = "state binary, items long, build_secs double"
+_TAGGED_SCHEMA = f"tag string, {_PARTIAL_SCHEMA}"
 
 # shared per-task byte cap for bincount accumulators (many keys/columns
 # in one task share it, so worker memory stays bounded regardless of
@@ -558,6 +560,42 @@ def _partials_batch(states, items, secs: float, /, **keys) -> pa.RecordBatch:
 # --------------------------------------------------------------------- stage 1
 
 
+def _tagged_partials(
+    df: DataFrame, specs: dict[str, tuple[Callable[[], object], str]]
+) -> DataFrame:
+    """Stage 1, the one ungrouped kernel: ``specs`` maps column name ->
+    (factory, kind); each input partition emits one state row per
+    column it saw values of, tagged with the column name."""
+    cols = list(specs)
+    vdf = df.select(*(_value_col(c, specs[c][1]).alias(c) for c in cols))
+    # per-task bincount pre-reduction: weighted feed for quantile
+    # sketches over integer values; distinct-hash feed for hash
+    # sketches over raw integer arrays (hash vocab once, not every
+    # token) — both fall back per batch for floats / wide ranges
+    raw = [KIND_ARRAY if k == KIND_ARRAY_HASH else k for _f, k in specs.values()]
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t0 = time.monotonic()
+        budget = [_ACC_BUDGET_BYTES]
+        feeders = [
+            AccFeeder(f(), k == KIND_ARRAY_HASH, _kind_domain(k), budget)
+            for f, k in specs.values()
+        ]
+        for b in _prefetch(batches):
+            for i, feeder in enumerate(feeders):
+                feeder.feed_raw(_batch_values(b, i, raw[i]))
+        items = [f.finish() for f in feeders]
+        got = [i for i, n in enumerate(items) if n > 0]
+        if not got:
+            return
+        yield _partials_batch(
+            [feeders[i].sk.to_bytes() for i in got], [items[i] for i in got],
+            time.monotonic() - t0, tag=[cols[i] for i in got],
+        )
+
+    return vdf.mapInArrow(fn, _TAGGED_SCHEMA)
+
+
 def build_partials(
     df: DataFrame,
     col: str,
@@ -565,30 +603,62 @@ def build_partials(
     kind: str = KIND_DOUBLE,
 ) -> DataFrame:
     """Stage 1: one serialized partial sketch per input partition."""
-    vdf = df.select(_value_col(col, kind).alias("__v"))
-
-    dom = _kind_domain(kind)
-    # per-task bincount pre-reduction: weighted feed for quantile
-    # sketches over integer values; distinct-hash feed for hash
-    # sketches over raw integer arrays (hash vocab once, not every
-    # token) — both fall back per batch for floats / wide ranges
-    raw_kind = KIND_ARRAY if kind == KIND_ARRAY_HASH else kind
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        t0 = time.monotonic()
-        sk = factory()
-        feeder = AccFeeder(sk, hash_mode=kind == KIND_ARRAY_HASH, domain=dom)
-        for b in _prefetch(batches):
-            feeder.feed_raw(_batch_values(b, 0, raw_kind))
-        items = feeder.finish()
-        if items == 0:
-            return
-        yield _partials_batch([sk.to_bytes()], [items], time.monotonic() - t0)
-
-    return vdf.mapInArrow(fn, _PARTIAL_SCHEMA)
+    return _tagged_partials(df, {col: (factory, kind)}).drop("tag")
 
 
 # --------------------------------------------------------------------- stage 2
+
+
+def _plan_partitions(df: DataFrame, assume: int) -> int:
+    """Planned partition count of ``df``'s output, read from the
+    driver's physical plan of ``df``'s own QueryExecution (planned
+    once, then kept with ``df``, so repeated probes of one frame are
+    free) under the session's own conf, which this never writes.
+    Falls back to ``assume`` on internal API drift.
+
+    Under AQE the count is the root partitioning of AQE's initial
+    plan (exchanges inserted, nothing run): ``toRdd()`` there would
+    materialize every upstream query stage, i.e. execute the input
+    pipeline once before the caller's action runs it again.  When
+    that root partitioning is unknown (a scan streamed through a
+    broadcast join), the count comes from the RDD of the static,
+    non-adaptive plan ``QueryExecution.prepareExecutedPlan`` builds;
+    building it runs only the broadcast side's job.  A plan AQE does
+    not wrap (no exchange) gives its RDD's count directly, running
+    nothing.
+
+    Goes through the QueryExecution and NOT the Dataset's ``rdd``: the
+    latter wraps the conversion in a listener-visible execution event
+    whose observed metrics are EMPTY, and any un-fired Observation
+    upstream latches that first event — silently zeroing the caller's
+    metrics (found via the pipeline spec runner, where every step
+    count after a shuffle_rows read 0)."""
+    try:
+        qe = df._jdf.queryExecution()
+        plan = qe.executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            n = plan.executedPlan().outputPartitioning().numPartitions()
+            if n > 0:
+                return n
+            execution = df.sparkSession._jvm.org.apache.spark.sql.execution
+            plan = execution.QueryExecution.prepareExecutedPlan(
+                qe.sparkSession(), qe.optimizedPlan()
+            )
+        return plan.execute().getNumPartitions()
+    except Exception:  # pragma: no cover - internal API drift
+        return assume
+
+
+def _plan_size_bytes(df: DataFrame, assume: int) -> int:
+    """Catalyst's optimized-plan size estimate in bytes (driver-side,
+    no job; for a parquet scan this is essentially the file bytes).
+    Falls back to ``assume`` on internal API drift."""
+    try:
+        return int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:  # pragma: no cover - internal API drift
+        return assume
 
 
 def _merge_states(pdf, keys=()):
@@ -611,49 +681,38 @@ def tree_merge(
     size_hint: int | None = None,
 ):
     """Stages 2+3: a salted fanout-ary tree reduce of the partial
-    states while more than ``collect_threshold`` rows may remain, then
-    one driver-side merge.  Returns the merged sketch object, or None
-    if the input was empty.
+    states while more than ``collect_threshold`` rows per tag may
+    remain, then one driver-side merge per tag.  Untagged partials
+    (``build_partials``, the direct scans) return the merged sketch,
+    or None if the input was empty; tagged ones (a ``tag`` column, as
+    ``sketch_columns`` builds) return {tag: sketch} for the tags seen.
 
     ``collect_threshold`` trades a whole extra shuffle stage against
     driver collect volume: KB-scale states (t-digest/KLL/HLL) can skip
     the tree stage up to a few hundred partials; pass a small threshold
-    for fat states (CMS/Bloom).  ``size_hint`` is the known task count
-    of the partials stage — passing it avoids a DataFrame->RDD plan
-    conversion done only to read the partition count."""
+    for fat states (CMS/Bloom).  ``size_hint``, the partials stage's
+    task count, is passed by callers that know it (a direct scan's
+    ``tasks``, a probed input); else ``_plan_partitions`` reads it off
+    ``partials``' plan, and API drift plans one tree level."""
+    keys = ("tag",) if "tag" in partials.columns else ()
+    schema = _TAGGED_SCHEMA if keys else _PARTIAL_SCHEMA
+    size = size_hint
+    if size is None:
+        size = _plan_partitions(partials, assume=collect_threshold + 1)
     df = partials
-    # upper bound on state rows (partials emit <=1 row per task)
-    size = size_hint if size_hint is not None else df.rdd.getNumPartitions()
     while size > collect_threshold:
         buckets = max((size + fanout - 1) // fanout, 1)
         df = df.groupBy(
-            (F.spark_partition_id() % F.lit(buckets)).alias("__g")
-        ).applyInPandas(lambda pdf: _merge_states(pdf), _PARTIAL_SCHEMA)
+            *keys, (F.spark_partition_id() % F.lit(buckets)).alias("__g")
+        ).applyInPandas(lambda pdf: _merge_states(pdf, keys), schema)
         size = buckets
-    return serde.merge_sketches(r["state"] for r in df.collect())
-
-
-def sketch_column(
-    df: DataFrame,
-    col: str,
-    factory: Callable[[], object],
-    kind: str = KIND_DOUBLE,
-    fanout: int = 64,
-    collect_threshold: int = 256,
-):
-    """End-to-end: build partials, tree-merge, return the final sketch."""
-    # partition count read off the INPUT plan (usually a bare scan —
-    # cheap), not the partials plan with the Python map node
-    try:
-        hint = df.rdd.getNumPartitions()
-    except Exception:
-        hint = None
-    return tree_merge(
-        build_partials(df, col, factory, kind),
-        fanout=fanout,
-        collect_threshold=collect_threshold,
-        size_hint=hint,
-    )
+    rows = df.collect()
+    if not keys:
+        return serde.merge_sketches(r["state"] for r in rows)
+    return {
+        t: serde.merge_sketches(r["state"] for r in rows if r["tag"] == t)
+        for t in {r["tag"] for r in rows}
+    }
 
 
 def sketch_columns(
@@ -667,49 +726,31 @@ def sketch_columns(
     e.g. n_tok quantiles + doc_id cardinality + token heavy-hitter
     counts should read the table once, not three times.  Stage 1 keeps
     one sketch per (column, partition) and emits one tagged state row
-    each; the tree merge groups by tag.  Returns {column: sketch}."""
-    cols = list(specs)
-    vdf = df.select(*(_value_col(c, specs[c][1]).alias(c) for c in cols))
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        t0 = time.monotonic()
-        sks = {c: specs[c][0]() for c in cols}
-        # per-column AccFeeder: the same bincount pre-reduction /
-        # distinct-hash feed the single-column paths use (a shared
-        # byte budget keeps many columns' accumulators bounded in
-        # total); KIND_HASH64 streams arrive pre-hashed JVM-side
-        budget = [_ACC_BUDGET_BYTES]
-        feeders = {
-            c: AccFeeder(
-                sks[c],
-                hash_mode=specs[c][1] == KIND_ARRAY_HASH,
-                domain=_kind_domain(specs[c][1]),
-                budget=budget,
-            )
-            for c in cols
-        }
-        for b in _prefetch(batches):
-            for i, c in enumerate(cols):
-                kind_c = specs[c][1]
-                if kind_c == KIND_HASH64:
-                    feeders[c].feed_hashed(_batch_values(b, i, kind_c))
-                else:
-                    raw = KIND_ARRAY if kind_c == KIND_ARRAY_HASH else kind_c
-                    feeders[c].feed_raw(_batch_values(b, i, raw))
-        items = {c: feeders[c].finish() for c in cols}
-        got = [c for c in cols if items[c] > 0]
-        if not got:
-            return
-        yield _partials_batch(
-            [sks[c].to_bytes() for c in got], [items[c] for c in got],
-            time.monotonic() - t0, tag=got,
-        )
-
-    schema = f"tag string, {_PARTIAL_SCHEMA}"
-    merged = vdf.mapInArrow(fn, schema).groupBy("tag").applyInPandas(
-        lambda pdf: _merge_states(pdf, ("tag",)), schema
+    each; ``tree_merge`` reduces each tag separately, so no reducer
+    sees more than ``fanout`` states, sized by the input's planned
+    partition count (``_plan_partitions``, which never runs the
+    input).  Returns {column: sketch} for the columns with values."""
+    return tree_merge(
+        _tagged_partials(df, specs),
+        fanout=fanout,
+        collect_threshold=collect_threshold,
+        size_hint=_plan_partitions(df, assume=collect_threshold + 1),
     )
-    return {row["tag"]: serde.from_bytes(row["state"]) for row in merged.collect()}
+
+
+def sketch_column(
+    df: DataFrame,
+    col: str,
+    factory: Callable[[], object],
+    kind: str = KIND_DOUBLE,
+    fanout: int = 64,
+    collect_threshold: int = 256,
+):
+    """End-to-end: ``sketch_columns`` of one column; returns the final
+    sketch, or None if the column had no values."""
+    return sketch_columns(
+        df, {col: (factory, kind)}, fanout, collect_threshold
+    ).get(col)
 
 
 # --------------------------------------------------------------- grouped build

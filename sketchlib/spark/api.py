@@ -25,6 +25,8 @@ from sketchlib.spark.aggregate import (
     KIND_ARRAY_HASH,
     KIND_DOUBLE,
     KIND_HASH64,
+    _plan_partitions,
+    _plan_size_bytes,
     grouped_sketch,
     sketch_column,
     sketch_columns,
@@ -749,6 +751,33 @@ def cms_frequencies(
     )
 
 
+def _key_schema(df: DataFrame, keys: list[str]) -> str:
+    """DDL of ``df``'s ``keys`` columns, the head of a per-key schema."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.select(*keys).schema.fields
+    )
+
+
+def _read_grouped(
+    df: DataFrame, states: DataFrame, keys: list[str], rows, out_schema: str
+) -> DataFrame:
+    """The one read-out of ``grouped_sketch`` states (one per key):
+    DataFrame[*keys, <out_schema>].  ``rows(sketch)`` returns the
+    output columns as equal-length lists; each row repeats its key."""
+
+    def extract(pdf):
+        import pandas as pd
+
+        cols = rows(serde.from_bytes(pdf["state"].iloc[0]))
+        n = len(next(iter(cols.values())))
+        return pd.DataFrame({**{k: [pdf[k].iloc[0]] * n for k in keys}, **cols})
+
+    return states.groupBy(*keys).applyInPandas(
+        extract, f"{_key_schema(df, keys)}, {out_schema}"
+    )
+
+
 def grouped_distinct(
     df: DataFrame,
     keys: list[str],
@@ -764,22 +793,13 @@ def grouped_distinct(
         df, keys, col, lambda: HyperLogLog(p=p), KIND_HASH64,
         salt_buckets=salt_buckets,
     )
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keys).schema.fields
-    )
-
-    def extract(pdf):
-        import pandas as pd
-
-        sk = serde.from_bytes(pdf["state"].iloc[0])
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["estimate"] = [float(sk.estimate())]
-        out["rse"] = [float(sk.relative_std_error())]
-        return pd.DataFrame(out)
-
-    return states.groupBy(*keys).applyInPandas(
-        extract, f"{key_schema}, estimate double, rse double"
+    return _read_grouped(
+        df, states, keys,
+        lambda sk: {
+            "estimate": [float(sk.estimate())],
+            "rse": [float(sk.relative_std_error())],
+        },
+        "estimate double, rse double",
     )
 
 
@@ -810,25 +830,19 @@ def grouped_heavy_hitters(
         df, keys, col, lambda: SpaceSaving(capacity=capacity), KIND_HASH64,
         salt_buckets=salt_buckets,
     )
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keys).schema.fields
-    )
 
-    def extract(pdf):
-        import pandas as pd
-
-        sk = serde.from_bytes(pdf["state"].iloc[0])
+    def top_rows_of(sk):
         top = sk.top_k(k)
-        out = {kk: [pdf[kk].iloc[0]] * len(top) for kk in keys}
-        out["__h"] = [int(np.uint64(h).astype(np.int64)) for h, _c, _e in top]
-        out["est_count"] = [int(c) for _h, c, _e in top]
-        out["max_err"] = [int(e) for _h, _c, e in top]
-        return pd.DataFrame(out)
+        return {
+            "__h": [int(np.uint64(h).astype(np.int64)) for h, _c, _e in top],
+            "est_count": [int(c) for _h, c, _e in top],
+            "max_err": [int(e) for _h, _c, e in top],
+        }
 
-    tops = states.groupBy(*keys).applyInPandas(
-        extract, f"{key_schema}, __h long, est_count long, max_err long"
+    tops = _read_grouped(
+        df, states, keys, top_rows_of, "__h long, est_count long, max_err long"
     )
+    key_schema = _key_schema(df, keys)
     spark = df.sparkSession
     top_rows = tops.collect()  # <= groups*k rows — KBs
     if not top_rows:
@@ -885,57 +899,6 @@ def _string_order_bounds(
             bounds.append(v)
             prev = v
     return bounds
-
-
-def _plan_partitions(df: DataFrame, assume: int) -> int:
-    """Planned partition count of ``df``'s output, read from the
-    driver's physical plan of a fresh Dataset under the session's own
-    conf, which this never writes.  Falls back to ``assume`` on
-    internal API drift.
-
-    Under AQE the count is the root partitioning of AQE's initial
-    plan (exchanges inserted, nothing run): ``toRdd()`` there would
-    materialize every upstream query stage, i.e. execute the input
-    pipeline once before the caller's action runs it again.  When
-    that root partitioning is unknown (a scan streamed through a
-    broadcast join), the count comes from the RDD of the static,
-    non-adaptive plan ``QueryExecution.prepareExecutedPlan`` builds;
-    building it runs only the broadcast side's job.  A plan AQE does
-    not wrap (no exchange) gives its RDD's count directly, running
-    nothing.
-
-    Goes through the QueryExecution and NOT ``Dataset.rdd``: the
-    latter wraps the conversion in a listener-visible execution event
-    whose observed metrics are EMPTY, and any un-fired Observation
-    upstream latches that first event — silently zeroing the caller's
-    metrics (found via the pipeline spec runner, where every step
-    count after a shuffle_rows read 0)."""
-    try:
-        qe = df.where(F.lit(True))._jdf.queryExecution()
-        plan = qe.executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            n = plan.executedPlan().outputPartitioning().numPartitions()
-            if n > 0:
-                return n
-            execution = df.sparkSession._jvm.org.apache.spark.sql.execution
-            plan = execution.QueryExecution.prepareExecutedPlan(
-                qe.sparkSession(), qe.optimizedPlan()
-            )
-        return plan.execute().getNumPartitions()
-    except Exception:  # pragma: no cover - internal API drift
-        return assume
-
-
-def _plan_size_bytes(df: DataFrame, assume: int) -> int:
-    """Catalyst's optimized-plan size estimate in bytes (driver-side,
-    no job; for a parquet scan this is essentially the file bytes).
-    Falls back to ``assume`` on internal API drift."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:  # pragma: no cover - internal API drift
-        return assume
 
 
 #: file bytes per task when :func:`_spread` widens a narrow plan.
@@ -2067,20 +2030,11 @@ def grouped_quantiles(
     kind = KIND_ARRAY if is_array else KIND_DOUBLE
     states = grouped_sketch(df, keys, col, factory, kind, salt_buckets=salt_buckets)
     probs = [float(p) for p in probabilities]
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.select(*keys).schema.fields
-    )
 
-    def extract(pdf):
-        import pandas as pd
-
-        sk = serde.from_bytes(pdf["state"].iloc[0])
+    def quantile_rows(sk):
         vals = np.atleast_1d(sk.value_at_quantile(np.array(probs)))
-        out = {k: [pdf[k].iloc[0]] * len(probs) for k in keys}
-        out["q"] = probs
-        out["value"] = [float(v) for v in vals]
-        return pd.DataFrame(out)
+        return {"q": probs, "value": [float(v) for v in vals]}
 
-    return states.groupBy(*keys).applyInPandas(
-        extract, f"{key_schema}, q double, value double"
+    return _read_grouped(
+        df, states, keys, quantile_rows, "q double, value double"
     )

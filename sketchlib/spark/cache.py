@@ -1,39 +1,45 @@
 """One-slot persisted-frame cache shared by operators whose RETURNED
 plan still references an internally-persisted frame lazily.
 
-The contract (established by tfidf_keywords, reused by overlap_matrix
-and unigram_logprob): each op holds at most ONE cached internal frame
-per slot — a new call releases the previous one, so loops over corpora
-never accumulate session-lifetime cached frames; callers release the
-final one explicitly once its consumer has been materialized.
+The contract (established by tfidf_keywords, reused by overlap_matrix,
+unigram_logprob, minhash_near_duplicates, sub_split_buckets and
+curate): each op holds at most ONE cached internal frame per slot — a
+new call releases the previous one, so loops over corpora never
+accumulate session-lifetime cached frames; callers release the final
+one once its consumer has been materialized (the op's release
+function where it has one, else ``spark.catalog.clearCache()``).
 Releasing early is always safe — an unevaluated consumer just
 recomputes the frame instead of reading the cache.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 
 class SingleSlotCache:
     """Holds at most one persisted DataFrame; ``hold`` releases the
-    previous occupant, ``release`` unpersists and empties the slot."""
+    previous occupant, ``release`` unpersists and empties the slot;
+    driver threads may share one (each occupant is released once)."""
 
-    __slots__ = ("_df",)
+    __slots__ = ("_df", "_lock")
 
     def __init__(self) -> None:
         self._df: DataFrame | None = None
+        self._lock = threading.Lock()
 
     @property
     def held(self) -> DataFrame | None:
         """The currently-cached frame (None when the slot is empty)."""
         return self._df
 
-    def hold(self, df: DataFrame) -> None:
-        self.release()
-        self._df = df
+    def hold(self, df: DataFrame | None) -> None:
+        with self._lock:
+            old, self._df = self._df, df
+        if old is not None:
+            old.unpersist()
 
     def release(self) -> None:
-        if self._df is not None:
-            self._df.unpersist()
-            self._df = None
+        self.hold(None)

@@ -26,6 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sketchlib.spark.cache import SingleSlotCache
+
+#: the frame the latest call left persisted (one-slot contract, cache.py)
+_split_cache = SingleSlotCache()
+
 
 def sub_split_buckets(
     df: DataFrame,
@@ -63,10 +68,9 @@ def sub_split_buckets(
       cheap JVM-side join-back from the cached input (the self-join's
       identical size-aggregate subtrees are deduped by ReuseExchange).
       Cache retention is unchanged vs the eager modes: exactly ONE
-      frame per call stays persisted (here the input the lazy output
-      reads, there the materialized output — same order of size, both
-      released at session end; callers that loop many corpora through
-      one session should spark.catalog.clearCache() between runs).
+      frame stays persisted (here the input the lazy output reads,
+      there the materialized output — same order of size) until the
+      next call of any caller (one-slot cache, ``spark/cache.py``).
     - neither: no metric work at all; output persisted and
       materialized eagerly as before (self-joining callers keep the
       deterministic single-UDF-execution guarantee).
@@ -136,6 +140,7 @@ def sub_split_buckets(
     if warn_overflow and observation is None:
         # lazy: rides the persisted src; the caller's first action
         # builds the cheap join-back (metric already final above)
+        _split_cache.hold(src)
         return split
     split = split.persist()
     # materialize: fills the observation exactly once AND lets the
@@ -143,4 +148,5 @@ def sub_split_buckets(
     # self-contained; callers self-join it repeatedly)
     split.count()
     src.unpersist()
+    _split_cache.hold(split)
     return split

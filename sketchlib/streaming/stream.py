@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sketchlib import serde
-from sketchlib.spark.aggregate import KIND_DOUBLE, build_partials, tree_merge
+from sketchlib.spark.aggregate import KIND_DOUBLE, sketch_column
 from sketchlib.spark.session import local_frame
 
 
@@ -63,8 +63,7 @@ def run_streaming_sketch(
     spark = stream_df.sparkSession
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partials = build_partials(batch_df, col, factory, kind)
-        sk = tree_merge(partials)
+        sk = sketch_column(batch_df, col, factory, kind)
         if sk is None:
             return
         row = [(int(batch_id), sk.to_bytes(), int(sk.count if hasattr(sk, "count") else 0))]

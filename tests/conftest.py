@@ -76,6 +76,30 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def job_tasks(spark):
+    """``job_tasks(name, fn)`` runs ``fn`` in job group ``name`` and
+    returns ``fn()``'s result and, per Spark job it ran, its stages'
+    task counts."""
+
+    def run(name, fn):
+        sc = spark.sparkContext
+        sc.setJobGroup(name, name, False)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jobs = [
+            [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+            for j in sorted(st.getJobIdsForGroup(name))
+        ]
+        return out, jobs
+
+    return run
+
+
 def make_values(name: str, n: int, seed: int = SEED) -> np.ndarray:
     gen = DISTRIBUTIONS[name]
     return np.asarray(gen(n, np.random.default_rng(seed)), dtype=np.float64)

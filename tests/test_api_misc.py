@@ -378,3 +378,59 @@ def test_no_python_rdd_parallelize():
         if "parallelize(" in p.read_text()
     ]
     assert hits == []
+
+
+def test_no_dataset_rdd_under_sketchlib():
+    """Source guard: no module reads a Dataset's ``rdd`` (under AQE it
+    runs the input's shuffle stages, which the caller's action then
+    runs again); ``aggregate._plan_partitions`` is the one way the
+    library reads a partition count."""
+    import pathlib
+    import re
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    hits = [
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if re.search(r"\.rdd\b", p.read_text())
+    ]
+    assert hits == []
+
+
+def test_single_slot_cache_releases_each_frame_once_across_threads():
+    """Driver threads sharing one ``SingleSlotCache`` never leak or
+    double-release a frame: every frame but the last held is
+    unpersisted exactly once."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sketchlib.spark.cache import SingleSlotCache
+
+    class Frame:
+        def __init__(self):
+            self.released = 0
+
+        def unpersist(self):
+            self.released += 1
+
+    slot = SingleSlotCache()
+    frames = [Frame() for _ in range(8 * 2_000)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [
+                pool.submit(lambda fs: [slot.hold(f) for f in fs], frames[i::8])
+                for i in range(8)
+            ]
+            for f in futures:
+                f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    last = slot.held
+    assert last is not None and last.released == 0
+    assert all(f.released == 1 for f in frames if f is not last)
+    slot.release()
+    assert last.released == 1 and slot.held is None

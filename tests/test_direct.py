@@ -804,25 +804,7 @@ def test_direct_partials_plan_seeds_from_range(spark, token_path):
     assert "ExistingRDD" not in plan
 
 
-def _run_in_job_group(spark, name, fn):
-    """``fn()``'s result and, per Spark job it ran, its stages' task
-    counts."""
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name, False)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    st = sc.statusTracker()
-    jobs = [
-        [st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
-        for j in sorted(st.getJobIdsForGroup(name))
-    ]
-    return out, jobs
-
-
-def test_direct_build_job_budget_and_task_coverage(spark, token_path):
+def test_direct_build_job_budget_and_task_coverage(spark, token_path, job_tasks):
     """A direct build whose partial count is at or below
     ``collect_threshold`` is one job of one stage with ``tasks`` tasks.
     HLL states are byte-equal whatever the task count, and the
@@ -836,8 +818,8 @@ def test_direct_build_job_budget_and_task_coverage(spark, token_path):
     )
     states = set()
     for tasks in (1, 3, 8):
-        sk, jobs = _run_in_job_group(
-            spark, f"direct-hll-{tasks}",
+        sk, jobs = job_tasks(
+            f"direct-hll-{tasks}",
             lambda: sketch_parquet(
                 spark, token_path, "tokens", lambda: HyperLogLog(p=12),
                 KIND_ARRAY_HASH, tasks=tasks,
@@ -847,8 +829,8 @@ def test_direct_build_job_budget_and_task_coverage(spark, token_path):
         states.add(sk.to_bytes())
     assert len(states) == 1
     for tasks in (1, 3, len(files) + 2):
-        sk, jobs = _run_in_job_group(
-            spark, f"direct-tdigest-{tasks}",
+        sk, jobs = job_tasks(
+            f"direct-tdigest-{tasks}",
             lambda: sketch_parquet(
                 spark, token_path, "tokens", lambda: TDigest(delta=200),
                 KIND_ARRAY, tasks=tasks,

@@ -97,6 +97,32 @@ def test_curate_idempotent(spark, corpus):
     assert report2["input_rows"] == report2["after_near_dedup"]
 
 
+def test_curate_calls_do_not_pile_up_cached_frames(spark, corpus):
+    """``curate``'s persisted frames (the ``deduped`` pin, MinHash's
+    signature frame, the skew guard's frame) sit in one-slot caches:
+    three calls in one session leave as many persisted RDDs as one."""
+    from sketchlib.pipeline import curate
+
+    docs = spark.createDataFrame(corpus, "doc_id long, text string")
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    # other tests' frames may be cleaned meanwhile: count new ids only
+    base = set(jsc.getPersistentRDDs().keySet())
+
+    def run():
+        curated, _ = curate(docs, quality_min=0.2, near_dup_threshold=0.5)
+        kept = curated.select("doc_id").collect()
+        return kept, set(jsc.getPersistentRDDs().keySet()) - base
+
+    kept, held = run()
+    assert held
+    for _ in range(2):
+        again, now = run()
+        assert again == kept
+        assert len(now) == len(held) and now.isdisjoint(held)
+        held = now
+
+
 def test_run_pipeline_spec_end_to_end(spark):
     from sketchlib.pipeline import run_pipeline_spec
 

@@ -480,3 +480,91 @@ def test_ddsketch_flattened_tokens(spark, tokens_df):
     assert sk.count == n_total
     true = np.array([0.25, 0.5, 0.9]) * 50_000
     assert np.all(np.abs(np.array(est) - true) / true <= 0.03)
+
+
+def test_builds_run_their_shuffled_input_once(spark):
+    """A build runs its input's shuffle stages once: no partition-count
+    probe executes the input before the sketch job does.  A counting
+    Python UDF under a groupBy runs once per input row per build."""
+    from pyspark.sql.types import LongType
+
+    from sketchlib.spark.aggregate import sketch_columns
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf(LongType())
+    def counted(x):
+        calls.add(1)
+        return x
+
+    n = 5_000
+    df = (
+        spark.range(0, n, 1, 4)
+        .select(counted("id").alias("id"))
+        .groupBy((F.col("id") % 997).alias("k"))
+        .agg(F.count(F.lit(1)).cast("double").alias("v"))
+    )
+    builds = {
+        "approx_quantiles": lambda: approx_quantiles(df, "v", [0.5]),
+        "build_cms": lambda: build_cms(df, "k", width=1024),
+        "sketch_columns": lambda: sketch_columns(
+            df,
+            {
+                "v": (lambda: TDigest(delta=100), KIND_DOUBLE),
+                "k": (lambda: HyperLogLog(p=10), KIND_HASH64),
+            },
+        ),
+    }
+    for name, build in builds.items():
+        before = calls.value
+        build()
+        assert calls.value - before == n, name
+
+
+@pytest.mark.parametrize("threshold", [1, 4, 6, 256])
+def test_tagged_tree_merge_matches_one_column_builds(spark, threshold):
+    """``sketch_columns`` reduces each tag through the same salted tree
+    as a one-column build: with fanout 2 over 12 partitions, thresholds
+    1, 4, 6 and 256 plan four, two, one and no tree levels, and each
+    tag's state is byte-equal to ``sketch_column``'s."""
+    from sketchlib.spark.aggregate import sketch_columns
+
+    df = spark.range(0, 12_000, 1, 12).select(
+        (F.col("id") * 7 % 1001).cast("double").alias("a"),
+        (F.col("id") % 5_000).alias("b"),
+    )
+    specs = {
+        "a": (lambda: TDigest(delta=100), KIND_DOUBLE),
+        "b": (lambda: HyperLogLog(p=10), KIND_HASH64),
+    }
+    both = sketch_columns(df, specs, fanout=2, collect_threshold=threshold)
+    assert set(both) == {"a", "b"}
+    assert both["a"].count == 12_000
+    for col, (factory, kind) in specs.items():
+        one = sketch_column(
+            df, col, factory, kind, fanout=2, collect_threshold=threshold
+        )
+        assert both[col].to_bytes() == one.to_bytes(), col
+
+
+def test_sketch_columns_below_threshold_is_one_stage(spark, job_tasks):
+    """Below ``collect_threshold`` a multi-column build is one job of
+    one stage: the partial scan, then the driver fold per tag."""
+    from sketchlib.spark.aggregate import sketch_columns
+
+    df = spark.range(0, 6_000, 1, 6).select(
+        F.col("id").cast("double").alias("a"), (F.col("id") % 97).alias("b")
+    )
+    out, jobs = job_tasks(
+        "sketch-columns-one-stage",
+        lambda: sketch_columns(
+            df,
+            {
+                "a": (lambda: TDigest(delta=100), KIND_DOUBLE),
+                "b": (lambda: HyperLogLog(p=10), KIND_HASH64),
+            },
+        ),
+    )
+    assert jobs == [[6]]
+    assert out["a"].count == 6_000
+    assert round(out["b"].estimate()) == 97
