@@ -341,12 +341,11 @@ def q_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouped_doc_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language t-digest quantiles of documents.n_chars.
 
-    Exercises the grouped (map-side-combine + salted merge) path."""
+    Exercises the grouped (map-side-combine + keyed merge) path."""
     qs = [0.5, 0.9]
     docs = _read(spark, sf_dir, "documents")
     est_rows = grouped_quantiles(
         docs, ["lang"], "n_chars", qs, sketch="tdigest", delta=1000,
-        salt_buckets=4,
     ).collect()  # groups x qs rows — tiny
     est_map = {(r["lang"], r["q"]): float(r["value"]) for r in est_rows}
     # per-group rank check via conditional aggregates — NO raw-row
@@ -405,7 +404,7 @@ def q_grouped_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent — overlap them
     est_rows, exact_rows = _concurrently(
         lambda: grouped_distinct(
-            events, ["event_type"], "user_id", p=14, salt_buckets=4
+            events, ["event_type"], "user_id", p=14
         ).collect(),
         events.groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("d"))
@@ -602,9 +601,9 @@ def q_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source n_tok quantiles over the token table via the grouped
-    (map-side-combine + salted tree) path, verified Spark-side against
+    (map-side-combine + keyed merge) path, verified Spark-side against
     exact grouped percentiles.  Sources follow a Zipf(1.5) skew, so
-    this exercises the hot-key path the salt level exists for."""
+    this exercises the hot-key path the merge levels exist for."""
     n = _sf_rows(sf_dir)
     # two actions over the same deterministic table: materialize once
     # per invocation (unpersisted before returning); only the two
@@ -612,7 +611,7 @@ def q_token_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = token_sequences(spark, n, seed=42).select("source", "n_tok").persist()
     qs = [0.5, 0.9]
     est_rows = grouped_quantiles(
-        df, ["source"], "n_tok", qs, sketch="tdigest", delta=1000, salt_buckets=8
+        df, ["source"], "n_tok", qs, sketch="tdigest", delta=1000
     ).collect()  # groups x qs rows — tiny
     est_map = {(r["source"], r["q"]): float(r["value"]) for r in est_rows}
     # per-group rank check via conditional aggregates — NO raw-row
@@ -2544,7 +2543,7 @@ def entry(spark: SparkSession) -> DataFrame:
     df = token_sequences(spark, _sf_rows("/root/testdata/sf0.001"), seed=42)
     return grouped_quantiles(
         df, ["source"], "n_tok", [0.25, 0.5, 0.75, 0.9, 0.99],
-        sketch="tdigest", delta=500, salt_buckets=4,
+        sketch="tdigest", delta=500,
     )
 
 

@@ -2,8 +2,8 @@
 
 Approximate quantiles (t-digest, KLL), cardinality (HyperLogLog),
 frequency (count-min) and membership (Bloom) over very large tables,
-expressed as vectorized Arrow/pandas partial aggregates with explicit
-salted repartitioning and tree-reduce merges.
+expressed as vectorized Arrow/pandas partial aggregates with one keyed,
+fan-in-bounded merge.
 
 Layout:
   sketchlib.core   — pure-numpy sketch kernels (no Spark imports)

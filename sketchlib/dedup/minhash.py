@@ -207,9 +207,9 @@ def exact_jaccard_pairs(
     DataFrame[id_a, id_b, jaccard].  Shingle sets are computed once per
     document and joined to the pairs (never re-hashed per pair)."""
     # persist: joined twice (id_a and id_b sides) and upstream is the
-    # shingle-hash UDF
+    # shingle-hash UDF; held until the next call (cache.py)
     sh = _shingle_sets_df(df, col, id_col, shingle_w, seed, tokens).persist()
-    return _jaccard_verify(pairs, sh)
+    return _jaccard_verify(pairs, _shingle_cache.hold(sh))
 
 
 def _jaccard_verify(pairs: DataFrame, sh: DataFrame) -> DataFrame:
@@ -267,6 +267,8 @@ def _signatures_and_shingles(
 
 #: the latest call's signature/shingle frame (one-slot contract, cache.py)
 _signature_cache = SingleSlotCache()
+#: exact_jaccard_pairs' shingle-set frame (ditto)
+_shingle_cache = SingleSlotCache()
 
 
 def minhash_near_duplicates(

@@ -55,7 +55,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sketchlib.spark.api import SPREAD_CACHE_MIN_PARTITIONS, _spread
+from sketchlib.spark.cache import SingleSlotCache
 from sketchlib.text.grams import grams
+
+#: the latest call's persisted gram frame (one-slot contract, cache.py)
+_gram_cache = SingleSlotCache()
 
 #: planned-partition threshold between the two exact plans: below or
 #: equal, the inverted-index join (fewer shuffles) wins; above, hot
@@ -114,17 +118,17 @@ def ngram_jaccard_pairs(
     base = _gram_sets(spread, col, id_col, w, hash_grams)
     # every plan reads the gram arrays 2-4x (df counts + both join
     # sides + the prefix verify): persist the ONE per-doc array frame
-    # so the string shingle build runs once, not per consumer (cache
-    # retention: one persisted frame per call, the minhash precedent;
-    # spill-safe MEMORY_AND_DISK default).  cache=None (default) is
-    # adaptive on the SAME driver-side partition gate: small inputs
+    # so the string shingle build runs once, not per consumer (held
+    # until the next call, cache.py; spill-safe MEMORY_AND_DISK
+    # default).  cache=None (default) is adaptive on the SAME
+    # driver-side partition gate: small inputs
     # persist, corpus-scale inputs don't — the gram arrays are ~w x
     # the raw text, and force-materializing that to memory+disk at
     # 100 TB is worse than recomputing the build per consumer.
     if cache is None:
         cache = small
     if cache:
-        base = base.persist()
+        base = _gram_cache.hold(base.persist())
 
     grams = base.select("__id", "__n", F.explode("__g").alias("__gram"))
     dfc = grams.groupBy("__gram").agg(F.count("*").alias("__df"))

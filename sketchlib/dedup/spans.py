@@ -42,7 +42,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sketchlib.spark.cache import SingleSlotCache
 from sketchlib.text.grams import grams, token_type
+
+#: the latest call's persisted text frame (one-slot contract, cache.py)
+_text_cache = SingleSlotCache()
 
 
 def remove_duplicate_spans(
@@ -109,7 +113,7 @@ def remove_duplicate_spans(
     if cache is None:
         cache = small
     if cache:
-        d = d.persist()
+        d = _text_cache.hold(d.persist())
 
     # (doc, 0-based start position, gram) for every full window
     occ = d.select(

@@ -76,20 +76,10 @@ def curate(
     )
     filtered = annotated.filter(F.col("quality_score") >= quality_min)
 
-    # exact dedup: drop every member except the minimum id
-    groups = exact_duplicate_groups(filtered, col=text_col, id_col=id_col)
-    # size-derived slice length: a fixed cap would silently KEEP the
-    # excess copies of any duplicate group larger than the cap
-    # (boilerplate/empty-text groups exceed millions at corpus scale)
-    drop_exact = groups.select(
-        F.explode(
-            F.expr("slice(ids, 2, greatest(size(ids) - 1, 0))")
-        ).alias(id_col)
-    )
     obs_exact = Observation()
     # pinned (MULTI_REF_STEPS rule): read by MinHash, by the anti-join
     # against the losers and by every later action on the output
-    deduped = filtered.join(drop_exact, id_col, "anti").observe(
+    deduped = _drop_exact_dups(filtered, text_col, id_col).observe(
         obs_exact, F.count(F.lit(1)).alias("after_exact_dedup")
     ).persist()
     _deduped_cache.hold(deduped)
@@ -129,6 +119,20 @@ def curate(
     return curated, report
 
 
+def _drop_exact_dups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Exact dedup: keep only the minimum id of each duplicate group."""
+    groups = exact_duplicate_groups(df, col=text_col, id_col=id_col)
+    # size-derived slice length: a fixed cap would silently KEEP the
+    # excess copies of any duplicate group larger than the cap
+    # (boilerplate/empty-text groups exceed millions at corpus scale)
+    drop = groups.select(
+        F.explode(
+            F.expr("slice(ids, 2, greatest(size(ids) - 1, 0))")
+        ).alias(id_col)
+    )
+    return df.join(drop, id_col, "anti")
+
+
 # ---------------------------------------------------------------- spec runner
 
 
@@ -157,15 +161,7 @@ def _step_language_filter(df, p, ctx):
 
 
 def _step_dedup_exact(df, p, ctx):
-    groups = exact_duplicate_groups(
-        df, col=ctx["text_col"], id_col=ctx["id_col"]
-    )
-    drop = groups.select(
-        F.explode(
-            F.expr("slice(ids, 2, greatest(size(ids) - 1, 0))")
-        ).alias(ctx["id_col"])
-    )
-    return df.join(drop, ctx["id_col"], "anti")
+    return _drop_exact_dups(df, ctx["text_col"], ctx["id_col"])
 
 
 def _step_dedup_minhash(df, p, ctx):

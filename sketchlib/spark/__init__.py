@@ -3,8 +3,8 @@
 The execution shape mirrors the reference's ``ParTDigest::flush``
 (/root/reference/src/t_digest/par_t_digest.rs:59-89) generalized to a
 cluster: vectorized per-partition partial sketches (mapInArrow, Arrow
-batches, zero per-row Python) -> serialized state rows -> salted
-tree-reduce merge stages -> one final sketch.
+batches, zero per-row Python) -> serialized state rows -> keyed merge
+levels of bounded fan-in -> one final sketch per key.
 """
 
 from sketchlib.spark.aggregate import (

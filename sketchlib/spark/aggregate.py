@@ -5,28 +5,26 @@ Three-stage plan, the distributed generalization of the reference's
 rank-combine (parallel_digest.rs:25-51):
 
   stage 1  mapInArrow over the value columns: one sketch per (input
-           partition, column), updated per Arrow batch with numpy
-           kernels (zero per-row Python).  Emits column-tagged ``state:
+           partition, key) — the key is the column, the group keys (a
+           map-side combine Catalyst cannot plan for opaque Python
+           state, SURVEY.md §4) or the lineage — updated per Arrow batch
+           with numpy kernels (zero per-row Python).  Emits ``state:
            binary`` rows of bounded size (KBs), so stage-2 shuffle
-           volume is ~P * sketch_size per column regardless of input.
-  stage 2  salted tree-reduce per tag: group the P partial states
-           (P from ``_plan_partitions``, which never runs the input)
-           into ceil(P/fanout) buckets keyed by spark_partition_id() %
-           buckets, merge each bucket with applyInPandas; repeat until
-           few enough rows remain.  No reducer ever sees more than
-           ``fanout`` states — the explicit skew defence the north rule
-           mandates (a single global groupBy would funnel every state
-           into one task at 1000-executor scale).
-  stage 3  driver-side final merge per tag of the surviving states.
+           volume is ~P * sketch_size per key regardless of input.
+  stage 2  one level loop for every build (``_merge_levels``): merge
+           each key's P states (P from ``_plan_partitions``, which
+           never runs the input) in ceil(P/fanout) buckets keyed by
+           spark_partition_id() % buckets, then by the carried bucket
+           id, until few enough rows remain.  No reducer ever sees more
+           than ``fanout`` states — the explicit skew defence the north
+           rule mandates (a single global groupBy would funnel every
+           state into one task at 1000-executor scale).
+  stage 3  per key, the driver fold (``tree_merge``) or one reducer
+           emitting the merged state or its read-out (``_keyed_merge``).
 
 Hash-based sketches (HLL/CMS/Bloom) consume a ``F.xxhash64`` column
 computed JVM-side inside whole-stage codegen, so Python only ever sees
 uint64 numpy arrays.
-
-Grouped variant: stage 1 keeps a dict key->sketch per partition (the
-map-side combine Catalyst cannot plan for opaque Python state —
-SURVEY.md §4), so stage 2 shuffles at most P states per key, then an
-optional salt level caps per-task fan-in for hot keys.
 """
 
 from __future__ import annotations
@@ -54,6 +52,9 @@ _TAGGED_SCHEMA = f"tag string, {_PARTIAL_SCHEMA}"
 # in one task share it, so worker memory stays bounded regardless of
 # key cardinality or per-column value ranges)
 _ACC_BUDGET_BYTES = 256 << 20
+
+# stage-2 fan-in cap: no merge reducer sees more states than this
+FANOUT = 64
 
 
 # --------------------------------------------------------------------- feeding
@@ -661,31 +662,73 @@ def _plan_size_bytes(df: DataFrame, assume: int) -> int:
         return assume
 
 
-def _merge_states(pdf, keys=()):
+def _merge_states(pdf, keys=(), rows=None):
     """The stage-2 reducer: one applyInPandas group of partial rows ->
     one row carrying the group's ``keys``, the merged state and the
-    summed items and build seconds."""
+    summed items and build seconds; or, given ``rows``, the rows
+    ``rows(merged sketch)`` returns as equal-length column lists, each
+    repeating the keys."""
     import pandas as pd
 
-    out = {k: [pdf[k].iloc[0]] for k in keys}
-    out["state"] = [serde.merge_blobs(pdf["state"])]
-    out["items"] = [int(pdf["items"].sum())]
-    out["build_secs"] = [float(pdf["build_secs"].sum())]
-    return pd.DataFrame(out)
+    state = serde.merge_blobs(pdf["state"])
+    out = rows(serde.from_bytes(state)) if rows else {
+        "state": [state], "items": [int(pdf["items"].sum())],
+        "build_secs": [float(pdf["build_secs"].sum())],
+    }
+    n = len(next(iter(out.values())))
+    return pd.DataFrame({**{k: [pdf[k].iloc[0]] * n for k in keys}, **out})
+
+
+def _key_schema(df: DataFrame, keys) -> str:
+    """DDL of ``df``'s ``keys`` columns, each followed by a comma."""
+    return "".join(f"{k} {df.schema[k].dataType.simpleString()}, " for k in keys)
+
+
+def _merge_levels(df, keys, size, stop: int, fanout: int = FANOUT):
+    """Stage 2's one level loop: while more than ``stop`` rows per key
+    may remain, merge each key's states in ceil(size/fanout) buckets.
+    Level 1 buckets on the partition id of the ``size`` partial tasks
+    (None: read off ``df``'s plan, API drift planning one level);
+    later levels on the carried ``__g`` bucket id, since AQE coalesces
+    each level's small output into one partition."""
+    if size is None:
+        size = _plan_partitions(df, assume=stop + 1)
+    keys = (*keys, "__g")
+    bucket = F.spark_partition_id()
+    while size > stop:
+        size = max(-(-size // fanout), 1)
+        df = df.withColumn("__g", bucket % F.lit(size))
+        df = df.groupBy(*keys).applyInPandas(
+            lambda pdf: _merge_states(pdf, keys),
+            _key_schema(df, keys) + _PARTIAL_SCHEMA,
+        )
+        bucket = F.col("__g")
+    return df
+
+
+def _keyed_merge(partials, keys, rows=None, schema=_PARTIAL_SCHEMA):
+    """Stages 2+3 of the grouped and lineage builds: the level loop
+    down to ``FANOUT`` rows per key, then one ``_merge_states`` reducer
+    per key: DataFrame[*keys, <schema>], the merged state or, given
+    ``rows``, its read-out."""
+    return _merge_levels(partials, keys, None, FANOUT).groupBy(*keys).applyInPandas(
+        lambda pdf: _merge_states(pdf, keys, rows),
+        _key_schema(partials, keys) + schema,
+    )
 
 
 def tree_merge(
     partials: DataFrame,
-    fanout: int = 64,
+    fanout: int = FANOUT,
     collect_threshold: int = 256,
     size_hint: int | None = None,
 ):
-    """Stages 2+3: a salted fanout-ary tree reduce of the partial
-    states while more than ``collect_threshold`` rows per tag may
-    remain, then one driver-side merge per tag.  Untagged partials
-    (``build_partials``, the direct scans) return the merged sketch,
-    or None if the input was empty; tagged ones (a ``tag`` column, as
-    ``sketch_columns`` builds) return {tag: sketch} for the tags seen.
+    """Stages 2+3 of the ungrouped builds: the level loop while more
+    than ``collect_threshold`` rows per tag may remain, then one
+    driver-side merge per tag.  Untagged partials (``build_partials``,
+    the direct scans) return the merged sketch, or None if the input
+    was empty; tagged ones (a ``tag`` column, as ``sketch_columns``
+    builds) return {tag: sketch} for the tags seen.
 
     ``collect_threshold`` trades a whole extra shuffle stage against
     driver collect volume: KB-scale states (t-digest/KLL/HLL) can skip
@@ -695,18 +738,9 @@ def tree_merge(
     ``tasks``, a probed input); else ``_plan_partitions`` reads it off
     ``partials``' plan, and API drift plans one tree level."""
     keys = ("tag",) if "tag" in partials.columns else ()
-    schema = _TAGGED_SCHEMA if keys else _PARTIAL_SCHEMA
-    size = size_hint
-    if size is None:
-        size = _plan_partitions(partials, assume=collect_threshold + 1)
-    df = partials
-    while size > collect_threshold:
-        buckets = max((size + fanout - 1) // fanout, 1)
-        df = df.groupBy(
-            *keys, (F.spark_partition_id() % F.lit(buckets)).alias("__g")
-        ).applyInPandas(lambda pdf: _merge_states(pdf, keys), schema)
-        size = buckets
-    rows = df.collect()
+    rows = _merge_levels(
+        partials, keys, size_hint, collect_threshold, fanout
+    ).collect()
     if not keys:
         return serde.merge_sketches(r["state"] for r in rows)
     return {
@@ -718,7 +752,7 @@ def tree_merge(
 def sketch_columns(
     df: DataFrame,
     specs: dict[str, tuple[Callable[[], object], str]],
-    fanout: int = 64,
+    fanout: int = FANOUT,
     collect_threshold: int = 256,
 ) -> dict[str, object]:
     """Build MANY sketches in ONE scan: ``specs`` maps column name ->
@@ -743,7 +777,7 @@ def sketch_column(
     col: str,
     factory: Callable[[], object],
     kind: str = KIND_DOUBLE,
-    fanout: int = 64,
+    fanout: int = FANOUT,
     collect_threshold: int = 256,
 ):
     """End-to-end: ``sketch_columns`` of one column; returns the final
@@ -762,16 +796,22 @@ def grouped_sketch(
     col: str,
     factory: Callable[[], object],
     kind: str = KIND_DOUBLE,
-    salt_buckets: int = 0,
     max_groups_per_partition: int = 100_000,
 ) -> DataFrame:
-    """Per-group sketches: DataFrame[*keys, state binary, items long].
+    """Per-group sketches: DataFrame[*keys, state binary, items long,
+    build_secs double] — ``_grouped_partials`` merged per key by
+    ``_keyed_merge``, whose levels cap hot keys' fan-in at ``FANOUT``."""
+    return _keyed_merge(
+        _grouped_partials(df, keys, col, factory, kind, max_groups_per_partition),
+        keys,
+    )
 
-    Stage 1 is a map-side combine: within each input partition a dict
-    key->sketch absorbs every Arrow batch, so the stage-2 shuffle
-    carries at most (#partitions x #keys) small state rows — raw rows
-    never shuffle.  With ``salt_buckets > 0`` an intermediate merge
-    level caps the per-key fan-in for hot keys (Zipf sources).
+
+def _grouped_partials(df, keys, col, factory, kind, max_groups_per_partition=100_000):
+    """Grouped stage 1, a map-side combine: within each input partition
+    a dict key->sketch absorbs every Arrow batch, so the stage-2
+    shuffle carries at most (#partitions x #keys) small state rows —
+    raw rows never shuffle.
 
     Stage-1 memory is BOUNDED: when the per-partition dict exceeds
     ``max_groups_per_partition`` keys it flushes its states as output
@@ -834,13 +874,4 @@ def grouped_sketch(
             return
         yield _emit(sketches, time.monotonic() - t0)
 
-    key_schema = ", ".join(f"{k} {vdf.schema[k].dataType.simpleString()}" for k in keys)
-    schema = f"{key_schema}, {_PARTIAL_SCHEMA}"
-    partials = vdf.mapInArrow(fn, schema)
-    if salt_buckets > 0:
-        partials = partials.groupBy(
-            *keys, (F.spark_partition_id() % F.lit(salt_buckets)).alias("__salt")
-        ).applyInPandas(lambda pdf: _merge_states(pdf, keys), schema)
-    return partials.groupBy(*keys).applyInPandas(
-        lambda pdf: _merge_states(pdf, keys), schema
-    )
+    return vdf.mapInArrow(fn, _key_schema(vdf, keys) + _PARTIAL_SCHEMA)

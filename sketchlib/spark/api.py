@@ -25,6 +25,9 @@ from sketchlib.spark.aggregate import (
     KIND_ARRAY_HASH,
     KIND_DOUBLE,
     KIND_HASH64,
+    _grouped_partials,
+    _key_schema,
+    _keyed_merge,
     _plan_partitions,
     _plan_size_bytes,
     grouped_sketch,
@@ -528,14 +531,8 @@ def overlap_matrix(
     if len(keys) <= driver_max_groups:
         rows = states.collect()
         states.unpersist()
-        sks: dict = {}
-        for r in rows:
-            sk = serde.from_bytes(r["state"])
-            g = r[group_col]
-            if g in sks:
-                sks[g] = sks[g].merge(sk)  # defensive: duplicate state rows
-            else:
-                sks[g] = sk
+        # the keyed merge emits one state row per group
+        sks = {r[group_col]: serde.from_bytes(r["state"]) for r in rows}
         groups = sorted(sks)  # no None keys: grouped_sketch drops nulls
         out = [
             _pair_stats(ga, gb, sks[ga], sks[gb])
@@ -556,12 +553,8 @@ def overlap_matrix(
         for g, blob, blk in zip(
             pdf[group_col], pdf["state"], pdf["__block"]
         ):
-            sk = serde.from_bytes(blob)
-            if g in sks:
-                sks[g] = sks[g].merge(sk)  # defensive: duplicate rows
-            else:
-                sks[g] = sk
-                blocks[g] = int(blk)
+            sks[g] = serde.from_bytes(blob)
+            blocks[g] = int(blk)
         gs = sorted(sks)
         if p == q:
             out = [
@@ -751,30 +744,12 @@ def cms_frequencies(
     )
 
 
-def _key_schema(df: DataFrame, keys: list[str]) -> str:
-    """DDL of ``df``'s ``keys`` columns, the head of a per-key schema."""
-    return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keys).schema.fields
-    )
-
-
-def _read_grouped(
-    df: DataFrame, states: DataFrame, keys: list[str], rows, out_schema: str
-) -> DataFrame:
-    """The one read-out of ``grouped_sketch`` states (one per key):
-    DataFrame[*keys, <out_schema>].  ``rows(sketch)`` returns the
-    output columns as equal-length lists; each row repeats its key."""
-
-    def extract(pdf):
-        import pandas as pd
-
-        cols = rows(serde.from_bytes(pdf["state"].iloc[0]))
-        n = len(next(iter(cols.values())))
-        return pd.DataFrame({**{k: [pdf[k].iloc[0]] * n for k in keys}, **cols})
-
-    return states.groupBy(*keys).applyInPandas(
-        extract, f"{_key_schema(df, keys)}, {out_schema}"
+def _read_grouped(df, keys, col, factory, kind, rows, schema) -> DataFrame:
+    """The one grouped read-out: the grouped build of ``factory`` over
+    ``col``, read out by ``rows(sketch)`` in its per-key merge reducer
+    as DataFrame[*keys, <schema>]."""
+    return _keyed_merge(
+        _grouped_partials(df, keys, col, factory, kind), keys, rows, schema
     )
 
 
@@ -783,18 +758,14 @@ def grouped_distinct(
     keys: list[str],
     col: str,
     p: int = 14,
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """Per-group HLL distinct counts: DataFrame[*keys, estimate double,
-    rse double].  Same grouped map-side-combine + salted-merge staging
-    as grouped_quantiles — raw rows never shuffle, one HLL state per
-    (partition x key) moves."""
-    states = grouped_sketch(
-        df, keys, col, lambda: HyperLogLog(p=p), KIND_HASH64,
-        salt_buckets=salt_buckets,
-    )
+    rse double].  Same grouped map-side combine and keyed merge as
+    grouped_quantiles — raw rows never shuffle, one HLL state per
+    (partition x key) moves, and the estimate is read in the merge
+    reducer."""
     return _read_grouped(
-        df, states, keys,
+        df, keys, col, lambda: HyperLogLog(p=p), KIND_HASH64,
         lambda sk: {
             "estimate": [float(sk.estimate())],
             "rse": [float(sk.relative_std_error())],
@@ -809,7 +780,6 @@ def grouped_heavy_hitters(
     col: str,
     k: int = 5,
     capacity: int = 1024,
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """Per-group top-k frequent values:
     DataFrame[*keys, col, est_count, max_err].
@@ -817,7 +787,8 @@ def grouped_heavy_hitters(
     Stage 1 builds one SpaceSaving sketch per group over
     ``xxhash64(col)`` through the grouped map-side-combine staging (raw
     rows never shuffle; one KB-sized state per partition x group
-    moves).  Stage 2 recovers the <= groups*k winning hashes to values
+    moves), and the keyed merge's reducer reads each group's top k
+    hashes.  Stage 2 recovers the <= groups*k winning hashes to values
     in ONE filtered scan (predicate-pushdown ``isin`` — never a
     full-column distinct shuffle) and broadcast-joins them back.
 
@@ -825,11 +796,6 @@ def grouped_heavy_hitters(
     exceeds N_group/capacity is tracked, and est_count never
     undercounts (est - max_err <= true <= est)."""
     from sketchlib.core.spacesaving import SpaceSaving
-
-    states = grouped_sketch(
-        df, keys, col, lambda: SpaceSaving(capacity=capacity), KIND_HASH64,
-        salt_buckets=salt_buckets,
-    )
 
     def top_rows_of(sk):
         top = sk.top_k(k)
@@ -840,7 +806,8 @@ def grouped_heavy_hitters(
         }
 
     tops = _read_grouped(
-        df, states, keys, top_rows_of, "__h long, est_count long, max_err long"
+        df, keys, col, lambda: SpaceSaving(capacity=capacity), KIND_HASH64,
+        top_rows_of, "__h long, est_count long, max_err long",
     )
     key_schema = _key_schema(df, keys)
     spark = df.sparkSession
@@ -850,7 +817,7 @@ def grouped_heavy_hitters(
         return local_frame(
             spark,
             [],
-            f"{key_schema}, {f.name} {f.dataType.simpleString()}, "
+            f"{key_schema}{f.name} {f.dataType.simpleString()}, "
             "est_count long, max_err long",
         )
     hashes = sorted({r["__h"] for r in top_rows})
@@ -860,7 +827,7 @@ def grouped_heavy_hitters(
         .distinct()
     )
     tops_df = local_frame(
-        spark, top_rows, f"{key_schema}, __h long, est_count long, max_err long"
+        spark, top_rows, f"{key_schema}__h long, est_count long, max_err long"
     )
     return (
         values.join(F.broadcast(tops_df), "__h")
@@ -2018,17 +1985,14 @@ def grouped_quantiles(
     probabilities: Sequence[float],
     sketch: str = "tdigest",
     is_array: bool = False,
-    salt_buckets: int = 0,
     **params,
 ) -> DataFrame:
     """Per-group quantiles: DataFrame[*keys, q double, value double].
 
-    The estimate extraction runs in applyInPandas over the (tiny)
-    per-group state rows.
+    One grouped build (``grouped_sketch``'s map-side combine and keyed
+    merge); the estimates are read in the per-key merge reducer, so the
+    merged states never shuffle again.
     """
-    factory = _quantile_factory(sketch, **params)
-    kind = KIND_ARRAY if is_array else KIND_DOUBLE
-    states = grouped_sketch(df, keys, col, factory, kind, salt_buckets=salt_buckets)
     probs = [float(p) for p in probabilities]
 
     def quantile_rows(sk):
@@ -2036,5 +2000,7 @@ def grouped_quantiles(
         return {"q": probs, "value": [float(v) for v in vals]}
 
     return _read_grouped(
-        df, states, keys, quantile_rows, "q double, value double"
+        df, keys, col, _quantile_factory(sketch, **params),
+        KIND_ARRAY if is_array else KIND_DOUBLE, quantile_rows,
+        "q double, value double",
     )

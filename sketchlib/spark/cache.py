@@ -2,12 +2,14 @@
 plan still references an internally-persisted frame lazily.
 
 The contract (established by tfidf_keywords, reused by overlap_matrix,
-unigram_logprob, minhash_near_duplicates, sub_split_buckets and
-curate): each op holds at most ONE cached internal frame per slot — a
-new call releases the previous one, so loops over corpora never
-accumulate session-lifetime cached frames; callers release the final
-one once its consumer has been materialized (the op's release
-function where it has one, else ``spark.catalog.clearCache()``).
+unigram_logprob, minhash_near_duplicates, exact_jaccard_pairs,
+sub_split_buckets, curate, ngram_jaccard_pairs, remove_duplicate_spans,
+ngram_novelty and ks_2sample): each op holds at most ONE cached internal
+frame per slot — a new call releases the previous one, so loops over
+corpora never accumulate session-lifetime cached frames; callers
+release the final one once its consumer has been materialized (the
+op's release function where it has one, else
+``spark.catalog.clearCache()``).
 Releasing early is always safe — an unevaluated consumer just
 recomputes the frame instead of reading the cache.
 """
@@ -21,8 +23,10 @@ from pyspark.sql import DataFrame
 
 class SingleSlotCache:
     """Holds at most one persisted DataFrame; ``hold`` releases the
-    previous occupant, ``release`` unpersists and empties the slot;
-    driver threads may share one (each occupant is released once)."""
+    previous occupant unless it shares the new one's cache (the same
+    plan) and returns the new one, ``release`` unpersists and empties
+    the slot; driver threads may share one (each occupant is released
+    once)."""
 
     __slots__ = ("_df", "_lock")
 
@@ -35,11 +39,12 @@ class SingleSlotCache:
         """The currently-cached frame (None when the slot is empty)."""
         return self._df
 
-    def hold(self, df: DataFrame | None) -> None:
+    def hold(self, df: DataFrame | None) -> DataFrame | None:
         with self._lock:
             old, self._df = self._df, df
-        if old is not None:
+        if old is not None and not (df is not None and df.sameSemantics(old)):
             old.unpersist()
+        return df
 
     def release(self) -> None:
         self.hold(None)

@@ -3,13 +3,13 @@
 The unit of work is a *lineage*: a deterministic hash bucket of the
 input, ``lineage_id = pmod(xxhash64(key), n_lineage)``.  Stage 1
 computes one partial state per (input partition x lineage) with a
-map-side combine and merges per lineage (grouped_sketch) — raw rows
-never shuffle.  Each completed lineage is appended to the checkpoint
-ledger as a parquet row carrying its state, item count and build/merge
-metrics.  A resumed run reads the ledger, recomputes only the missing
-lineage ids (a codegen'd filter on the same hash expression — no
-bookkeeping join), and appends them.  The final sketch is the merge of
-all ledger states.
+map-side combine and merges per lineage (the grouped builds' keyed
+merge) — raw rows never shuffle.  Each completed lineage is appended
+to the checkpoint ledger as a parquet row carrying its state, item
+count and build/merge metrics.  A resumed run reads the ledger,
+recomputes only the missing lineage ids (a codegen'd filter on the
+same hash expression — no bookkeeping join), and appends them.  The
+final sketch is the merge of all ledger states.
 
 Determinism matters: KLL compaction coins are seeded per sketch seed,
 so a recomputed lineage reproduces the state bit-identically
@@ -25,12 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib import serde
-from sketchlib.spark.aggregate import (
-    _PARTIAL_SCHEMA,
-    KIND_DOUBLE,
-    _merge_states,
-    grouped_sketch,
-)
+from sketchlib.spark.aggregate import KIND_DOUBLE, _grouped_partials, _keyed_merge
 
 LEDGER_SCHEMA = (
     "lineage_id bigint, sketch_kind string, state binary, n_updates bigint, "
@@ -69,39 +64,43 @@ def run_checkpointed(
     (final_sketch, metrics_dict)."""
     lineage_expr = F.pmod(F.xxhash64(F.col(lineage_col)), F.lit(n_lineage))
 
-    done = completed_lineages(spark, checkpoint_dir) if resume else set()
-    remaining = sorted(set(range(n_lineage)) - done)
-    t0 = time.monotonic()
-    recomputed = 0
-    if remaining:
+    def partials(done):
         work = df.withColumn("lineage_id", lineage_expr.cast("bigint"))
         if done:
             work = work.filter(~F.col("lineage_id").isin(*done))
-        states = grouped_sketch(work, ["lineage_id"], col, factory, kind)
-        _write_ledger(states, checkpoint_dir, sketch_kind, resume)
-        recomputed = len(remaining)
-    build_wall = time.monotonic() - t0
-    return _finalize_ledger(spark, checkpoint_dir, recomputed, build_wall)
+        return _grouped_partials(work, ["lineage_id"], col, factory, kind)
 
-
-def _write_ledger(
-    states: DataFrame, checkpoint_dir: str, sketch_kind: str, resume: bool
-) -> None:
-    """Write one ledger row per lineage of ``states`` (a merged
-    DataFrame[lineage_id, state, items, build_secs])."""
-    ledger_rows = states.select(
-        F.col("lineage_id").cast("bigint"),
-        F.lit(sketch_kind).alias("sketch_kind"),
-        F.col("state"),
-        F.col("items").alias("n_updates"),
-        F.col("build_secs"),
-        F.lit(1).cast("bigint").alias("n_merges"),
-        F.lit(time.time()).alias("wall_ts"),
+    return _checkpointed(
+        spark, checkpoint_dir, sketch_kind, n_lineage, resume, partials
     )
-    # resume=False must not stack a second copy of every lineage on
-    # top of an existing ledger (the final merge would double-count)
-    mode = "append" if resume else "overwrite"
-    ledger_rows.write.mode(mode).parquet(checkpoint_dir)
+
+
+def _checkpointed(spark, checkpoint_dir, sketch_kind, n_lineage, resume, partials):
+    """The resumable build of both paths: ``partials(done)`` gives the
+    per-(task, lineage) states of the lineages not in ``done``; the
+    keyed merge reduces them to one ledger row per lineage (the ledger
+    dedupe keeps one row per lineage, so unmerged partials would drop
+    every other task's contribution), appended to the ledger."""
+    done = completed_lineages(spark, checkpoint_dir) if resume else set()
+    remaining = sorted(set(range(n_lineage)) - done)
+    t0 = time.monotonic()
+    if remaining:
+        states = _keyed_merge(partials(done), ["lineage_id"])
+        ledger_rows = states.select(
+            F.col("lineage_id").cast("bigint"),
+            F.lit(sketch_kind).alias("sketch_kind"),
+            F.col("state"),
+            F.col("items").alias("n_updates"),
+            F.col("build_secs"),
+            F.lit(1).cast("bigint").alias("n_merges"),
+            F.lit(time.time()).alias("wall_ts"),
+        )
+        # resume=False must not stack a second copy of every lineage on
+        # top of an existing ledger (the final merge would double-count)
+        mode = "append" if resume else "overwrite"
+        ledger_rows.write.mode(mode).parquet(checkpoint_dir)
+    build_wall = time.monotonic() - t0
+    return _finalize_ledger(spark, checkpoint_dir, len(remaining), build_wall)
 
 
 def _finalize_ledger(
@@ -164,26 +163,10 @@ def run_checkpointed_direct(
     ledger write/dedupe/final-merge logic is shared."""
     from sketchlib.spark.direct import build_lineage_partials_direct
 
-    done = completed_lineages(spark, checkpoint_dir) if resume else set()
-    remaining = sorted(set(range(n_lineage)) - done)
-    t0 = time.monotonic()
-    recomputed = 0
-    if remaining:
-        partials = build_lineage_partials_direct(
+    return _checkpointed(
+        spark, checkpoint_dir, sketch_kind, n_lineage, resume,
+        lambda done: build_lineage_partials_direct(
             spark, path, lineage_col, col, factory, kind=kind,
-            n_lineage=n_lineage, files=files,
-            skip_lineages=done or None,
-        )
-        # one ledger row per lineage: merge the per-(task, lineage)
-        # partials first — the ledger dedupe keeps a single row per
-        # lineage, so unmerged partials would silently drop every
-        # other task's contribution.  Fan-in per lineage = task count
-        # (bounded KB-sized states).
-        states = partials.groupBy("lineage_id").applyInPandas(
-            lambda pdf: _merge_states(pdf, ("lineage_id",)),
-            f"lineage_id bigint, {_PARTIAL_SCHEMA}",
-        )
-        _write_ledger(states, checkpoint_dir, sketch_kind, resume)
-        recomputed = len(remaining)
-    build_wall = time.monotonic() - t0
-    return _finalize_ledger(spark, checkpoint_dir, recomputed, build_wall)
+            n_lineage=n_lineage, files=files, skip_lineages=done or None,
+        ),
+    )

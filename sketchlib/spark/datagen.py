@@ -7,7 +7,7 @@ Everything is derived from xxhash64(id, seed) inside whole-stage
 codegen — no Python, no driver-side data, fully deterministic, and
 scales linearly with ``spark.range`` parallelism.  ``source`` follows a
 Zipf(1.5)-ish skew over five sources (FIXTURES.md §A) to exercise the
-salted-merge path.
+grouped keyed merge.
 """
 
 from __future__ import annotations

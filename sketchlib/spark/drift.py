@@ -30,6 +30,10 @@ from sketchlib.spark.api import (
     _order_and_bucket,
     _use_bucketed,
 )
+from sketchlib.spark.cache import SingleSlotCache
+
+#: ks_2sample's persisted frequency frame (one-slot contract, cache.py)
+_freq_cache = SingleSlotCache()
 
 
 def _tokenize(df: DataFrame, col: str, tokens: bool) -> DataFrame:
@@ -171,8 +175,9 @@ def ks_2sample(
     use_bucketed = _use_bucketed(freq, order_buckets, bucketed_min_partitions)
     if use_bucketed:
         # the same persisted-once discipline as the other multi-consumer
-        # lineages: bounds scan + offsets agg + main join all read freq
-        freq = freq.persist()
+        # lineages: bounds scan + offsets agg + main join all read freq;
+        # held until the next call (cache.py)
+        freq = _freq_cache.hold(freq.persist())
     order, bucket = _order_and_bucket(freq, "v", 0, order_buckets, use_bucketed)
     cum = _exact_running_prior(freq, ["ca", "cb"], order, bucket)
     totals = freq.agg(

@@ -39,7 +39,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sketchlib.spark.cache import SingleSlotCache
 from sketchlib.text.grams import grams
+
+#: the latest call's persisted source projection (one-slot contract)
+_src_cache = SingleSlotCache()
 
 
 def ngram_novelty(
@@ -59,13 +63,13 @@ def ngram_novelty(
     one source scan — the `remove_duplicate_spans` trade: the shingle
     transform still runs twice, but that is parallel CPU next to
     re-scanning a wide table.  The returned plan references the cached
-    frame lazily; drop it with ``spark.catalog.clearCache()`` (or keep
-    the default for one-shot scoring, where Spark's shuffle reuse
-    already avoids most of the duplication)."""
+    frame lazily, and it stays cached until the next ``cache=True``
+    call (``spark/cache.py``); keep the default for one-shot scoring,
+    where Spark's shuffle reuse already avoids most of the duplication."""
     g = grams(docs, col, w, tokens=tokens, hashed=hash_grams)
     src = docs.select(id_col, col)
     if cache:
-        src = src.persist()
+        src = _src_cache.hold(src.persist())
     occ = src.select(id_col, F.explode(g).alias("__gram"))
     counts = occ.groupBy("__gram").agg(F.count(F.lit(1)).alias("__c"))
     per_doc = (

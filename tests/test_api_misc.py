@@ -415,6 +415,9 @@ def test_single_slot_cache_releases_each_frame_once_across_threads():
         def unpersist(self):
             self.released += 1
 
+        def sameSemantics(self, other):
+            return False
+
     slot = SingleSlotCache()
     frames = [Frame() for _ in range(8 * 2_000)]
     switch = sys.getswitchinterval()
@@ -434,3 +437,65 @@ def test_single_slot_cache_releases_each_frame_once_across_threads():
     assert all(f.released == 1 for f in frames if f is not last)
     slot.release()
     assert last.released == 1 and slot.held is None
+
+
+def test_one_keyed_merge():
+    """Source guard: no salt-bucket knob under sketchlib/; the
+    partition-id salt appears only in the one level loop and in
+    ``top_k_per_group``; ``_merge_states`` is used only in
+    ``spark/aggregate.py``."""
+    import ast
+    import pathlib
+    import re
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    texts = {
+        p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")
+    }
+    assert [n for n, t in texts.items() if re.search(r"\bsalt_\w*buckets", t)] == []
+    assert [n for n, t in texts.items() if "_merge_states" in t] == [
+        "spark/aggregate.py"
+    ]
+    salted = set()
+    for name, text in texts.items():
+        for fn in ast.walk(ast.parse(text)):
+            if isinstance(fn, ast.FunctionDef):
+                for node in ast.walk(fn):
+                    if (
+                        isinstance(node, ast.Attribute)
+                        and node.attr == "spark_partition_id"
+                    ):
+                        salted.add((name, fn.name))
+    assert salted == {
+        ("spark/aggregate.py", "_merge_levels"),
+        ("spark/api.py", "top_k_per_group"),
+    }
+
+
+def test_gram_operators_release_their_cached_frame(spark):
+    """``ngram_jaccard_pairs`` and ``remove_duplicate_spans`` hold their
+    persisted frame in a one-slot cache: three calls on different
+    inputs leave as many persistent RDDs as one, and a repeated call
+    keeps the cache its frame shares with the previous one."""
+    from sketchlib.dedup import ngram_jaccard_pairs, remove_duplicate_spans
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta word{i % 3}") for i in range(6)],
+        "doc_id long, text string",
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    for op in (
+        lambda i: ngram_jaccard_pairs(docs.filter(F.col("doc_id") != i), w=3),
+        lambda i: remove_duplicate_spans(docs.filter(F.col("doc_id") != i), w=3),
+    ):
+        spark.catalog.clearCache()
+        op(0).collect()
+        after_one = len(persistent())
+        assert after_one >= 1
+        for i in (1, 2, 2):
+            op(i).collect()
+            assert len(persistent()) == after_one
+    spark.catalog.clearCache()

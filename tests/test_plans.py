@@ -68,6 +68,37 @@ def test_grouped_shuffle_carries_states_only(spark, tokens_path):
         assert "n_tok" not in cols and "__v" not in cols, cols
 
 
+def test_grouped_read_out_runs_in_the_merge_reducer(spark, tokens_path, monkeypatch):
+    """The grouped operators read their sketches out in the per-key
+    merge reducer: each state read plans one Exchange and one
+    FlatMapGroupsInPandas, not a second regroup of the merged states."""
+    import re
+
+    from sketchlib.spark.api import (
+        grouped_distinct,
+        grouped_heavy_hitters,
+        grouped_quantiles,
+    )
+
+    df = spark.read.parquet(tokens_path)
+    plans = [
+        _formatted(grouped_quantiles(df, ["source"], "n_tok", [0.5, 0.9])),
+        _formatted(grouped_distinct(df, ["source"], "doc_id")),
+    ]
+    collect = type(df).collect
+
+    def spy(self):
+        plans.append(_formatted(self))
+        return collect(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    grouped_heavy_hitters(df, ["source"], "doc_id", k=2)
+    assert len(plans) > 2
+    for plan in plans[:3]:  # the heavy hitters' state read: its first collect
+        assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 1, plan
+        assert len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas$", plan, re.M)) == 1, plan
+
+
 def test_filter_pushdown_reaches_scan(spark, tokens_path):
     df = spark.read.parquet(tokens_path).filter(F.col("source") == "web")
     plan = _formatted(build_partials(df, "n_tok", lambda: TDigest(), KIND_DOUBLE))

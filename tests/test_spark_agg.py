@@ -143,7 +143,7 @@ def test_bloom_membership(spark, tokens_df):
 def test_grouped_quantiles_by_source(spark, tokens_df):
     res = grouped_quantiles(
         tokens_df, ["source"], "n_tok", [0.5, 0.9], sketch="tdigest",
-        delta=500, salt_buckets=4,
+        delta=500,
     ).toPandas()
     pdf = tokens_df.select("source", "n_tok").toPandas()
     for (src, q), grp in res.groupby(["source", "q"]):
@@ -431,7 +431,7 @@ def test_grouped_distinct(spark, tokens_df):
     est = {
         r["source"]: (r["estimate"], r["rse"])
         for r in grouped_distinct(
-            tokens_df, ["source"], "doc_id", p=14, salt_buckets=4
+            tokens_df, ["source"], "doc_id", p=14
         ).collect()
     }
     exact = {
@@ -545,6 +545,28 @@ def test_tagged_tree_merge_matches_one_column_builds(spark, threshold):
             df, col, factory, kind, fanout=2, collect_threshold=threshold
         )
         assert both[col].to_bytes() == one.to_bytes(), col
+
+
+@pytest.mark.parametrize("threshold, left", [(6, 6), (4, 3), (2, 2), (1, 1)])
+def test_tree_merge_levels_keep_their_fan_in(spark, monkeypatch, threshold, left):
+    """Each merge level salts on the previous level's bucket id, not on
+    the partition id AQE leaves after coalescing the level's output: 12
+    partials at fanout 2 plan levels of 6, 3, 2 and 1 buckets, and the
+    rows left after the last level match its bucket count."""
+    df = spark.range(0, 12_000, 1, 12).select(F.col("id").cast("double").alias("v"))
+    partials = build_partials(df, "v", lambda: TDigest(delta=100), KIND_DOUBLE)
+    collected = []
+    collect = type(partials).collect
+
+    def spy(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(partials), "collect", spy)
+    merged = tree_merge(partials, fanout=2, collect_threshold=threshold)
+    assert collected == [left]
+    assert merged.count == 12_000
 
 
 def test_sketch_columns_below_threshold_is_one_stage(spark, job_tasks):

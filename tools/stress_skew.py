@@ -4,19 +4,19 @@ token_grouped_quantiles runs at Zipf(1.5); this is the nastier shape:
 ONE mega key holding half of all rows plus a Zipf(~1)-ish long tail.
 The grouped path never shuffles raw rows (stage 1 is a map-side
 combine), so the skew pressure lands on the MERGE: the mega key's
-fan-in equals the input partition count, and without salting one
-reduce task merges all P partial states while its siblings merge a
-handful — the classic straggler.  ``salt_buckets`` inserts an
-intermediate (key, partition%salt) merge level that caps any single
-task's fan-in at ~P/salt.
+fan-in is the input partition count, and a single per-key merge would
+have one reduce task merge all P partial states while its siblings
+merge a handful — the classic straggler.  ``grouped_sketch``'s keyed
+merge derives its levels from the planned partition count: above
+``aggregate.FANOUT`` (64) partitions it merges each key's states in
+ceil(P/64) buckets first, so P = 256 gets 4 buckets and no reducer
+merges more than 64 states of one key.
 
 Evidence, not vibes: per-task durations are pulled from the Spark UI
-REST API (/api/v1) for the jobs' merge stages, and the script asserts
-the salted run's worst merge task stays within ``--bound`` (default
-4x) of its stage median while the unsalted straggler exceeds it —
-i.e. the salt level, not luck, bounds the max/median task-time ratio.
-Quantile correctness is checked against exact percentiles on the mega
-key and one tail key.
+REST API (/api/v1) for the job's merge stages, and the script asserts
+the worst merge task stays within ``--bound`` (default 4x) of its
+stage median.  Quantile correctness is checked against exact
+percentiles on the mega key and one tail key.
 
 Usage:  python tools/stress_skew.py [n_rows] [partitions]
 
@@ -43,11 +43,12 @@ def _rest(path: str):
 
 
 def _merge_stage_stats(group: str) -> tuple[float, float, float, int]:
-    """(max_s, median_s, ratio, n_tasks) of the straggler-iest stage of
-    the jobs in ``group``: among stages wide enough to have a
+    """(max_s, median_s, ratio, n_tasks) of the straggler-iest merge
+    stage of the jobs in ``group``: among the stages that read a
+    shuffle (the merges, not the stage-1 build, whose first tasks pay
+    the Python workers' start-up) and are wide enough to have a
     meaningful median (>= 16 tasks), the one with the largest
-    max/median task-duration ratio — i.e. the merge stage the skew
-    lands on, not the (balanced) stage-1 build."""
+    max/median task-duration ratio."""
     import statistics
 
     app = _rest("/applications")[0]["id"]
@@ -69,7 +70,7 @@ def _merge_stage_stats(group: str) -> tuple[float, float, float, int]:
                     }
                 durs = [t["duration"] / 1000.0 for t in tasks.values()
                         if t.get("duration")]
-                if len(durs) < 16:
+                if len(durs) < 16 or not att.get("shuffleReadBytes"):
                     continue
                 mx, md = max(durs), statistics.median(durs)
                 ratio = mx / max(md, 1e-3)
@@ -82,6 +83,9 @@ def main(n_rows: int, partitions: int, bound: float = 4.0) -> None:
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "64")
+        # one task per merge reducer: AQE would pack the KB-sized
+        # states of many keys into a few tasks and hide the fan-in
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.driver.memory", "16g")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
@@ -120,49 +124,32 @@ def main(n_rows: int, partitions: int, bound: float = 4.0) -> None:
     )
     df.count()
 
-    results = {}
-    for salt in (0, 8):
-        sc.setJobGroup(f"salt{salt}", f"grouped_quantiles salt={salt}")
-        t0 = time.monotonic()
-        rows = grouped_quantiles(
-            df, ["source"], "n_tok", [0.5, 0.9],
-            sketch="tdigest", delta=2000, salt_buckets=salt,
-        ).collect()
-        wall = time.monotonic() - t0
-        sc.setJobGroup("probe", "exact check")
-        est = {(r["source"], r["q"]): r["value"] for r in rows}
-        for key in ("mega", "g1"):
-            ex = df.filter(F.col("source") == key).agg(
-                F.expr("percentile(n_tok, 0.5)").alias("p50"),
-                F.count(F.lit(1)).alias("n"),
-            ).first()
-            # value-space check on a ~uniform 0..999 distribution:
-            # rank tolerance ~1% of the range
-            assert abs(est[(key, 0.5)] - ex["p50"]) <= 15, (
-                salt, key, est[(key, 0.5)], ex["p50"])
-        mx, md, ratio, n_tasks = _merge_stage_stats(f"salt{salt}")
-        results[salt] = (wall, mx, md, ratio, n_tasks)
-        print(
-            f"skew_stress salt={salt}: wall={wall:.2f}s merge-stage "
-            f"max_task={mx:.2f}s median_task={md:.3f}s "
-            f"ratio={ratio:.1f}x ({n_tasks} tasks)"
-        )
-    un, sa = results[0], results[8]
-    # the evidence needs BOTH halves: the unsalted run must actually
-    # exhibit the straggler (otherwise the conclusion is vacuous — a
-    # layout/AQE accident absorbed the skew and this run demonstrated
-    # nothing), and the salt level must bound it
-    assert un[3] > bound, (
-        f"unsalted straggler ratio {un[3]:.1f}x did not exceed {bound}x — "
-        "the run shows no skew to mitigate; evidence vacuous"
-    )
-    assert sa[3] <= bound, f"salted ratio {sa[3]:.1f}x exceeds {bound}x"
-    assert sa[1] < un[1], (sa[1], un[1])
+    sc.setJobGroup("grouped", "grouped_quantiles")
+    t0 = time.monotonic()
+    rows = grouped_quantiles(
+        df, ["source"], "n_tok", [0.5, 0.9], sketch="tdigest", delta=2000
+    ).collect()
+    wall = time.monotonic() - t0
+    sc.setJobGroup("probe", "exact check")
+    est = {(r["source"], r["q"]): r["value"] for r in rows}
+    for key in ("mega", "g1"):
+        ex = df.filter(F.col("source") == key).agg(
+            F.expr("percentile(n_tok, 0.5)").alias("p50"),
+            F.count(F.lit(1)).alias("n"),
+        ).first()
+        # value-space check on a ~uniform 0..999 distribution: rank
+        # tolerance ~1% of the range
+        assert abs(est[(key, 0.5)] - ex["p50"]) <= 15, (
+            key, est[(key, 0.5)], ex["p50"])
+    mx, md, ratio, n_tasks = _merge_stage_stats("grouped")
     print(
-        f"skew_stress: unsalted straggler {un[1]:.2f}s "
-        f"({un[3]:.1f}x median) -> salted {sa[1]:.2f}s "
-        f"({sa[3]:.1f}x median, bound {bound}x) OK"
+        f"skew_stress P={partitions}: wall={wall:.2f}s merge-stage "
+        f"max_task={mx:.2f}s median_task={md:.3f}s "
+        f"ratio={ratio:.1f}x ({n_tasks} tasks)"
     )
+    assert n_tasks, "no merge stage of >= 16 tasks; nothing measured"
+    assert ratio <= bound, f"merge ratio {ratio:.1f}x exceeds {bound}x"
+    print(f"skew_stress: ratio {ratio:.1f}x within bound {bound}x OK")
     spark.stop()
 
 
