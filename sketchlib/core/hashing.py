@@ -19,17 +19,18 @@ _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 # ----------------------------------------------------------------- hash domains
 #
-# Two hash functions feed the hash-based sketches: JVM xxhash64 (the
-# DataFrame path, KIND_HASH64) and numpy splitmix64/pandas-siphash (the
-# direct pyarrow path and KIND_ARRAY_HASH).  States built from
+# Two hash functions feed the hash-based sketches, one per input kind
+# on every engine: Spark's xxhash64 for KIND_HASH64 (JVM F.xxhash64 on
+# the DataFrame path, the bit-equal numpy xxhash64_* in the direct
+# scan) and numpy splitmix64 for KIND_ARRAY_HASH.  States built from
 # DIFFERENT hash functions over the same keys share no register/bucket
 # structure — merging them yields silently-wrong estimates, so every
 # hash-consuming sketch carries its domain and merge() raises on a
 # definite mismatch.  DOMAIN_UNSET (empty or legacy state) merges with
 # anything and adopts the partner's domain.
 DOMAIN_UNSET = 0
-DOMAIN_XXHASH64 = 1  # JVM F.xxhash64 (DataFrame path)
-DOMAIN_SPLITMIX64 = 2  # numpy splitmix64 / pandas siphash (direct path)
+DOMAIN_XXHASH64 = 1  # Spark's xxhash64 (KIND_HASH64)
+DOMAIN_SPLITMIX64 = 2  # numpy splitmix64 (KIND_ARRAY_HASH)
 
 
 def combine_domains(a: int, b: int, kind: str = "sketch") -> int:
@@ -140,8 +141,8 @@ def xxhash64_ints(values, seed: int = 42) -> np.ndarray:
             return xxhash64_i64(arr.astype(np.int64), seed)
         raise TypeError(
             "xxhash64_ints: uint64 has no JVM-parity hash (Spark reads "
-            "parquet UINT_64 as Decimal(20,0)); use the splitmix64 "
-            "domain for unsigned-64 keys"
+            "parquet UINT_64 as Decimal(20,0)); sketch such a column "
+            "through the DataFrame path"
         )
     if arr.dtype.itemsize <= 4:
         return xxhash64_i32(arr, seed)
@@ -312,13 +313,6 @@ def xxhash64_str(values, seed: int = 42) -> np.ndarray:
         ).reshape(idx.size, int(L))
         out[idx] = _xxh64_same_len(m, seed)
     return out
-
-
-def hash_f64(values, seed: int = 0) -> np.ndarray:
-    """Hash a float64 array by its bit pattern (canonicalizing -0.0 to 0.0)."""
-    arr = np.asarray(values, dtype=np.float64)
-    arr = np.where(arr == 0.0, 0.0, arr)  # -0.0 -> 0.0
-    return hash_i64(arr.view(np.int64), seed)
 
 
 def hash_str(values, seed: int = 0) -> np.ndarray:

@@ -22,9 +22,11 @@ rank-combine (parallel_digest.rs:25-51):
   stage 3  per key, the driver fold (``tree_merge``) or one reducer
            emitting the merged state or its read-out (``_keyed_merge``).
 
-Hash-based sketches (HLL/CMS/Bloom) consume a ``F.xxhash64`` column
-computed JVM-side inside whole-stage codegen, so Python only ever sees
-uint64 numpy arrays.
+The input kind fixes the hash on every build path, this module's and
+the direct scan's (``_kind_domain``): KIND_HASH64 is Spark's XXH64 of
+the value — ``F.xxhash64`` inside whole-stage codegen here, the
+bit-equal numpy ``xxhash64_*`` in ``direct.py`` — and KIND_ARRAY_HASH
+is numpy splitmix64 of each element on both paths.
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ from sketchlib import serde
 # value-column input kinds
 KIND_DOUBLE = "double"  # numeric column -> float64 stream
 KIND_ARRAY = "array"  # array<numeric> column -> flattened element stream
-KIND_HASH64 = "hash64"  # any column -> xxhash64 JVM-side -> uint64 stream
+KIND_HASH64 = "hash64"  # scalar column -> Spark's xxhash64 -> uint64 stream
 KIND_ARRAY_HASH = "array_hash"  # array<int> column -> flattened, hashed in numpy
 
 _PARTIAL_SCHEMA = "state binary, items long, build_secs double"
@@ -81,6 +83,16 @@ def _kind_domain(kind: str) -> int:
     if kind == KIND_ARRAY_HASH:
         return hashing.DOMAIN_SPLITMIX64
     return 0
+
+
+def _int_hash(domain: int):
+    """The hash a domain applies to raw integers: Spark's XXH64 by
+    column width (hashInt vs hashLong) or splitmix64."""
+    from sketchlib.core import hashing
+
+    if domain == hashing.DOMAIN_XXHASH64:
+        return hashing.xxhash64_ints
+    return hashing.hash_i64
 
 
 class _BincountAcc:
@@ -241,22 +253,18 @@ def _accepts_counts(sk) -> bool:
         return False
 
 
-def flush_hashed(acc: "_BincountAcc", sk, domain: int = 0, hash_fn=None) -> int:
+def flush_hashed(acc: "_BincountAcc", sk, domain: int = 0) -> int:
     """Feed an integer-value bincount into a HASH-consuming sketch:
-    hash each DISTINCT value once (splitmix64 by default) and replay
-    its count — token streams repeat heavily (vocab << tokens), so
-    this hashes ~vocab values instead of every token.  Exactly
+    hash each DISTINCT value once with the domain's integer hash and
+    replay its count — token streams repeat heavily (vocab << tokens),
+    so this hashes ~vocab values instead of every token.  Exactly
     equivalent: duplicates are no-ops for set-semantics sketches
     (HLL/Bloom/theta) and a (hash, count) pair for counting ones
-    (CMS/SpaceSaving).
-
-    ``hash_fn`` overrides the hash (e.g. Spark-bit-compatible
-    ``xxhash64_ints``); it receives values restored to the SOURCE
-    column dtype, because the JVM's xxhash64 output depends on the
-    column width (hashInt vs hashLong)."""
+    (CMS/SpaceSaving).  Values are restored to the SOURCE column
+    dtype first, because XXH64's output depends on the column width."""
     if acc.counts is None:
         return 0
-    from sketchlib.core.hashing import combine_domains, hash_i64
+    from sketchlib.core.hashing import combine_domains
 
     nz = np.flatnonzero(acc.counts)
     if acc.offset >= 0 and acc.offset + acc.counts.size > np.iinfo(np.int64).max:
@@ -265,12 +273,7 @@ def flush_hashed(acc: "_BincountAcc", sk, domain: int = 0, hash_fn=None) -> int:
         orig = nz.astype(np.uint64) + np.uint64(acc.offset)
     else:
         orig = nz + acc.offset
-    if hash_fn is None:
-        h = hash_i64(orig)
-    else:
-        if acc.src_dtype is not None:
-            orig = np.asarray(orig).astype(acc.src_dtype, copy=False)
-        h = hash_fn(orig)
+    h = _int_hash(domain)(np.asarray(orig).astype(acc.src_dtype, copy=False))
     if domain and hasattr(sk, "hash_domain"):
         sk.hash_domain = combine_domains(
             sk.hash_domain, domain, type(sk).__name__
@@ -291,12 +294,12 @@ class AccFeeder:
     capabilities, try the accumulator per batch, fall back to the
     per-batch ``_feed`` (hashing first in hash mode), and flush at the
     end of the task.  ``feed_raw`` takes RAW values — integers still
-    unhashed in hash mode."""
+    unhashed in hash mode, hashed with the domain's integer hash."""
 
-    __slots__ = ("sk", "hash_mode", "domain", "acc", "items", "hash_fn")
+    __slots__ = ("sk", "hash_mode", "domain", "acc", "items")
 
     def __init__(self, sk, hash_mode: bool, domain: int,
-                 budget: list | None = None, hash_fn=None):
+                 budget: list | None = None):
         use = (
             hasattr(sk, "add_hashes")
             if hash_mode
@@ -307,18 +310,12 @@ class AccFeeder:
         self.domain = domain
         self.acc = _BincountAcc(budget) if use else None
         self.items = 0
-        self.hash_fn = hash_fn  # None => splitmix64 hash_i64
 
     def feed_raw(self, vals: np.ndarray, vmin=None, vmax=None) -> None:
         if self.acc is not None and self.acc.try_add(vals, vmin, vmax):
             return
         if self.hash_mode:
-            if self.hash_fn is not None:
-                vals = self.hash_fn(vals)
-            else:
-                from sketchlib.core.hashing import hash_i64
-
-                vals = hash_i64(vals)
+            vals = _int_hash(self.domain)(vals)
         self.items += _feed(self.sk, vals, self.domain)
 
     def feed_hashed(self, hashes: np.ndarray) -> None:
@@ -329,7 +326,7 @@ class AccFeeder:
         """Flush the accumulator; returns TOTAL items fed."""
         if self.acc is not None:
             self.items += (
-                flush_hashed(self.acc, self.sk, self.domain, self.hash_fn)
+                flush_hashed(self.acc, self.sk, self.domain)
                 if self.hash_mode
                 else self.acc.flush_into(self.sk)
             )
@@ -451,18 +448,13 @@ def _batch_values(batch: pa.RecordBatch, col_idx: int, kind: str) -> np.ndarray:
         if vals.dtype.kind == "f" and np.isnan(vals).any():
             vals = vals[~np.isnan(vals)]  # NaNs would poison min/max
         return vals
-    if kind in (KIND_ARRAY, KIND_ARRAY_HASH):
+    if kind in (KIND_ARRAY, KIND_ARRAY_HASH):  # elements left unhashed
         if arr.null_count:
             arr = arr.drop_null()
         flat = arr.flatten()  # zero-copy over list offsets
         if flat.null_count:
             flat = flat.drop_null()
-        vals = flat.to_numpy(zero_copy_only=False)
-        if kind == KIND_ARRAY_HASH:
-            from sketchlib.core.hashing import hash_i64
-
-            return hash_i64(vals)
-        return vals
+        return flat.to_numpy(zero_copy_only=False)
     if kind == KIND_HASH64:
         if arr.null_count:
             arr = arr.drop_null()
@@ -479,10 +471,10 @@ def _route(codes: np.ndarray, varr: pa.Array, kind: str):
     One stable argsort of the codes slices every group, so per-batch
     cost is independent of the group count, and the stable order feeds
     each sketch exactly the stream a per-group scan would.  Values keep
-    the column's dtype (KIND_HASH64 viewed as uint64; array kinds
-    flattened and unhashed).  Rows with a negative code (a null key, a
-    skipped lineage), null rows, null list elements and a KIND_DOUBLE
-    column's NaNs are dropped -- ``_batch_values``' rule."""
+    the column's dtype (array kinds flattened and unhashed).  Rows with
+    a negative code (a null key, a skipped lineage), null rows, null
+    list elements and a KIND_DOUBLE column's NaNs are dropped --
+    ``_batch_values``' rule."""
     keep = codes >= 0
     if varr.null_count:
         keep &= ~np.asarray(varr.is_null())
@@ -509,8 +501,6 @@ def _route(codes: np.ndarray, varr: pa.Array, kind: str):
         # column with nulls to float64
         kept_arr = varr if rows.size == len(varr) else varr.take(rows)
         flat = kept_arr.to_numpy(zero_copy_only=False)
-        if kind == KIND_HASH64:
-            flat = flat.astype(np.int64).view(np.uint64)
     edges = np.concatenate(
         ([0], np.flatnonzero(svc[1:] != svc[:-1]) + 1, [svc.size])
     ).tolist()
@@ -573,7 +563,7 @@ def _tagged_partials(
     # sketches over integer values; distinct-hash feed for hash
     # sketches over raw integer arrays (hash vocab once, not every
     # token) — both fall back per batch for floats / wide ranges
-    raw = [KIND_ARRAY if k == KIND_ARRAY_HASH else k for _f, k in specs.values()]
+    kinds = [k for _f, k in specs.values()]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.monotonic()
@@ -584,7 +574,7 @@ def _tagged_partials(
         ]
         for b in _prefetch(batches):
             for i, feeder in enumerate(feeders):
-                feeder.feed_raw(_batch_values(b, i, raw[i]))
+                feeder.feed_raw(_batch_values(b, i, kinds[i]))
         items = [f.finish() for f in feeders]
         got = [i for i, n in enumerate(items) if n > 0]
         if not got:
@@ -860,8 +850,8 @@ def _grouped_partials(df, keys, col, factory, kind, max_groups_per_partition=100
                         factory(), hash_mode=hash_mode,
                         domain=_kind_domain(kind), budget=budget,
                     )
-                if kind == KIND_HASH64:
-                    feeder.feed_hashed(vals)  # pre-hashed JVM stream
+                if kind == KIND_HASH64:  # pre-hashed JVM stream
+                    feeder.feed_hashed(vals.view(np.uint64))
                 else:
                     feeder.feed_raw(vals)
             if len(sketches) >= max_groups_per_partition:

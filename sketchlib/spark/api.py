@@ -28,6 +28,7 @@ from sketchlib.spark.aggregate import (
     _grouped_partials,
     _key_schema,
     _keyed_merge,
+    _kind_domain,
     _plan_partitions,
     _plan_size_bytes,
     grouped_sketch,
@@ -599,12 +600,26 @@ def overlap_matrix(
     )
 
 
+def _check_probe_domain(sk) -> None:
+    """Probes hash their keys as KIND_HASH64 does (``F.xxhash64``): a
+    sketch fed another hash, e.g. an array-element KIND_ARRAY_HASH
+    build, would answer for keys it never saw.  Unset (0) passes."""
+    if sk.hash_domain not in (0, _kind_domain(KIND_HASH64)):
+        raise ValueError(
+            f"{type(sk).__name__} was built in hash domain "
+            f"{sk.hash_domain}; probes hash keys with xxhash64 "
+            f"(domain {_kind_domain(KIND_HASH64)})"
+        )
+
+
 def bloom_contains(df: DataFrame, col: str, bloom: BloomFilter, out_col: str = "member") -> DataFrame:
     """Append a membership column by probing a broadcast Bloom filter.
 
     The filter bytes ship once per executor inside the serialized
     function; probing is a vectorized numpy gather per Arrow batch.
+    A filter built in another hash domain raises ValueError.
     """
+    _check_probe_domain(bloom)
     blob = bloom.to_bytes()
     cols = df.columns
 
@@ -717,8 +732,10 @@ def cms_frequencies(
     """Per-distinct-key CMS estimates: DataFrame[col, est_count].
 
     Distinct keys are computed JVM-side; estimates probe the broadcast
-    CMS per Arrow batch.
+    CMS per Arrow batch.  A CMS built in another hash domain raises
+    ValueError.
     """
+    _check_probe_domain(cms)
     blob = cms.to_bytes()
 
     def fn(batches):

@@ -3,8 +3,8 @@ plan still references an internally-persisted frame lazily.
 
 The contract (established by tfidf_keywords, reused by overlap_matrix,
 unigram_logprob, minhash_near_duplicates, exact_jaccard_pairs,
-sub_split_buckets, curate, ngram_jaccard_pairs, remove_duplicate_spans,
-ngram_novelty and ks_2sample): each op holds at most ONE cached internal
+sub_split_buckets, curate, ngram_jaccard_pairs, remove_duplicate_spans
+and ks_2sample): each op holds at most ONE cached internal
 frame per slot — a new call releases the previous one, so loops over
 corpora never accumulate session-lifetime cached frames; callers
 release the final one once its consumer has been materialized (the

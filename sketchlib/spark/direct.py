@@ -21,21 +21,18 @@ not.
 
 Trade-off vs the generic DataFrame path (aggregate.py): no Catalyst
 expressions on the way in (column selection is explicit; row-group
-predicate pushdown can be added per-field), and JVM-side ``xxhash64``
-is replaced by numpy splitmix64 for the hash sketches.  Use this path
-for scan-bound bulk builds; use the DataFrame path when the input is
-the output of arbitrary Spark transformations.
+predicate pushdown can be added per-field).  Use this path for
+scan-bound bulk builds; use the DataFrame path when the input is the
+output of arbitrary Spark transformations.
 
-WARNING: by default the two paths hash with different functions
-(xxhash64 vs splitmix64), so hash-based sketches (HLL/CMS/Bloom) built
-by one path must never be merged with sketches built by the other —
-their hash domains differ and merge() raises.  Quantile sketches
-(t-digest/KLL) operate on raw values and interoperate freely.  Since
-round 4, ``hash_compat="xxhash64"`` makes the direct path emit numpy
-XXH64 hashes BIT-COMPATIBLE with Spark's ``F.xxhash64`` for integer
-columns (hashInt/hashLong chosen by column width, verified bit-equal
-against the JVM) — sketches built that way carry DOMAIN_XXHASH64 and
-merge freely with DataFrame-path ones over the same keys.
+Hashing follows the input kind exactly as on the DataFrame path
+(``aggregate._kind_domain``), so hash sketches built by either engine
+merge.  KIND_HASH64 is Spark's XXH64 of the value, computed here with
+the numpy ``xxhash64_*`` that is bit-equal to ``F.xxhash64`` for the
+Spark type each parquet column reads back as (integers by width,
+strings, doubles, floats); a column with no such parity (uint64, which
+Spark reads as a decimal) raises TypeError.  KIND_ARRAY_HASH is
+splitmix64 of each element on both paths.
 
 Decode-side design notes (round 4, judge lead "dictionary-aware
 reads"): parquet token columns ARE dictionary-encoded
@@ -72,13 +69,13 @@ from sketchlib.core import hashing
 from sketchlib.spark.aggregate import (
     _ACC_BUDGET_BYTES,
     _PARTIAL_SCHEMA,
-    KIND_ARRAY,
     KIND_ARRAY_HASH,
     KIND_DOUBLE,
     KIND_HASH64,
     AccFeeder,
     _BincountAcc,
     _batch_values,
+    _kind_domain,
     _partials_batch,
     _prefetch,
     _route,
@@ -148,13 +145,6 @@ def _map_files(spark: SparkSession, files, tasks: int, fn, schema: str):
         return fn([f for i in ids for f in files[i::tasks]])
 
     return spark.range(0, tasks, 1, tasks).mapInArrow(run, schema)
-
-
-def _direct_kind(kind: str) -> str:
-    """Map JVM-dependent kinds onto their numpy equivalents."""
-    if kind == KIND_HASH64:
-        return "hash64_numpy"
-    return kind
 
 
 def _prune_row_groups(md, column: str, min_value=None, max_value=None):
@@ -243,6 +233,22 @@ def _file_column_bounds(md, column: str):
     return (int(lo), int(hi))
 
 
+def _xxhash64(arr: pa.Array):
+    """Spark's ``F.xxhash64`` of a null-free Arrow array.  Only types
+    whose numpy hash is verified bit-equal to the JVM's are accepted:
+    integers by the width Spark reads them as, and float32 as
+    ``hashInt(floatToIntBits)``, not as a widened double."""
+    if pa.types.is_integer(arr.type):
+        return hashing.xxhash64_ints(arr.to_numpy(zero_copy_only=False))
+    if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
+        return hashing.xxhash64_str(arr)
+    if pa.types.is_float64(arr.type):
+        return hashing.xxhash64_f64(arr.to_numpy(zero_copy_only=False))
+    if pa.types.is_float32(arr.type):
+        return hashing.xxhash64_f32(arr.to_numpy(zero_copy_only=False))
+    raise TypeError(f"no Spark-compatible xxhash64 for arrow type {arr.type}")
+
+
 def build_partials_direct(
     spark: SparkSession,
     path: str,
@@ -252,7 +258,6 @@ def build_partials_direct(
     tasks: int | None = None,
     files: list[str] | None = None,
     prune: tuple | None = None,
-    hash_compat: str = "splitmix64",
 ):
     """Stage 1 over raw parquet files: returns the usual partials
     DataFrame[state binary, items long, build_secs double].  Pass an
@@ -267,11 +272,9 @@ def build_partials_direct(
     as file pruning — it is a scan-planning operation (kept groups may
     contain rows outside the range); exact row filtering stays with the
     caller's semantics."""
-    if hash_compat not in ("splitmix64", "xxhash64"):
-        raise ValueError(f"unknown hash_compat {hash_compat!r}")
     files, tasks = _file_tasks(spark, path, files, tasks)
-    dkind = _direct_kind(kind)
-    raw_kind = KIND_ARRAY if dkind == KIND_ARRAY_HASH else dkind
+    hash_mode = kind in (KIND_HASH64, KIND_ARRAY_HASH)
+    domain = _kind_domain(kind)
 
     def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -282,28 +285,12 @@ def build_partials_direct(
         # per-task bincount pre-reduction (see aggregate.AccFeeder):
         # weighted feed for quantile sketches over integer values;
         # distinct-hash feed for hash sketches over raw integers
-        hash_kind = dkind in ("hash64_numpy", KIND_ARRAY_HASH)
-        # hash_compat="splitmix64" (default): numpy splitmix64, stamped
-        # with its own domain so a merge with a JVM xxhash64-fed state
-        # raises instead of silently corrupting the estimate.
-        # hash_compat="xxhash64": numpy XXH64 BIT-COMPATIBLE with
-        # Spark's F.xxhash64 for integer columns (hashInt/hashLong by
-        # column width) — sketches built here merge freely with
-        # DataFrame-path (KIND_HASH64) sketches over the same keys.
-        if hash_compat == "xxhash64":
-            dom = hashing.DOMAIN_XXHASH64
-            hash_fn = hashing.xxhash64_ints
-        else:
-            dom = hashing.DOMAIN_SPLITMIX64
-            hash_fn = None
-        feeder = AccFeeder(
-            factory(), hash_mode=hash_kind, domain=dom, hash_fn=hash_fn,
-        )
+        feeder = AccFeeder(factory(), hash_mode=hash_mode, domain=domain)
 
         def decode():
             """Decode side: (values, lo, hi) per batch — a numpy batch
-            with its file's footer bounds, or a non-integer Arrow array
-            still to be hashed."""
+            with its file's footer bounds, or a non-integer KIND_HASH64
+            Arrow array still to be hashed."""
             for fpath in paths:
                 filesystem, fp = pafs.FileSystem.from_uri(fpath)
                 with filesystem.open_input_file(fp) as fh:
@@ -331,48 +318,22 @@ def build_partials_direct(
                         columns=[col], use_threads=False,
                         row_groups=row_groups,
                     ):
-                        if dkind != "hash64_numpy":
-                            yield _batch_values(rb, 0, raw_kind), blo, bhi
+                        if kind != KIND_HASH64:
+                            yield _batch_values(rb, 0, kind), blo, bhi
                             continue
                         arr = rb.column(0)
                         if arr.null_count:
                             arr = arr.drop_null()
                         if pa.types.is_integer(arr.type):
                             yield arr.to_numpy(zero_copy_only=False), blo, bhi
-                        else:  # floats/strings: hash in the feed loop
-                            # (nulls already dropped above —
-                            # xxhash64_str rejects them)
+                        else:  # hashed in the feed loop
                             yield arr, None, None
 
         for vals, lo, hi in _prefetch(decode(), depth=8):
-            if not isinstance(vals, pa.Array):
-                feeder.feed_raw(vals, lo, hi)
-            elif hash_compat == "xxhash64":
-                # JVM-parity hashing is restricted to the types whose
-                # numpy hash is VERIFIED bit-equal to F.xxhash64 on the
-                # Spark type the parquet column reads back as (advisor
-                # r4: float32 must go through hashInt(floatToIntBits),
-                # not the widened f64 path; anything else fails loud
-                # rather than silently corrupting a cross-engine merge)
-                if pa.types.is_string(vals.type) or pa.types.is_large_string(
-                    vals.type
-                ):
-                    feeder.feed_hashed(hashing.xxhash64_str(vals))
-                elif pa.types.is_float64(vals.type):
-                    feeder.feed_hashed(
-                        hashing.xxhash64_f64(vals.to_numpy(zero_copy_only=False))
-                    )
-                elif pa.types.is_float32(vals.type):
-                    feeder.feed_hashed(
-                        hashing.xxhash64_f32(vals.to_numpy(zero_copy_only=False))
-                    )
-                else:
-                    raise TypeError(
-                        f"hash_compat='xxhash64' has no JVM-compatible "
-                        f"hash for arrow type {vals.type}"
-                    )
+            if isinstance(vals, pa.Array):
+                feeder.feed_hashed(_xxhash64(vals))
             else:
-                feeder.feed_hashed(_hash_any(vals))
+                feeder.feed_raw(vals, lo, hi)
         items = feeder.finish()
         if items == 0:
             return
@@ -381,23 +342,6 @@ def build_partials_direct(
         )
 
     return _map_files(spark, files, tasks, fn, _PARTIAL_SCHEMA)
-
-
-def _hash_any(arr: pa.Array):
-    """uint64-hash an Arrow array without the JVM: splitmix64 for
-    integers/floats, blake2b for strings (string path is test-scale;
-    prefer the DataFrame path's JVM xxhash64 for bulk string keys)."""
-    import numpy as np
-
-    from sketchlib.core import hashing
-
-    if pa.types.is_integer(arr.type):
-        return hashing.hash_i64(arr.to_numpy(zero_copy_only=False))
-    if pa.types.is_floating(arr.type):
-        return hashing.hash_f64(arr.to_numpy(zero_copy_only=False))
-    if pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type):
-        return hashing.hash_str(arr.to_pylist())
-    raise TypeError(f"cannot hash arrow type {arr.type}")
 
 
 def sketch_parquet(
@@ -410,13 +354,11 @@ def sketch_parquet(
     fanout: int = 64,
     files: list[str] | None = None,
     prune: tuple | None = None,
-    hash_compat: str = "splitmix64",
 ):
     """End-to-end direct build: partials over raw files -> tree merge."""
     files, tasks = _file_tasks(spark, path, files, tasks)
     partials = build_partials_direct(
         spark, path, col, factory, kind, tasks, files, prune=prune,
-        hash_compat=hash_compat,
     )
     return tree_merge(partials, fanout=fanout, size_hint=tasks)
 
@@ -523,7 +465,10 @@ def build_lineage_partials_direct(
             "an explicit scalar key (e.g. --lineage-col doc_id) or use "
             "the non-direct checkpoint path"
         )
-    dkind = _direct_kind(kind)
+    hash_mode = kind in (KIND_HASH64, KIND_ARRAY_HASH)
+    domain = _kind_domain(kind)
+    # a key column that is also the value column is read once
+    columns = list(dict.fromkeys((key_col, col)))
 
     def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -532,38 +477,14 @@ def build_lineage_partials_direct(
 
         t0 = time.monotonic()
         budget = [_ACC_BUDGET_BYTES]
-        hash_kind = dkind in ("hash64_numpy", KIND_ARRAY_HASH)
-        # domain parity with the JVM grouped path (checkpoint ledgers
-        # must merge across engines): KIND_HASH64 hashes JVM-side
-        # there (F.xxhash64 -> DOMAIN_XXHASH64), so this engine uses
-        # the bit-equal numpy XXH64 for it; KIND_ARRAY_HASH hashes
-        # numpy-splitmix on BOTH paths and keeps that domain.
-        if dkind == "hash64_numpy":
-            dom = hashing.DOMAIN_XXHASH64
-            value_hash = hashing.xxhash64_ints
-        else:
-            dom = hashing.DOMAIN_SPLITMIX64
-            value_hash = None
         feeders: dict[int, AccFeeder] = {}
 
         def lineage_of(karr: pa.Array) -> "np.ndarray":
             if karr.null_count:
                 raise ValueError(f"NULL {key_col} cannot carry a lineage")
-            if pa.types.is_string(karr.type) or pa.types.is_large_string(
-                karr.type
-            ):
-                h = hashing.xxhash64_str(karr)
-            elif pa.types.is_integer(karr.type):
-                h = hashing.xxhash64_ints(
-                    karr.to_numpy(zero_copy_only=False)
-                )
-            else:
-                raise TypeError(
-                    f"unsupported lineage key type {karr.type}"
-                )
             # numpy % with positive divisor is non-negative for
             # negative int64 inputs — exactly Spark's pmod
-            lin = h.view(np.int64) % np.int64(n_lineage)
+            lin = _xxhash64(karr).view(np.int64) % np.int64(n_lineage)
             if skip is not None:
                 lin[np.isin(lin, skip)] = -1  # _route drops code -1
             return lin
@@ -575,40 +496,28 @@ def build_lineage_partials_direct(
                     pf = pq.ParquetFile(fh)
                     yield from pf.iter_batches(
                         batch_size=_batch_rows(pf.schema_arrow.field(col).type),
-                        columns=[key_col, col], use_threads=False,
+                        columns=columns, use_threads=False,
                     )
 
         for rb in _prefetch(decode(), depth=8):
-            for lid, vals in _route(lineage_of(rb.column(0)), rb.column(1), dkind):
+            codes, varr = lineage_of(rb.column(key_col)), rb.column(col)
+            # non-integer KIND_HASH64 values are hashed before routing
+            # (integers take the bincount path, hashed at the flush)
+            hashed = kind == KIND_HASH64 and not pa.types.is_integer(varr.type)
+            if hashed:
+                if varr.null_count:
+                    valid = varr.is_valid()
+                    codes, varr = codes[np.asarray(valid)], varr.filter(valid)
+                varr = pa.array(_xxhash64(varr))
+            for lid, vals in _route(codes, varr, kind):
                 feeder = feeders.get(lid)
                 if feeder is None:
                     feeder = feeders[lid] = AccFeeder(
-                        factory(), hash_mode=hash_kind, domain=dom,
-                        budget=budget, hash_fn=value_hash,
+                        factory(), hash_mode=hash_mode, domain=domain,
+                        budget=budget,
                     )
-                if (
-                    dkind == "hash64_numpy"
-                    and not np.issubdtype(vals.dtype, np.integer)
-                ):
-                    # non-integer hash streams need the typed
-                    # JVM-compatible hash (float bit-pattern / UTF-8
-                    # string XXH64) — the raw feed's integer fallback
-                    # would mis-hash them.  Only VERIFIED-parity types
-                    # are accepted (advisor r4: str(x) of an arbitrary
-                    # object is not what the JVM hashes)
-                    if vals.dtype == np.float64:
-                        feeder.feed_hashed(hashing.xxhash64_f64(vals))
-                    elif vals.dtype == np.float32:
-                        feeder.feed_hashed(hashing.xxhash64_f32(vals))
-                    elif vals.dtype == object and all(
-                        isinstance(x, str) for x in vals
-                    ):
-                        feeder.feed_hashed(hashing.xxhash64_str(list(vals)))
-                    else:
-                        raise TypeError(
-                            "xxhash64 domain has no JVM-parity hash for "
-                            f"value dtype {vals.dtype}"
-                        )
+                if hashed:
+                    feeder.feed_hashed(vals)
                 else:
                     feeder.feed_raw(vals)
         if not feeders:

@@ -39,11 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sketchlib.spark.cache import SingleSlotCache
 from sketchlib.text.grams import grams
-
-#: the latest call's persisted source projection (one-slot contract)
-_src_cache = SingleSlotCache()
 
 
 def ngram_novelty(
@@ -53,24 +49,14 @@ def ngram_novelty(
     w: int = 5,
     tokens: bool = False,
     hash_grams: bool = False,
-    cache: bool = False,
 ) -> DataFrame:
     """Append ``n_grams``, ``novel_grams``, ``novelty`` to ``docs``.
 
     The occurrence lineage is read twice (once building the global
-    gram counts, once as the join probe); ``cache=True`` persists the
-    slim (id, source-column) projection so the two evaluations share
-    one source scan — the `remove_duplicate_spans` trade: the shingle
-    transform still runs twice, but that is parallel CPU next to
-    re-scanning a wide table.  The returned plan references the cached
-    frame lazily, and it stays cached until the next ``cache=True``
-    call (``spark/cache.py``); keep the default for one-shot scoring,
-    where Spark's shuffle reuse already avoids most of the duplication."""
+    gram counts, once as the join probe); Spark's shuffle reuse
+    already avoids most of the duplication."""
     g = grams(docs, col, w, tokens=tokens, hashed=hash_grams)
-    src = docs.select(id_col, col)
-    if cache:
-        src = _src_cache.hold(src.persist())
-    occ = src.select(id_col, F.explode(g).alias("__gram"))
+    occ = docs.select(id_col, F.explode(g).alias("__gram"))
     counts = occ.groupBy("__gram").agg(F.count(F.lit(1)).alias("__c"))
     per_doc = (
         occ.join(counts, "__gram")

@@ -474,6 +474,26 @@ def test_one_keyed_merge():
     }
 
 
+def test_one_hash_per_input_kind():
+    """Source guard: the direct scan has no hash family of its own —
+    no hash switch, no private kind, no splitmix helpers for scalars —
+    and under ``spark/`` only ``aggregate.py`` names a hash domain."""
+    import pathlib
+
+    import sketchlib
+
+    root = pathlib.Path(sketchlib.__file__).parent
+    texts = {
+        p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")
+    }
+    for gone in ("hash_compat", "_hash_any", "hash64_numpy", "hash_f64"):
+        assert [n for n, t in texts.items() if gone in t] == [], gone
+    for domain in ("DOMAIN_XXHASH64", "DOMAIN_SPLITMIX64"):
+        assert [
+            n for n, t in texts.items() if n.startswith("spark/") and domain in t
+        ] == ["spark/aggregate.py"], domain
+
+
 def test_gram_operators_release_their_cached_frame(spark):
     """``ngram_jaccard_pairs`` and ``remove_duplicate_spans`` hold their
     persisted frame in a one-slot cache: three calls on different

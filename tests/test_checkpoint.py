@@ -231,3 +231,27 @@ def test_cross_engine_resume_hash_sketch(spark, tokens_df, tmp_path):
     assert m["lineages_recomputed"] == N_LINEAGE // 2
     true = tokens_df.select("n_tok").distinct().count()
     assert abs(sk.estimate() - true) / true < 0.15
+
+
+def test_direct_checkpoint_key_is_value_column(spark, tokens_df, tmp_path):
+    """``jobs build --direct --checkpoint`` keys lineages by the
+    sketched column unless told otherwise: the direct engine reads that
+    column once and builds the JVM path's HLL byte for byte."""
+    from sketchlib.core.hll import HyperLogLog
+    from sketchlib.spark.aggregate import KIND_HASH64
+    from sketchlib.spark.checkpoint import run_checkpointed_direct
+
+    path = str(tmp_path / "tok")
+    tokens_df.write.parquet(path)
+    sk_j, _ = run_checkpointed(
+        spark, spark.read.parquet(path), "doc_id", lambda: HyperLogLog(p=12),
+        checkpoint_dir=str(tmp_path / "ck_jvm"), lineage_col="doc_id",
+        kind=KIND_HASH64, n_lineage=N_LINEAGE, sketch_kind="hll",
+    )
+    sk_d, m_d = run_checkpointed_direct(
+        spark, path, "doc_id", lambda: HyperLogLog(p=12),
+        checkpoint_dir=str(tmp_path / "ck_direct"), lineage_col="doc_id",
+        kind=KIND_HASH64, n_lineage=N_LINEAGE, sketch_kind="hll",
+    )
+    assert m_d["n_updates"] == N_ROWS
+    assert sk_d.to_bytes() == sk_j.to_bytes()

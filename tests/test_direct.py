@@ -57,8 +57,8 @@ def test_direct_scalar_column(spark, token_path):
 
 
 def test_direct_hash_kind_int(spark, token_path):
-    # hash64 on an int column uses numpy splitmix64 instead of JVM
-    # xxhash64 — estimates must still hit the HLL bound
+    # hash64 on an int column hashes with the numpy XXH64 — estimates
+    # must hit the HLL bound
     sk = sketch_parquet(
         spark, token_path, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64
     )
@@ -66,10 +66,9 @@ def test_direct_hash_kind_int(spark, token_path):
     assert abs(sk.estimate() - true) / true <= 4 * sk.relative_std_error()
 
 
-def test_direct_size_hint_and_hash_compat_check(spark, token_path, monkeypatch):
+def test_direct_size_hint(spark, token_path, monkeypatch):
     """sketch_parquet hands its real task count to tree_merge (no plan
-    conversion just to count partitions), and an unknown hash_compat
-    fails before any DataFrame is built."""
+    conversion just to count partitions)."""
     from sketchlib.spark import direct
 
     hints = []
@@ -84,58 +83,137 @@ def test_direct_size_hint_and_hash_compat_check(spark, token_path, monkeypatch):
     files = list_parquet_files(token_path)
     assert hints == [min(len(files), 2 * spark.sparkContext.defaultParallelism)]
 
-    monkeypatch.setattr(
-        direct, "_map_files", lambda *a: pytest.fail("DataFrame built")
-    )
-    with pytest.raises(ValueError, match="hash_compat"):
-        sketch_parquet(
-            spark, token_path, "n_tok", lambda: HyperLogLog(p=12),
-            KIND_HASH64, hash_compat="bogus",
-        )
-
 
 def test_cross_hash_domain_merge_refused(spark, token_path):
-    """A direct-path HLL (numpy splitmix64) must REFUSE to merge with a
-    DataFrame-path HLL (JVM xxhash64) — their register states live in
-    different hash domains and a merged estimate would be silently
-    wrong.  The guard rides the serialized header, so it also fires
-    through serde.merge_blobs (the Spark merge stages)."""
+    """Both engines hash KIND_HASH64 with Spark's xxhash64, so their
+    HLL states are byte-equal and their SpaceSaving states (capacity
+    above the distinct count: no eviction) count the same hashes; a
+    KIND_ARRAY_HASH state (splitmix64) must REFUSE to merge with them —
+    the states live in different hash domains and a merged estimate
+    would be silently wrong.  The guard rides the serialized header, so
+    it also fires through serde.merge_blobs (the Spark merge stages)."""
     from sketchlib import serde
     from sketchlib.core.hashing import DOMAIN_SPLITMIX64, DOMAIN_XXHASH64
-
-    direct = sketch_parquet(
-        spark, token_path, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64
-    )
-    df = spark.read.parquet(token_path)
-    via_df = sketch_column(df, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64)
-    assert direct.hash_domain == DOMAIN_SPLITMIX64
-    assert via_df.hash_domain == DOMAIN_XXHASH64
-    with pytest.raises(ValueError, match="hash domain"):
-        direct.merge(via_df)
-    # and through the serialized-blob path the merge stages use
-    with pytest.raises(ValueError, match="hash domain"):
-        serde.merge_blobs([direct.to_bytes(), via_df.to_bytes()])
-    # same-domain merges still work
-    direct2 = sketch_parquet(
-        spark, token_path, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64
-    )
-    direct.merge(direct2)
-    rt = serde.from_bytes(direct.to_bytes())
-    assert rt.hash_domain == DOMAIN_SPLITMIX64
-    # SpaceSaving (the heavy-hitter state) is guarded too
     from sketchlib.core.spacesaving import SpaceSaving
 
-    ss_d = sketch_parquet(
-        spark, token_path, "n_tok", lambda: SpaceSaving(capacity=64),
+    df = spark.read.parquet(token_path)
+    for factory, state in (
+        (lambda: HyperLogLog(p=12), lambda sk: sk.to_bytes()),
+        (lambda: SpaceSaving(capacity=4096), lambda sk: (sk.counts, sk.total)),
+    ):
+        direct = sketch_parquet(spark, token_path, "n_tok", factory, KIND_HASH64)
+        via_df = sketch_column(df, "n_tok", factory, KIND_HASH64)
+        assert direct.hash_domain == via_df.hash_domain == DOMAIN_XXHASH64
+        assert state(direct) == state(via_df)
+        tok = sketch_parquet(spark, token_path, "tokens", factory, KIND_ARRAY_HASH)
+        assert tok.hash_domain == DOMAIN_SPLITMIX64
+        with pytest.raises(ValueError, match="hash domain"):
+            direct.merge(tok)
+        # and through the serialized-blob path the merge stages use
+        with pytest.raises(ValueError, match="hash domain"):
+            serde.merge_blobs([tok.to_bytes(), direct.to_bytes()])
+        direct.merge(via_df)  # same-domain merges still work
+
+
+def test_probes_refuse_foreign_hash_domains(spark, token_path):
+    """Probes hash keys with xxhash64: a direct KIND_HASH64 Bloom has
+    no false negatives over its own keys, and a KIND_ARRAY_HASH
+    (splitmix64) Bloom or CMS is refused instead of answering for keys
+    it never saw."""
+    from sketchlib.core.bloom import BloomFilter
+    from sketchlib.core.cms import CountMinSketch
+    from sketchlib.spark.api import bloom_contains, cms_frequencies
+
+    df = spark.read.parquet(token_path)
+    proto = BloomFilter.from_capacity(8_000, 0.01)
+    bloom = sketch_parquet(
+        spark, token_path, "doc_id", lambda: BloomFilter(proto.m, proto.k),
         KIND_HASH64,
     )
-    ss_j = sketch_column(
-        df, "n_tok", lambda: SpaceSaving(capacity=64), KIND_HASH64
+    absent = bloom_contains(df, "doc_id", bloom).filter(~F.col("member"))
+    assert absent.count() == 0
+    for factory, probe in (
+        (lambda: BloomFilter(proto.m, proto.k),
+         lambda sk: bloom_contains(df, "doc_id", sk)),
+        (lambda: CountMinSketch(4, 1024),
+         lambda sk: cms_frequencies(sk, df, "source")),
+    ):
+        sk = sketch_parquet(spark, token_path, "tokens", factory, KIND_ARRAY_HASH)
+        with pytest.raises(ValueError, match="hash domain"):
+            probe(sk)
+
+
+def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path):
+    """The lineage kernel hashes non-integer KIND_HASH64 values before
+    routing them, dropping null rows as the ungrouped scan does: over a
+    nullable float32 column both direct builds give one HLL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark.checkpoint import run_checkpointed_direct
+
+    vals = [None if i % 7 == 0 else i / 3.0 for i in range(3000)]
+    path = tmp_path / "nullable"
+    path.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array(np.arange(3000)), "v": pa.array(vals, pa.float32())}),
+        str(path / "part0.parquet"),
     )
-    assert ss_d.hash_domain == DOMAIN_SPLITMIX64
-    assert ss_j.hash_domain == DOMAIN_XXHASH64
-    with pytest.raises(ValueError, match="hash domain"):
-        ss_d.merge(ss_j)
+    scan = sketch_parquet(
+        spark, str(path), "v", lambda: HyperLogLog(p=12), KIND_HASH64
+    )
+    ck, m = run_checkpointed_direct(
+        spark, str(path), "v", lambda: HyperLogLog(p=12),
+        str(tmp_path / "ck"), "k", kind=KIND_HASH64, n_lineage=4,
+    )
+    assert m["n_updates"] == sum(v is not None for v in vals)
+    assert ck.to_bytes() == scan.to_bytes()
+
+
+def test_direct_hash64_rejects_uint64(spark, tmp_path):
+    """Spark reads parquet UINT_64 as a decimal, so a uint64 column has
+    no Spark-parity xxhash64: the direct KIND_HASH64 build fails loud."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "u64.parquet")
+    pq.write_table(pa.table({"v": pa.array(np.arange(10, dtype=np.uint64))}), path)
+    with pytest.raises(Exception, match="uint64"):
+        sketch_parquet(spark, path, "v", lambda: HyperLogLog(p=12), KIND_HASH64)
+
+
+@pytest.mark.parametrize(
+    "arrow_type",
+    ["int32", "int64", "string", "float64", "float32"],
+)
+def test_direct_hash64_equals_dataframe_path(spark, tmp_path, arrow_type):
+    """KIND_HASH64 is one hash on both engines: a direct-scan HLL is
+    byte-equal to ``sketch_column``'s over the same parquet column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    vals = rng.integers(-50_000, 50_000, 3000)
+    if arrow_type == "string":
+        arr = pa.array([f"k{v}" for v in vals])
+    else:
+        floats = arrow_type.startswith("float")
+        arr = pa.array(vals / 7.0 if floats else vals).cast(arrow_type)
+    path = tmp_path / "keys"
+    path.mkdir()
+    for i in range(3):
+        pq.write_table(
+            pa.table({"v": arr[i * 1000:(i + 1) * 1000]}),
+            str(path / f"part{i}.parquet"),
+        )
+    direct = sketch_parquet(
+        spark, str(path), "v", lambda: HyperLogLog(p=12), KIND_HASH64
+    )
+    via_df = sketch_column(
+        spark.read.parquet(str(path)), "v", lambda: HyperLogLog(p=12),
+        KIND_HASH64,
+    )
+    assert direct.to_bytes() == via_df.to_bytes()
 
 
 def test_row_group_predicate_pushdown(spark, tmp_path):
@@ -470,17 +548,17 @@ def test_xxhash64_numpy_bit_equal_jvm(spark):
 
 
 def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path):
-    """hash_compat='xxhash64': a direct-scan HLL must be REGISTER-
-    IDENTICAL to the DataFrame path's KIND_HASH64 build over the same
-    keys and merge with it; the default splitmix mode must still
-    refuse the cross-domain merge."""
+    """A direct-scan HLL must be REGISTER-IDENTICAL to the DataFrame
+    path's build over the same keys and merge with it, for KIND_HASH64
+    over a long column and KIND_ARRAY_HASH over token arrays; a
+    checkpointed direct build of the same column merges with both."""
     from sketchlib.core.hll import HyperLogLog
     from sketchlib.spark.aggregate import (
-        KIND_ARRAY,
         KIND_ARRAY_HASH,
         KIND_HASH64,
         sketch_column,
     )
+    from sketchlib.spark.checkpoint import run_checkpointed_direct
     from sketchlib.spark.direct import sketch_parquet
 
     path = str(tmp_path / "tok")
@@ -492,39 +570,35 @@ def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path):
     df.repartition(4).write.parquet(path)
     back = spark.read.parquet(path)
 
-    # scalar long column: direct xxhash64 == DataFrame KIND_HASH64
+    # scalar long column: direct KIND_HASH64 == DataFrame KIND_HASH64
     jvm_hll = sketch_column(back, "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64)
     xx_hll = sketch_parquet(
         spark, path, "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64,
-        hash_compat="xxhash64",
     )
     assert jvm_hll.to_bytes() == xx_hll.to_bytes()
     merged = HyperLogLog.from_bytes(jvm_hll.to_bytes()).merge(xx_hll)
     assert abs(merged.estimate() - 300) / 300 < 0.1
+    # the checkpointed direct build hashes the same way: its lineage
+    # states merge into the same registers
+    ck_hll, _ = run_checkpointed_direct(
+        spark, path, "doc_id", lambda: HyperLogLog(p=12),
+        str(tmp_path / "ck"), "doc_id", kind=KIND_HASH64, n_lineage=4,
+    )
+    assert ck_hll.to_bytes() == jvm_hll.to_bytes()
+    assert ck_hll.merge(xx_hll).to_bytes() == jvm_hll.to_bytes()
 
-    # int32 token elements: direct xxhash64 == JVM hash of EXPLODED ints
-    exploded = back.select(F.explode("tokens").alias("t"))
-    jvm_tok = sketch_column(exploded, "t", lambda: HyperLogLog(p=12), KIND_HASH64)
-    xx_tok = sketch_parquet(
+    # token elements: direct KIND_ARRAY_HASH == DataFrame KIND_ARRAY_HASH
+    jvm_tok = sketch_column(back, "tokens", lambda: HyperLogLog(p=12), KIND_ARRAY_HASH)
+    sm_tok = sketch_parquet(
         spark, path, "tokens", lambda: HyperLogLog(p=12), KIND_ARRAY_HASH,
-        hash_compat="xxhash64",
     )
-    assert jvm_tok.to_bytes() == xx_tok.to_bytes()
-
-    # default splitmix mode still refuses the cross-domain merge
-    sm = sketch_parquet(
-        spark, path, "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64,
-    )
-    with pytest.raises(ValueError, match="hash domains"):
-        sm.merge(jvm_hll)
+    assert jvm_tok.to_bytes() == sm_tok.to_bytes()
 
 
 def test_xxhash64_strings_doubles_bit_equal_jvm(spark):
     """Vectorized XXH64 for StringType (UTF-8, full algorithm incl. the
     32-byte stripe path) and DoubleType (-0.0 normalized) must be
-    BIT-EQUAL to F.xxhash64, and the direct path's xxhash64 mode must
-    produce a byte-identical HLL to the DataFrame path over a STRING
-    key column."""
+    BIT-EQUAL to F.xxhash64."""
     import random
 
     from sketchlib.core.hashing import xxhash64_f64, xxhash64_str
@@ -570,7 +644,6 @@ def test_direct_xxhash64_string_column_merges(spark, tmp_path):
     )
     xx_hll = sketch_parquet(
         spark, path, "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64,
-        hash_compat="xxhash64",
     )
     assert jvm_hll.to_bytes() == xx_hll.to_bytes()
     merged = HyperLogLog.from_bytes(jvm_hll.to_bytes()).merge(xx_hll)
@@ -653,7 +726,7 @@ def test_lineage_key_type_validated_early(spark, tmp_path):
 
 
 def test_xxhash64_type_parity_matrix(spark, tmp_path):
-    """Advisor r4 (medium): hash_compat='xxhash64' must be bit-equal to
+    """Advisor r4 (medium): the numpy XXH64 must be bit-equal to
     what the JVM computes for the Spark type each parquet physical type
     READS BACK AS — float32 via hashInt(floatToIntBits), uint32 via
     hashLong of the zero-extended value (Spark reads UINT_32 as
@@ -722,7 +795,7 @@ def test_xxhash64_type_parity_matrix(spark, tmp_path):
 
 def test_direct_xxhash64_float32_column_merges(spark, tmp_path):
     """End-to-end: a float32 parquet column sketched by the direct
-    engine in xxhash64 mode produces a byte-identical HLL to the
+    engine with KIND_HASH64 produces a byte-identical HLL to the
     DataFrame path (F.xxhash64 on the FloatType column)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -741,7 +814,6 @@ def test_direct_xxhash64_float32_column_merges(spark, tmp_path):
     )
     xx_hll = sketch_parquet(
         spark, path, "v", lambda: HyperLogLog(p=12), KIND_HASH64,
-        hash_compat="xxhash64",
     )
     assert jvm_hll.to_bytes() == xx_hll.to_bytes()
 
