@@ -11,6 +11,8 @@ rank-combine (parallel_digest.rs:25-51):
            with numpy kernels (zero per-row Python).  Emits ``state:
            binary`` rows of bounded size (KBs), so stage-2 shuffle
            volume is ~P * sketch_size per key regardless of input.
+           ``sketch_columns`` over a bare parquet scan runs this stage
+           on the direct kernel instead (``direct._direct_partials``).
   stage 2  one level loop for every build (``_merge_levels``): merge
            each key's P states (P from ``_plan_partitions``, which
            never runs the input) in ceil(P/fanout) buckets keyed by
@@ -438,9 +440,9 @@ def _prefetch(it, depth: int = 4):
             close()
 
 
-def _batch_values(batch: pa.RecordBatch, col_idx: int, kind: str) -> np.ndarray:
-    """Extract a numpy value stream from one Arrow batch (no Python rows)."""
-    arr = batch.column(col_idx)
+def _batch_values(arr: pa.Array, kind: str) -> np.ndarray:
+    """Extract a numpy value stream from one Arrow column batch (no
+    Python rows)."""
     if kind == KIND_DOUBLE:
         if arr.null_count:
             arr = arr.drop_null()
@@ -527,9 +529,13 @@ def _gather_list_slices(
 
 def _value_col(col: str, kind: str):
     """The sketched column.  KIND_HASH64 hashes JVM-side, so the
-    xxhash64 stays in whole-stage codegen; the projection prunes the
-    parquet scan to the columns sketched."""
-    return F.xxhash64(F.col(col)) if kind == KIND_HASH64 else F.col(col)
+    xxhash64 stays in whole-stage codegen; a NULL stays NULL (not
+    ``F.xxhash64``'s seed), so ``_batch_values`` drops it as the direct
+    scan does.  The projection prunes the parquet scan to the columns
+    sketched."""
+    if kind != KIND_HASH64:
+        return F.col(col)
+    return F.when(F.col(col).isNotNull(), F.xxhash64(F.col(col)))
 
 
 def _partials_batch(states, items, secs: float, /, **keys) -> pa.RecordBatch:
@@ -574,7 +580,7 @@ def _tagged_partials(
         ]
         for b in _prefetch(batches):
             for i, feeder in enumerate(feeders):
-                feeder.feed_raw(_batch_values(b, i, kinds[i]))
+                feeder.feed_raw(_batch_values(b.column(i), kinds[i]))
         items = [f.finish() for f in feeders]
         got = [i for i, n in enumerate(items) if n > 0]
         if not got:
@@ -753,12 +759,27 @@ def sketch_columns(
     each; ``tree_merge`` reduces each tag separately, so no reducer
     sees more than ``fanout`` states, sized by the input's planned
     partition count (``_plan_partitions``, which never runs the
-    input).  Returns {column: sketch} for the columns with values."""
+    input).  Returns {column: sketch} for the columns with values.
+
+    When ``df`` is only a parquet scan (``direct._scan_files`` decides,
+    from the plan), stage 1 runs on the direct engine over its files
+    instead: pyarrow decodes inside the Python worker, skipping the
+    JVM decode and the Arrow handoff.  Both engines feed each kind the
+    same values and hash them the same way."""
+    from sketchlib.spark.direct import _direct_partials, _scan_files
+
+    size = _plan_partitions(df, assume=collect_threshold + 1)
+    scan = _scan_files(df, specs, size)
+    if scan is None:
+        partials = _tagged_partials(df, specs)
+    else:
+        files, size, types = scan
+        partials = _direct_partials(df.sparkSession, files, size, specs, types)
     return tree_merge(
-        _tagged_partials(df, specs),
+        partials,
         fanout=fanout,
         collect_threshold=collect_threshold,
-        size_hint=_plan_partitions(df, assume=collect_threshold + 1),
+        size_hint=size,
     )
 
 

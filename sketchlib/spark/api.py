@@ -1954,11 +1954,9 @@ def profile_table(
     Exactly TWO scans regardless of column count: one Catalyst
     aggregation for the exact row/null counts of every column, and one
     ``sketch_columns`` pass building every column's HyperLogLog in a
-    single read (tagged partials, tree-merged).  ``approx_distinct``
-    is corrected for the null phantom (``xxhash64(NULL)`` hashes to
-    the seed constant, which the sketch would count as one value) and
-    carries the usual HLL error (~1.04/sqrt(2^p)).  With
-    ``columns=None`` map-typed columns are skipped (Spark's hash
+    single read (tagged partials, tree-merged; NULL is not a value).
+    ``approx_distinct`` carries the usual HLL error (~1.04/sqrt(2^p)).
+    With ``columns=None`` map-typed columns are skipped (Spark's hash
     expressions reject MapType); name one explicitly to get the
     AnalysisException."""
     from sketchlib.core.hll import HyperLogLog
@@ -1984,8 +1982,6 @@ def profile_table(
         n_nulls = int(agg_row[f"__nulls_{i}"] or 0)
         sk = sketches.get(c)
         est = float(sk.estimate()) if sk is not None else 0.0
-        if n_nulls > 0:
-            est = max(est - 1.0, 0.0)
         rows.append((c, dtypes.get(c, ""), n_rows, n_nulls, int(round(est))))
     return local_frame(
         df.sparkSession,

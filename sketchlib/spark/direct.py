@@ -19,11 +19,15 @@ so no Python RDD runs anywhere in the library: a session's first
 Python RDD costs about 1.5 s of start-up, once, that a ``range`` does
 not.
 
-Trade-off vs the generic DataFrame path (aggregate.py): no Catalyst
-expressions on the way in (column selection is explicit; row-group
-predicate pushdown can be added per-field).  Use this path for
-scan-bound bulk builds; use the DataFrame path when the input is the
-output of arbitrary Spark transformations.
+The operators choose the engine themselves: ``aggregate.sketch_columns``
+(and so ``sketch_column`` and every ungrouped operator above it) builds
+on this kernel whenever the frame is only a parquet scan, as
+``_scan_files`` decides from the optimized plan, and on the JVM path
+(aggregate.py) otherwise -- a filter, a computed column, a cache, a
+join or a partitioned table all keep Catalyst on the way in.  No option
+selects the engine.  ``sketch_parquet``/``sketch_iceberg`` call it on
+an explicit file list (with row-group pruning); grouped and
+``build_partials`` builds stay on the JVM.
 
 Hashing follows the input kind exactly as on the DataFrame path
 (``aggregate._kind_domain``), so hash sketches built by either engine
@@ -52,7 +56,9 @@ decode releases the GIL, so decode runs on ``aggregate._prefetch``'s
 read-ahead thread while the task thread feeds the previous batch
 (+~45% single-task, uniform gains across 2/8/32-core legs).
 
-Both builders here run the DataFrame path's stage-1 skeleton: the
+The one ungrouped kernel (``_direct_partials``, one tagged state row
+per column per task) and the lineage kernel run the DataFrame path's
+stage-1 skeleton: the
 same read-ahead thread, key router (``_route``), partial-row encoder
 (``_partials_batch``), state merge and driver fold.
 """
@@ -69,6 +75,8 @@ from sketchlib.core import hashing
 from sketchlib.spark.aggregate import (
     _ACC_BUDGET_BYTES,
     _PARTIAL_SCHEMA,
+    _TAGGED_SCHEMA,
+    KIND_ARRAY,
     KIND_ARRAY_HASH,
     KIND_DOUBLE,
     KIND_HASH64,
@@ -125,6 +133,128 @@ def _file_tasks(spark: SparkSession, path: str, files, tasks):
     if tasks is None:
         tasks = max(min(len(files), 2 * spark.sparkContext.defaultParallelism), 1)
     return files, tasks
+
+
+# Spark scalar types (``DataType.typeName()``) the direct kernel reads
+# as the Arrow type the JVM path hands Python, and those each input
+# kind is verified against: KIND_HASH64's are the types whose numpy
+# XXH64 is bit-equal to ``F.xxhash64`` (DecimalType never qualifies)
+_ARROW_OF = {
+    "byte": pa.int8(), "short": pa.int16(), "integer": pa.int32(),
+    "long": pa.int64(), "float": pa.float32(), "double": pa.float64(),
+    "string": pa.string(),
+}
+_NUMERIC = ("byte", "short", "integer", "long", "float", "double")
+_KIND_TYPES = {
+    KIND_DOUBLE: _NUMERIC,
+    KIND_ARRAY: _NUMERIC,
+    KIND_ARRAY_HASH: _NUMERIC,
+    KIND_HASH64: ("integer", "long", "float", "double", "string"),
+}
+
+
+def _read_type(dtype, kind: str) -> pa.DataType | None:
+    """The Arrow type (an array's element type) the JVM path hands
+    Python for a frame column of Spark ``dtype``, or None when the
+    direct kernel is not verified against that type under ``kind``."""
+    if kind in (KIND_ARRAY, KIND_ARRAY_HASH):
+        if dtype.typeName() != "array":
+            return None
+        dtype = dtype.elementType
+    name = dtype.typeName()
+    return _ARROW_OF[name] if name in _KIND_TYPES.get(kind, ()) else None
+
+
+def _widened(arr: pa.Array, to: pa.DataType | None) -> pa.Array:
+    """``arr`` with its scalar or list-element type cast to ``to``, the
+    type Spark reads the frame column as: a file that stores a long
+    column as int32, or a double one as float32, then feeds and hashes
+    the values the JVM path does (None leaves ``arr`` as stored)."""
+    if to is None:
+        return arr
+    t = arr.type
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        if t.value_type == to:
+            return arr
+        make = pa.large_list if pa.types.is_large_list(t) else pa.list_
+        return arr.cast(make(t.value_field.with_type(to)))
+    return arr if t == to else arr.cast(to)
+
+
+def _scan_files(df, specs: dict, partitions: int):
+    """``(files, tasks, types)`` for the direct kernel to build
+    ``specs`` over in place of ``df`` -- the sorted data files, the
+    task count and each spec column's read type (``_read_type``) -- or
+    None when ``df`` must take the JVM path: the one admission rule of
+    ``aggregate.sketch_columns``.  A frame is admitted only when all of
+    these hold:
+
+    - its optimized plan is a parquet ``LogicalRelation``, optionally
+      under a ``Project`` of plain attributes and a ``Repartition``
+      (so no filter, ``observe``, cached relation, join, limit or
+      sample);
+    - the relation has no partition columns (hive partition values
+      are not stored in the files);
+    - each spec column is one of ``df``'s columns, of a Spark type
+      ``_KIND_TYPES`` lists for its kind, and the first file stores it
+      under that name as a type that casts to its read type (every
+      file's batches are cast to it; a file without the column feeds
+      nothing, as its NULLs feed nothing on the JVM path);
+    - ``pyarrow.fs`` resolves the first file's URI;
+    - there are at least ``min(partitions, defaultParallelism)`` files:
+      the direct scan's unit is a file, so a table of a few huge files
+      keeps the JVM's split-level parallelism.
+
+    ``partitions`` is ``df``'s planned partition count.  The task count
+    is ``_file_tasks``' default, capped at a ``coalesce(n)`` or
+    ``repartition(n)``'s n, so a frame bounded to n partitions runs at
+    most n tasks."""
+    import pyarrow.parquet as pq
+
+    from pyarrow import fs as pafs
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    cap = None
+    while (name := plan.getClass().getSimpleName()) in ("Repartition", "Project"):
+        if name == "Repartition" and cap is None:
+            cap = plan.numPartitions()
+        if name == "Project":
+            exprs = plan.projectList()
+            if any(
+                exprs.apply(i).getClass().getSimpleName() != "AttributeReference"
+                for i in range(exprs.size())
+            ):
+                return None
+        plan = plan.child()
+    if name != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.partitionSchema().size() > 0
+    ):
+        return None
+    files = sorted(df.inputFiles())
+    spark = df.sparkSession
+    if not files or len(files) < min(partitions, spark.sparkContext.defaultParallelism):
+        return None
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    types = {
+        col: _read_type(fields[col], kind) if col in fields else None
+        for col, (_factory, kind) in specs.items()
+    }
+    if None in types.values():
+        return None
+    try:
+        filesystem, first = pafs.FileSystem.from_uri(files[0])
+        schema = pq.read_schema(first, filesystem=filesystem)
+        for col, to in types.items():
+            _widened(pa.array([], schema.field(col).type), to)
+    except (pa.ArrowException, OSError, ValueError, KeyError):
+        return None
+    _files, tasks = _file_tasks(spark, None, files, None)
+    return files, min(tasks, cap or tasks), types
 
 
 def _map_files(spark: SparkSession, files, tasks: int, fn, schema: str):
@@ -249,32 +379,54 @@ def _xxhash64(arr: pa.Array):
     raise TypeError(f"no Spark-compatible xxhash64 for arrow type {arr.type}")
 
 
-def build_partials_direct(
+def _decoded(arr: pa.Array, kind: str, to, lo, hi):
+    """Decode side of one column batch, cast to read type ``to``
+    (``_widened``): ``(values, lo, hi)``, a numpy batch with its file's
+    footer bounds, or a non-integer KIND_HASH64 Arrow array still to be
+    hashed (bounds None)."""
+    arr = _widened(arr, to)
+    if kind != KIND_HASH64:
+        return _batch_values(arr, kind), lo, hi
+    if arr.null_count:
+        arr = arr.drop_null()
+    if pa.types.is_integer(arr.type):
+        return arr.to_numpy(zero_copy_only=False), lo, hi
+    return arr, None, None
+
+
+def _feed_bounds(md, column: str):
+    """``column``'s footer bounds as accumulator hints, (None, None)
+    when absent.  A file whose GLOBAL range exceeds the accumulator's
+    MAX_RANGE may still have narrow per-batch ranges (locally clustered
+    ids): the hint is dropped there so ``try_add`` falls back to exact
+    per-batch min/max instead of rejecting every batch outright."""
+    bounds = _file_column_bounds(md, column)
+    if bounds is None or bounds[1] - bounds[0] >= _BincountAcc.MAX_RANGE:
+        return None, None
+    return bounds
+
+
+def _direct_partials(
     spark: SparkSession,
-    path: str,
-    col: str,
-    factory: Callable[[], object],
-    kind: str = KIND_DOUBLE,
-    tasks: int | None = None,
-    files: list[str] | None = None,
+    files: list[str],
+    tasks: int,
+    specs: dict[str, tuple[Callable[[], object], str]],
+    types: dict[str, pa.DataType] | None = None,
     prune: tuple | None = None,
 ):
-    """Stage 1 over raw parquet files: returns the usual partials
-    DataFrame[state binary, items long, build_secs double].  Pass an
-    explicit ``files`` list to override discovery (e.g. a snapshot's
-    data-file list from an Iceberg manifest, or a repeated list for
-    benchmarking).
-
-    ``prune=(column_name, min, max)`` applies ROW-GROUP-level predicate
-    pushdown from the parquet footer statistics (the next pruning tier
-    under Iceberg's file-level bounds): row groups that cannot
-    intersect the range are never decoded.  Same granularity contract
-    as file pruning — it is a scan-planning operation (kept groups may
-    contain rows outside the range); exact row filtering stays with the
-    caller's semantics."""
-    files, tasks = _file_tasks(spark, path, files, tasks)
-    hash_mode = kind in (KIND_HASH64, KIND_ARRAY_HASH)
-    domain = _kind_domain(kind)
+    """Stage 1 over raw parquet files, the one direct kernel: ``specs``
+    maps column name -> (factory, kind); each task reads every spec
+    column of its file slice in one pass and emits one state row per
+    column it saw values of, tagged with the column name --
+    DataFrame[tag string, state binary, items long, build_secs double],
+    the shape of ``aggregate._tagged_partials``.  ``types`` maps a
+    column to the read type its batches are cast to (``_widened``);
+    without it each file's column is read as stored.  A file that
+    lacks a spec column feeds that column nothing (without ``types``,
+    it raises)."""
+    cols = list(specs)
+    kinds = [k for _f, k in specs.values()]
+    to = [(types or {}).get(c) for c in cols]
 
     def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -285,12 +437,17 @@ def build_partials_direct(
         # per-task bincount pre-reduction (see aggregate.AccFeeder):
         # weighted feed for quantile sketches over integer values;
         # distinct-hash feed for hash sketches over raw integers
-        feeder = AccFeeder(factory(), hash_mode=hash_mode, domain=domain)
+        budget = [_ACC_BUDGET_BYTES]
+        feeders = [
+            AccFeeder(
+                f(), k in (KIND_HASH64, KIND_ARRAY_HASH), _kind_domain(k), budget
+            )
+            for f, k in specs.values()
+        ]
 
         def decode():
-            """Decode side: (values, lo, hi) per batch — a numpy batch
-            with its file's footer bounds, or a non-integer KIND_HASH64
-            Arrow array still to be hashed."""
+            """Per batch, ``(i, triple)`` for each spec column ``i``
+            the file holds, the triple from ``_decoded``."""
             for fpath in paths:
                 filesystem, fp = pafs.FileSystem.from_uri(fpath)
                 with filesystem.open_input_file(fp) as fh:
@@ -302,46 +459,75 @@ def build_partials_direct(
                         )
                         if not row_groups:
                             continue  # whole file outside the range
-                    # footer-stat bounds: skip per-batch min/max
-                    # passes.  A file whose GLOBAL range exceeds the
-                    # accumulator's MAX_RANGE may still have narrow
-                    # per-batch ranges (locally clustered ids): drop
-                    # the hint there so try_add falls back to exact
-                    # per-batch min/max instead of rejecting every
-                    # batch outright.
-                    bounds = _file_column_bounds(pf.metadata, col)
-                    if bounds is not None and bounds[1] - bounds[0] >= _BincountAcc.MAX_RANGE:
-                        bounds = None
-                    blo, bhi = bounds if bounds else (None, None)
+                    # a frame's file may lack a column (read as NULLs);
+                    # without ``types`` a missing column raises
+                    here = [
+                        i for i, c in enumerate(cols)
+                        if types is None or pf.schema_arrow.get_field_index(c) >= 0
+                    ]
+                    if not here:
+                        continue
+                    # footer-stat bounds: skip per-batch min/max passes
+                    bounds = {i: _feed_bounds(pf.metadata, cols[i]) for i in here}
+                    rows = min(
+                        _batch_rows(pf.schema_arrow.field(cols[i]).type)
+                        for i in here
+                    )
                     for rb in pf.iter_batches(
-                        batch_size=_batch_rows(pf.schema_arrow.field(col).type),
-                        columns=[col], use_threads=False,
-                        row_groups=row_groups,
+                        batch_size=rows, columns=[cols[i] for i in here],
+                        use_threads=False, row_groups=row_groups,
                     ):
-                        if kind != KIND_HASH64:
-                            yield _batch_values(rb, 0, kind), blo, bhi
-                            continue
-                        arr = rb.column(0)
-                        if arr.null_count:
-                            arr = arr.drop_null()
-                        if pa.types.is_integer(arr.type):
-                            yield arr.to_numpy(zero_copy_only=False), blo, bhi
-                        else:  # hashed in the feed loop
-                            yield arr, None, None
+                        yield [
+                            (i, _decoded(rb.column(cols[i]), kinds[i], to[i], *bounds[i]))
+                            for i in here
+                        ]
 
-        for vals, lo, hi in _prefetch(decode(), depth=8):
-            if isinstance(vals, pa.Array):
-                feeder.feed_hashed(_xxhash64(vals))
-            else:
-                feeder.feed_raw(vals, lo, hi)
-        items = feeder.finish()
-        if items == 0:
+        for batch in _prefetch(decode(), depth=8):
+            for i, (vals, lo, hi) in batch:
+                if isinstance(vals, pa.Array):  # hashed in the feed loop
+                    feeders[i].feed_hashed(_xxhash64(vals))
+                else:
+                    feeders[i].feed_raw(vals, lo, hi)
+        items = [f.finish() for f in feeders]
+        got = [i for i, n in enumerate(items) if n > 0]
+        if not got:
             return
         yield _partials_batch(
-            [feeder.sk.to_bytes()], [items], time.monotonic() - t0
+            [feeders[i].sk.to_bytes() for i in got], [items[i] for i in got],
+            time.monotonic() - t0, tag=[cols[i] for i in got],
         )
 
-    return _map_files(spark, files, tasks, fn, _PARTIAL_SCHEMA)
+    return _map_files(spark, files, tasks, fn, _TAGGED_SCHEMA)
+
+
+def build_partials_direct(
+    spark: SparkSession,
+    path: str,
+    col: str,
+    factory: Callable[[], object],
+    kind: str = KIND_DOUBLE,
+    tasks: int | None = None,
+    files: list[str] | None = None,
+    prune: tuple | None = None,
+):
+    """Stage 1 over raw parquet files: returns the usual partials
+    DataFrame[state binary, items long, build_secs double], the
+    one-column view of ``_direct_partials``.  Pass an explicit
+    ``files`` list to override discovery (e.g. a snapshot's data-file
+    list from an Iceberg manifest, or a repeated list for
+    benchmarking).
+
+    ``prune=(column_name, min, max)`` applies ROW-GROUP-level predicate
+    pushdown from the parquet footer statistics (the next pruning tier
+    under Iceberg's file-level bounds): row groups that cannot
+    intersect the range are never decoded.  Same granularity contract
+    as file pruning — it is a scan-planning operation (kept groups may
+    contain rows outside the range); exact row filtering stays with the
+    caller's semantics."""
+    files, tasks = _file_tasks(spark, path, files, tasks)
+    return _direct_partials(
+        spark, files, tasks, {col: (factory, kind)}, prune=prune
+    ).drop("tag")
 
 
 def sketch_parquet(
@@ -434,7 +620,9 @@ def build_lineage_partials_direct(
     column type — so the ledger this feeds is INTERCHANGEABLE with the
     JVM path's (checkpoint.run_checkpointed): a job started on one
     engine can be resumed by the other, and both recompute exactly the
-    same missing lineage ids.  Within a task, rows are routed to
+    same missing lineage ids (a NULL key, hashed to ``F.xxhash64``'s
+    seed 42, lands in lineage ``pmod(42, n_lineage)`` on both).  Within
+    a task, rows are routed to
     per-lineage accumulators by the grouped DataFrame stage's router
     (``aggregate._route``: one sort per batch, cost independent of
     lineage count).  ``skip_lineages`` (a set of already-completed
@@ -480,11 +668,15 @@ def build_lineage_partials_direct(
         feeders: dict[int, AccFeeder] = {}
 
         def lineage_of(karr: pa.Array) -> "np.ndarray":
-            if karr.null_count:
-                raise ValueError(f"NULL {key_col} cannot carry a lineage")
             # numpy % with positive divisor is non-negative for
-            # negative int64 inputs — exactly Spark's pmod
-            lin = _xxhash64(karr).view(np.int64) % np.int64(n_lineage)
+            # negative int64 inputs — exactly Spark's pmod.  A NULL key
+            # hashes to F.xxhash64's seed, 42, as on the JVM path
+            if karr.null_count:
+                h = np.full(len(karr), 42, dtype=np.int64)
+                h[np.asarray(karr.is_valid())] = _xxhash64(karr.drop_null()).view(np.int64)
+            else:
+                h = _xxhash64(karr).view(np.int64)
+            lin = h % np.int64(n_lineage)
             if skip is not None:
                 lin[np.isin(lin, skip)] = -1  # _route drops code -1
             return lin

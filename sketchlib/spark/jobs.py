@@ -57,7 +57,7 @@ def _default_kind(sketch: str, kind: str) -> str:
 def job_build(args) -> None:
     from sketchlib.spark.aggregate import sketch_column
     from sketchlib.spark.checkpoint import run_checkpointed
-    from sketchlib.spark.io import read_table
+    from sketchlib.spark.io import _is_iceberg_dir, read_table
     from sketchlib.spark.session import get_spark
 
     spark = get_spark(master=args.master)
@@ -68,39 +68,34 @@ def job_build(args) -> None:
         kind = "array_hash"
 
     metrics = {}
-    if getattr(args, "direct", False) and args.format in ("auto", "parquet"):
-        from sketchlib.spark.io import _is_iceberg_dir
+    # a plain parquet build needs no switch: sketch_column runs the
+    # direct kernel itself when the frame is a bare parquet scan
+    direct = getattr(args, "direct", False) and args.format in ("auto", "parquet")
+    iceberg = direct and os.path.isdir(args.input) and _is_iceberg_dir(args.input)
+    if iceberg:
+        # direct scan over the snapshot's live files via the manifest
+        # chain (jar-free Iceberg path)
+        from sketchlib.spark.direct import sketch_iceberg
 
-        if args.checkpoint and not (
-            os.path.isdir(args.input) and _is_iceberg_dir(args.input)
-        ):
-            # direct scan WITH checkpointing: numpy-XXH64 lineage ids
-            # are bit-equal to the JVM's, so this ledger interoperates
-            # with non-direct runs (cross-engine resume)
-            from sketchlib.spark.checkpoint import run_checkpointed_direct
+        sk = sketch_iceberg(spark, args.input, args.col, factory, kind)
+    elif direct and args.checkpoint:
+        # direct scan WITH checkpointing: numpy-XXH64 lineage ids are
+        # bit-equal to the JVM's, so this ledger interoperates with
+        # non-direct runs (cross-engine resume)
+        from sketchlib.spark.checkpoint import run_checkpointed_direct
 
-            sk, metrics = run_checkpointed_direct(
-                spark,
-                args.input,
-                args.col,
-                factory,
-                checkpoint_dir=args.checkpoint,
-                lineage_col=args.lineage_col or args.col,
-                kind=kind,
-                sketch_kind=args.sketch,
-                n_lineage=args.n_lineage,
-                resume=not args.no_resume,
-            )
-        elif os.path.isdir(args.input) and _is_iceberg_dir(args.input):
-            # direct scan over the snapshot's live files via the
-            # manifest chain (jar-free Iceberg path)
-            from sketchlib.spark.direct import sketch_iceberg
-
-            sk = sketch_iceberg(spark, args.input, args.col, factory, kind)
-        else:
-            from sketchlib.spark.direct import sketch_parquet
-
-            sk = sketch_parquet(spark, args.input, args.col, factory, kind)
+        sk, metrics = run_checkpointed_direct(
+            spark,
+            args.input,
+            args.col,
+            factory,
+            checkpoint_dir=args.checkpoint,
+            lineage_col=args.lineage_col or args.col,
+            kind=kind,
+            sketch_kind=args.sketch,
+            n_lineage=args.n_lineage,
+            resume=not args.no_resume,
+        )
     elif args.checkpoint:
         sk, metrics = run_checkpointed(
             spark,
@@ -706,7 +701,8 @@ def main(argv=None) -> None:
     b.add_argument("--n-lineage", type=int, default=64)
     b.add_argument("--no-resume", action="store_true")
     b.add_argument("--direct", action="store_true",
-                   help="pyarrow-decode-in-worker scan (parquet input only)")
+                   help="pyarrow-decode-in-worker scan for an Iceberg table or "
+                   "a --checkpoint build (a plain parquet build picks it itself)")
     b.add_argument("--save-state", default=None)
     b.set_defaults(fn=job_build)
 

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 def test_profile_table(spark):
     """Two-scan profiler: exact rows/nulls per column, HLL distinct
-    within tolerance, null phantom corrected."""
+    within tolerance, NULL not counted as a value."""
     from sketchlib.spark.api import profile_table
 
     df = spark.createDataFrame(

@@ -26,6 +26,14 @@ def token_path(spark, tmp_path_factory):
     return path
 
 
+def _jvm_side(df):
+    """``df`` behind a filter every row passes and the optimizer keeps
+    (it is nondeterministic): ``sketch_columns`` routes only a bare
+    parquet scan to the direct engine, so a build over this frame runs
+    the JVM path, and a parity test compares the two engines."""
+    return df.filter(F.spark_partition_id() >= 0)
+
+
 def test_list_files(token_path):
     files = list_parquet_files(token_path)
     assert len(files) >= 1
@@ -36,7 +44,7 @@ def test_direct_matches_dataframe_path(spark, token_path):
     direct = sketch_parquet(
         spark, token_path, "tokens", lambda: TDigest(delta=800), KIND_ARRAY
     )
-    df = spark.read.parquet(token_path)
+    df = _jvm_side(spark.read.parquet(token_path))
     via_df = sketch_column(df, "tokens", lambda: TDigest(delta=800), KIND_ARRAY)
     assert direct.count == via_df.count
     assert direct.min == via_df.min and direct.max == via_df.max
@@ -96,7 +104,7 @@ def test_cross_hash_domain_merge_refused(spark, token_path):
     from sketchlib.core.hashing import DOMAIN_SPLITMIX64, DOMAIN_XXHASH64
     from sketchlib.core.spacesaving import SpaceSaving
 
-    df = spark.read.parquet(token_path)
+    df = _jvm_side(spark.read.parquet(token_path))
     for factory, state in (
         (lambda: HyperLogLog(p=12), lambda sk: sk.to_bytes()),
         (lambda: SpaceSaving(capacity=4096), lambda sk: (sk.counts, sk.total)),
@@ -146,7 +154,8 @@ def test_probes_refuse_foreign_hash_domains(spark, token_path):
 def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path):
     """The lineage kernel hashes non-integer KIND_HASH64 values before
     routing them, dropping null rows as the ungrouped scan does: over a
-    nullable float32 column both direct builds give one HLL."""
+    nullable float32 column both direct builds and the JVM path's
+    ``sketch_column`` give one HLL."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -168,6 +177,11 @@ def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path):
     )
     assert m["n_updates"] == sum(v is not None for v in vals)
     assert ck.to_bytes() == scan.to_bytes()
+    jvm = sketch_column(
+        _jvm_side(spark.read.parquet(str(path))), "v", lambda: HyperLogLog(p=12),
+        KIND_HASH64,
+    )
+    assert jvm.to_bytes() == scan.to_bytes()
 
 
 def test_direct_hash64_rejects_uint64(spark, tmp_path):
@@ -210,7 +224,7 @@ def test_direct_hash64_equals_dataframe_path(spark, tmp_path, arrow_type):
         spark, str(path), "v", lambda: HyperLogLog(p=12), KIND_HASH64
     )
     via_df = sketch_column(
-        spark.read.parquet(str(path)), "v", lambda: HyperLogLog(p=12),
+        _jvm_side(spark.read.parquet(str(path))), "v", lambda: HyperLogLog(p=12),
         KIND_HASH64,
     )
     assert direct.to_bytes() == via_df.to_bytes()
@@ -442,7 +456,7 @@ def test_direct_overlap_and_bounds_bit_identical(spark, tmp_path):
         )
         for f in list_parquet_files(path):
             for rb in pq.ParquetFile(f).iter_batches(columns=["tokens"]):
-                feeder.feed_raw(_batch_values(rb, 0, KIND_ARRAY))
+                feeder.feed_raw(_batch_values(rb.column(0), KIND_ARRAY))
         feeder.finish()
         return serde.from_bytes(feeder.sk.to_bytes()).to_bytes()
 
@@ -568,7 +582,7 @@ def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
     df.repartition(4).write.parquet(path)
-    back = spark.read.parquet(path)
+    back = _jvm_side(spark.read.parquet(path))
 
     # scalar long column: direct KIND_HASH64 == DataFrame KIND_HASH64
     jvm_hll = sketch_column(back, "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64)
@@ -640,7 +654,8 @@ def test_direct_xxhash64_string_column_merges(spark, tmp_path):
     rows = [(f"doc-{i:06d}",) for i in range(500)]
     spark.createDataFrame(rows, "doc_id string").repartition(4).write.parquet(path)
     jvm_hll = sketch_column(
-        spark.read.parquet(path), "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64
+        _jvm_side(spark.read.parquet(path)), "doc_id", lambda: HyperLogLog(p=12),
+        KIND_HASH64,
     )
     xx_hll = sketch_parquet(
         spark, path, "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64,
@@ -810,7 +825,8 @@ def test_direct_xxhash64_float32_column_merges(spark, tmp_path):
         pa.table({"v": pa.array(vals)}), os.path.join(path, "part0.parquet")
     )
     jvm_hll = sketch_column(
-        spark.read.parquet(path), "v", lambda: HyperLogLog(p=12), KIND_HASH64
+        _jvm_side(spark.read.parquet(path)), "v", lambda: HyperLogLog(p=12),
+        KIND_HASH64,
     )
     xx_hll = sketch_parquet(
         spark, path, "v", lambda: HyperLogLog(p=12), KIND_HASH64,
@@ -918,3 +934,268 @@ def test_direct_build_job_budget_and_task_coverage(spark, token_path, job_tasks)
         tasks=len(files) + 2,
     )
     assert partials.count() == len(files)
+
+
+# ------------------------------------------------- engine choice of sketch_columns
+
+
+@pytest.fixture
+def partials_plans(monkeypatch):
+    """The executed plans of the partials every ``sketch_columns`` call
+    hands ``tree_merge``, in call order."""
+    from sketchlib.spark import aggregate
+
+    plans = []
+    real = aggregate.tree_merge
+
+    def spy(partials, **kw):
+        plans.append(partials._jdf.queryExecution().executedPlan().toString())
+        return real(partials, **kw)
+
+    monkeypatch.setattr(aggregate, "tree_merge", spy)
+    return plans
+
+
+def _is_direct(plan: str) -> bool:
+    """A direct partial stage: tasks seeded by a ``Range``, no JVM scan."""
+    return "Range (0," in plan and "MapInArrow" in plan and "FileScan" not in plan
+
+
+def test_bare_scan_routes_to_the_direct_engine(
+    spark, token_path, job_tasks, partials_plans
+):
+    """A bare parquet scan, with or without ``coalesce``, is built by
+    the direct kernel: one job of one ``Range`` -> ``MapInArrow`` stage
+    with one task per file slice, at most n under ``coalesce(n)``, and
+    no ``FileScan``."""
+    files = list_parquet_files(token_path)
+    tasks = min(len(files), 2 * spark.sparkContext.defaultParallelism)
+    df = spark.read.parquet(token_path)
+    for i, (frame, n) in enumerate(
+        ((df, tasks), (df.coalesce(2), 2), (df.select("n_tok", "doc_id"), tasks))
+    ):
+        sk, jobs = job_tasks(
+            f"routed-build-{i}",
+            lambda: sketch_column(frame, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64),
+        )
+        assert jobs == [[n]]
+        assert _is_direct(partials_plans[-1]), partials_plans[-1]
+        assert sk.to_bytes() == sketch_parquet(
+            spark, token_path, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64
+        ).to_bytes()
+
+
+def test_transformed_frames_keep_the_jvm_path(spark, token_path, tmp_path, partials_plans):
+    """A filter, an ``observe``, a cached frame, a hive-partitioned
+    table, a decimal column and a one-file table that Spark splits
+    across the cores each keep the JVM plan, and build what they
+    read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import Observation
+
+    df = spark.read.parquet(token_path)
+    hll = lambda: HyperLogLog(p=12)  # noqa: E731
+    n = df.count()
+    cached = df.select("n_tok").cache()
+    hive = str(tmp_path / "hive")
+    df.write.partitionBy("source").parquet(hive)
+    dec = str(tmp_path / "dec")
+    df.select(F.col("n_tok").cast("decimal(12,2)").alias("d")).write.parquet(dec)
+    one = str(tmp_path / "one.parquet")
+    pq.write_table(
+        pa.table({"v": pa.array(np.arange(400_000, dtype=np.int64))}), one,
+        row_group_size=20_000,
+    )
+    cases = [
+        (df.filter(F.col("n_tok") > 0), "n_tok", KIND_HASH64),
+        (df.observe(Observation("rows"), F.count(F.lit(1)).alias("n")), "n_tok", KIND_HASH64),
+        (cached, "n_tok", KIND_HASH64),
+        (spark.read.parquet(hive), "n_tok", KIND_HASH64),
+        (spark.read.parquet(dec), "d", KIND_DOUBLE),
+    ]
+    try:
+        for frame, col, kind in cases:
+            factory = hll if kind == KIND_HASH64 else (lambda: TDigest(delta=100))
+            sk = sketch_column(frame, col, factory, kind)
+            assert "Range (0," not in partials_plans[-1], partials_plans[-1]
+            if kind == KIND_DOUBLE:
+                assert sk.count == n
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(256 << 10))
+        sk = sketch_column(spark.read.parquet(one), "v", hll, KIND_HASH64)
+        assert "FileScan" in partials_plans[-1], partials_plans[-1]
+        assert abs(sk.estimate() - 400_000) / 400_000 < 0.1
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        cached.unpersist()
+
+
+def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
+    """Over a bare scan the operators build on the direct engine, and
+    their states match the JVM path's: HLL, CMS and Bloom byte for
+    byte, SpaceSaving (no eviction) count for count; t-digest and KLL
+    meet their rank bounds; two routed builds are byte-equal."""
+    from sketchlib.core.spacesaving import SpaceSaving
+    from sketchlib.spark import api
+
+    df = spark.read.parquet(token_path)
+    jvm = _jvm_side(df)
+    builds = [
+        lambda d: api.approx_distinct(d, "doc_id")[1].to_bytes(),
+        lambda d: api.build_cms(d, "tokens", is_array=True).to_bytes(),
+        lambda d: api.build_bloom(d, "doc_id", capacity=8_000).to_bytes(),
+        lambda d: api.build_cms(d, "source").to_bytes(),
+        lambda d: sorted(
+            sketch_column(
+                d, "source", lambda: SpaceSaving(capacity=64), KIND_HASH64
+            ).counts.items()
+        ),
+    ]
+    for build in builds:
+        routed = build(df)
+        assert _is_direct(partials_plans[-1])
+        assert routed == build(jvm)
+        assert not _is_direct(partials_plans[-1])
+
+    rows = df.select("n_tok", "tokens").collect()
+    n_tok = np.sort([r["n_tok"] for r in rows])
+    tokens = np.sort(np.concatenate([r["tokens"] for r in rows]))
+    probs = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+    for values, col, sketch, is_array, eps in (
+        (n_tok, "n_tok", "tdigest", False, 0.01),
+        (tokens, "tokens", "kll", True, 0.02),
+    ):
+        est, sk = api.approx_quantiles(df, col, probs, sketch=sketch, is_array=is_array)
+        assert _is_direct(partials_plans[-1])
+        assert sk.count == values.size
+        lo = np.searchsorted(values, est, side="left") / values.size
+        hi = np.searchsorted(values, est, side="right") / values.size
+        assert np.all((lo - eps <= probs) & (np.asarray(probs) <= hi + eps)), (est, lo, hi)
+    again = api.approx_quantiles(df, "n_tok", probs)[1]
+    assert again.to_bytes() == api.approx_quantiles(df, "n_tok", probs)[1].to_bytes()
+
+
+def test_routed_build_reads_each_file_as_the_frame_types_it(
+    spark, tmp_path, partials_plans
+):
+    """Files that store a column narrower than the frame reads it (int32
+    under ``long``, float32 under ``double``) are widened before they
+    are hashed, and a file without a column feeds it nothing, as its
+    NULLs do on the JVM path: the routed HLL and Bloom equal the JVM
+    path's byte for byte."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark import api
+    from sketchlib.spark.aggregate import sketch_columns
+
+    path = tmp_path / "widths"
+    path.mkdir()
+    v = np.arange(-300, 300)
+    parts = (
+        {"v": pa.array(v[:200], pa.int32()), "w": pa.array(v[:200] / 8, pa.float32())},
+        {"v": pa.array(v[200:400], pa.int64()), "w": pa.array(v[200:400] / 8, pa.float64())},
+        {"v": pa.array(v[400:], pa.int32())},
+    )
+    for i, cols in enumerate(parts):
+        pq.write_table(pa.table(cols), str(path / f"part{i}.parquet"))
+    df = spark.read.schema("v long, w double").parquet(str(path))
+    specs = {c: (lambda: HyperLogLog(p=12), KIND_HASH64) for c in ("v", "w")}
+    routed = sketch_columns(df, specs)
+    assert _is_direct(partials_plans[-1]), partials_plans[-1]
+    jvm = sketch_columns(_jvm_side(df), specs)
+    assert not _is_direct(partials_plans[-1])
+    for c in specs:
+        assert routed[c].to_bytes() == jvm[c].to_bytes(), c
+    assert abs(routed["v"].estimate() - 600) < 30
+    for c in ("v", "w"):
+        bloom = api.build_bloom(df, c, capacity=1_000)
+        assert _is_direct(partials_plans[-1])
+        assert bloom.to_bytes() == api.build_bloom(_jvm_side(df), c, capacity=1_000).to_bytes()
+
+
+def test_multi_column_build_is_one_direct_pass(spark, token_path, partials_plans):
+    """``sketch_columns`` over a bare scan reads every spec column in
+    one direct pass and returns one sketch per column, equal to the
+    one-column builds."""
+    from sketchlib.spark.aggregate import sketch_columns
+
+    df = spark.read.parquet(token_path)
+    specs = {
+        "doc_id": (lambda: HyperLogLog(p=12), KIND_HASH64),
+        "tokens": (lambda: HyperLogLog(p=12), KIND_ARRAY_HASH),
+        "n_tok": (lambda: TDigest(delta=200), KIND_DOUBLE),
+    }
+    out = sketch_columns(df, specs)
+    assert len(partials_plans) == 1 and _is_direct(partials_plans[0])
+    for col, (factory, kind) in specs.items():
+        one = sketch_parquet(spark, token_path, col, factory, kind)
+        if kind == KIND_DOUBLE:
+            assert out[col].count == one.count
+        else:
+            assert out[col].to_bytes() == one.to_bytes()
+
+
+def test_null_is_not_a_value_on_either_engine(spark, tmp_path):
+    """KIND_HASH64 drops NULL on both engines: over ``[1, 2, None, 3]``
+    the direct scan, the JVM path and ``approx_distinct`` all estimate
+    3 with equal HLL bytes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark.api import approx_distinct
+
+    path = tmp_path / "nulls"
+    path.mkdir()
+    for i in range(4):
+        pq.write_table(
+            pa.table({"v": pa.array([1, 2, None, 3] * 50, pa.int64())}),
+            str(path / f"part{i}.parquet"),
+        )
+    hll = lambda: HyperLogLog(p=12)  # noqa: E731
+    direct = sketch_parquet(spark, str(path), "v", hll, KIND_HASH64)
+    jvm = sketch_column(_jvm_side(spark.read.parquet(str(path))), "v", hll, KIND_HASH64)
+    assert round(direct.estimate()) == 3
+    assert direct.to_bytes() == jvm.to_bytes()
+    for frame in (spark.read.parquet(str(path)), _jvm_side(spark.read.parquet(str(path)))):
+        est, sk = approx_distinct(frame, "v", p=12)
+        assert round(est) == 3 and sk.to_bytes() == direct.to_bytes()
+
+
+def test_null_lineage_key_on_both_checkpoint_engines(spark, tmp_path):
+    """A NULL lineage key lands in lineage ``pmod(42, n)`` on both
+    engines: the direct checkpoint build completes, and both ledgers
+    hold the same lineages and final state."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark.checkpoint import (
+        completed_lineages,
+        run_checkpointed,
+        run_checkpointed_direct,
+    )
+
+    path = tmp_path / "keys"
+    path.mkdir()
+    keys = ["a", None, "b", "a"] * 50
+    pq.write_table(
+        pa.table({"k": pa.array(keys), "v": pa.array(np.arange(200), pa.int64())}),
+        str(path / "part0.parquet"),
+    )
+    hll = lambda: HyperLogLog(p=12)  # noqa: E731
+    runs = {}
+    for engine, run in (
+        ("direct", lambda ck: run_checkpointed_direct(
+            spark, str(path), "v", hll, ck, "k", kind=KIND_HASH64, n_lineage=8,
+        )),
+        ("jvm", lambda ck: run_checkpointed(
+            spark, spark.read.parquet(str(path)), "v", hll, ck, "k",
+            kind=KIND_HASH64, n_lineage=8,
+        )),
+    ):
+        ck = str(tmp_path / f"ck_{engine}")
+        sk, m = run(ck)
+        assert m["n_updates"] == 200
+        runs[engine] = (sk.to_bytes(), completed_lineages(spark, ck))
+    assert runs["direct"] == runs["jvm"]
+    assert 42 % 8 in runs["jvm"][1]
