@@ -768,9 +768,9 @@ def sketch_columns(
     same values and hash them the same way."""
     from sketchlib.spark.direct import _direct_partials, _scan_files
 
-    size = _plan_partitions(df, assume=collect_threshold + 1)
-    scan = _scan_files(df, specs, size)
+    scan = _scan_files(df, [(c, k) for c, (_f, k) in specs.items()])
     if scan is None:
+        size = _plan_partitions(df, assume=collect_threshold + 1)
         partials = _tagged_partials(df, specs)
     else:
         files, size, types = scan

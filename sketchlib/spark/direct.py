@@ -19,14 +19,15 @@ so no Python RDD runs anywhere in the library: a session's first
 Python RDD costs about 1.5 s of start-up, once, that a ``range`` does
 not.
 
-The operators choose the engine themselves: ``aggregate.sketch_columns``
-(and so ``sketch_column`` and every ungrouped operator above it) builds
-on this kernel whenever the frame is only a parquet scan, as
-``_scan_files`` decides from the optimized plan, and on the JVM path
-(aggregate.py) otherwise -- a filter, a computed column, a cache, a
-join or a partitioned table all keep Catalyst on the way in.  No option
-selects the engine.  ``sketch_parquet``/``sketch_iceberg`` call it on
-an explicit file list (with row-group pruning); grouped and
+The builds choose the engine themselves: ``aggregate.sketch_columns``
+(and so ``sketch_column`` and every ungrouped operator above it) and
+``checkpoint.run_checkpointed`` build on the direct kernels whenever
+the frame is only a parquet scan, as ``_scan_files`` decides from the
+optimized plan, and on the JVM path (aggregate.py) otherwise -- a
+filter, a computed column, a cache, a join or a partitioned table all
+keep Catalyst on the way in.  No option selects the engine.
+``sketch_parquet``/``sketch_iceberg`` call the ungrouped kernel on an
+explicit file list (with row-group pruning); grouped and
 ``build_partials`` builds stay on the JVM.
 
 Hashing follows the input kind exactly as on the DataFrame path
@@ -56,11 +57,14 @@ decode releases the GIL, so decode runs on ``aggregate._prefetch``'s
 read-ahead thread while the task thread feeds the previous batch
 (+~45% single-task, uniform gains across 2/8/32-core legs).
 
-The one ungrouped kernel (``_direct_partials``, one tagged state row
-per column per task) and the lineage kernel run the DataFrame path's
-stage-1 skeleton: the
-same read-ahead thread, key router (``_route``), partial-row encoder
-(``_partials_batch``), state merge and driver fold.
+The ungrouped kernel (``_direct_partials``, one tagged state row per
+column per task) and the lineage kernel of the checkpointed build
+(``_lineage_partials``, one state row per lineage per task) read files
+through one reader (``_file_batches``: ``pyarrow.fs``, cast to the
+frame's read types, the missing-column rule) and run the DataFrame
+path's stage-1 skeleton: the same read-ahead thread, key router
+(``_route``), partial-row encoder (``_partials_batch``), state merge
+and driver fold.
 """
 
 from __future__ import annotations
@@ -181,13 +185,14 @@ def _widened(arr: pa.Array, to: pa.DataType | None) -> pa.Array:
     return arr if t == to else arr.cast(to)
 
 
-def _scan_files(df, specs: dict, partitions: int):
-    """``(files, tasks, types)`` for the direct kernel to build
-    ``specs`` over in place of ``df`` -- the sorted data files, the
-    task count and each spec column's read type (``_read_type``) -- or
-    None when ``df`` must take the JVM path: the one admission rule of
-    ``aggregate.sketch_columns``.  A frame is admitted only when all of
-    these hold:
+def _scan_files(df, cols):
+    """``(files, tasks, types)`` for a direct kernel to read ``cols``,
+    a list of ``(column, kind)`` pairs, from in place of ``df`` -- the
+    sorted data files, the task count and each column's read type
+    (``_read_type``) -- or None when ``df`` must take the JVM path: the
+    one admission rule of ``aggregate.sketch_columns`` and
+    ``checkpoint.run_checkpointed``.  A frame is admitted only when all
+    of these hold:
 
     - its optimized plan is a parquet ``LogicalRelation``, optionally
       under a ``Project`` of plain attributes and a ``Repartition``
@@ -195,23 +200,24 @@ def _scan_files(df, specs: dict, partitions: int):
       sample);
     - the relation has no partition columns (hive partition values
       are not stored in the files);
-    - each spec column is one of ``df``'s columns, of a Spark type
+    - each column is one of ``df``'s columns, of a Spark type
       ``_KIND_TYPES`` lists for its kind, and the first file stores it
       under that name as a type that casts to its read type (every
-      file's batches are cast to it; a file without the column feeds
-      nothing, as its NULLs feed nothing on the JVM path);
+      file's batches are cast to it by ``_file_batches``);
     - ``pyarrow.fs`` resolves the first file's URI;
-    - there are at least ``min(partitions, defaultParallelism)`` files:
-      the direct scan's unit is a file, so a table of a few huge files
-      keeps the JVM's split-level parallelism.
+    - there are at least ``min(partitions, defaultParallelism)`` files,
+      ``partitions`` being ``df``'s planned partition count: the direct
+      scan's unit is a file, so a table of a few huge files keeps the
+      JVM's split-level parallelism.
 
-    ``partitions`` is ``df``'s planned partition count.  The task count
-    is ``_file_tasks``' default, capped at a ``coalesce(n)`` or
-    ``repartition(n)``'s n, so a frame bounded to n partitions runs at
-    most n tasks."""
+    The task count is ``_file_tasks``' default, capped at a
+    ``coalesce(n)`` or ``repartition(n)``'s n, so a frame bounded to n
+    partitions runs at most n tasks."""
     import pyarrow.parquet as pq
 
     from pyarrow import fs as pafs
+
+    from sketchlib.spark.aggregate import _plan_partitions
 
     plan = df._jdf.queryExecution().optimizedPlan()
     cap = None
@@ -237,15 +243,17 @@ def _scan_files(df, specs: dict, partitions: int):
         return None
     files = sorted(df.inputFiles())
     spark = df.sparkSession
-    if not files or len(files) < min(partitions, spark.sparkContext.defaultParallelism):
+    parallelism = spark.sparkContext.defaultParallelism
+    partitions = _plan_partitions(df, assume=parallelism)
+    if not files or len(files) < min(partitions, parallelism):
         return None
     fields = {f.name: f.dataType for f in df.schema.fields}
-    types = {
-        col: _read_type(fields[col], kind) if col in fields else None
-        for col, (_factory, kind) in specs.items()
-    }
-    if None in types.values():
-        return None
+    types = {}
+    for col, kind in cols:
+        to = _read_type(fields[col], kind) if col in fields else None
+        if to is None:
+            return None
+        types[col] = to
     try:
         filesystem, first = pafs.FileSystem.from_uri(files[0])
         schema = pq.read_schema(first, filesystem=filesystem)
@@ -379,12 +387,10 @@ def _xxhash64(arr: pa.Array):
     raise TypeError(f"no Spark-compatible xxhash64 for arrow type {arr.type}")
 
 
-def _decoded(arr: pa.Array, kind: str, to, lo, hi):
-    """Decode side of one column batch, cast to read type ``to``
-    (``_widened``): ``(values, lo, hi)``, a numpy batch with its file's
-    footer bounds, or a non-integer KIND_HASH64 Arrow array still to be
-    hashed (bounds None)."""
-    arr = _widened(arr, to)
+def _decoded(arr: pa.Array, kind: str, lo, hi):
+    """Decode side of one column batch: ``(values, lo, hi)``, a numpy
+    batch with its file's footer bounds, or a non-integer KIND_HASH64
+    Arrow array still to be hashed (bounds None)."""
     if kind != KIND_HASH64:
         return _batch_values(arr, kind), lo, hi
     if arr.null_count:
@@ -406,6 +412,49 @@ def _feed_bounds(md, column: str):
     return bounds
 
 
+def _file_batches(paths: list[str], cols: list[str], types=None, prune=None):
+    """The one file reader of the direct kernels: per file of ``paths``
+    holding any of ``cols``, ``(metadata, here, batches)`` -- its
+    parquet footer, the columns of ``cols`` it holds, and an iterator
+    over its batches as {column: array}, to be drained before the next
+    file is read.  Each column is cast to its read type in ``types``
+    (``_widened``), so a file that stores a long column as int32 feeds
+    and hashes the values the JVM path does.  A file may lack a column
+    the frame has: Spark reads NULLs there, and ``here`` leaves it out.
+    Without ``types`` every file is read as stored and a missing column
+    raises.  ``prune=(column, min, max)`` skips the row groups, and the
+    files, its footer statistics place outside the range."""
+    import pyarrow.parquet as pq
+
+    from pyarrow import fs as pafs
+
+    to = types or {}
+    for fpath in paths:
+        filesystem, fp = pafs.FileSystem.from_uri(fpath)
+        with filesystem.open_input_file(fp) as fh:
+            pf = pq.ParquetFile(fh)
+            row_groups = None
+            if prune is not None:
+                row_groups, _skipped = _prune_row_groups(pf.metadata, *prune)
+                if not row_groups:
+                    continue  # whole file outside the range
+            here = [
+                c for c in cols
+                if types is None or pf.schema_arrow.get_field_index(c) >= 0
+            ]
+            if not here:
+                continue
+            rows = min(_batch_rows(pf.schema_arrow.field(c).type) for c in here)
+            batches = pf.iter_batches(
+                batch_size=rows, columns=here, use_threads=False,
+                row_groups=row_groups,
+            )
+            yield pf.metadata, here, (
+                {c: _widened(rb.column(c), to.get(c)) for c in here}
+                for rb in batches
+            )
+
+
 def _direct_partials(
     spark: SparkSession,
     files: list[str],
@@ -414,25 +463,19 @@ def _direct_partials(
     types: dict[str, pa.DataType] | None = None,
     prune: tuple | None = None,
 ):
-    """Stage 1 over raw parquet files, the one direct kernel: ``specs``
-    maps column name -> (factory, kind); each task reads every spec
-    column of its file slice in one pass and emits one state row per
-    column it saw values of, tagged with the column name --
-    DataFrame[tag string, state binary, items long, build_secs double],
-    the shape of ``aggregate._tagged_partials``.  ``types`` maps a
-    column to the read type its batches are cast to (``_widened``);
-    without it each file's column is read as stored.  A file that
-    lacks a spec column feeds that column nothing (without ``types``,
-    it raises)."""
+    """Stage 1 over raw parquet files, the one ungrouped direct kernel:
+    ``specs`` maps column name -> (factory, kind); each task reads
+    every spec column of its file slice in one pass (``_file_batches``,
+    which casts to ``types``) and emits one state row per column it saw
+    values of, tagged with the column name -- DataFrame[tag string,
+    state binary, items long, build_secs double], the shape of
+    ``aggregate._tagged_partials``.  A file that lacks a spec column
+    feeds that column nothing, as its NULLs feed nothing on the JVM
+    path (without ``types``, it raises)."""
     cols = list(specs)
     kinds = [k for _f, k in specs.values()]
-    to = [(types or {}).get(c) for c in cols]
 
     def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from pyarrow import fs as pafs
-
         t0 = time.monotonic()
         # per-task bincount pre-reduction (see aggregate.AccFeeder):
         # weighted feed for quantile sketches over integer values;
@@ -448,39 +491,17 @@ def _direct_partials(
         def decode():
             """Per batch, ``(i, triple)`` for each spec column ``i``
             the file holds, the triple from ``_decoded``."""
-            for fpath in paths:
-                filesystem, fp = pafs.FileSystem.from_uri(fpath)
-                with filesystem.open_input_file(fp) as fh:
-                    pf = pq.ParquetFile(fh)
-                    row_groups = None
-                    if prune is not None:
-                        row_groups, _skipped = _prune_row_groups(
-                            pf.metadata, prune[0], prune[1], prune[2]
-                        )
-                        if not row_groups:
-                            continue  # whole file outside the range
-                    # a frame's file may lack a column (read as NULLs);
-                    # without ``types`` a missing column raises
-                    here = [
-                        i for i, c in enumerate(cols)
-                        if types is None or pf.schema_arrow.get_field_index(c) >= 0
+            for md, here, batches in _file_batches(paths, cols, types, prune):
+                # footer-stat bounds: skip per-batch min/max passes
+                feed = [
+                    (i, c, kinds[i], *_feed_bounds(md, c))
+                    for i, c in enumerate(cols) if c in here
+                ]
+                for b in batches:
+                    yield [
+                        (i, _decoded(b[c], kind, lo, hi))
+                        for i, c, kind, lo, hi in feed
                     ]
-                    if not here:
-                        continue
-                    # footer-stat bounds: skip per-batch min/max passes
-                    bounds = {i: _feed_bounds(pf.metadata, cols[i]) for i in here}
-                    rows = min(
-                        _batch_rows(pf.schema_arrow.field(cols[i]).type)
-                        for i in here
-                    )
-                    for rb in pf.iter_batches(
-                        batch_size=rows, columns=[cols[i] for i in here],
-                        use_threads=False, row_groups=row_groups,
-                    ):
-                        yield [
-                            (i, _decoded(rb.column(cols[i]), kinds[i], to[i], *bounds[i]))
-                            for i in here
-                        ]
 
         for batch in _prefetch(decode(), depth=8):
             for i, (vals, lo, hi) in batch:
@@ -600,76 +621,54 @@ def sketch_iceberg(
     )
     return tree_merge(partials, fanout=fanout, size_hint=tasks)
 
-def build_lineage_partials_direct(
+
+def _lineage_partials(
     spark: SparkSession,
-    path: str,
+    files: list[str],
+    tasks: int,
+    types: dict[str, pa.DataType],
     key_col: str,
     col: str,
     factory: Callable[[], object],
-    kind: str = KIND_DOUBLE,
-    n_lineage: int = 64,
-    tasks: int | None = None,
-    files: list[str] | None = None,
-    skip_lineages=None,
+    kind: str,
+    n_lineage: int,
+    skip_lineages=(),
 ):
-    """Per-LINEAGE stage 1 over raw parquet files: DataFrame[lineage_id
-    bigint, state binary, items long, build_secs double].
+    """The lineage kernel, stage 1 of ``checkpoint.run_checkpointed``
+    over the files of a bare parquet scan (``_scan_files`` admitted
+    ``col`` under ``kind`` and ``key_col`` under KIND_HASH64):
+    DataFrame[lineage_id bigint, state binary, items long, build_secs
+    double].
 
     The lineage id is ``pmod(xxhash64(key), n_lineage)`` computed with
-    the numpy XXH64 that is BIT-EQUAL to Spark's ``F.xxhash64`` per
-    column type — so the ledger this feeds is INTERCHANGEABLE with the
-    JVM path's (checkpoint.run_checkpointed): a job started on one
-    engine can be resumed by the other, and both recompute exactly the
-    same missing lineage ids (a NULL key, hashed to ``F.xxhash64``'s
-    seed 42, lands in lineage ``pmod(42, n_lineage)`` on both).  Within
-    a task, rows are routed to
+    the numpy XXH64 that is bit-equal to Spark's ``F.xxhash64`` for the
+    key's read type, so the ledger this feeds is the JVM path's: a job
+    started on one engine resumes on the other, and both recompute
+    exactly the same missing lineage ids.  A NULL key, and every row of
+    a file without the key column, hashes to ``F.xxhash64``'s seed 42
+    and lands in lineage ``pmod(42, n_lineage)``; a file without the
+    value column feeds nothing.  Within a task, rows are routed to
     per-lineage accumulators by the grouped DataFrame stage's router
     (``aggregate._route``: one sort per batch, cost independent of
-    lineage count).  ``skip_lineages`` (a set of already-completed
-    ids, e.g. from a checkpoint ledger) drops those rows right after
-    the lineage computation — resumed runs never feed them."""
+    lineage count).  Rows of ``skip_lineages`` (the ledger's completed
+    ids) are dropped right after the lineage computation -- resumed
+    runs never feed them."""
     import numpy as np
 
-    skip = (
-        np.array(sorted(int(x) for x in skip_lineages), dtype=np.int64)
-        if skip_lineages
-        else None
-    )
-    files, tasks = _file_tasks(spark, path, files, tasks)
-    # validate the key type DRIVER-side: a clear error beats a per-task
-    # TypeError storm (notably --direct --checkpoint defaulting
-    # lineage_col to an array value column)
-    import pyarrow.parquet as _pq
-
-    ktype = _pq.ParquetFile(files[0]).schema_arrow.field(key_col).type
-    if not (
-        pa.types.is_string(ktype)
-        or pa.types.is_large_string(ktype)
-        or pa.types.is_integer(ktype)
-    ):
-        raise TypeError(
-            f"lineage key column {key_col!r} has type {ktype}; the "
-            "direct engine supports string/integer lineage keys — pass "
-            "an explicit scalar key (e.g. --lineage-col doc_id) or use "
-            "the non-direct checkpoint path"
-        )
+    skip = np.array(sorted(skip_lineages), dtype=np.int64) if skip_lineages else None
     hash_mode = kind in (KIND_HASH64, KIND_ARRAY_HASH)
     domain = _kind_domain(kind)
     # a key column that is also the value column is read once
     columns = list(dict.fromkeys((key_col, col)))
 
     def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        from pyarrow import fs as pafs
-
         t0 = time.monotonic()
         budget = [_ACC_BUDGET_BYTES]
         feeders: dict[int, AccFeeder] = {}
 
         def lineage_of(karr: pa.Array) -> "np.ndarray":
             # numpy % with positive divisor is non-negative for
-            # negative int64 inputs — exactly Spark's pmod.  A NULL key
+            # negative int64 inputs -- exactly Spark's pmod.  A NULL key
             # hashes to F.xxhash64's seed, 42, as on the JVM path
             if karr.null_count:
                 h = np.full(len(karr), 42, dtype=np.int64)
@@ -682,17 +681,14 @@ def build_lineage_partials_direct(
             return lin
 
         def decode():
-            for fpath in paths:
-                filesystem, fp = pafs.FileSystem.from_uri(fpath)
-                with filesystem.open_input_file(fp) as fh:
-                    pf = pq.ParquetFile(fh)
-                    yield from pf.iter_batches(
-                        batch_size=_batch_rows(pf.schema_arrow.field(col).type),
-                        columns=columns, use_threads=False,
-                    )
+            for _md, here, batches in _file_batches(paths, columns, types):
+                if col in here:
+                    yield from batches
 
-        for rb in _prefetch(decode(), depth=8):
-            codes, varr = lineage_of(rb.column(key_col)), rb.column(col)
+        for b in _prefetch(decode(), depth=8):
+            varr = b[col]
+            karr = b[key_col] if key_col in b else pa.nulls(len(varr), types[key_col])
+            codes = lineage_of(karr)
             # non-integer KIND_HASH64 values are hashed before routing
             # (integers take the bincount path, hashed at the flush)
             hashed = kind == KIND_HASH64 and not pa.types.is_integer(varr.type)

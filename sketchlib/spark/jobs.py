@@ -10,7 +10,8 @@ Packaging (north rule):
 
 Jobs:
   build     build one sketch over a column (optionally checkpointed /
-            resumed), print estimates as one JSON line
+            resumed) on the engine the input's plan picks, print
+            estimates as one JSON line
   datagen   materialize the deterministic token-sequence table
   package   zip the library for --py-files
 """
@@ -57,7 +58,7 @@ def _default_kind(sketch: str, kind: str) -> str:
 def job_build(args) -> None:
     from sketchlib.spark.aggregate import sketch_column
     from sketchlib.spark.checkpoint import run_checkpointed
-    from sketchlib.spark.io import _is_iceberg_dir, read_table
+    from sketchlib.spark.io import read_table
     from sketchlib.spark.session import get_spark
 
     spark = get_spark(master=args.master)
@@ -67,36 +68,11 @@ def job_build(args) -> None:
     if kind == "array" and args.sketch in ("hll", "cms", "bloom"):
         kind = "array_hash"
 
+    # both builds pick the engine from the frame's plan: a bare parquet
+    # scan (a parquet path, or an Iceberg directory read jar-free as its
+    # live files) runs on the direct kernel, anything else on the JVM
     metrics = {}
-    # a plain parquet build needs no switch: sketch_column runs the
-    # direct kernel itself when the frame is a bare parquet scan
-    direct = getattr(args, "direct", False) and args.format in ("auto", "parquet")
-    iceberg = direct and os.path.isdir(args.input) and _is_iceberg_dir(args.input)
-    if iceberg:
-        # direct scan over the snapshot's live files via the manifest
-        # chain (jar-free Iceberg path)
-        from sketchlib.spark.direct import sketch_iceberg
-
-        sk = sketch_iceberg(spark, args.input, args.col, factory, kind)
-    elif direct and args.checkpoint:
-        # direct scan WITH checkpointing: numpy-XXH64 lineage ids are
-        # bit-equal to the JVM's, so this ledger interoperates with
-        # non-direct runs (cross-engine resume)
-        from sketchlib.spark.checkpoint import run_checkpointed_direct
-
-        sk, metrics = run_checkpointed_direct(
-            spark,
-            args.input,
-            args.col,
-            factory,
-            checkpoint_dir=args.checkpoint,
-            lineage_col=args.lineage_col or args.col,
-            kind=kind,
-            sketch_kind=args.sketch,
-            n_lineage=args.n_lineage,
-            resume=not args.no_resume,
-        )
-    elif args.checkpoint:
+    if args.checkpoint:
         sk, metrics = run_checkpointed(
             spark,
             df,
@@ -675,7 +651,14 @@ def main(argv=None) -> None:
     ap = argparse.ArgumentParser(prog="sketchlib.spark.jobs")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    b = sub.add_parser("build")
+    b = sub.add_parser(
+        "build",
+        help="build one sketch over a column",
+        description="Build one sketch over --col, checkpointed per lineage "
+        "with --checkpoint.  The engine follows the input's plan: a bare "
+        "parquet scan (a parquet path, or a jar-free Iceberg directory) "
+        "builds on the direct pyarrow kernel, anything else on the JVM.",
+    )
     b.add_argument("--input", required=True)
     b.add_argument("--format", default="auto", choices=["auto", "parquet", "iceberg", "jsonl", "csv"])
     b.add_argument("--col", required=True)
@@ -700,9 +683,6 @@ def main(argv=None) -> None:
     b.add_argument("--lineage-col", default=None)
     b.add_argument("--n-lineage", type=int, default=64)
     b.add_argument("--no-resume", action="store_true")
-    b.add_argument("--direct", action="store_true",
-                   help="pyarrow-decode-in-worker scan for an Iceberg table or "
-                   "a --checkpoint build (a plain parquet build picks it itself)")
     b.add_argument("--save-state", default=None)
     b.set_defaults(fn=job_build)
 

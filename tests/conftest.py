@@ -100,6 +100,44 @@ def job_tasks(spark):
     return run
 
 
+def jvm_side(df):
+    """``df`` behind a filter every row passes and the optimizer keeps
+    (it is nondeterministic): the builds route only a bare parquet scan
+    to the direct engine, so a build over this frame runs the JVM path,
+    and a parity test compares the two engines."""
+    from pyspark.sql import functions as F
+
+    return df.filter(F.spark_partition_id() >= 0)
+
+
+def is_direct(plan: str) -> bool:
+    """A direct partial stage: tasks seeded by a ``Range``, no JVM scan."""
+    return "Range (0," in plan and "MapInArrow" in plan and "FileScan" not in plan
+
+
+@pytest.fixture
+def partials_plans(monkeypatch):
+    """The executed plans of the partials every ``sketch_columns`` call
+    hands ``tree_merge`` and every ``run_checkpointed`` build hands its
+    keyed merge, in call order."""
+    from sketchlib.spark import aggregate, checkpoint
+
+    plans = []
+
+    def spy(module, name):
+        real = getattr(module, name)
+
+        def record(partials, *args, **kw):
+            plans.append(partials._jdf.queryExecution().executedPlan().toString())
+            return real(partials, *args, **kw)
+
+        monkeypatch.setattr(module, name, record)
+
+    spy(aggregate, "tree_merge")
+    spy(checkpoint, "_keyed_merge")
+    return plans
+
+
 def make_values(name: str, n: int, seed: int = SEED) -> np.ndarray:
     gen = DISTRIBUTIONS[name]
     return np.asarray(gen(n, np.random.default_rng(seed)), dtype=np.float64)

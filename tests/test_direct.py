@@ -17,6 +17,7 @@ from sketchlib.spark.aggregate import (
 )
 from sketchlib.spark.direct import list_parquet_files, sketch_parquet
 from sketchlib.spark.datagen import token_sequences
+from tests.conftest import is_direct, jvm_side
 
 
 @pytest.fixture(scope="module")
@@ -24,14 +25,6 @@ def token_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("direct") / "tokens")
     token_sequences(spark, 8_000, seed=3, partitions=8).write.parquet(path)
     return path
-
-
-def _jvm_side(df):
-    """``df`` behind a filter every row passes and the optimizer keeps
-    (it is nondeterministic): ``sketch_columns`` routes only a bare
-    parquet scan to the direct engine, so a build over this frame runs
-    the JVM path, and a parity test compares the two engines."""
-    return df.filter(F.spark_partition_id() >= 0)
 
 
 def test_list_files(token_path):
@@ -44,7 +37,7 @@ def test_direct_matches_dataframe_path(spark, token_path):
     direct = sketch_parquet(
         spark, token_path, "tokens", lambda: TDigest(delta=800), KIND_ARRAY
     )
-    df = _jvm_side(spark.read.parquet(token_path))
+    df = jvm_side(spark.read.parquet(token_path))
     via_df = sketch_column(df, "tokens", lambda: TDigest(delta=800), KIND_ARRAY)
     assert direct.count == via_df.count
     assert direct.min == via_df.min and direct.max == via_df.max
@@ -104,7 +97,7 @@ def test_cross_hash_domain_merge_refused(spark, token_path):
     from sketchlib.core.hashing import DOMAIN_SPLITMIX64, DOMAIN_XXHASH64
     from sketchlib.core.spacesaving import SpaceSaving
 
-    df = _jvm_side(spark.read.parquet(token_path))
+    df = jvm_side(spark.read.parquet(token_path))
     for factory, state in (
         (lambda: HyperLogLog(p=12), lambda sk: sk.to_bytes()),
         (lambda: SpaceSaving(capacity=4096), lambda sk: (sk.counts, sk.total)),
@@ -151,7 +144,7 @@ def test_probes_refuse_foreign_hash_domains(spark, token_path):
             probe(sk)
 
 
-def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path):
+def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path, partials_plans):
     """The lineage kernel hashes non-integer KIND_HASH64 values before
     routing them, dropping null rows as the ungrouped scan does: over a
     nullable float32 column both direct builds and the JVM path's
@@ -159,7 +152,7 @@ def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sketchlib.spark.checkpoint import run_checkpointed_direct
+    from sketchlib.spark.checkpoint import run_checkpointed
 
     vals = [None if i % 7 == 0 else i / 3.0 for i in range(3000)]
     path = tmp_path / "nullable"
@@ -171,14 +164,15 @@ def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path):
     scan = sketch_parquet(
         spark, str(path), "v", lambda: HyperLogLog(p=12), KIND_HASH64
     )
-    ck, m = run_checkpointed_direct(
-        spark, str(path), "v", lambda: HyperLogLog(p=12),
+    ck, m = run_checkpointed(
+        spark, spark.read.parquet(str(path)), "v", lambda: HyperLogLog(p=12),
         str(tmp_path / "ck"), "k", kind=KIND_HASH64, n_lineage=4,
     )
+    assert is_direct(partials_plans[-1]), partials_plans[-1]
     assert m["n_updates"] == sum(v is not None for v in vals)
     assert ck.to_bytes() == scan.to_bytes()
     jvm = sketch_column(
-        _jvm_side(spark.read.parquet(str(path))), "v", lambda: HyperLogLog(p=12),
+        jvm_side(spark.read.parquet(str(path))), "v", lambda: HyperLogLog(p=12),
         KIND_HASH64,
     )
     assert jvm.to_bytes() == scan.to_bytes()
@@ -224,7 +218,7 @@ def test_direct_hash64_equals_dataframe_path(spark, tmp_path, arrow_type):
         spark, str(path), "v", lambda: HyperLogLog(p=12), KIND_HASH64
     )
     via_df = sketch_column(
-        _jvm_side(spark.read.parquet(str(path))), "v", lambda: HyperLogLog(p=12),
+        jvm_side(spark.read.parquet(str(path))), "v", lambda: HyperLogLog(p=12),
         KIND_HASH64,
     )
     assert direct.to_bytes() == via_df.to_bytes()
@@ -561,7 +555,7 @@ def test_xxhash64_numpy_bit_equal_jvm(spark):
     np.testing.assert_array_equal(jvm32, xxhash64_i32(np.array(ints, dtype=np.int32)))
 
 
-def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path):
+def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path, partials_plans):
     """A direct-scan HLL must be REGISTER-IDENTICAL to the DataFrame
     path's build over the same keys and merge with it, for KIND_HASH64
     over a long column and KIND_ARRAY_HASH over token arrays; a
@@ -572,7 +566,7 @@ def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path):
         KIND_HASH64,
         sketch_column,
     )
-    from sketchlib.spark.checkpoint import run_checkpointed_direct
+    from sketchlib.spark.checkpoint import run_checkpointed
     from sketchlib.spark.direct import sketch_parquet
 
     path = str(tmp_path / "tok")
@@ -582,7 +576,7 @@ def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
     df.repartition(4).write.parquet(path)
-    back = _jvm_side(spark.read.parquet(path))
+    back = jvm_side(spark.read.parquet(path))
 
     # scalar long column: direct KIND_HASH64 == DataFrame KIND_HASH64
     jvm_hll = sketch_column(back, "doc_id", lambda: HyperLogLog(p=12), KIND_HASH64)
@@ -594,10 +588,11 @@ def test_direct_xxhash64_mode_merges_with_dataframe_path(spark, tmp_path):
     assert abs(merged.estimate() - 300) / 300 < 0.1
     # the checkpointed direct build hashes the same way: its lineage
     # states merge into the same registers
-    ck_hll, _ = run_checkpointed_direct(
-        spark, path, "doc_id", lambda: HyperLogLog(p=12),
+    ck_hll, _ = run_checkpointed(
+        spark, spark.read.parquet(path), "doc_id", lambda: HyperLogLog(p=12),
         str(tmp_path / "ck"), "doc_id", kind=KIND_HASH64, n_lineage=4,
     )
+    assert is_direct(partials_plans[-1]), partials_plans[-1]
     assert ck_hll.to_bytes() == jvm_hll.to_bytes()
     assert ck_hll.merge(xx_hll).to_bytes() == jvm_hll.to_bytes()
 
@@ -654,7 +649,7 @@ def test_direct_xxhash64_string_column_merges(spark, tmp_path):
     rows = [(f"doc-{i:06d}",) for i in range(500)]
     spark.createDataFrame(rows, "doc_id string").repartition(4).write.parquet(path)
     jvm_hll = sketch_column(
-        _jvm_side(spark.read.parquet(path)), "doc_id", lambda: HyperLogLog(p=12),
+        jvm_side(spark.read.parquet(path)), "doc_id", lambda: HyperLogLog(p=12),
         KIND_HASH64,
     )
     xx_hll = sketch_parquet(
@@ -724,20 +719,24 @@ def test_file_bounds_wider_than_max_range_fall_back(spark, tmp_path):
     assert abs(sk.estimate() - 2000) / 2000 < 0.1
 
 
-def test_lineage_key_type_validated_early(spark, tmp_path):
+def test_array_lineage_key_builds_on_the_jvm(spark, tmp_path, partials_plans):
+    """A lineage key the direct kernel does not hash the JVM's way (here
+    an ``array<int>``, which is also the sketched column) keeps the
+    checkpointed build on the JVM path, which counts every value."""
     from sketchlib.core.kll import KLL
     from sketchlib.spark.aggregate import KIND_ARRAY
-    from sketchlib.spark.checkpoint import run_checkpointed_direct
+    from sketchlib.spark.checkpoint import run_checkpointed
 
     path = str(tmp_path / "t")
     spark.createDataFrame(
         [(1, [1, 2]), (2, [3])], "doc_id long, tokens array<int>"
     ).write.parquet(path)
-    with pytest.raises(TypeError, match="lineage key column"):
-        run_checkpointed_direct(
-            spark, path, "tokens", lambda: KLL(k=64),
-            str(tmp_path / "ck"), "tokens", kind=KIND_ARRAY, n_lineage=4,
-        )
+    sk, m = run_checkpointed(
+        spark, spark.read.parquet(path), "tokens", lambda: KLL(k=64),
+        str(tmp_path / "ck"), "tokens", kind=KIND_ARRAY, n_lineage=4,
+    )
+    assert not is_direct(partials_plans[-1]), partials_plans[-1]
+    assert m["n_updates"] == sk.count == 3
 
 
 def test_xxhash64_type_parity_matrix(spark, tmp_path):
@@ -825,7 +824,7 @@ def test_direct_xxhash64_float32_column_merges(spark, tmp_path):
         pa.table({"v": pa.array(vals)}), os.path.join(path, "part0.parquet")
     )
     jvm_hll = sketch_column(
-        _jvm_side(spark.read.parquet(path)), "v", lambda: HyperLogLog(p=12),
+        jvm_side(spark.read.parquet(path)), "v", lambda: HyperLogLog(p=12),
         KIND_HASH64,
     )
     xx_hll = sketch_parquet(
@@ -939,28 +938,6 @@ def test_direct_build_job_budget_and_task_coverage(spark, token_path, job_tasks)
 # ------------------------------------------------- engine choice of sketch_columns
 
 
-@pytest.fixture
-def partials_plans(monkeypatch):
-    """The executed plans of the partials every ``sketch_columns`` call
-    hands ``tree_merge``, in call order."""
-    from sketchlib.spark import aggregate
-
-    plans = []
-    real = aggregate.tree_merge
-
-    def spy(partials, **kw):
-        plans.append(partials._jdf.queryExecution().executedPlan().toString())
-        return real(partials, **kw)
-
-    monkeypatch.setattr(aggregate, "tree_merge", spy)
-    return plans
-
-
-def _is_direct(plan: str) -> bool:
-    """A direct partial stage: tasks seeded by a ``Range``, no JVM scan."""
-    return "Range (0," in plan and "MapInArrow" in plan and "FileScan" not in plan
-
-
 def test_bare_scan_routes_to_the_direct_engine(
     spark, token_path, job_tasks, partials_plans
 ):
@@ -979,7 +956,7 @@ def test_bare_scan_routes_to_the_direct_engine(
             lambda: sketch_column(frame, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64),
         )
         assert jobs == [[n]]
-        assert _is_direct(partials_plans[-1]), partials_plans[-1]
+        assert is_direct(partials_plans[-1]), partials_plans[-1]
         assert sk.to_bytes() == sketch_parquet(
             spark, token_path, "n_tok", lambda: HyperLogLog(p=12), KIND_HASH64
         ).to_bytes()
@@ -1039,7 +1016,7 @@ def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
     from sketchlib.spark import api
 
     df = spark.read.parquet(token_path)
-    jvm = _jvm_side(df)
+    jvm = jvm_side(df)
     builds = [
         lambda d: api.approx_distinct(d, "doc_id")[1].to_bytes(),
         lambda d: api.build_cms(d, "tokens", is_array=True).to_bytes(),
@@ -1053,9 +1030,9 @@ def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
     ]
     for build in builds:
         routed = build(df)
-        assert _is_direct(partials_plans[-1])
+        assert is_direct(partials_plans[-1])
         assert routed == build(jvm)
-        assert not _is_direct(partials_plans[-1])
+        assert not is_direct(partials_plans[-1])
 
     rows = df.select("n_tok", "tokens").collect()
     n_tok = np.sort([r["n_tok"] for r in rows])
@@ -1066,7 +1043,7 @@ def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
         (tokens, "tokens", "kll", True, 0.02),
     ):
         est, sk = api.approx_quantiles(df, col, probs, sketch=sketch, is_array=is_array)
-        assert _is_direct(partials_plans[-1])
+        assert is_direct(partials_plans[-1])
         assert sk.count == values.size
         lo = np.searchsorted(values, est, side="left") / values.size
         hi = np.searchsorted(values, est, side="right") / values.size
@@ -1102,16 +1079,16 @@ def test_routed_build_reads_each_file_as_the_frame_types_it(
     df = spark.read.schema("v long, w double").parquet(str(path))
     specs = {c: (lambda: HyperLogLog(p=12), KIND_HASH64) for c in ("v", "w")}
     routed = sketch_columns(df, specs)
-    assert _is_direct(partials_plans[-1]), partials_plans[-1]
-    jvm = sketch_columns(_jvm_side(df), specs)
-    assert not _is_direct(partials_plans[-1])
+    assert is_direct(partials_plans[-1]), partials_plans[-1]
+    jvm = sketch_columns(jvm_side(df), specs)
+    assert not is_direct(partials_plans[-1])
     for c in specs:
         assert routed[c].to_bytes() == jvm[c].to_bytes(), c
     assert abs(routed["v"].estimate() - 600) < 30
     for c in ("v", "w"):
         bloom = api.build_bloom(df, c, capacity=1_000)
-        assert _is_direct(partials_plans[-1])
-        assert bloom.to_bytes() == api.build_bloom(_jvm_side(df), c, capacity=1_000).to_bytes()
+        assert is_direct(partials_plans[-1])
+        assert bloom.to_bytes() == api.build_bloom(jvm_side(df), c, capacity=1_000).to_bytes()
 
 
 def test_multi_column_build_is_one_direct_pass(spark, token_path, partials_plans):
@@ -1127,7 +1104,7 @@ def test_multi_column_build_is_one_direct_pass(spark, token_path, partials_plans
         "n_tok": (lambda: TDigest(delta=200), KIND_DOUBLE),
     }
     out = sketch_columns(df, specs)
-    assert len(partials_plans) == 1 and _is_direct(partials_plans[0])
+    assert len(partials_plans) == 1 and is_direct(partials_plans[0])
     for col, (factory, kind) in specs.items():
         one = sketch_parquet(spark, token_path, col, factory, kind)
         if kind == KIND_DOUBLE:
@@ -1154,26 +1131,22 @@ def test_null_is_not_a_value_on_either_engine(spark, tmp_path):
         )
     hll = lambda: HyperLogLog(p=12)  # noqa: E731
     direct = sketch_parquet(spark, str(path), "v", hll, KIND_HASH64)
-    jvm = sketch_column(_jvm_side(spark.read.parquet(str(path))), "v", hll, KIND_HASH64)
+    jvm = sketch_column(jvm_side(spark.read.parquet(str(path))), "v", hll, KIND_HASH64)
     assert round(direct.estimate()) == 3
     assert direct.to_bytes() == jvm.to_bytes()
-    for frame in (spark.read.parquet(str(path)), _jvm_side(spark.read.parquet(str(path)))):
+    for frame in (spark.read.parquet(str(path)), jvm_side(spark.read.parquet(str(path)))):
         est, sk = approx_distinct(frame, "v", p=12)
         assert round(est) == 3 and sk.to_bytes() == direct.to_bytes()
 
 
-def test_null_lineage_key_on_both_checkpoint_engines(spark, tmp_path):
+def test_null_lineage_key_on_both_checkpoint_engines(spark, tmp_path, partials_plans):
     """A NULL lineage key lands in lineage ``pmod(42, n)`` on both
     engines: the direct checkpoint build completes, and both ledgers
     hold the same lineages and final state."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sketchlib.spark.checkpoint import (
-        completed_lineages,
-        run_checkpointed,
-        run_checkpointed_direct,
-    )
+    from sketchlib.spark.checkpoint import completed_lineages, run_checkpointed
 
     path = tmp_path / "keys"
     path.mkdir()
@@ -1184,17 +1157,13 @@ def test_null_lineage_key_on_both_checkpoint_engines(spark, tmp_path):
     )
     hll = lambda: HyperLogLog(p=12)  # noqa: E731
     runs = {}
-    for engine, run in (
-        ("direct", lambda ck: run_checkpointed_direct(
-            spark, str(path), "v", hll, ck, "k", kind=KIND_HASH64, n_lineage=8,
-        )),
-        ("jvm", lambda ck: run_checkpointed(
-            spark, spark.read.parquet(str(path)), "v", hll, ck, "k",
-            kind=KIND_HASH64, n_lineage=8,
-        )),
-    ):
+    df = spark.read.parquet(str(path))
+    for engine, frame in (("direct", df), ("jvm", jvm_side(df))):
         ck = str(tmp_path / f"ck_{engine}")
-        sk, m = run(ck)
+        sk, m = run_checkpointed(
+            spark, frame, "v", hll, ck, "k", kind=KIND_HASH64, n_lineage=8,
+        )
+        assert is_direct(partials_plans[-1]) == (engine == "direct")
         assert m["n_updates"] == 200
         runs[engine] = (sk.to_bytes(), completed_lineages(spark, ck))
     assert runs["direct"] == runs["jvm"]
