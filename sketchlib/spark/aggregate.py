@@ -11,8 +11,9 @@ rank-combine (parallel_digest.rs:25-51):
            with numpy kernels (zero per-row Python).  Emits ``state:
            binary`` rows of bounded size (KBs), so stage-2 shuffle
            volume is ~P * sketch_size per key regardless of input.
-           ``sketch_columns`` over a bare parquet scan runs this stage
-           on the direct kernel instead (``direct._direct_partials``).
+           Over a bare parquet scan (``direct._scan_files``) every
+           build reads the files on the direct engine instead; the
+           keyed builds share one body, ``_keyed_states``.
   stage 2  one level loop for every build (``_merge_levels``): merge
            each key's P states (P from ``_plan_partitions``, which
            never runs the input) in ceil(P/fanout) buckets keyed by
@@ -801,6 +802,105 @@ def sketch_column(
 # --------------------------------------------------------------- grouped build
 
 
+def _key_codes(kb: pa.RecordBatch):
+    """The grouped builds' key codes, on both engines: per row of the
+    key columns ``kb`` a code, -1 where any key is NULL (``_route``
+    drops the row), and the batch whose row ``c`` holds code ``c``'s
+    keys at their Arrow types.  The NULL rows go before the
+    factorization, as ``to_numpy`` widens an integer column with nulls
+    to float64.  A NaN key is a key, as in Spark's groupBy."""
+    import pandas as pd
+
+    valid = np.ones(kb.num_rows, dtype=bool)
+    for a in kb.columns:
+        if a.null_count:
+            valid &= np.asarray(a.is_valid())
+    rows = np.flatnonzero(valid)
+    kept = kb if rows.size == kb.num_rows else kb.take(rows)
+    code = np.zeros(rows.size, dtype=np.int64)
+    for a in kept.columns:
+        c, u = pd.factorize(a.to_numpy(zero_copy_only=False), use_na_sentinel=False)
+        code = pd.factorize(code * len(u) + c)[0]  # dense: stays below n^2
+    codes = np.full(kb.num_rows, -1, dtype=np.int64)
+    codes[rows] = code
+    return codes, kept.take(np.unique(code, return_index=True)[1])
+
+
+def _keyed_states(batches, factory, kind: str, max_groups: int):
+    """The one keyed stage-1 body, a map-side combine, of the grouped
+    builds and the checkpointed build on both engines.  ``batches``
+    yields ``(codes, keys, values)``: a code per row (a negative one
+    drops the row), a batch whose row ``c`` holds code ``c``'s keys
+    (its schema is the output key columns'), and the value column,
+    KIND_HASH64 values as uint64 hashes or as raw integers hashed at
+    the flush.  ``_route`` splits each batch into one ``AccFeeder`` per
+    key, all under one ``_ACC_BUDGET_BYTES`` budget.  Yields partial
+    rows; once ``max_groups`` keys are held their states are emitted
+    and the map starts empty (stage 2 merges the duplicate keys), so
+    worker memory stays bounded under high-cardinality keys."""
+    budget = [_ACC_BUDGET_BYTES]
+    feeders: dict[tuple, AccFeeder] = {}
+
+    def emit(schema, secs):
+        items = [f.finish() for f in feeders.values()]
+        return _partials_batch(
+            [f.sk.to_bytes() for f in feeders.values()], items, secs,
+            **{f.name: pa.array([kt[i] for kt in feeders], f.type)
+               for i, f in enumerate(schema)},
+        )
+
+    t0 = time.monotonic()
+    for codes, keys, varr in _prefetch(batches):
+        key_of = list(zip(*(c.to_pylist() for c in keys.columns)))
+        for code, vals in _route(codes, varr, kind):
+            feeder = feeders.get(key_of[code])
+            if feeder is None:
+                feeder = feeders[key_of[code]] = AccFeeder(
+                    factory(), kind in (KIND_HASH64, KIND_ARRAY_HASH),
+                    _kind_domain(kind), budget,
+                )
+            if vals.dtype == np.uint64:  # hashed by the source
+                feeder.feed_hashed(vals)
+            else:
+                feeder.feed_raw(vals)
+        if len(feeders) >= max_groups:
+            yield emit(keys.schema, time.monotonic() - t0)
+            feeders, t0 = {}, time.monotonic()
+    if feeders:
+        yield emit(keys.schema, time.monotonic() - t0)
+
+
+def _grouped_partials(df, keys, col, factory, kind, max_groups_per_partition=100_000):
+    """Grouped stage 1, DataFrame[*keys, state binary, items long,
+    build_secs double]: ``_keyed_states`` over ``_key_codes``, fed by
+    the direct engine when ``direct._scan_files`` admits the keys and
+    ``col`` (a bare parquet scan), else by the JVM's Arrow batches,
+    KIND_HASH64 values hashed by ``_value_col``.  On either engine a
+    row with a NULL key is dropped and each key column keeps the
+    frame's Spark type."""
+    from sketchlib.spark.direct import _keyed_partials, _scan_files
+
+    schema = _key_schema(df, keys) + _PARTIAL_SCHEMA
+    scan = _scan_files(df, [*((k, None) for k in keys), (col, kind)])
+    if scan is not None:
+        return _keyed_partials(
+            df.sparkSession, scan, keys, _key_codes, col, factory, kind,
+            schema, max_groups_per_partition,
+        )
+
+    def coded(batches: Iterator[pa.RecordBatch]):
+        for b in batches:
+            varr = b.column("__v")
+            if kind == KIND_HASH64:
+                varr = varr.view(pa.uint64())
+            yield (*_key_codes(b.select(keys)), varr)
+
+    return df.select(*keys, _value_col(col, kind).alias("__v")).mapInArrow(
+        lambda it: _keyed_states(coded(it), factory, kind, max_groups_per_partition),
+        schema,
+    )
+
+
 def grouped_sketch(
     df: DataFrame,
     keys: list[str],
@@ -810,79 +910,11 @@ def grouped_sketch(
     max_groups_per_partition: int = 100_000,
 ) -> DataFrame:
     """Per-group sketches: DataFrame[*keys, state binary, items long,
-    build_secs double] — ``_grouped_partials`` merged per key by
+    build_secs double] — ``_grouped_partials`` (the direct engine over a
+    bare parquet scan, the JVM otherwise; NULL keys dropped; at most
+    ``max_groups_per_partition`` keys held per task) merged per key by
     ``_keyed_merge``, whose levels cap hot keys' fan-in at ``FANOUT``."""
     return _keyed_merge(
         _grouped_partials(df, keys, col, factory, kind, max_groups_per_partition),
         keys,
     )
-
-
-def _grouped_partials(df, keys, col, factory, kind, max_groups_per_partition=100_000):
-    """Grouped stage 1, a map-side combine: within each input partition
-    a dict key->sketch absorbs every Arrow batch, so the stage-2
-    shuffle carries at most (#partitions x #keys) small state rows —
-    raw rows never shuffle.
-
-    Stage-1 memory is BOUNDED: when the per-partition dict exceeds
-    ``max_groups_per_partition`` keys it flushes its states as output
-    rows and starts empty (the stage-2 merge absorbs the duplicate key
-    rows) — high-cardinality key columns at 100x scale must not grow
-    an unbounded map in the worker.
-    """
-    vdf = df.select(*keys, _value_col(col, kind).alias("__v"))
-    nk = len(keys)
-
-    # per-key bincount pre-reduction via AccFeeder, with a SHARED
-    # per-task byte budget: many keys' accumulators together may hold
-    # at most _ACC_BUDGET_BYTES of counts — beyond it (or for true
-    # high-cardinality keys) feeders fall back to per-batch feeding,
-    # so worker memory stays bounded regardless of key cardinality or
-    # per-key value ranges
-    hash_mode = kind == KIND_ARRAY_HASH
-
-    def _emit(sketches: dict, elapsed: float) -> pa.RecordBatch:
-        items = [f.finish() for f in sketches.values()]
-        return _partials_batch(
-            [f.sk.to_bytes() for f in sketches.values()], items, elapsed,
-            **{k: [kt[i] for kt in sketches] for i, k in enumerate(keys)},
-        )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pandas as pd
-
-        t0 = time.monotonic()
-        budget = [_ACC_BUDGET_BYTES]
-        sketches: dict[tuple, AccFeeder] = {}
-        for b in _prefetch(batches):
-            kcols = [b.column(i) for i in range(nk)]
-            kpdf = pa.Table.from_arrays(kcols, names=keys).to_pandas()
-            # null key rows get code -1 (pd.factorize) and are dropped
-            codes, uniques = pd.factorize(
-                pd.MultiIndex.from_frame(kpdf) if nk > 1 else kpdf[keys[0]],
-                sort=False,
-            )
-            for code, vals in _route(codes, b.column(nk), kind):
-                key = uniques[code]
-                kt = key if nk > 1 else (key,)
-                feeder = sketches.get(kt)
-                if feeder is None:
-                    feeder = sketches[kt] = AccFeeder(
-                        factory(), hash_mode=hash_mode,
-                        domain=_kind_domain(kind), budget=budget,
-                    )
-                if kind == KIND_HASH64:  # pre-hashed JVM stream
-                    feeder.feed_hashed(vals.view(np.uint64))
-                else:
-                    feeder.feed_raw(vals)
-            if len(sketches) >= max_groups_per_partition:
-                # flush-on-threshold: bound worker memory under
-                # high-cardinality keys; stage 2 merges duplicates
-                yield _emit(sketches, time.monotonic() - t0)
-                sketches = {}
-                t0 = time.monotonic()
-        if not sketches:
-            return
-        yield _emit(sketches, time.monotonic() - t0)
-
-    return vdf.mapInArrow(fn, _key_schema(vdf, keys) + _PARTIAL_SCHEMA)

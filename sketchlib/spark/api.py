@@ -444,9 +444,9 @@ def overlap_matrix(
     per-sketch relative standard error ~ 1/sqrt(k-2); intersection
     error additionally scales with 1/jaccard (theta-sketch algebra —
     tiny overlaps need a larger k).  Rows with a NULL group key are
-    EXCLUDED (``grouped_sketch`` drops null-key rows, matching
-    pd.factorize); ``fillna`` the group column upstream to give the
-    unlabeled slice its own row.
+    EXCLUDED (``grouped_sketch`` drops null-key rows on either engine);
+    ``fillna`` the group column upstream to give the unlabeled slice
+    its own row.
 
     ``is_array=True`` treats ``col`` as a token array (the
     pre-tokenized training-sequence shape): the per-group sets are the
@@ -764,7 +764,8 @@ def cms_frequencies(
 def _read_grouped(df, keys, col, factory, kind, rows, schema) -> DataFrame:
     """The one grouped read-out: the grouped build of ``factory`` over
     ``col``, read out by ``rows(sketch)`` in its per-key merge reducer
-    as DataFrame[*keys, <schema>]."""
+    as DataFrame[*keys, <schema>]; ``_grouped_partials`` picks its
+    engine from the plan (direct over a bare parquet scan)."""
     return _keyed_merge(
         _grouped_partials(df, keys, col, factory, kind), keys, rows, schema
     )

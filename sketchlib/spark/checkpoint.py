@@ -10,13 +10,14 @@ build/merge metrics.  A resumed run reads the ledger, recomputes only
 the missing lineage ids, and appends them.  The final sketch is the
 merge of all ledger states.
 
-Stage 1 picks its engine from the frame's plan, as
-``aggregate.sketch_columns`` does: over a bare parquet scan
-(``direct._scan_files`` admits the value column and the lineage key)
-it is the direct lineage kernel, which drops completed lineages inside
-the scan tasks; otherwise it is the JVM path's grouped stage behind a
-codegen'd filter on the lineage expression.  Both engines hash the key
-the same way, so a ledger started on either resumes on the other.
+Stage 1 is the grouped builds' keyed body (``aggregate._keyed_states``)
+with the lineage id as the key, on the engine the frame's plan picks:
+over a bare parquet scan (``direct._scan_files`` admits the value column
+and the lineage key) the direct engine computes the ids
+(``_lineage_codes``) and drops completed lineages inside the scan
+tasks; otherwise the JVM computes them behind a codegen'd filter.  Both
+hash the key the same way, so a ledger started on either resumes on the
+other.
 
 Determinism matters: KLL compaction coins are seeded per sketch seed,
 so a recomputed lineage reproduces the state bit-identically
@@ -28,18 +29,21 @@ from __future__ import annotations
 import time
 from typing import Callable
 
+import numpy as np
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib import serde
 from sketchlib.spark.aggregate import (
+    _PARTIAL_SCHEMA,
     KIND_DOUBLE,
     KIND_HASH64,
     _grouped_partials,
     _keyed_merge,
 )
-from sketchlib.spark.direct import _lineage_partials, _scan_files
+from sketchlib.spark.direct import _keyed_partials, _scan_files, _xxhash64
 
 LEDGER_SCHEMA = (
     "lineage_id bigint, sketch_kind string, state binary, n_updates bigint, "
@@ -64,17 +68,36 @@ def completed_lineages(spark: SparkSession, path: str) -> set[int]:
     return {r["lineage_id"] for r in rows}
 
 
+def _lineage_codes(n_lineage: int, done):
+    """The direct build's codes: per row the lineage id
+    ``pmod(xxhash64(key), n_lineage)``, by the numpy XXH64 that is
+    bit-equal to ``F.xxhash64`` for the key's read type, so a ledger
+    started on either engine resumes on the other.  A NULL key (every
+    row of a file without the key column) hashes to ``F.xxhash64``'s
+    seed 42, as on the JVM path; the ``done`` lineages get code -1."""
+    ids = pa.record_batch({"lineage_id": pa.array(range(n_lineage), pa.int64())})
+
+    def codes_of(kb: pa.RecordBatch):
+        karr = kb.column(0)
+        h = np.full(len(karr), 42, dtype=np.int64)
+        h[np.asarray(karr.is_valid())] = _xxhash64(karr.drop_null()).view(np.int64)
+        lin = h % np.int64(n_lineage)  # numpy % by a positive divisor: pmod
+        lin[np.isin(lin, list(done))] = -1
+        return lin, ids
+
+    return codes_of
+
+
 def _partials(df, col, factory, lineage_col, kind, n_lineage, done):
     """Stage 1 over the lineages not in ``done``: DataFrame[lineage_id
     bigint, state binary, items long, build_secs double], on the direct
-    lineage kernel when ``df`` is a bare parquet scan of both columns,
-    else on the JVM path."""
+    engine when ``df`` is a bare parquet scan of both columns, else on
+    the JVM path."""
     scan = _scan_files(df, [(col, kind), (lineage_col, KIND_HASH64)])
     if scan is not None:
-        files, tasks, types = scan
-        return _lineage_partials(
-            df.sparkSession, files, tasks, types, lineage_col, col, factory,
-            kind, n_lineage, done,
+        return _keyed_partials(
+            df.sparkSession, scan, [lineage_col], _lineage_codes(n_lineage, done),
+            col, factory, kind, f"lineage_id bigint, {_PARTIAL_SCHEMA}",
         )
     lineage_expr = F.pmod(F.xxhash64(F.col(lineage_col)), F.lit(n_lineage))
     work = df.withColumn("lineage_id", lineage_expr.cast("bigint"))

@@ -19,16 +19,16 @@ so no Python RDD runs anywhere in the library: a session's first
 Python RDD costs about 1.5 s of start-up, once, that a ``range`` does
 not.
 
-The builds choose the engine themselves: ``aggregate.sketch_columns``
-(and so ``sketch_column`` and every ungrouped operator above it) and
-``checkpoint.run_checkpointed`` build on the direct kernels whenever
-the frame is only a parquet scan, as ``_scan_files`` decides from the
-optimized plan, and on the JVM path (aggregate.py) otherwise -- a
-filter, a computed column, a cache, a join or a partitioned table all
-keep Catalyst on the way in.  No option selects the engine.
-``sketch_parquet``/``sketch_iceberg`` call the ungrouped kernel on an
-explicit file list (with row-group pruning); grouped and
-``build_partials`` builds stay on the JVM.
+Every build chooses its engine by one rule: ``aggregate.sketch_columns``
+(and so every ungrouped operator), the grouped builds
+(``aggregate._grouped_partials``) and ``checkpoint.run_checkpointed``
+run on the direct kernels whenever the frame is only a parquet scan, as
+``_scan_files`` decides from the optimized plan, and on the JVM path
+(aggregate.py) otherwise -- a filter, a computed column, a cache, a
+join or a partitioned table all keep Catalyst on the way in.  No
+option selects the engine.  ``sketch_parquet``/``sketch_iceberg`` call
+the ungrouped kernel on an explicit file list (with row-group pruning);
+``build_partials`` stays on the JVM.
 
 Hashing follows the input kind exactly as on the DataFrame path
 (``aggregate._kind_domain``), so hash sketches built by either engine
@@ -58,13 +58,12 @@ read-ahead thread while the task thread feeds the previous batch
 (+~45% single-task, uniform gains across 2/8/32-core legs).
 
 The ungrouped kernel (``_direct_partials``, one tagged state row per
-column per task) and the lineage kernel of the checkpointed build
-(``_lineage_partials``, one state row per lineage per task) read files
-through one reader (``_file_batches``: ``pyarrow.fs``, cast to the
-frame's read types, the missing-column rule) and run the DataFrame
-path's stage-1 skeleton: the same read-ahead thread, key router
-(``_route``), partial-row encoder (``_partials_batch``), state merge
-and driver fold.
+column per task) and the keyed source (``_keyed_partials``, which feeds
+the keyed body both engines share, ``aggregate._keyed_states``) read
+files through one reader (``_file_batches``: ``pyarrow.fs``, cast to
+the frame's read types, the missing-column rule) and run the DataFrame
+path's stage-1 skeleton: the same read-ahead thread, partial-row
+encoder (``_partials_batch``), state merge and driver fold.
 """
 
 from __future__ import annotations
@@ -78,7 +77,6 @@ from pyspark.sql import SparkSession
 from sketchlib.core import hashing
 from sketchlib.spark.aggregate import (
     _ACC_BUDGET_BYTES,
-    _PARTIAL_SCHEMA,
     _TAGGED_SCHEMA,
     KIND_ARRAY,
     KIND_ARRAY_HASH,
@@ -87,10 +85,10 @@ from sketchlib.spark.aggregate import (
     AccFeeder,
     _BincountAcc,
     _batch_values,
+    _keyed_states,
     _kind_domain,
     _partials_batch,
     _prefetch,
-    _route,
     tree_merge,
 )
 
@@ -150,6 +148,7 @@ _ARROW_OF = {
 }
 _NUMERIC = ("byte", "short", "integer", "long", "float", "double")
 _KIND_TYPES = {
+    None: tuple(_ARROW_OF),  # a grouping key
     KIND_DOUBLE: _NUMERIC,
     KIND_ARRAY: _NUMERIC,
     KIND_ARRAY_HASH: _NUMERIC,
@@ -157,10 +156,11 @@ _KIND_TYPES = {
 }
 
 
-def _read_type(dtype, kind: str) -> pa.DataType | None:
+def _read_type(dtype, kind: str | None) -> pa.DataType | None:
     """The Arrow type (an array's element type) the JVM path hands
     Python for a frame column of Spark ``dtype``, or None when the
-    direct kernel is not verified against that type under ``kind``."""
+    direct kernel is not verified against that type under ``kind``
+    (None: a grouping key, of any ``_ARROW_OF`` type)."""
     if kind in (KIND_ARRAY, KIND_ARRAY_HASH):
         if dtype.typeName() != "array":
             return None
@@ -187,10 +187,11 @@ def _widened(arr: pa.Array, to: pa.DataType | None) -> pa.Array:
 
 def _scan_files(df, cols):
     """``(files, tasks, types)`` for a direct kernel to read ``cols``,
-    a list of ``(column, kind)`` pairs, from in place of ``df`` -- the
-    sorted data files, the task count and each column's read type
-    (``_read_type``) -- or None when ``df`` must take the JVM path: the
-    one admission rule of ``aggregate.sketch_columns`` and
+    a list of ``(column, kind)`` pairs (kind None for a grouping key),
+    from in place of ``df`` -- the sorted data files, the task count and
+    each column's read type (``_read_type``) -- or None when ``df`` must
+    take the JVM path: the one admission rule of
+    ``aggregate.sketch_columns``, ``aggregate._grouped_partials`` and
     ``checkpoint.run_checkpointed``.  A frame is admitted only when all
     of these hold:
 
@@ -622,102 +623,43 @@ def sketch_iceberg(
     return tree_merge(partials, fanout=fanout, size_hint=tasks)
 
 
-def _lineage_partials(
-    spark: SparkSession,
-    files: list[str],
-    tasks: int,
-    types: dict[str, pa.DataType],
-    key_col: str,
-    col: str,
-    factory: Callable[[], object],
-    kind: str,
-    n_lineage: int,
-    skip_lineages=(),
+def _keyed_partials(
+    spark: SparkSession, scan, keys, codes_of, col, factory, kind, schema,
+    max_groups: int = 100_000,
 ):
-    """The lineage kernel, stage 1 of ``checkpoint.run_checkpointed``
-    over the files of a bare parquet scan (``_scan_files`` admitted
-    ``col`` under ``kind`` and ``key_col`` under KIND_HASH64):
-    DataFrame[lineage_id bigint, state binary, items long, build_secs
-    double].
-
-    The lineage id is ``pmod(xxhash64(key), n_lineage)`` computed with
-    the numpy XXH64 that is bit-equal to Spark's ``F.xxhash64`` for the
-    key's read type, so the ledger this feeds is the JVM path's: a job
-    started on one engine resumes on the other, and both recompute
-    exactly the same missing lineage ids.  A NULL key, and every row of
-    a file without the key column, hashes to ``F.xxhash64``'s seed 42
-    and lands in lineage ``pmod(42, n_lineage)``; a file without the
-    value column feeds nothing.  Within a task, rows are routed to
-    per-lineage accumulators by the grouped DataFrame stage's router
-    (``aggregate._route``: one sort per batch, cost independent of
-    lineage count).  Rows of ``skip_lineages`` (the ledger's completed
-    ids) are dropped right after the lineage computation -- resumed
-    runs never feed them."""
+    """The direct engine's source of ``aggregate._keyed_states`` over
+    ``scan``, the ``(files, tasks, types)`` of ``_scan_files``:
+    DataFrame[``schema``].  ``codes_of`` codes each batch's ``keys``
+    columns -- ``aggregate._key_codes`` for a grouped build, the lineage
+    rule for a checkpointed one -- and KIND_HASH64 values other than
+    integers are hashed by ``_xxhash64``.  A file without a key column
+    reads NULLs there, as Spark does; a file without ``col`` feeds
+    nothing."""
     import numpy as np
 
-    skip = np.array(sorted(skip_lineages), dtype=np.int64) if skip_lineages else None
-    hash_mode = kind in (KIND_HASH64, KIND_ARRAY_HASH)
-    domain = _kind_domain(kind)
+    files, tasks, types = scan
     # a key column that is also the value column is read once
-    columns = list(dict.fromkeys((key_col, col)))
+    columns = list(dict.fromkeys((*keys, col)))
 
-    def fn(paths: list[str]) -> Iterator[pa.RecordBatch]:
-        t0 = time.monotonic()
-        budget = [_ACC_BUDGET_BYTES]
-        feeders: dict[int, AccFeeder] = {}
-
-        def lineage_of(karr: pa.Array) -> "np.ndarray":
-            # numpy % with positive divisor is non-negative for
-            # negative int64 inputs -- exactly Spark's pmod.  A NULL key
-            # hashes to F.xxhash64's seed, 42, as on the JVM path
-            if karr.null_count:
-                h = np.full(len(karr), 42, dtype=np.int64)
-                h[np.asarray(karr.is_valid())] = _xxhash64(karr.drop_null()).view(np.int64)
-            else:
-                h = _xxhash64(karr).view(np.int64)
-            lin = h % np.int64(n_lineage)
-            if skip is not None:
-                lin[np.isin(lin, skip)] = -1  # _route drops code -1
-            return lin
-
-        def decode():
-            for _md, here, batches in _file_batches(paths, columns, types):
-                if col in here:
-                    yield from batches
-
-        for b in _prefetch(decode(), depth=8):
-            varr = b[col]
-            karr = b[key_col] if key_col in b else pa.nulls(len(varr), types[key_col])
-            codes = lineage_of(karr)
-            # non-integer KIND_HASH64 values are hashed before routing
-            # (integers take the bincount path, hashed at the flush)
-            hashed = kind == KIND_HASH64 and not pa.types.is_integer(varr.type)
-            if hashed:
-                if varr.null_count:
-                    valid = varr.is_valid()
-                    codes, varr = codes[np.asarray(valid)], varr.filter(valid)
-                varr = pa.array(_xxhash64(varr))
-            for lid, vals in _route(codes, varr, kind):
-                feeder = feeders.get(lid)
-                if feeder is None:
-                    feeder = feeders[lid] = AccFeeder(
-                        factory(), hash_mode=hash_mode, domain=domain,
-                        budget=budget,
-                    )
-                if hashed:
-                    feeder.feed_hashed(vals)
-                else:
-                    feeder.feed_raw(vals)
-        if not feeders:
-            return
-        elapsed = time.monotonic() - t0
-        lids = sorted(feeders)
-        items = [feeders[k].finish() for k in lids]
-        yield _partials_batch(
-            [feeders[k].sk.to_bytes() for k in lids], items, elapsed,
-            lineage_id=lids,
-        )
+    def coded(paths: list[str]):
+        for _md, here, batches in _file_batches(paths, columns, types):
+            if col not in here:
+                continue
+            for b in batches:
+                varr = b[col]
+                n = len(varr)
+                if kind == KIND_HASH64 and not pa.types.is_integer(varr.type):
+                    valid = np.asarray(varr.is_valid())
+                    hashes = np.zeros(n, dtype=np.uint64)
+                    hashes[valid] = _xxhash64(varr.drop_null())
+                    varr = pa.array(hashes, mask=~valid)
+                yield (*codes_of(pa.record_batch(
+                    [b[k] if k in here else pa.nulls(n, types[k]) for k in keys],
+                    names=keys,
+                )), varr)
 
     return _map_files(
-        spark, files, tasks, fn, f"lineage_id bigint, {_PARTIAL_SCHEMA}"
+        spark, files, tasks,
+        lambda paths: _keyed_states(coded(paths), factory, kind, max_groups),
+        schema,
     )

@@ -118,9 +118,9 @@ def is_direct(plan: str) -> bool:
 @pytest.fixture
 def partials_plans(monkeypatch):
     """The executed plans of the partials every ``sketch_columns`` call
-    hands ``tree_merge`` and every ``run_checkpointed`` build hands its
-    keyed merge, in call order."""
-    from sketchlib.spark import aggregate, checkpoint
+    hands ``tree_merge`` and every grouped or ``run_checkpointed`` build
+    hands its keyed merge, in call order."""
+    from sketchlib.spark import aggregate, api, checkpoint
 
     plans = []
 
@@ -134,7 +134,8 @@ def partials_plans(monkeypatch):
         monkeypatch.setattr(module, name, record)
 
     spy(aggregate, "tree_merge")
-    spy(checkpoint, "_keyed_merge")
+    for module in (aggregate, api, checkpoint):
+        spy(module, "_keyed_merge")
     return plans
 
 

@@ -494,6 +494,32 @@ def test_one_hash_per_input_kind():
         ] == ["spark/aggregate.py"], domain
 
 
+def test_one_keyed_feed_loop():
+    """Source guard: one keyed stage-1 body, ``aggregate._keyed_states``,
+    feeds the grouped and checkpointed builds on both engines -- it is
+    the one call site of ``_route`` under ``spark/``, each engine's
+    source hands it batches, ``_lineage_partials`` is gone and
+    ``_grouped_partials`` feeds no sketch itself."""
+    import inspect
+    import pathlib
+
+    import sketchlib
+    from sketchlib.spark import aggregate, checkpoint, direct
+
+    root = pathlib.Path(sketchlib.__file__).parent / "spark"
+    texts = {p.name: p.read_text() for p in root.rglob("*.py")}
+    calls = {n: t.count("_route(") - t.count("def _route(") for n, t in texts.items()}
+    assert {n: c for n, c in calls.items() if c} == {"aggregate.py": 1}
+    assert "_route(" in inspect.getsource(aggregate._keyed_states)
+    assert [n for n, t in texts.items() if "_lineage_partials" in t] == []
+    for fn in (aggregate._grouped_partials, direct._keyed_partials, checkpoint._partials):
+        src = inspect.getsource(fn)
+        for feed in ("AccFeeder(", "feed_raw(", "feed_hashed(", "_prefetch("):
+            assert feed not in src, (fn.__name__, feed)
+    for fn in (aggregate._grouped_partials, direct._keyed_partials):
+        assert "_keyed_states(" in inspect.getsource(fn), fn.__name__
+
+
 def test_gram_operators_release_their_cached_frame(spark):
     """``ngram_jaccard_pairs`` and ``remove_duplicate_spans`` hold their
     persisted frame in a one-slot cache: three calls on different

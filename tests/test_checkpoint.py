@@ -137,7 +137,7 @@ def test_deterministic_lineage_recompute(spark, tokens_df, tmp_path):
 
 
 def test_cross_engine_checkpoint_resume(spark, tokens_df, tmp_path, partials_plans):
-    """The direct lineage kernel computes lineage ids with the numpy
+    """The direct checkpoint build computes lineage ids with the numpy
     XXH64 that is bit-equal to Spark's pmod(xxhash64(key), n), so (a) a
     routed ledger's per-lineage item counts are IDENTICAL to a JVM
     ledger's, and (b) a job STARTED on the JVM path (a filtered frame)

@@ -13,6 +13,7 @@ from sketchlib.spark.aggregate import (
     KIND_ARRAY_HASH,
     KIND_DOUBLE,
     KIND_HASH64,
+    grouped_sketch,
     sketch_column,
 )
 from sketchlib.spark.direct import list_parquet_files, sketch_parquet
@@ -145,8 +146,8 @@ def test_probes_refuse_foreign_hash_domains(spark, token_path):
 
 
 def test_direct_checkpoint_hashes_like_the_scan(spark, tmp_path, partials_plans):
-    """The lineage kernel hashes non-integer KIND_HASH64 values before
-    routing them, dropping null rows as the ungrouped scan does: over a
+    """The direct checkpoint build hashes non-integer KIND_HASH64 values
+    before routing them, dropping null rows as the ungrouped scan does: over a
     nullable float32 column both direct builds and the JVM path's
     ``sketch_column`` give one HLL."""
     import pyarrow as pa
@@ -965,8 +966,8 @@ def test_bare_scan_routes_to_the_direct_engine(
 def test_transformed_frames_keep_the_jvm_path(spark, token_path, tmp_path, partials_plans):
     """A filter, an ``observe``, a cached frame, a hive-partitioned
     table, a decimal column and a one-file table that Spark splits
-    across the cores each keep the JVM plan, and build what they
-    read."""
+    across the cores each keep the JVM plan, ungrouped and grouped,
+    and build what they read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import Observation
@@ -974,7 +975,7 @@ def test_transformed_frames_keep_the_jvm_path(spark, token_path, tmp_path, parti
     df = spark.read.parquet(token_path)
     hll = lambda: HyperLogLog(p=12)  # noqa: E731
     n = df.count()
-    cached = df.select("n_tok").cache()
+    cached = df.select("n_tok", "source").cache()
     hive = str(tmp_path / "hive")
     df.write.partitionBy("source").parquet(hive)
     dec = str(tmp_path / "dec")
@@ -998,6 +999,10 @@ def test_transformed_frames_keep_the_jvm_path(spark, token_path, tmp_path, parti
             assert "Range (0," not in partials_plans[-1], partials_plans[-1]
             if kind == KIND_DOUBLE:
                 assert sk.count == n
+                continue
+            rows = grouped_sketch(frame, ["source"], col, factory, kind).collect()
+            assert "Range (0," not in partials_plans[-1], partials_plans[-1]
+            assert sum(r["items"] for r in rows) == n
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(256 << 10))
         sk = sketch_column(spark.read.parquet(one), "v", hll, KIND_HASH64)
         assert "FileScan" in partials_plans[-1], partials_plans[-1]
@@ -1008,12 +1013,22 @@ def test_transformed_frames_keep_the_jvm_path(spark, token_path, tmp_path, parti
 
 
 def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
-    """Over a bare scan the operators build on the direct engine, and
-    their states match the JVM path's: HLL, CMS and Bloom byte for
-    byte, SpaceSaving (no eviction) count for count; t-digest and KLL
-    meet their rank bounds; two routed builds are byte-equal."""
+    """Over a bare scan the operators, ungrouped and grouped, build on
+    the direct engine, and their states match the JVM path's: HLL, CMS
+    and Bloom byte for byte (per key), SpaceSaving (no eviction) count
+    for count; t-digest and KLL meet their rank bounds (per key); two
+    routed builds are byte-equal."""
+    from sketchlib import serde
+    from sketchlib.core.bloom import BloomFilter
+    from sketchlib.core.cms import CountMinSketch
     from sketchlib.core.spacesaving import SpaceSaving
     from sketchlib.spark import api
+
+    def per_key(col, factory, kind, state=lambda sk: sk.to_bytes()):
+        return lambda d: {
+            r["source"]: state(serde.from_bytes(r["state"]))
+            for r in grouped_sketch(d, ["source"], col, factory, kind).collect()
+        }
 
     df = spark.read.parquet(token_path)
     jvm = jvm_side(df)
@@ -1027,6 +1042,13 @@ def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
                 d, "source", lambda: SpaceSaving(capacity=64), KIND_HASH64
             ).counts.items()
         ),
+        per_key("doc_id", lambda: HyperLogLog(p=12), KIND_HASH64),
+        per_key("tokens", lambda: CountMinSketch(width=2048), KIND_ARRAY_HASH),
+        per_key("doc_id", lambda: BloomFilter(m_bits=1 << 14), KIND_HASH64),
+        per_key(
+            "n_tok", lambda: SpaceSaving(capacity=1024), KIND_HASH64,
+            lambda sk: sorted(sk.counts.items()),
+        ),
     ]
     for build in builds:
         routed = build(df)
@@ -1034,7 +1056,7 @@ def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
         assert routed == build(jvm)
         assert not is_direct(partials_plans[-1])
 
-    rows = df.select("n_tok", "tokens").collect()
+    rows = df.select("n_tok", "tokens", "source").collect()
     n_tok = np.sort([r["n_tok"] for r in rows])
     tokens = np.sort(np.concatenate([r["tokens"] for r in rows]))
     probs = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
@@ -1051,6 +1073,30 @@ def test_routed_builds_match_the_jvm_path(spark, token_path, partials_plans):
     again = api.approx_quantiles(df, "n_tok", probs)[1]
     assert again.to_bytes() == api.approx_quantiles(df, "n_tok", probs)[1].to_bytes()
 
+    sources = np.array([r["source"] for r in rows])
+    for col, sketch, is_array, eps in (
+        ("n_tok", "tdigest", False, 0.01),
+        ("tokens", "kll", True, 0.02),
+    ):
+        for frame in (df, jvm):
+            out = api.grouped_quantiles(
+                frame, ["source"], col, probs, sketch=sketch, is_array=is_array
+            ).collect()
+            assert is_direct(partials_plans[-1]) == (frame is df)
+            assert {r["source"] for r in out} == set(sources)
+            for s in set(sources):
+                mine = [r for r in rows if r["source"] == s]
+                values = np.sort(
+                    np.concatenate([r[col] for r in mine]) if is_array
+                    else [r[col] for r in mine]
+                )
+                est = [r["value"] for r in sorted(out, key=lambda r: r["q"]) if r["source"] == s]
+                # t-digest interpolates between the integer values: an
+                # estimate in (k, k+1) stands for any rank of k or k+1
+                lo = np.searchsorted(values, np.floor(est), side="left") / values.size
+                hi = np.searchsorted(values, np.ceil(est), side="right") / values.size
+                assert np.all((lo - eps <= probs) & (np.asarray(probs) <= hi + eps)), (s, est)
+
 
 def test_routed_build_reads_each_file_as_the_frame_types_it(
     spark, tmp_path, partials_plans
@@ -1059,7 +1105,9 @@ def test_routed_build_reads_each_file_as_the_frame_types_it(
     under ``long``, float32 under ``double``) are widened before they
     are hashed, and a file without a column feeds it nothing, as its
     NULLs do on the JVM path: the routed HLL and Bloom equal the JVM
-    path's byte for byte."""
+    path's byte for byte.  Grouped by such a column, the key comes out
+    at the frame's type, and a file without the key column drops its
+    rows, on both engines."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1089,6 +1137,17 @@ def test_routed_build_reads_each_file_as_the_frame_types_it(
         bloom = api.build_bloom(df, c, capacity=1_000)
         assert is_direct(partials_plans[-1])
         assert bloom.to_bytes() == api.build_bloom(jvm_side(df), c, capacity=1_000).to_bytes()
+    # part2 has no w: as a value it feeds nothing, as a key its rows drop
+    for key, col in (("v", "w"), ("w", "v")):
+        built = []
+        for frame in (df, jvm_side(df)):
+            out = grouped_sketch(frame, [key], col, lambda: HyperLogLog(p=12), KIND_HASH64)
+            assert out.schema[key].dataType.simpleString() == df.schema[key].dataType.simpleString()
+            built.append({r[key]: (r["state"], r["items"]) for r in out.collect()})
+            assert is_direct(partials_plans[-1]) == (frame is df)
+        assert built[0] == built[1]
+        assert sorted(built[0]) == sorted(v[:400] / 8 if key == "w" else v[:400])
+        assert {n for _s, n in built[0].values()} == {1}
 
 
 def test_multi_column_build_is_one_direct_pass(spark, token_path, partials_plans):
@@ -1116,17 +1175,22 @@ def test_multi_column_build_is_one_direct_pass(spark, token_path, partials_plans
 def test_null_is_not_a_value_on_either_engine(spark, tmp_path):
     """KIND_HASH64 drops NULL on both engines: over ``[1, 2, None, 3]``
     the direct scan, the JVM path and ``approx_distinct`` all estimate
-    3 with equal HLL bytes."""
+    3 with equal HLL bytes.  Grouped by ``["a", "b", None, "a"]``, the
+    NULL key's row is dropped and the other keys count 2 and 1 values,
+    with equal HLL bytes per key."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sketchlib.spark.api import approx_distinct
+    from sketchlib.spark.api import approx_distinct, grouped_distinct
 
     path = tmp_path / "nulls"
     path.mkdir()
     for i in range(4):
         pq.write_table(
-            pa.table({"v": pa.array([1, 2, None, 3] * 50, pa.int64())}),
+            pa.table({
+                "v": pa.array([1, 2, None, 3] * 50, pa.int64()),
+                "k": pa.array(["a", "b", None, "a"] * 50),
+            }),
             str(path / f"part{i}.parquet"),
         )
     hll = lambda: HyperLogLog(p=12)  # noqa: E731
@@ -1134,9 +1198,66 @@ def test_null_is_not_a_value_on_either_engine(spark, tmp_path):
     jvm = sketch_column(jvm_side(spark.read.parquet(str(path))), "v", hll, KIND_HASH64)
     assert round(direct.estimate()) == 3
     assert direct.to_bytes() == jvm.to_bytes()
+    grouped = []
     for frame in (spark.read.parquet(str(path)), jvm_side(spark.read.parquet(str(path)))):
         est, sk = approx_distinct(frame, "v", p=12)
         assert round(est) == 3 and sk.to_bytes() == direct.to_bytes()
+        rows = grouped_sketch(frame, ["k"], "v", hll, KIND_HASH64).collect()
+        grouped.append({r["k"]: (bytes(r["state"]), r["items"]) for r in rows})
+        est = {r["k"]: round(r["estimate"]) for r in grouped_distinct(frame, ["k"], "v").collect()}
+        assert est == {"a": 2, "b": 1}
+    assert grouped[0] == grouped[1]
+    assert {k: n for k, (_s, n) in grouped[0].items()} == {"a": 400, "b": 200}
+
+
+def test_nullable_integer_keys_group_on_both_engines(spark, tmp_path, partials_plans):
+    """Grouped by an int32 or int64 key with NULLs -- on the direct
+    engine, on the JVM path and over a local frame -- each key comes
+    out at its Spark type with its exact min, max and distinct count,
+    by one key or two, and the NULL-key rows are dropped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark.api import grouped_distinct, grouped_quantiles
+
+    path = tmp_path / "nullkeys"
+    path.mkdir()
+    k = [1, None, 2, 1, None, 3] * 20
+    for i in range(4):
+        pq.write_table(pa.table({
+            "k32": pa.array(k, pa.int32()),
+            "k64": pa.array(k, pa.int64()),
+            "s": pa.array(["x", "y"] * 60),
+            "v": pa.array(np.arange(120, dtype=np.float64) + 1000 * i),
+        }), str(path / f"part{i}.parquet"))
+    df = spark.read.parquet(str(path))
+    rows = df.collect()
+    local = spark.createDataFrame(
+        [(r["k64"], r["s"], r["v"]) for r in rows], "k64 long, s string, v double"
+    )
+    for frame, keys in (
+        (df, ["k32"]), (df, ["k64"]), (df, ["s", "k32"]),
+        (jvm_side(df), ["k32"]), (jvm_side(df), ["s", "k64"]),
+        (local, ["k64"]), (local, ["s", "k64"]),
+    ):
+        groups = {}
+        for r in rows:
+            if r[keys[-1]] is not None:
+                groups.setdefault(tuple(r[c] for c in keys), []).append(r["v"])
+        quantiles = grouped_quantiles(frame, keys, "v", [0.0, 1.0])
+        distinct = grouped_distinct(frame, keys, "v")
+        for out in (quantiles, distinct):
+            for c in keys:
+                assert out.schema[c].dataType == frame.schema[c].dataType
+        got = {}
+        for r in quantiles.collect():
+            got.setdefault(tuple(r[c] for c in keys), []).append(r["value"])
+        assert got == {g: [min(v), max(v)] for g, v in groups.items()}
+        est = {tuple(r[c] for c in keys): r["estimate"] for r in distinct.collect()}
+        assert est.keys() == groups.keys()
+        for g, v in groups.items():
+            assert abs(est[g] - len(v)) <= 0.02 * len(v), (g, est[g])
+        assert is_direct(partials_plans[-1]) == (frame is df)
 
 
 def test_null_lineage_key_on_both_checkpoint_engines(spark, tmp_path, partials_plans):

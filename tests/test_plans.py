@@ -16,6 +16,7 @@ from sketchlib.spark.aggregate import (
     grouped_sketch,
 )
 from sketchlib.spark.datagen import token_sequences
+from tests.conftest import jvm_side
 
 
 @pytest.fixture(scope="module")
@@ -53,19 +54,29 @@ def test_hash_runs_jvm_side(spark, tokens_path):
 
 
 def test_grouped_shuffle_carries_states_only(spark, tokens_path):
-    df = spark.read.parquet(tokens_path)
-    plan = _formatted(
-        grouped_sketch(df, ["source"], "n_tok", lambda: TDigest(), KIND_DOUBLE)
-    )
-    assert "ReadSchema: struct<n_tok:int,source:string>" in plan
-    # every Exchange input must be state rows (raw rows never shuffle)
+    """A grouped build's exchanges carry state rows only, on both
+    engines: the JVM path prunes its scan to the key and value columns;
+    over a bare scan the partials are one ``Range`` -> ``MapInArrow``
+    stage reading the files itself, with no JVM scan."""
     import re
 
-    exchanges = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
-    assert exchanges, plan
-    for cols in exchanges:
-        assert "state#" in cols, cols
-        assert "n_tok" not in cols and "__v" not in cols, cols
+    df = spark.read.parquet(tokens_path)
+    for frame in (jvm_side(df), df):
+        plan = _formatted(
+            grouped_sketch(frame, ["source"], "n_tok", lambda: TDigest(), KIND_DOUBLE)
+        )
+        if frame is df:
+            assert "Scan parquet" not in plan and "FileScan" not in plan, plan
+            assert len(re.findall(r"^\(\d+\) Range$", plan, re.M)) == 1, plan
+            assert len(re.findall(r"^\(\d+\) MapInArrow$", plan, re.M)) == 1, plan
+        else:
+            assert "ReadSchema: struct<n_tok:int,source:string>" in plan
+        # every Exchange input must be state rows (raw rows never shuffle)
+        exchanges = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+        assert exchanges, plan
+        for cols in exchanges:
+            assert "state#" in cols, cols
+            assert "n_tok" not in cols and "__v" not in cols, cols
 
 
 def test_grouped_read_out_runs_in_the_merge_reducer(spark, tokens_path, monkeypatch):

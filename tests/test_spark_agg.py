@@ -30,6 +30,7 @@ from sketchlib.spark.api import (
     grouped_quantiles,
 )
 from sketchlib.spark.datagen import token_sequences, token_checksums
+from tests.conftest import is_direct
 
 N_ROWS = 20_000
 
@@ -364,37 +365,52 @@ def test_nan_values_dropped(spark):
     assert list(g.value_at_quantile([0.0, 0.5, 1.0])) == [1.0, 2.0, 4.0]
 
 
-def test_grouped_sketch_flush_bounded_memory(spark):
+def test_grouped_sketch_flush_bounded_memory(spark, tmp_path, partials_plans):
     """High-cardinality keys: stage 1 flushes its key->sketch dict past
     max_groups_per_partition and stage 2 re-merges the duplicate key
-    rows — results must equal the unbounded build exactly."""
+    rows — results must equal the unbounded build exactly, on the JVM
+    path and on the direct engine (a bare scan of 16 files, two per
+    task, where the flushed build emits more partial rows)."""
+    from sketchlib import serde
+    from sketchlib.spark.aggregate import _grouped_partials
+
     n = 20_000
-    df = spark.range(n).select(
+    jvm = spark.range(n).select(
         (F.col("id") % 500).alias("k"),  # 500 distinct keys
         (F.col("id") % 97).cast("double").alias("v"),
     ).repartition(4)
+    path = str(tmp_path / "kv")
+    jvm.repartition(16).write.parquet(path)
 
-    def run(max_groups):
-        rows = grouped_sketch(
-            df, ["k"], "v", lambda: TDigest(delta=200), KIND_DOUBLE,
-            max_groups_per_partition=max_groups,
-        ).collect()
-        return {
-            r["k"]: (bytes(r["state"]), r["items"]) for r in rows
-        }
+    for df in (jvm, spark.read.parquet(path)):
+        def run(max_groups):
+            rows = grouped_sketch(
+                df, ["k"], "v", lambda: TDigest(delta=200), KIND_DOUBLE,
+                max_groups_per_partition=max_groups,
+            ).collect()
+            return {
+                r["k"]: (bytes(r["state"]), r["items"]) for r in rows
+            }
 
-    flushed = run(max_groups=16)  # far below 500 -> many flushes
-    unbounded = run(max_groups=1_000_000)
-    assert set(flushed) == set(unbounded) and len(flushed) == 500
-    assert all(flushed[k][1] == unbounded[k][1] == n // 500 for k in flushed)
-    # estimates agree (states may differ byte-wise: different merge trees)
-    from sketchlib import serde
+        flushed = run(max_groups=16)  # far below 500 -> many flushes
+        unbounded = run(max_groups=1_000_000)
+        assert set(flushed) == set(unbounded) and len(flushed) == 500
+        assert all(flushed[k][1] == unbounded[k][1] == n // 500 for k in flushed)
+        # estimates agree (states may differ byte-wise: different merge trees)
+        for k in list(flushed)[:20]:
+            a = serde.from_bytes(flushed[k][0])
+            b = serde.from_bytes(unbounded[k][0])
+            assert a.count == b.count
+            assert abs(a.value_at_quantile(0.5) - b.value_at_quantile(0.5)) <= 2.0
 
-    for k in list(flushed)[:20]:
-        a = serde.from_bytes(flushed[k][0])
-        b = serde.from_bytes(unbounded[k][0])
-        assert a.count == b.count
-        assert abs(a.value_at_quantile(0.5) - b.value_at_quantile(0.5)) <= 2.0
+    assert is_direct(partials_plans[-1]), partials_plans[-1]
+    partial_rows = [
+        _grouped_partials(
+            df, ["k"], "v", lambda: TDigest(delta=200), KIND_DOUBLE, max_groups
+        ).count()
+        for max_groups in (16, 1_000_000)
+    ]
+    assert partial_rows[0] > partial_rows[1]
 
 
 def test_range_partition_bounds_balance_on_skew(spark):
