@@ -520,6 +520,21 @@ def test_one_keyed_feed_loop():
         assert "_keyed_states(" in inspect.getsource(fn), fn.__name__
 
 
+def test_one_job_skeleton():
+    """Source guard: the spark-submit CLI starts, observes and stops its
+    session in one skeleton -- ``jobs.py`` has one ``get_spark(``, one
+    ``.stop()`` and one ``Observation(`` call site, and one list of the
+    ``--format`` choices."""
+    import pathlib
+
+    import sketchlib
+
+    src = (pathlib.Path(sketchlib.__file__).parent / "spark" / "jobs.py").read_text()
+    for call in ("get_spark(", ".stop()", "Observation("):
+        assert src.count(call) == 1, call
+    assert src.count('"auto", "parquet", "iceberg", "jsonl", "csv"') == 1
+
+
 def test_gram_operators_release_their_cached_frame(spark):
     """``ngram_jaccard_pairs`` and ``remove_duplicate_spans`` hold their
     persisted frame in a one-slot cache: three calls on different
